@@ -27,7 +27,8 @@ object GraftSession {
     *   static fallback for a single pathological key).
     * - broadcast threshold 64 MiB: every dimension of the star schema
     *   broadcasts; only fact-fact joins shuffle.
-    * - CBO on: `Maintenance.analyze` feeds it column statistics.
+    * - CBO on: `ANALYZE TABLE … COMPUTE STATISTICS FOR ALL COLUMNS`
+    *   feeds it column statistics.
     */
   val targetShufflePartitionBytes: Long = 200L * 1024 * 1024
 

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.DecimalType
   * Works for self-maintainable aggregates (count + sums — and anything
   * derivable from them: averages, rates): inserts add, deletes
   * subtract, an update is delete+insert (exactly what
-  * [[graft.sources.VersionedTable.changes]] emits). Sums are carried as
+  * [[graft.sources.DeltaLog.changesBetween]] emits). Sums are carried as
   * DECIMAL(38,10), so maintenance is EXACT — applying N deltas equals
   * the full recompute bit-for-bit, which is what makes the technique
   * auditable (spec asserts it). Min/max are NOT self-maintainable under

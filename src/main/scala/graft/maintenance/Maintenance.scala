@@ -1,151 +1,24 @@
 package graft.maintenance
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
 
-/** Table-maintenance operators — the reference's OPTIMIZE / ZORDER /
-  * ANALYZE / DESCRIBE DETAIL surface
-  * (/root/reference/utils/optimize_tables.py:24-79,
-  * /root/reference/pipelines/gold_pipeline.py:816-824) as format-agnostic
-  * parquet fallbacks (Delta is not on this classpath; with Delta present
-  * these become one-line SQL passthroughs).
-  *
-  * Scale notes: compaction and clustering are full rewrites — at 100 TB
-  * they run per-partition (pass `partitionBy`) so only hot partitions
-  * rewrite. Clustering uses repartitionByRange + sortWithinPartitions:
-  * locality-equivalent to Z-ORDER for the leading clustering key and
-  * enough for min/max data skipping on it.
+/** Table-maintenance queries — the reference's OPTIMIZE / ZORDER /
+  * DML surface (reference `utils/optimize_tables.py:24-79`,
+  * `pipelines/gold_pipeline.py:789-796,816-824`), oracle-verified end
+  * to end on the engine's own Delta and Iceberg protocols. The
+  * operations themselves live on the protocol objects:
+  * OPTIMIZE / ZORDER is [[graft.sources.DeltaLog.optimize]] (clustering
+  * transforms in [[graft.functions.ZOrderKey]]), DESCRIBE DETAIL is
+  * [[graft.sources.DeltaLog.detail]], and ANALYZE is Spark's own
+  * `ANALYZE TABLE … COMPUTE STATISTICS FOR ALL COLUMNS`.
   */
 object Maintenance {
-
-  /** M1 OPTIMIZE fallback: rewrite a parquet dataset into `numFiles`
-    * compacted files (small-file compaction). */
-  def compact(spark: SparkSession, path: String, numFiles: Int): Unit =
-    rewrite(spark, path, _.repartition(numFiles))
-
-  /** M2 ZORDER fallback: range-cluster by the given columns and sort
-    * within files, giving parquet min/max skipping on the cluster keys. */
-  def cluster(spark: SparkSession, path: String, numFiles: Int, cols: Seq[String]): Unit =
-    rewrite(spark, path,
-      _.repartitionByRange(numFiles, cols.map(col): _*)
-        .sortWithinPartitions(cols.map(col): _*))
-
-  /** M2, true two-dimensional variant: cluster by a Z-order (Morton) key
-    * over two numeric columns, so min/max skipping works on EITHER column
-    * — [[cluster]]'s lexicographic sort only localizes the leading one.
-    * Two linear passes: a min/max stats aggregate (one tiny job) to
-    * normalize each column onto a 65k grid, then the keyed rewrite. At
-    * 100 TB pass `partitionBy`-style scoping upstream (rewrite only hot
-    * partitions); the stats pass is a full scan of just the two columns,
-    * and the rewrite is the same shuffle any OPTIMIZE pays. */
-  def clusterZ(spark: SparkSession, path: String, numFiles: Int,
-      colA: String, colB: String): Unit =
-    rewrite(spark, path, zOrderFrame(_, numFiles, colA, colB))
-
-  /** The Z-order clustering transform itself, frame-level — shared by
-    * the parquet-path [[clusterZ]] and the Delta-protocol
-    * `DeltaLog.optimize(..., zorderBy)`. */
-  def zOrderFrame(df: DataFrame, numFiles: Int, colA: String, colB: String): DataFrame = {
-    graft.functions.ZOrderKey.register(df.sparkSession)
-    val r = df.agg(
-      min(col(colA).cast("double")), max(col(colA).cast("double")),
-      min(col(colB).cast("double")), max(col(colB).cast("double"))).head()
-    require((0 to 3).forall(!r.isNullAt(_)),
-      s"clusterZ: no non-null values in $colA/$colB (empty dataset or all-null column)")
-    def grid(c: String, lo: Double, hi: Double) =
-      if (hi == lo) lit(0L)
-      else least(floor((col(c).cast("double") - lit(lo)) / (hi - lo) * 65536.0), lit(65535.0))
-        .cast("long")
-    df.withColumn("__zkey", call_function("zorder_key",
-        grid(colA, r.getDouble(0), r.getDouble(1)),
-        grid(colB, r.getDouble(2), r.getDouble(3))))
-      .repartitionByRange(numFiles, col("__zkey"))
-      .sortWithinPartitions(col("__zkey"))
-      .drop("__zkey")
-  }
-
-  /** N-dimensional Morton clustering (3 ≤ n ≤ 4; the 2-D path keeps the
-    * dedicated codegen'd [[graft.functions.ZOrderKey]]). The key is
-    * built from plain column bit arithmetic — shift/and/or stay inside
-    * whole-stage codegen — interleaving `bitsPer` bits per dimension
-    * round-robin, leftmost column highest-order on ties: 16 bits each
-    * for n=3 (48-bit key), 15 for n=4 (60-bit), both far finer than
-    * file granularity. Same normalization contract as [[zOrderFrame]]:
-    * one min/max pass over just the cluster columns. */
-  def zOrderFrameN(df: DataFrame, numFiles: Int, cols: Seq[String]): DataFrame = {
-    require(cols.size >= 3 && cols.size <= 4,
-      s"zOrderFrameN handles 3-4 columns, got ${cols.mkString(",")}")
-    val n = cols.size
-    val bitsPer = if (n == 3) 16 else 15
-    val cells = (1L << bitsPer).toDouble
-    val aggs = cols.flatMap(c =>
-      Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
-    val r = df.agg(aggs.head, aggs.tail: _*).head()
-    require((0 until 2 * n).forall(!r.isNullAt(_)),
-      s"zOrderFrameN: no non-null values in ${cols.mkString(",")}")
-    def grid(i: Int): org.apache.spark.sql.Column = {
-      val (lo, hi) = (r.getDouble(2 * i), r.getDouble(2 * i + 1))
-      if (hi == lo) lit(0L)
-      else least(
-        floor((col(cols(i)).cast("double") - lit(lo)) / (hi - lo) * cells),
-        lit(cells - 1)).cast("long")
-    }
-    val key = (0 until n).flatMap { i =>
-      val g = grid(i)
-      (0 until bitsPer).map(b =>
-        shiftleft(shiftright(g, b).bitwiseAND(lit(1L)), b * n + (n - 1 - i)))
-    }.reduce(_ bitwiseOR _)
-    df.withColumn("__zkey", key)
-      .repartitionByRange(numFiles, col("__zkey"))
-      .sortWithinPartitions(col("__zkey"))
-      .drop("__zkey")
-  }
-
-  /** Atomic-enough rewrite: write to a sibling tmp dir, then swap.
-    * (Parquet datasets can't be overwritten in place while being read.) */
-  private def rewrite(spark: SparkSession, path: String, f: DataFrame => DataFrame): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(path + "__rewrite_tmp")
-    val old = new Path(path + "__rewrite_old")
-    f(spark.read.parquet(path)).write.mode("overwrite").parquet(tmp.toString)
-    require(fs.rename(new Path(path), old), s"could not move $path aside")
-    require(fs.rename(tmp, new Path(path)), s"could not move rewritten data into $path")
-    fs.delete(old, true)
-    ()
-  }
-
-  /** M3: compute table + column statistics for Catalyst's CBO. */
-  def analyze(spark: SparkSession, table: String): Unit =
-    spark.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS FOR ALL COLUMNS")
-
-  /** M4 DESCRIBE DETAIL fallback: file-level layout of a dataset
-    * (numFiles, sizeInBytes, min/avg/max file size). */
-  def detail(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listFiles(new Path(path), true)
-    val sizes = scala.collection.mutable.ArrayBuffer.empty[Long]
-    while (files.hasNext) {
-      val f = files.next()
-      if (f.getPath.getName.endsWith(".parquet")) sizes += f.getLen
-    }
-    Seq((path, sizes.size.toLong, sizes.sum,
-      if (sizes.isEmpty) 0L else sizes.min, if (sizes.isEmpty) 0L else sizes.max))
-      .toDF("location", "num_files", "size_bytes", "min_file_bytes", "max_file_bytes")
-  }
-
-  /** M5 write-time tuning: AQE-coalesced write (optimizeWrite stand-in) —
-    * let adaptive execution pick output partitioning, cap tiny files. */
-  def optimizedWrite(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
 
   /** The Z-order key itself, oracle-verified bit-for-bit: the native
     * [[graft.functions.ZOrderKey]] expression vs the same interleave
     * written as bit arithmetic in DuckDB. (The clustering REWRITE is
-    * exercised by MaintenanceSpec — file layout isn't SQL-observable.) */
+    * exercised by MaintenanceSpec and DataSkippingSpec — file layout
+    * isn't SQL-observable.) */
   val qZOrderKey: graft.QueryDef = graft.QueryDef.sql(
     "q_maint_zorder_key",
     """SELECT o_orderkey,

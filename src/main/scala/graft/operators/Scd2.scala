@@ -96,35 +96,11 @@ object Scd2 {
     expired.unionByName(newRows.select(expired.columns.map(col): _*))
   }
 
-  /** S8/J7 parquet fallback for Delta MERGE: keyed upsert with a recency
-    * guard (only newer sources replace matched rows —
-    * gold_pipeline.py:789-796). Read-modify-overwrite: matched-and-newer
-    * rows are replaced, unmatched target rows kept, unmatched source rows
-    * inserted; the result swaps in via tmp-dir rename (a parquet dataset
-    * cannot be overwritten while it is being read). */
-  def mergeUpsert(spark: org.apache.spark.sql.SparkSession, targetPath: String,
-      source: DataFrame, keys: Seq[String], recencyCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(targetPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(targetPath))) {
-      source.write.mode("overwrite").parquet(targetPath)
-      return
-    }
-    val target = spark.read.parquet(targetPath)
-    val out = mergedFrame(target, source, keys, recencyCol)
-    val tmp = new Path(targetPath + "__merge_tmp")
-    val old = new Path(targetPath + "__merge_old")
-    out.write.mode("overwrite").parquet(tmp.toString)
-    require(fs.rename(new Path(targetPath), old), s"could not move $targetPath aside")
-    require(fs.rename(tmp, new Path(targetPath)), s"could not swap merged data into $targetPath")
-    fs.delete(old, true)
-    ()
-  }
-
-  /** The MERGE frame itself (shared by the parquet fallback above and
-    * the Delta-protocol merge, graft.sources.DeltaLog.mergeUpsert):
-    * matched-and-newer rows take the source, unmatched target rows are
-    * kept, unmatched source rows are inserted. */
+  /** The MERGE frame itself (S8/J7, the reference's recency-guarded
+    * upsert, gold_pipeline.py:789-796), used by the Delta-protocol merge
+    * [[graft.sources.DeltaLog.mergeUpsert]]: matched-and-newer rows take
+    * the source, unmatched target rows are kept, unmatched source rows
+    * are inserted. */
   private[graft] def mergedFrame(target: DataFrame, source: DataFrame,
       keys: Seq[String], recencyCol: String): DataFrame = {
     val srcRenamed = source.select(

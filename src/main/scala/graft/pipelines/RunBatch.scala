@@ -1,47 +1,49 @@
 package graft.pipelines
 
 import graft.GraftSession
-import graft.maintenance.Maintenance
+import graft.sources.DeltaLog
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The scheduled batch job (ST7) — the reference's 3-task DAG
-  * (/root/reference/jobs/batch_job.json:14-75: gold build → optimize →
-  * validate) as one offline-runnable main:
+  * (reference `jobs/batch_job.json:14-75`: gold build → optimize →
+  * validate) as one offline-runnable main, published on the engine's
+  * Delta protocol:
   *
-  *   1. build every gold table through the dependency graph and write
-  *      them (fact partitioned by trip_status — the engine's stand-in
-  *      for the reference's date/region partitions at fixture scale);
-  *   2. compact + cluster + collect statistics on the written outputs;
-  *   3. validate: SCD2 currency invariants, referential integrity of the
-  *      fact's location key, and golden row counts, emitted as one JSON
-  *      line; exit 1 if any check fails.
+  *   1. build every gold table through the dependency graph and publish
+  *      each with [[DeltaLog.write]] (fact partitioned by trip_status —
+  *      the engine's stand-in for the reference's date/region partitions
+  *      at fixture scale);
+  *   2. OPTIMIZE each published table into one file per partition with
+  *      [[DeltaLog.optimize]], the fact ZORDERed by trip_id;
+  *   3. validate over [[DeltaLog.read]] of what was published: SCD2
+  *      currency invariants, referential integrity of the fact's
+  *      location key, and golden row counts, emitted as one JSON line;
+  *      exit 1 if any check fails.
   *
   * Usage: runMain graft.pipelines.RunBatch [outDir]
   */
 object RunBatch {
-  def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse(
-      java.nio.file.Files.createTempDirectory("graft-gold-").toString)
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+  val dims: Seq[String] = Seq("dim_location", "dim_eater", "dim_merchant", "dim_courier")
 
-    // task 1: gold build (topological, each table cached once)
+  /** Run the three tasks into `out`; one (check, observed, expected)
+    * triple per validation check. */
+  def run(spark: SparkSession, out: String): Seq[(String, Long, Long)] = {
+    // task 1: gold build (topological, each table cached once), published
     val tables = Medallion.graph(spark).runMaterialized()
-    val dims = Seq("dim_location", "dim_eater", "dim_merchant", "dim_courier")
-    dims.foreach(t => Maintenance.optimizedWrite(tables(t), s"$out/$t"))
-    Maintenance.optimizedWrite(tables("trip_fact"), s"$out/trip_fact",
+    dims.foreach(t => DeltaLog.write(spark, tables(t), s"$out/$t"))
+    DeltaLog.write(spark, tables("trip_fact"), s"$out/trip_fact",
       partitionBy = Seq("trip_status"))
 
-    // task 2: maintenance on what task 1 wrote
-    dims.foreach(t => Maintenance.compact(spark, s"$out/$t", numFiles = 1))
-    Maintenance.cluster(spark, s"$out/trip_fact", numFiles = 1, cols = Seq("trip_id"))
-    spark.read.parquet(s"$out/trip_fact").createOrReplaceTempView("gold_trip_fact")
-    spark.sql("CACHE TABLE gold_trip_fact") // materialize for ANALYZE parity
+    // task 2: maintenance on what task 1 published
+    dims.foreach(t => DeltaLog.optimize(spark, s"$out/$t", targetFiles = 1))
+    DeltaLog.optimize(spark, s"$out/trip_fact", targetFiles = 1, zorderBy = Seq("trip_id"))
 
-    // task 3: validation over the WRITTEN outputs (not the in-memory frames)
-    def read(t: String) = spark.read.parquet(s"$out/$t")
+    // task 3: validation over the PUBLISHED tables (not the in-memory frames)
+    def read(t: String) = DeltaLog.read(spark, s"$out/$t")
     val fact = read("trip_fact")
     val dimLoc = read("dim_location")
-    val checks: Seq[(String, Long, Long)] = Seq(
+    Seq(
       ("fact_rows", fact.count(), 3L),
       ("fact_orphan_locations", fact.where(col("pickup_location_key").isNotNull)
         .join(dimLoc, fact("pickup_location_key") === dimLoc("location_key"),
@@ -53,6 +55,13 @@ object RunBatch {
             .groupBy(df.columns.head).count().where(col("count") =!= 1).count(), 0L)
         else (s"${t}_nonempty", if (df.count() > 0) 0L else 1L, 0L)
       }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val out = args.headOption.getOrElse(
+      java.nio.file.Files.createTempDirectory("graft-gold-").toString)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val checks = run(spark, out)
     val failed = checks.filterNot { case (_, observed, expected) => observed == expected }
     val js = checks.map { case (n, o, e) =>
       s""""$n":{"observed":$o,"expected":$e,"passed":${o == e}}"""

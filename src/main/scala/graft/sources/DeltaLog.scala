@@ -1607,7 +1607,7 @@ object DeltaLog {
       while (it.hasNext) line(it.next())
     } finally out.close()
     val dest = commitPath(target, 0L)
-    val gate = commitGates.computeIfAbsent(target, _ => new Object)
+    val gate = commitGate(tgtFs, target)
     val won = gate.synchronized(!tgtFs.exists(dest) && tgtFs.rename(tmp, dest))
     if (!won) {
       tgtFs.delete(tmp, false)
@@ -2879,6 +2879,14 @@ object DeltaLog {
   private val commitGates =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
+  /** The commit gate of `table`, keyed by its qualified path so every
+    * spelling of one table (`/t`, `file:/t`, a relative path) shares
+    * one gate. Qualifying is pure path arithmetic on the FileSystem in
+    * hand — no filesystem round trip on the commit path. */
+  private def commitGate(f: FileSystem, table: String): Object =
+    commitGates.computeIfAbsent(f.makeQualified(new Path(table)).toString,
+      _ => new Object)
+
   /** What a pinned read-modify-write transaction READ and intends to
     * REMOVE — the inputs the conflict checker ([[checkConflicts]]) needs
     * to decide whether concurrent commits can be rebased over. Paths are
@@ -4026,7 +4034,7 @@ object DeltaLog {
       // same-process writers (the local[N] reality), while cross-process
       // writers on a real deployment get atomicity from the store's
       // rename semantics.
-      val gate = commitGates.computeIfAbsent(table, _ => new Object)
+      val gate = commitGate(f, table)
       val won = gate.synchronized {
         !f.exists(commitDest) && f.rename(tmp, commitDest)
       }
@@ -4814,7 +4822,7 @@ object DeltaLog {
     try out.write((orderCommitActions(actions).mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
     val dest = commitPath(table, version)
-    val gate = commitGates.computeIfAbsent(table, _ => new Object)
+    val gate = commitGate(f, table)
     val won = gate.synchronized(!f.exists(dest) && f.rename(tmp, dest))
     if (!won) {
       f.delete(tmp, false)
@@ -5799,7 +5807,7 @@ object DeltaLog {
     } finally out.close()
     if (removed == 0L) { f.delete(tmp, false); return snap.version }
     val dest = commitPath(table, version)
-    val gate = commitGates.computeIfAbsent(table, _ => new Object)
+    val gate = commitGate(f, table)
     val won = gate.synchronized(!f.exists(dest) && f.rename(tmp, dest))
     if (!won) {
       f.delete(tmp, false)
@@ -6088,7 +6096,6 @@ object DeltaLog {
     val df = readEntries(spark, table, candidates, snap.schema,
       snap.columnMappingMode)
     val compacted = effZorder match {
-      case Seq(a, b) => graft.maintenance.Maintenance.zOrderFrame(df, targetFiles, a, b)
       case Seq(a) =>
         df.repartitionByRange(targetFiles, col(a)).sortWithinPartitions(col(a))
       case Seq() if snap.partitionColumns.isEmpty => df.coalesce(targetFiles)
@@ -6102,8 +6109,7 @@ object DeltaLog {
         val bucketSrc = if (dataCols.nonEmpty) dataCols else df.columns
         val bucket = pmod(hash(bucketSrc.map(col).toSeq: _*), lit(targetFiles))
         df.repartition(snap.partitionColumns.map(col) :+ bucket: _*)
-      case zs if zs.size >= 3 && zs.size <= 4 =>
-        graft.maintenance.Maintenance.zOrderFrameN(df, targetFiles, zs)
+      case zs if zs.size <= 4 => graft.functions.ZOrderKey.zOrderFrame(df, targetFiles, zs)
       case other => sys.error(s"zorderBy supports 1 to 4 columns, got ${other.mkString(",")}")
     }
     commitWrite(spark, compacted, table, snap.partitionColumns, None,
@@ -6389,7 +6395,7 @@ object DeltaLog {
       s"CONVERT TO DELTA: no parquet files found under $table"
     })
     val dest = commitPath(table, 0L)
-    val gate = commitGates.computeIfAbsent(table, _ => new Object)
+    val gate = commitGate(f, table)
     val won = gate.synchronized(!f.exists(dest) && f.rename(tmp, dest))
     if (!won) {
       f.delete(tmp, false)

@@ -111,7 +111,8 @@ object IcebergTable {
     }
   }
 
-  def isIcebergTable(spark: SparkSession, table: String): Boolean = {
+  def isIcebergTable(spark: SparkSession, location: String): Boolean = {
+    val table = qualify(spark, location)
     val f = fs(spark, table)
     scala.util.Try(currentMetadataPath(f, table)).toOption.exists(f.exists)
   }
@@ -245,6 +246,18 @@ object IcebergTable {
   private def lng(r: GenericRecord, field: String): Option[Long] =
     Option(r.getSchema.getField(field)).flatMap(_ => Option(r.get(field)))
       .map(_.asInstanceOf[Number].longValue())
+
+  /** A relative table argument, qualified once at the public entry
+    * points: the writers record table-derived paths (`location`,
+    * `manifest-list`, `manifest_path`) that [[resolve]] would otherwise
+    * prefix with the relative table a second time. Absolute and
+    * scheme-qualified inputs pass through untouched, so the metadata
+    * they produce stays byte-identical. */
+  private def qualify(spark: SparkSession, table: String): String = {
+    val p = new Path(table)
+    if (p.isAbsolute || p.toUri.getScheme != null) table
+    else fs(spark, table).makeQualified(p).toString
+  }
 
   /** Resolve a table location that may be absolute (real Iceberg writes
     * fully-qualified paths) or relative to the table root. */
@@ -526,9 +539,10 @@ object IcebergTable {
     * ([[rewriteDataFiles]], [[expireSnapshots]], [[deleteWhere]]) —
     * goes through the DISTRIBUTED [[entriesOf]] frame instead and never
     * materializes the file list on the driver. */
-  def state(spark: SparkSession, table: String,
+  def state(spark: SparkSession, location: String,
       snapshotId: Option[Long] = None,
       asOfMillis: Option[Long] = None): State = {
+    val table = qualify(spark, location)
     val f = fs(spark, table)
     val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
       .asInstanceOf[ObjectNode]
@@ -655,9 +669,10 @@ object IcebergTable {
     *     LOWER sequence number — a re-insert after the delete survives).
     *     Each data row learns its file's sequence number from a
     *     broadcast (path, seq) frame: O(files) rows, never data. */
-  def read(spark: SparkSession, table: String,
+  def read(spark: SparkSession, location: String,
       snapshotId: Option[Long] = None,
       asOfMillis: Option[Long] = None): DataFrame = {
+    val table = qualify(spark, location)
     val f = fs(spark, table)
     val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
       .asInstanceOf[ObjectNode]
@@ -671,10 +686,11 @@ object IcebergTable {
     * table opens only its days, a key equality only its bucket). The
     * full predicate still applies as a residual filter, so pruning is
     * purely an I/O optimization — never a semantics change. */
-  def readPruned(spark: SparkSession, table: String,
+  def readPruned(spark: SparkSession, location: String,
       predicate: org.apache.spark.sql.Column,
       snapshotId: Option[Long] = None,
       asOfMillis: Option[Long] = None): DataFrame = {
+    val table = qualify(spark, location)
     val f = fs(spark, table)
     val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
       .asInstanceOf[ObjectNode]
@@ -1001,7 +1017,8 @@ object IcebergTable {
   /** COUNT(*): metadata-only from manifest record counts when no
     * merge-on-read deletes exist; one distributed count otherwise (the
     * manifests alone cannot say how many rows the deletes suppress). */
-  def countRows(spark: SparkSession, table: String): Long = {
+  def countRows(spark: SparkSession, location: String): Long = {
+    val table = qualify(spark, location)
     import org.apache.spark.sql.functions._
     val f = fs(spark, table)
     val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
@@ -1033,7 +1050,8 @@ object IcebergTable {
     * on the driver is the same cost class as reading the metadata JSON
     * itself; the frames they return are ordinary DataFrames that join,
     * filter and aggregate like any other. */
-  def metadataTable(spark: SparkSession, table: String, kind: String): DataFrame = {
+  def metadataTable(spark: SparkSession, location: String, kind: String): DataFrame = {
+    val table = qualify(spark, location)
     import spark.implicits._
     val f = fs(spark, table)
     val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
@@ -1281,7 +1299,7 @@ object IcebergTable {
       upper: Map[Int, Array[Byte]] = Map.empty,
       nulls: Map[Int, Long] = Map.empty)
 
-  def writeAppend(spark: SparkSession, df: DataFrame, table: String,
+  def writeAppend(spark: SparkSession, df: DataFrame, location: String,
       carryPrevious: Boolean = true,
       partition: Seq[(String, String)] = Seq.empty,
       // IterableOnce so a REPLACE commit can STREAM carried entries
@@ -1295,6 +1313,7 @@ object IcebergTable {
       // the branch. The carried manifests come from the BRANCH head,
       // so branch commits stack.
       toBranch: Option[String] = None): Long = {
+    val table = qualify(spark, location)
     import org.apache.spark.sql.functions.col
     toBranch.foreach(b => require(b.nonEmpty && b != "main",
       "toBranch: `main` is the published head; write normally instead"))
@@ -2136,8 +2155,9 @@ object IcebergTable {
     * pins a snapshot for audit/reproducibility, a BRANCH is a movable
     * head; both PROTECT their snapshot from [[expireSnapshots]]. `main`
     * is reserved: commits move it. */
-  def setRef(spark: SparkSession, table: String, name: String,
+  def setRef(spark: SparkSession, location: String, name: String,
       snapshotId: Long, isBranch: Boolean = false): Unit = {
+    val table = qualify(spark, location)
     require(name.nonEmpty && name != "main",
       "setRef: `main` is reserved (commits move it); pick another name")
     editMetadata(spark, table) { root =>
@@ -2159,7 +2179,8 @@ object IcebergTable {
     * (the published head must be an ANCESTOR of the branch head via the
     * parent-snapshot-id chain — a diverged main fails loudly instead of
     * silently dropping published commits). Returns the new head. */
-  def fastForward(spark: SparkSession, table: String, branch: String): Long = {
+  def fastForward(spark: SparkSession, location: String, branch: String): Long = {
+    val table = qualify(spark, location)
     require(branch.nonEmpty && branch != "main",
       "fastForward: name the audit branch to publish")
     var head = 0L
@@ -2218,7 +2239,8 @@ object IcebergTable {
     * changes are relative to the state they were computed from.
     * Idempotent: picking a snapshot already in the head's ancestry is a
     * no-op. Returns the new (or current) head snapshot id. */
-  def cherrypick(spark: SparkSession, table: String, snapshotId: Long): Long = {
+  def cherrypick(spark: SparkSession, location: String, snapshotId: Long): Long = {
+    val table = qualify(spark, location)
     val f = fs(spark, table)
     val mdir = new Path(table, "metadata")
     val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
@@ -2332,8 +2354,9 @@ object IcebergTable {
     * than silently remapping ids on the next append's metadata rebuild.
     * Appends after the evolution must carry every column (the writer's
     * schema check); Returns the evolved column count. */
-  def alterAddColumns(spark: SparkSession, table: String,
+  def alterAddColumns(spark: SparkSession, location: String,
       newCols: StructType): Int = {
+    val table = qualify(spark, location)
     require(newCols.fields.nonEmpty, "ADD COLUMNS: no columns given")
     var width = 0
     editMetadata(spark, table) { root =>
@@ -2370,7 +2393,8 @@ object IcebergTable {
   }
 
   /** Drop a named ref; its snapshot becomes expirable again. */
-  def dropRef(spark: SparkSession, table: String, name: String): Unit = {
+  def dropRef(spark: SparkSession, location: String, name: String): Unit = {
+    val table = qualify(spark, location)
     require(name != "main", "dropRef: `main` cannot be dropped")
     editMetadata(spark, table) { root =>
       root.path("refs") match {
@@ -2381,7 +2405,8 @@ object IcebergTable {
   }
 
   /** Resolve a ref name to its snapshot id (`main` = current head). */
-  def refSnapshotId(spark: SparkSession, table: String, name: String): Long = {
+  def refSnapshotId(spark: SparkSession, location: String, name: String): Long = {
+    val table = qualify(spark, location)
     val f = fs(spark, table)
     val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
       .asInstanceOf[ObjectNode]
@@ -2471,9 +2496,10 @@ object IcebergTable {
     * eqDeleteInlineTuples` (default 1000, the common CDC shape) the
     * tuples inline as a pushed-down or-of-equalities predicate and the
     * parent scan prunes to matching files/row-groups instead. */
-  def changes(spark: SparkSession, table: String,
+  def changes(spark: SparkSession, location: String,
       fromSnapshotExclusive: Option[Long] = None,
       toSnapshot: Option[Long] = None): DataFrame = {
+    val table = qualify(spark, location)
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val f = fs(spark, table)
@@ -2758,8 +2784,9 @@ object IcebergTable {
     * unlinks happen per-partition; the driver holds manifest paths
     * (O(manifests)) and the partition-directory list only. Returns the
     * number of files deleted. */
-  def removeOrphanFiles(spark: SparkSession, table: String,
+  def removeOrphanFiles(spark: SparkSession, location: String,
       olderThanMs: Long): Long = {
+    val table = qualify(spark, location)
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, regexp_replace}
     val f = fs(spark, table)
@@ -2834,7 +2861,8 @@ object IcebergTable {
     * consolidation exactly. Delete manifests carry unchanged. Returns
     * (data manifests before, after); no commit when already
     * consolidated. */
-  def rewriteManifests(spark: SparkSession, table: String): (Int, Int) = {
+  def rewriteManifests(spark: SparkSession, location: String): (Int, Int) = {
+    val table = qualify(spark, location)
     import spark.implicits._
     val f = fs(spark, table)
     val root0 = mapper.readTree(readText(f, currentMetadataPath(f, table)))
@@ -2955,8 +2983,9 @@ object IcebergTable {
     } finally { entries.unpersist(false); () }
   }
 
-  def expireSnapshots(spark: SparkSession, table: String,
+  def expireSnapshots(spark: SparkSession, location: String,
       olderThanMs: Long, retainLast: Int = 1): Long = {
+    val table = qualify(spark, location)
     require(retainLast >= 1, "expireSnapshots: retainLast must be >= 1")
     val f = fs(spark, table)
     val mdir = new Path(table, "metadata")
@@ -3078,7 +3107,8 @@ object IcebergTable {
     * carries no delete files, so CONVERT TO DELTA (which refuses MoR
     * tables) can proceed. O(surviving rows) written; history keeps the
     * MoR snapshots time-travelable. */
-  def materializeDeletes(spark: SparkSession, table: String): Long = {
+  def materializeDeletes(spark: SparkSession, location: String): Long = {
+    val table = qualify(spark, location)
     // delete-presence probe over the DISTRIBUTED entries frame (the
     // spec-API state() would collect every file path on the driver)
     val f = fs(spark, table)
@@ -3114,8 +3144,9 @@ object IcebergTable {
     * writer one partition at a time via `toLocalIterator` (the
     * [[DeltaLog]] DELETE pattern). Driver state: O(delete files) paths
     * and O(1) aggregates. */
-  def rewriteDataFiles(spark: SparkSession, table: String,
+  def rewriteDataFiles(spark: SparkSession, location: String,
       smallerThan: Long = 32L << 20): (Int, Int) = {
+    val table = qualify(spark, location)
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val f = fs(spark, table)
@@ -3209,8 +3240,9 @@ object IcebergTable {
     * data file byte-untouched. One distributed scan finds the slots via
     * `_metadata` (no window, no row numbering); [[read]] applies them
     * with an anti-join. */
-  def deleteWhere(spark: SparkSession, table: String,
+  def deleteWhere(spark: SparkSession, location: String,
       predicate: org.apache.spark.sql.Column): Long = {
+    val table = qualify(spark, location)
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val f = fs(spark, table)
@@ -3264,8 +3296,9 @@ object IcebergTable {
     * data files at a strictly LOWER sequence number, so a later
     * re-insert of the same key survives (the spec's CDC upsert shape).
     * O(delete rows) written, no data file touched or even read. */
-  def deleteEquals(spark: SparkSession, table: String,
+  def deleteEquals(spark: SparkSession, location: String,
       values: DataFrame): Long = {
+    val table = qualify(spark, location)
     // metadata-JSON-only: no manifest walk — the ids come from the schema
     val f = fs(spark, table)
     val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
@@ -3292,9 +3325,10 @@ object IcebergTable {
     * distributed write each for the delete slots and the post-image.
     * Returns the new snapshot id (current one when nothing matched: no
     * empty commits). */
-  def updateWhere(spark: SparkSession, table: String,
+  def updateWhere(spark: SparkSession, location: String,
       predicate: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column]): Long = {
+    val table = qualify(spark, location)
     import org.apache.spark.sql.functions.col
     require(set.nonEmpty, "UPDATE needs at least one SET column")
     val f = fs(spark, table)
@@ -3339,11 +3373,12 @@ object IcebergTable {
     * target rows shuffle, or broadcast when the source is small), and
     * the committed bytes are O(changed rows). Returns the new snapshot
     * id (current one on a no-op merge). */
-  def mergeUpsert(spark: SparkSession, table: String, source: DataFrame,
+  def mergeUpsert(spark: SparkSession, location: String, source: DataFrame,
       keys: Seq[String], recencyCol: String,
       // caller guarantees a key-distinct source — skips the dedupe +
       // nondeterminism guard below (same contract as DeltaLog.merge)
       uniqueSourceKeys: Boolean = false): Long = {
+    val table = qualify(spark, location)
     import org.apache.spark.sql.functions.{coalesce, col, count, lit, max}
     if (!isIcebergTable(spark, table)) return writeAppend(spark, source, table)
     val f = fs(spark, table)
@@ -3426,7 +3461,8 @@ object IcebergTable {
     * parquet, so a plain-parquet Iceberg read would drop those
     * columns). Re-mirror after each Delta commit to keep the views in
     * sync. */
-  def mirrorDelta(spark: SparkSession, table: String): Long = {
+  def mirrorDelta(spark: SparkSession, location: String): Long = {
+    val table = qualify(spark, location)
     val snap = DeltaLog.snapshot(spark, table)
     val schema = snap.schema.getOrElse(
       sys.error(s"mirrorDelta: $table declares no schema"))

@@ -93,26 +93,6 @@ object Streams {
     q.awaitTermination()
   }
 
-  /** Streaming MERGE sink via foreachBatch: every micro-batch upserts
-    * into the parquet target through [[graft.operators.Scd2.mergeUpsert]]
-    * (keyed, recency-guarded) — the continuous CDC→gold handoff the
-    * reference schedules as a daily batch (gold_pipeline.py:789-796),
-    * run incrementally. The checkpoint makes it exactly-once at the
-    * batch level: a replayed micro-batch re-merges idempotently because
-    * the recency guard rejects rows that are not strictly newer. */
-  def foreachBatchUpsert(df: DataFrame, targetPath: String, checkpoint: String,
-      keys: Seq[String], recencyCol: String): Unit = {
-    val mergeOne = (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-      graft.operators.Scd2.mergeUpsert(batch.sparkSession, targetPath, batch, keys, recencyCol)
-    val q = df.writeStream
-      .outputMode("append")
-      .foreachBatch(mergeOne)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
   /** Streaming append into an open-format Delta table with PROTOCOL-level
     * exactly-once: each micro-batch commits through
     * [[graft.sources.DeltaLog.write]] carrying a `txn` (SetTransaction)

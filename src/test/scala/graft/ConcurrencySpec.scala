@@ -287,6 +287,49 @@ class ConcurrencySpec extends SparkSpec
       DeltaLog.TxnReadInfo(Set.empty, Set.empty, Set("app-2")), Map.empty)
   }
 
+  test("one commit gate per table however its path is spelled: no lost append") {
+    val t = fresh()
+    DeltaLog.write(spark, Seq(-1L).toDF("x"), t)
+    // two spellings of ONE table, two writers each; same-JVM writers must
+    // serialize on one gate, or two of them pass `!exists` together and
+    // the second rename silently replaces the first commit
+    val writers = Seq(t, s"file:$t", t, s"file:$t")
+    val rounds = 3
+    // line every writer up right before its commit ...
+    val barrier = new java.util.concurrent.CyclicBarrier(writers.size)
+    val lined = new ThreadLocal[java.lang.Boolean] {
+      override def initialValue(): java.lang.Boolean = false
+    }
+    DeltaLog.raceHook = (_, _) =>
+      if (!lined.get) {
+        lined.set(true)
+        barrier.await(60, java.util.concurrent.TimeUnit.SECONDS); ()
+      }
+    // ... and stall each commit between its exists-check and its rename
+    val conf = spark.sparkContext.hadoopConfiguration
+    val impl = conf.get("fs.file.impl")
+    conf.set("fs.file.impl", classOf[SlowCommitProbeFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(writers.size)
+    val versions = try (0 until rounds).flatMap { r =>
+      writers.zipWithIndex.map { case (sp, i) =>
+        pool.submit(() => {
+          lined.set(false)
+          DeltaLog.write(spark, Seq(r * 10L + i).toDF("x"), sp, "append")
+        })
+      }.map(_.get())
+    } finally {
+      pool.shutdown()
+      conf.set("fs.file.impl", impl)
+      conf.unset("fs.file.impl.disable.cache")
+    }
+    assert(versions.distinct.size == versions.size,
+      s"two writers reported the same version: ${versions.sorted}")
+    assert(DeltaLog.snapshot(spark, t).version == rounds * writers.size)
+    val want = -1L +: (0 until rounds).flatMap(r => writers.indices.map(r * 10L + _))
+    assert(DeltaLog.read(spark, t).as[Long].collect().sorted.toSeq == want.sorted)
+  }
+
   test("append commits declare isBlindAppend; rewrites do not") {
     val t = fresh(); seed(t)
     val vAppend = DeltaLog.snapshot(spark, t).version
@@ -298,5 +341,18 @@ class ConcurrencySpec extends SparkSpec
     val upCi = DeltaLog.readCommitActions(spark, t, vUp)
       .find(_.contains("commitInfo")).get
     assert(upCi.contains("\"isBlindAppend\":false"))
+  }
+}
+
+/** `file://` filesystem whose existence probe of a Delta commit file
+  * answers and then stalls, holding open the window between a writer's
+  * `!exists` check and its rename — the window two writers of one table
+  * must never share. */
+class SlowCommitProbeFileSystem extends graft.sources.FastLocalFileSystem {
+  override def exists(p: org.apache.hadoop.fs.Path): Boolean = {
+    val found = super.exists(p)
+    if (p.getParent != null && p.getParent.getName == "_delta_log" &&
+        p.getName.matches("\\d{20}\\.json")) Thread.sleep(50)
+    found
   }
 }

@@ -41,6 +41,24 @@ class IcebergSpec extends SparkSpec {
     }
   }
 
+  test("relative table path: append, delete and read resolve the table once") {
+    // a relative location must not be recorded relative and then
+    // prefixed with the table a second time on read
+    val rel = s"target/graft-iceberg-rel-${java.util.UUID.randomUUID()}/t"
+    val relPath = new org.apache.hadoop.fs.Path(rel)
+    val f = relPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      IcebergTable.writeAppend(spark, (0L until 20L).toDF("k").repartition(2), rel)
+      IcebergTable.writeAppend(spark, (20L until 30L).toDF("k"), rel)
+      IcebergTable.deleteWhere(spark, rel, col("k") % 5 === 0L)
+      val want = (0L until 30L).filterNot(_ % 5 == 0)
+      assert(IcebergTable.read(spark, rel).as[Long].collect().sorted.toSeq == want)
+      // the same table through its absolute spelling
+      val abs = f.makeQualified(relPath).toString
+      assert(IcebergTable.read(spark, abs).as[Long].collect().sorted.toSeq == want)
+    } finally { f.delete(relPath.getParent, true); () }
+  }
+
   test("timestamp travel via snapshot-log; discovery without version-hint") {
     val t = fresh()
     IcebergTable.writeAppend(spark, Seq(1L, 2L).toDF("k"), t)

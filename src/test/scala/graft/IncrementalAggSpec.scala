@@ -1,7 +1,7 @@
 package graft
 
 import graft.maintenance.IncrementalAgg
-import graft.sources.VersionedTable
+import graft.sources.DeltaLog
 import org.apache.spark.sql.functions._
 
 /** Folding the version delta into a materialized aggregate must equal
@@ -20,15 +20,15 @@ class IncrementalAggSpec extends SparkSpec {
       .withColumn("o_totalprice",
         when(col("o_orderkey") % 7 === 0, col("o_totalprice") * 2)
           .otherwise(col("o_totalprice")))
-    VersionedTable.write(spark, v0, path)
-    VersionedTable.write(spark, v1, path)
+    DeltaLog.write(spark, v0, path)
+    DeltaLog.write(spark, v1, path)
 
     val keys = Seq("o_custkey")
     val sums = Seq("o_totalprice")
-    val base = IncrementalAgg.materialize(VersionedTable.read(spark, path, Some(0)), keys, sums)
-    val delta = VersionedTable.changes(spark, path, 0, 1)
+    val base = IncrementalAgg.materialize(DeltaLog.read(spark, path, Some(0)), keys, sums)
+    val delta = DeltaLog.changesBetween(spark, path, 0, 1)
     val maintained = IncrementalAgg.applyDelta(base, delta, keys, sums)
-    val recomputed = IncrementalAgg.materialize(VersionedTable.read(spark, path, Some(1)), keys, sums)
+    val recomputed = IncrementalAgg.materialize(DeltaLog.read(spark, path, Some(1)), keys, sums)
 
     assert(maintained.schema == recomputed.schema,
       s"${maintained.schema} vs ${recomputed.schema}")

@@ -1,39 +1,43 @@
 package graft
 
-import graft.maintenance.Maintenance
+import graft.sources.DeltaLog
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** Maintenance fallbacks: compaction, range clustering, file detail. */
+/** OPTIMIZE on the Delta protocol: compaction, range clustering and
+  * Z-order clustering, checked on the written file layout. */
 class MaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshDataset(): String = {
-    val dir = Files.createTempDirectory("graft-maint-").toString + "/t"
+  private def freshTable(): String = {
+    val t = Files.createTempDirectory("graft-maint-").toString + "/t"
     // 16 small files of 1k rows
-    spark.range(16000).select(col("id"), (col("id") % 97).as("k"))
-      .repartition(16).write.parquet(dir)
-    dir
+    DeltaLog.write(spark, spark.range(16000).select(col("id"), (col("id") % 97).as("k"))
+      .repartition(16), t)
+    t
   }
 
+  private def numFiles(t: String): Long =
+    DeltaLog.detail(spark, t).select("numFiles").as[Long].head()
+
   test("compact rewrites many small files into the target count") {
-    val dir = freshDataset()
-    assert(Maintenance.detail(spark, dir).select("num_files").as[Long].head() == 16L)
-    Maintenance.compact(spark, dir, 2)
-    val d = Maintenance.detail(spark, dir).as[(String, Long, Long, Long, Long)].head()
-    assert(d._2 == 2L)
-    assert(spark.read.parquet(dir).count() == 16000L)
+    val t = freshTable()
+    assert(numFiles(t) == 16L)
+    DeltaLog.optimize(spark, t, targetFiles = 2)
+    assert(numFiles(t) == 2L)
+    assert(DeltaLog.read(spark, t).count() == 16000L)
   }
 
   test("cluster produces non-overlapping sorted ranges per file") {
-    val dir = freshDataset()
-    Maintenance.cluster(spark, dir, 4, Seq("k"))
-    assert(spark.read.parquet(dir).count() == 16000L)
+    val t = freshTable()
+    DeltaLog.optimize(spark, t, targetFiles = 4, zorderBy = Seq("k"))
+    val df = DeltaLog.read(spark, t)
+    assert(df.count() == 16000L)
     // per-file min/max of k must not overlap across files (range clustering)
-    val ranges = spark.read.parquet(dir)
-      .groupBy(input_file_name().as("f"))
+    val ranges = df.groupBy(input_file_name().as("f"))
       .agg(min("k").as("mn"), max("k").as("mx"))
       .as[(String, Long, Long)].collect().sortBy(_._2)
+    assert(ranges.length > 1)
     ranges.sliding(2).foreach {
       case Array(a, b) => assert(a._3 <= b._2, s"overlap: $a vs $b")
       case _ =>
@@ -54,30 +58,21 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("clusterZ gives per-file min/max locality on BOTH columns") {
-    val dir = Files.createTempDirectory("graft-zorder-").toString + "/t"
+    val t = Files.createTempDirectory("graft-zorder-").toString + "/t"
     // two independent uniform dimensions — lexicographic clustering on
     // (a, b) would leave b's per-file span at ~full range
-    spark.range(65536).select(
+    DeltaLog.write(spark, spark.range(65536).select(
         (col("id") % 256).as("a"), (col("id") / 256).cast("long").as("b"))
-      .repartition(8).write.parquet(dir)
-    Maintenance.clusterZ(spark, dir, 16, "a", "b")
-    val spans = spark.read.parquet(dir)
-      .groupBy(input_file_name())
+      .repartition(8), t)
+    DeltaLog.optimize(spark, t, targetFiles = 16, zorderBy = Seq("a", "b"))
+    val df = DeltaLog.read(spark, t)
+    val spans = df.groupBy(input_file_name())
       .agg((max("a") - min("a")).as("sa"), (max("b") - min("b")).as("sb"))
       .agg(avg("sa"), avg("sb")).as[(Double, Double)].head()
     // 16 z-ordered files over a 256×256 grid ⇒ each file covers about a
     // quarter of each dimension; assert well under the full 255 span
     assert(spans._1 < 160, s"column a span too wide: $spans")
     assert(spans._2 < 160, s"column b span too wide: $spans")
-    assert(spark.read.parquet(dir).count() == 65536L)
-  }
-
-  test("analyze computes CBO statistics for a catalog table") {
-    dropManagedTable("maint_analyze_t")
-    spark.range(100).write.mode("overwrite").saveAsTable("maint_analyze_t")
-    Maintenance.analyze(spark, "maint_analyze_t")
-    val stats = spark.sql("DESCRIBE TABLE EXTENDED maint_analyze_t")
-      .where(col("col_name") === "Statistics").count()
-    assert(stats == 1)
+    assert(df.count() == 65536L)
   }
 }

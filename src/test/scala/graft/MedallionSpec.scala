@@ -102,16 +102,17 @@ class MedallionSpec extends SparkSpec {
   }
 
   test("partitioned fact write prunes by partition column (S7)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part-").toString + "/fact"
-    graft.maintenance.Maintenance.optimizedWrite(
-      tables("trip_fact"), dir, partitionBy = Seq("trip_status"))
-    val reread = spark.read.parquet(dir)
-    assert(reread.count() == 3)
-    // partition pruning: only the cancelled partition directory is read
-    val plan = reread.where(col("trip_status") === "cancelled")
-      .queryExecution.executedPlan.toString
-    assert(reread.where(col("trip_status") === "cancelled").count() == 1)
-    assert(plan.contains("PartitionFilters") || !plan.contains("trip_status = cancelled"))
+    import graft.sources.DeltaLog
+    val t = java.nio.file.Files.createTempDirectory("graft-part-").toString + "/fact"
+    DeltaLog.write(spark, tables("trip_fact"), t, partitionBy = Seq("trip_status"))
+    assert(DeltaLog.read(spark, t).count() == 3)
+    // partition pruning: only the cancelled partition's files are planned
+    val cancelled = col("trip_status") === "cancelled"
+    val snap = DeltaLog.snapshot(spark, t)
+    val kept = DeltaLog.pruneFiles(spark, snap, cancelled)
+    assert(kept.nonEmpty && kept.forall(_.contains("trip_status=cancelled")), kept)
+    assert(kept.size < snap.files.size)
+    assert(DeltaLog.readPruned(spark, t, cancelled).count() == 1)
   }
 
   test("gold tables publish as Delta-protocol tables (the reference's format)") {

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.Scd2
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** SCD2 invariants (SURVEY §5 test plan, rules from the reference's
   * expectations catalog data_quality.py:149-199): exactly one is_current
@@ -68,17 +67,5 @@ class Scd2Spec extends SparkSpec {
       "effective_start", "effective_end", "is_current")
     assert(merged.select(cols.map(col): _*).exceptAll(spec.select(cols.map(col): _*)).count() == 0)
     assert(spec.select(cols.map(col): _*).exceptAll(merged.select(cols.map(col): _*)).count() == 0)
-  }
-
-  test("mergeUpsert: recency-guarded keyed upsert over parquet") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-upsert-").toString + "/t"
-    val t0 = Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "v", "updated")
-    Scd2.mergeUpsert(spark, dir, t0, Seq("id"), "updated")
-    // newer row for id=1 wins, stale row for id=2 is ignored, id=3 inserts
-    val batch = Seq((1L, "a2", 15L), (2L, "stale", 5L), (3L, "c", 30L)).toDF("id", "v", "updated")
-    Scd2.mergeUpsert(spark, dir, batch, Seq("id"), "updated")
-    val out = spark.read.parquet(dir).sort("id").as[(Long, String, Long)].collect()
-    assert(out.toSeq == Seq((1L, "a2", 15L), (2L, "b", 20L), (3L, "c", 30L)))
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.pipelines.{Fixtures, Medallion}
-import graft.sources.VersionedTable
+import graft.sources.DeltaLog
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 /** The full medallion flow with the STREAM in the loop: CDC envelopes
   * arrive on a file stream, bronze parses inside the stream (stateless),
   * silver runs per micro-batch behind foreachBatch committing one
-  * versioned-table version per batch, and the gold fact built from the
+  * Delta-protocol version per batch, and the gold fact built from the
   * streamed silver equals the all-batch pipeline exactly. Cross-batch
   * event dedup belongs to dropDuplicatesWithinWatermark (covered by
   * q_stream_dedup_watermark); here the fixture arrives in one batch. */
@@ -29,7 +29,7 @@ class StreamingMedallionSpec extends SparkSpec {
     val ckpt = s"$base/ckpt"
     val q = bronzeStream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        VersionedTable.write(batch.sparkSession,
+        DeltaLog.write(batch.sparkSession,
           Medallion.silverTrips(batch), silverPath, "append")
         ()
       }
@@ -43,7 +43,7 @@ class StreamingMedallionSpec extends SparkSpec {
     val silverMerchant = Medallion.silverMerchant(Medallion.bronze(topics("merchant"), "merchant"))
     val dimLoc = Medallion.dimLocation(silverEater, silverMerchant)
 
-    val streamedSilver = VersionedTable.read(spark, silverPath)
+    val streamedSilver = DeltaLog.read(spark, silverPath)
     val factFromStream = Medallion.tripFact(streamedSilver, dimLoc, silverMerchant)
     val factFromBatch = Medallion.tripFact(
       Medallion.silverTrips(Medallion.bronze(topics("trip_events"), "trip_events")),
@@ -57,8 +57,9 @@ class StreamingMedallionSpec extends SparkSpec {
     assert(a.exceptAll(b).count() == 0
       && b.exceptAll(a).count() == 0,
       "gold fact from the streamed silver diverged from the batch pipeline")
-    // the stream committed versioned silver: history exists and is replayable
-    assert(VersionedTable.history(spark, silverPath).nonEmpty)
+    // the stream committed versioned silver: one APPEND per micro-batch
+    assert(DeltaLog.history(spark, silverPath).select("operation").collect()
+      .map(_.getString(0)).toSet == Set("APPEND"))
   }
 
   test("silver streams from a bronze PROTOCOL table (S2) and equals the batch result") {
@@ -76,7 +77,7 @@ class StreamingMedallionSpec extends SparkSpec {
     val silverPath = s"$base/silver_trips"
     val q = bronzeStream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        VersionedTable.write(batch.sparkSession,
+        DeltaLog.write(batch.sparkSession,
           Medallion.silverTrips(batch), silverPath, "append")
         ()
       }
@@ -87,7 +88,7 @@ class StreamingMedallionSpec extends SparkSpec {
 
     val batchSilver = Medallion.silverTrips(
       Medallion.bronze(Fixtures.topics(spark)("trip_events"), "trip_events"))
-    val a = VersionedTable.read(spark, silverPath).localCheckpoint(true)
+    val a = DeltaLog.read(spark, silverPath).localCheckpoint(true)
     val b = batchSilver.localCheckpoint(true)
     assert(a.count() == 17)
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
@@ -106,7 +107,7 @@ class StreamingMedallionSpec extends SparkSpec {
       val q = spark.readStream.format("graft-delta").load(src)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          VersionedTable.write(batch.sparkSession, batch, sink, "append"); ()
+          DeltaLog.write(batch.sparkSession, batch, sink, "append"); ()
         }
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
@@ -114,18 +115,18 @@ class StreamingMedallionSpec extends SparkSpec {
       q.awaitTermination()
     }
     runOnce()
-    assert(VersionedTable.read(spark, sink).as[Long].collect().sorted.toSeq ==
+    assert(DeltaLog.read(spark, sink).as[Long].collect().sorted.toSeq ==
       (0L to 4L))
     // two more commits land between runs; the restarted query reads ONLY
     // them (offset checkpoint = last committed version, no reprocessing)
     graft.sources.DeltaLog.write(spark, spark.range(5L, 8L).toDF("x"), src, "append")
     graft.sources.DeltaLog.write(spark, spark.range(8L, 10L).toDF("x"), src, "append")
     runOnce()
-    assert(VersionedTable.read(spark, sink).as[Long].collect().sorted.toSeq ==
+    assert(DeltaLog.read(spark, sink).as[Long].collect().sorted.toSeq ==
       (0L to 9L), "restart must resume from the committed version, no dupes, no gaps")
     // idle restart: nothing new, nothing re-emitted
     runOnce()
-    assert(VersionedTable.read(spark, sink).count() == 10L)
+    assert(DeltaLog.read(spark, sink).count() == 10L)
   }
 
   test("maxFilesPerTrigger chunks the snapshot; a chunk boundary survives a crash") {
@@ -148,7 +149,7 @@ class StreamingMedallionSpec extends SparkSpec {
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           if (failAtBatch.contains(id)) sys.error("injected crash")
           batchSizes.synchronized { batchSizes += batch.count() }
-          VersionedTable.write(batch.sparkSession, batch, sink, "append"); ()
+          DeltaLog.write(batch.sparkSession, batch, sink, "append"); ()
         }
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
@@ -165,7 +166,7 @@ class StreamingMedallionSpec extends SparkSpec {
       s"two 3-file chunks should have committed before the crash: $afterCrash")
     // restart resumes AT the chunk boundary: replays batch 2, finishes
     run(failAtBatch = None)
-    assert(VersionedTable.read(spark, sink).as[Long].collect().sorted.toSeq ==
+    assert(DeltaLog.read(spark, sink).as[Long].collect().sorted.toSeq ==
       (0L to 99L), "chunked snapshot must deliver every row exactly once")
     assert(batchSizes.synchronized(batchSizes.size) >= 4,
       s"snapshot must arrive chunked, got batches of $batchSizes")
@@ -177,7 +178,7 @@ class StreamingMedallionSpec extends SparkSpec {
       spark.range(140L, 160L).toDF("x").repartition(2), src, "append")
     batchSizes.synchronized(batchSizes.clear())
     run(failAtBatch = None)
-    assert(VersionedTable.read(spark, sink).as[Long].collect().sorted.toSeq ==
+    assert(DeltaLog.read(spark, sink).as[Long].collect().sorted.toSeq ==
       (0L to 159L))
     assert(batchSizes.synchronized(batchSizes.size) >= 2,
       s"6 new files under a 3-file cap need >= 2 chunks: $batchSizes")
@@ -380,14 +381,14 @@ class StreamingMedallionSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "2000").load(src)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        VersionedTable.write(batch.sparkSession, batch, sink, "append"); ()
+        DeltaLog.write(batch.sparkSession, batch, sink, "append"); ()
       }
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
 
-    assert(VersionedTable.read(spark, sink).count() == 10000L,
+    assert(DeltaLog.read(spark, sink).count() == 10000L,
       "every row exactly once through the chunked snapshot")
     val peak = graft.streaming.DeltaStreamSource.maxDriverEntriesPerCollect
     assert(peak > 0L && peak <= 2000L,
@@ -428,7 +429,7 @@ class StreamingMedallionSpec extends SparkSpec {
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           if (failAtBatch.contains(id)) sys.error("injected crash")
           batchSizes.synchronized { batchSizes += batch.count() }
-          VersionedTable.write(batch.sparkSession, batch, sink, "append"); ()
+          DeltaLog.write(batch.sparkSession, batch, sink, "append"); ()
         }
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
@@ -442,7 +443,7 @@ class StreamingMedallionSpec extends SparkSpec {
     assert(afterCrash.size == 2 && afterCrash.sum < 100L,
       s"two byte-budget chunks should have committed before the crash: $afterCrash")
     run(failAtBatch = None)
-    assert(VersionedTable.read(spark, sink).as[Long].collect().sorted.toSeq ==
+    assert(DeltaLog.read(spark, sink).as[Long].collect().sorted.toSeq ==
       (0L to 99L), "byte-chunked snapshot must deliver every row exactly once")
     val all = batchSizes.synchronized(batchSizes.toSeq)
     assert(all.size >= 3, s"10 files under a ~3-file byte budget need >= 3 chunks: $all")
@@ -450,7 +451,7 @@ class StreamingMedallionSpec extends SparkSpec {
     graft.sources.DeltaLog.write(spark,
       spark.range(100L, 140L).toDF("x").repartition(4), src, "append")
     run(failAtBatch = None)
-    assert(VersionedTable.read(spark, sink).as[Long].collect().sorted.toSeq ==
+    assert(DeltaLog.read(spark, sink).as[Long].collect().sorted.toSeq ==
       (0L to 139L))
   }
 
@@ -467,7 +468,7 @@ class StreamingMedallionSpec extends SparkSpec {
       val r = spark.readStream.format("graft-delta").options(opts).load(src)
       val q = r.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          VersionedTable.write(batch.sparkSession, batch, sink, "append"); ()
+          DeltaLog.write(batch.sparkSession, batch, sink, "append"); ()
         }
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
@@ -476,7 +477,7 @@ class StreamingMedallionSpec extends SparkSpec {
     }
     // initial snapshot applies the deletion vector: masked rows never stream
     runOnce()
-    assert(VersionedTable.read(spark, sink).as[Long].collect().sorted.toSeq ==
+    assert(DeltaLog.read(spark, sink).as[Long].collect().sorted.toSeq ==
       Seq(0L, 1L, 2L, 5L, 6L, 7L, 8L, 9L))
     // a change commit (DELETE) inside the window refuses loudly...
     graft.sources.DeltaLog.deleteWhere(spark, src, $"x" === 0L)     // v2: remove+readd
@@ -488,7 +489,7 @@ class StreamingMedallionSpec extends SparkSpec {
       Option(e.getCause).exists(_.getMessage.contains("removes files")), e.getMessage)
     // ...and skipChangeCommits skips it whole, still delivering the append
     runOnce(Map("skipChangeCommits" -> "true"))
-    val got = VersionedTable.read(spark, sink).as[Long].collect().sorted.toSeq
+    val got = DeltaLog.read(spark, sink).as[Long].collect().sorted.toSeq
     assert(got == Seq(0L, 1L, 2L, 5L, 6L, 7L, 8L, 9L, 15L),
       s"skipChangeCommits must skip the DELETE commit, keep the append: $got")
   }

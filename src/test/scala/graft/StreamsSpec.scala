@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.Debezium
+import graft.sources.{Debezium, DeltaLog}
 import graft.streaming.Streams
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -155,7 +155,6 @@ class StreamsSpec extends SparkSpec {
 
   test("streaming Delta append: replayed micro-batch skipped via txn guard") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.sources.DeltaLog
     val ms = MemoryStream[Long]
     val table = Files.createTempDirectory("graft-sda-").toString + "/t"
     val ckpt1 = Files.createTempDirectory("graft-sda-ckpt1-").toString
@@ -182,18 +181,18 @@ class StreamsSpec extends SparkSpec {
     val ms = MemoryStream[(Long, String, Long)]
     val target = Files.createTempDirectory("graft-fbu-").toString + "/t"
     val ckpt = Files.createTempDirectory("graft-fbu-ckpt-").toString
-    def run(): Unit = Streams.foreachBatchUpsert(
+    def run(): Unit = Streams.foreachBatchDeltaMerge(
       ms.toDF().toDF("id", "payload", "updated_at"), target, ckpt,
       Seq("id"), "updated_at")
     // first run: initial load
     ms.addData((1L, "a", 10L), (2L, "b", 10L))
     run()
-    assert(spark.read.parquet(target).count() == 2)
+    assert(DeltaLog.read(spark, target).count() == 2)
     // second run, same checkpoint: a newer update for 1, a STALE row for
     // 2 (must be rejected by the recency guard), and a new key 3
     ms.addData((1L, "a2", 20L), (2L, "stale", 5L), (3L, "c", 20L))
     run()
-    val state = spark.read.parquet(target)
+    val state = DeltaLog.read(spark, target)
       .as[(Long, String, Long)].collect().sortBy(_._1).toSeq
     assert(state == Seq((1L, "a2", 20L), (2L, "b", 10L), (3L, "c", 20L)))
   }
