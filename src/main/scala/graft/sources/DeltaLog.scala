@@ -2662,17 +2662,52 @@ object DeltaLog {
     * engine-internal (all reads go back through Spark, session UTC, so
     * the adjusted-to-UTC micros annotation reads as the identical
     * TimestampType values); the oracle only ever reads the original
-    * test tables, never engine-staged files. Restores the previous
-    * session setting afterwards so user-facing writes (e.g. Verify's
-    * result dumps, which DuckDB reads) keep their encoding. */
-  private[sources] def withMicrosStaging[T](spark: SparkSession)(body: => T): T = {
+    * test tables, never engine-staged files. The setting goes on the
+    * session of the frame `body` writes — the one its parquet writer
+    * reads; a foreachBatch frame belongs to the stream's cloned
+    * session, not the caller's. Restores the previous setting
+    * afterwards so user-facing writes (e.g. Verify's result dumps,
+    * which DuckDB reads) keep their encoding. */
+  private[sources] def withMicrosStaging[T](staged: DataFrame)(body: => T): T = {
+    val conf = staged.sparkSession.conf
     val k = "spark.sql.parquet.outputTimestampType"
-    val prev = spark.conf.getOption(k)
-    spark.conf.set(k, "TIMESTAMP_MICROS")
+    val prev = conf.getOption(k)
+    conf.set(k, "TIMESTAMP_MICROS")
     try body finally prev match {
-      case Some(v) => spark.conf.set(k, v)
-      case None => spark.conf.unset(k)
+      case Some(v) => conf.set(k, v)
+      case None => conf.unset(k)
     }
+  }
+
+  /** A per-row write invariant: a row for which `violated` holds
+    * refuses the whole commit with `message`. */
+  private final case class RowGuard(violated: Column, message: String)
+
+  /** `df` with every guard folded into a projection of its first
+    * column, so the staging write itself checks each row it writes and
+    * a commit evaluates its frame once (delta-spark's
+    * DeltaInvariantCheckerExec shape). A projection, never a Filter:
+    * Catalyst may push a filter below a join, where it would judge rows
+    * that never reach the output. A violating row raises a tag naming
+    * the guard by index; `tag` (the commit's nonce) keeps it apart from
+    * any other raised error. */
+  private def guarded(df: DataFrame, guards: Seq[RowGuard], tag: String): DataFrame =
+    if (guards.isEmpty) df
+    else {
+      val host = df.schema.fields.head
+      def raise(i: Int) = raise_error(lit(s"graft.rowGuard.$tag#$i"))
+      val checked = guards.zipWithIndex.foldRight(col(host.name)) {
+        case ((g, i), rest) => when(g.violated, raise(i)).otherwise(rest)
+      }
+      df.withColumn(host.name, checked.as(host.name, host.metadata))
+    }
+
+  /** Index of the [[guarded]] guard (tagged `tag`) that failed `e`. */
+  private def failedGuard(e: Throwable, tag: String): Option[Int] = {
+    val tripped = (java.util.regex.Pattern.quote(s"graft.rowGuard.$tag#") + "(\\d+)").r
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage).flatMap(tripped.findFirstMatchIn))
+      .map(_.group(1).toInt).nextOption()
   }
 
   /** Per-file protocol stats straight from the parquet FOOTERS the
@@ -3217,8 +3252,9 @@ object DeltaLog {
     * Generated columns (`delta.generationExpression` field metadata):
     *   - user-data writes (APPEND/OVERWRITE/REPLACE WHERE/COPY INTO):
     *     a missing column is computed from its expression; a provided
-    *     column is ENFORCED (`value <=> expr` per row, null-safe) and a
-    *     violating write refuses whole — Delta's invariant semantics.
+    *     column is ENFORCED (`value <=> expr` per row, null-safe) by a
+    *     [[RowGuard]] the staging write evaluates, and a violating write
+    *     refuses whole — Delta's invariant semantics.
     *   - rewrites (MERGE/UPDATE), whose frame derives from the table
     *     itself: the column is RECOMPUTED unconditionally, so a SET or
     *     update-clause touching a base column keeps the invariant;
@@ -3239,8 +3275,9 @@ object DeltaLog {
     *     staging write) rely on deterministic partition contents —
     *     the same property Spark itself requires for task retries.
     *   - explicit non-null values refuse under GENERATED ALWAYS
-    *     (`allowExplicitInsert` absent/false) on user-data writes;
-    *     rewrites carry existing values through untouched. Under BY
+    *     (`allowExplicitInsert` absent/false) on user-data writes — the
+    *     counting pre-pass's provided extremum answers that, no extra
+    *     job; rewrites carry existing values through untouched. Under BY
     *     DEFAULT the high-water mark advances past the provided values
     *     so later allocations never collide.
     *   - the advanced `delta.identity.highWaterMark` is committed in the
@@ -3249,11 +3286,12 @@ object DeltaLog {
     *     [[CommitRaceException]] and the operation-level retry
     *     re-allocates from the fresh snapshot.
     *
-    * Returns the (possibly augmented) frame plus the new high-water
-    * mark per identity column (empty when nothing advanced). */
+    * Returns the (possibly augmented) frame, the new high-water mark
+    * per identity column (empty when nothing advanced), the release of
+    * the frames pinned for staging, and the generated-column guards. */
   private def applyGeneratedIdentity(spark: SparkSession, df: DataFrame,
       declared: StructType, dataChange: Boolean, operation: String)
-      : (DataFrame, Map[String, Long], () => Unit) = {
+      : (DataFrame, Map[String, Long], () => Unit, Seq[RowGuard]) = {
     val genFields = declared.fields.filter(_.metadata.contains(GenExprKey)).toSeq
     val idFields = declared.fields.filter(_.metadata.contains(IdStartKey)).toSeq
     // column DEFAULTs: a data-changing write that does not name a
@@ -3269,7 +3307,7 @@ object DeltaLog {
         expr(fl.metadata.getString(DefaultKey)).cast(fl.dataType)))
     val df0 = dfFilled
     if (!dataChange || (genFields.isEmpty && idFields.isEmpty))
-      return (df0, Map.empty, () => ())
+      return (df0, Map.empty, () => (), Nil)
     // frames pinned for the duration of allocation + staging: the gid
     // tagging below is non-deterministic across re-evaluation (AQE
     // re-plan, non-deterministic source), so the counting pre-pass and
@@ -3277,6 +3315,7 @@ object DeltaLog {
     val pinned = Seq.newBuilder[DataFrame]
     val rewriteOp = operation == "MERGE" || operation == "UPDATE"
     var data = df0
+    var guards = Seq.empty[RowGuard]
     if (genFields.nonEmpty) {
       if (rewriteOp) {
         genFields.foreach { fl =>
@@ -3291,15 +3330,13 @@ object DeltaLog {
           data = data.withColumn(fl.name,
             expr(fl.metadata.getString(GenExprKey)).cast(fl.dataType))
         }
-        if (present.nonEmpty) {
-          val violated = present.map { fl =>
+        if (present.nonEmpty)
+          guards = Seq(RowGuard(present.map { fl =>
             !(col(fl.name) <=> expr(fl.metadata.getString(GenExprKey)).cast(fl.dataType))
-          }.reduce(_ || _)
-          require(data.where(violated).limit(1).count() == 0L,
+          }.reduce(_ || _),
             s"generated-column invariant violated by $operation: " + present
               .map(fl => s"${fl.name} := ${fl.metadata.getString(GenExprKey)}")
-              .mkString("; "))
-        }
+              .mkString("; ")))
       }
     }
     var hwms = Map.empty[String, Long]
@@ -3312,10 +3349,6 @@ object DeltaLog {
         scala.util.Try(m.getBoolean(IdAllowKey)).getOrElse(false)
       val hwm = if (m.contains(IdHwmKey)) m.getLong(IdHwmKey) else start - step
       val hadCol = data.columns.contains(fl.name)
-      if (hadCol && !rewriteOp && !allowExplicit)
-        require(data.where(col(fl.name).isNotNull).limit(1).count() == 0L,
-          s"identity column ${fl.name} is GENERATED ALWAYS — explicit values " +
-            s"refused (set $IdAllowKey=true for GENERATED BY DEFAULT)")
       if (!hadCol) data = data.withColumn(fl.name, lit(null).cast(LongType))
       // counting pre-pass: rows + provided extremum per input partition
       // (monotonically_increasing_id encodes partition << 33 | index)
@@ -3333,6 +3366,11 @@ object DeltaLog {
       val provided = perPart.flatMap { r =>
         Option(if (step > 0) r.getAs[Any]("__mx") else r.getAs[Any]("__mn"))
       }.map { case l: Long => l }
+      val refused = hadCol && !rewriteOp && !allowExplicit && provided.nonEmpty
+      if (refused) (pinned.result() :+ tagged).foreach(_.unpersist())
+      require(!refused,
+        s"identity column ${fl.name} is GENERATED ALWAYS — explicit values " +
+          s"refused (set $IdAllowKey=true for GENERATED BY DEFAULT)")
       // the mark only ever advances in step direction — past both its
       // previous value and any explicitly provided ids
       val base =
@@ -3360,7 +3398,7 @@ object DeltaLog {
       }
     }
     val toRelease = pinned.result()
-    (data, hwms, () => toRelease.foreach(_.unpersist()))
+    (data, hwms, () => toRelease.foreach(_.unpersist()), guards)
   }
 
   /** Core committer behind every write shape (overwrite, append,
@@ -3558,8 +3596,8 @@ object DeltaLog {
     // generated/identity columns: fill, enforce, or recompute against
     // the table's declared metadata; identityHwms carries the advanced
     // high-water marks for the metaData action below
-    val (data, identityHwms, releaseIdentityPins) = applyGeneratedIdentity(spark, df,
-      featureSchema, dataChange, operation)
+    val (data, identityHwms, releaseIdentityPins, genGuards) =
+      applyGeneratedIdentity(spark, df, featureSchema, dataChange, operation)
     // columns the feature pass ADDED (a generated/identity column the
     // caller's frame lacked) must be re-attached to the declaration —
     // with their feature metadata
@@ -3595,13 +3633,20 @@ object DeltaLog {
           }
         }
       }
-    // table-property enforcement (writer-side protocol compliance),
-    // BEFORE staging so a refused commit leaves zero trace:
-    // - delta.appendOnly: a dataChange commit must not remove files
+    // table-property enforcement (writer-side protocol compliance):
+    // - delta.appendOnly: a dataChange commit must not remove files —
+    //   refused BEFORE staging, so nothing is written
     // - delta.constraints.<name>: every row written must satisfy the
     //   CHECK expression (violated = evaluates to FALSE; null passes)
+    // - NOT NULL column invariants (Delta's `invariants` writer
+    //   feature, minWriterVersion 2): a null landing in a column the
+    //   declared schema marks non-nullable refuses the whole commit
+    // The per-row checks ride the staging write itself as [[RowGuard]]s
+    // (with the generated-column guards): no separate pass over the
+    // frame, and a refused commit deletes its scratch directory before
+    // anything moves under the table root.
     val effConfig = firstPrev.map(_.configuration).getOrElse(Map.empty) ++ properties
-    if (dataChange) {
+    val rowGuards: Seq[RowGuard] = if (!dataChange) Nil else {
       // the remove-frame probe (one metadata-only limit-1 job) runs
       // ONLY when the table actually declares appendOnly — the common
       // case pays nothing
@@ -3610,34 +3655,25 @@ object DeltaLog {
             removeFrameOf.exists(rf => !rf(p).isEmpty))),
         s"table $table is append-only (delta.appendOnly=true): " +
           s"$operation would remove files — refused")
-      effConfig.foreach { case (k, v) =>
-        if (k.startsWith("delta.constraints.")) {
-          val name = k.stripPrefix("delta.constraints.")
-          val bad = staged0.where(!coalesce(expr(v), lit(true))).limit(1).count()
-          require(bad == 0L,
-            s"CHECK constraint '$name' ($v) violated by rows written to $table — refused")
-        }
+      val checks = effConfig.toSeq.collect {
+        case (k, v) if k.startsWith("delta.constraints.") =>
+          RowGuard(!coalesce(expr(v), lit(true)),
+            s"CHECK constraint '${k.stripPrefix("delta.constraints.")}' ($v) " +
+              s"violated by rows written to $table — refused")
       }
-      // NOT NULL column invariants (Delta's `invariants` writer
-      // feature, minWriterVersion 2): a null landing in a column the
-      // declared schema marks non-nullable refuses the whole commit.
-      // ONE combined job for all such columns — and only for columns
-      // whose INCOMING field is nullable: a staged field Catalyst
-      // already proves non-nullable cannot produce a null, so the
-      // common invariant-clean append pays ZERO verification jobs
-      // (delta-spark skips the same way).
+      // NOT NULL is guarded only for columns whose INCOMING field is
+      // nullable: a staged field Catalyst already proves non-nullable
+      // cannot produce a null (delta-spark skips the same way)
       val incomingNullable = staged0.schema.fields
         .filter(_.nullable).map(_.name).toSet
       val notNull = firstPrev.flatMap(_.schema).toSeq
         .flatMap(_.fields.filter(f => !f.nullable))
         .map(_.name).filter(incomingNullable.contains)
-      if (notNull.nonEmpty) {
-        val anyNull = notNull.map(col(_).isNull).reduce(_ || _)
-        val bad = staged0.where(anyNull).limit(1).count()
-        require(bad == 0L,
-          s"NOT NULL invariant violated: a null reached one of " +
-            s"(${notNull.mkString(", ")}) in rows written to $table — refused")
-      }
+      val nullGuard = if (notNull.isEmpty) Nil else Seq(RowGuard(
+        notNull.map(col(_).isNull).reduce(_ || _),
+        s"NOT NULL invariant violated: a null reached one of " +
+          s"(${notNull.mkString(", ")}) in rows written to $table — refused"))
+      genGuards ++ checks ++ nullGuard
     }
 
     // stage the parquet files in a scratch dir, then move them under the
@@ -3655,15 +3691,16 @@ object DeltaLog {
     // parquet.field.id so the written files resolve by field id. The
     // caller's frame and partitionBy stay logical.
     val mappingMode = firstPrev.map(_.columnMappingMode).getOrElse("none")
+    val checked = guarded(staged0, rowGuards, nonce)
     val stagedDf =
-      if (mappingMode == "none") staged0
+      if (mappingMode == "none") checked
       else {
         val byName = (firstPrev.flatMap(_.schema).get.fields ++ mappedMinted)
           .map(f => f.name -> f).toMap
-        val mapped = StructType(staged0.schema.fields.map(fld => byName(fld.name)))
+        val mapped = StructType(checked.schema.fields.map(fld => byName(fld.name)))
         val phys = physicalType(mapped, fieldIds = mappingMode == "id")
           .asInstanceOf[StructType]
-        staged0.select(staged0.schema.fields.zip(phys.fields).map { case (src, dst) =>
+        checked.select(checked.schema.fields.zip(phys.fields).map { case (src, dst) =>
           col(src.name).cast(dst.dataType).as(dst.name, dst.metadata)
         }.toIndexedSeq: _*)
       }
@@ -3698,9 +3735,16 @@ object DeltaLog {
         else stagedDf.hint("rebalance")
       } else stagedDf
     val w = stagedOut.write.mode("overwrite")
-    try withMicrosStaging(spark) {
+    try withMicrosStaging(stagedOut) {
       (if (physPartitionBy.nonEmpty) w.partitionBy(physPartitionBy: _*) else w)
         .parquet(scratch.toString)
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        // a failed staging write leaves nothing behind; a tripped guard
+        // surfaces as the refusal it encodes
+        scala.util.Try(f.delete(scratch, true))
+        throw failedGuard(e, nonce).fold(e)(i => new IllegalArgumentException(
+          s"requirement failed: ${rowGuards(i).message}", e))
     } finally releaseIdentityPins()
     val staged = f.listFiles(scratch, true)
     val moved = Seq.newBuilder[(String, Map[String, String])] // relPath -> partitionValues
@@ -5390,7 +5434,7 @@ object DeltaLog {
     * EXISTING rows first (one distributed anti-filter count — Delta's
     * own semantics: a constraint that current data violates refuses),
     * then records `delta.constraints.name`; every later dataChange
-    * write enforces it pre-staging. */
+    * write enforces it inside its staging write. */
   def alterAddConstraint(spark: SparkSession, table: String,
       name: String, expression: String): Long = {
     val snap = snapshot(spark, table)

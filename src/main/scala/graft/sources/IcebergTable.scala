@@ -1377,7 +1377,7 @@ object IcebergTable {
     // INT96 carries no ordered footer statistics, INT64-micros does —
     // so staging the engine's own data files as TIMESTAMP_MICROS lets
     // footerStats() below serve timestamp bounds with zero Spark jobs
-    DeltaLog.withMicrosStaging(spark) {
+    DeltaLog.withMicrosStaging(df) {
       if (spec.isEmpty) df.write.parquet(scratch.toString)
       else {
         val pcols = spec.zipWithIndex.map { case (fd, i) =>
@@ -1970,7 +1970,7 @@ object IcebergTable {
 
     // 1. stage the delete parquet under data/
     val scratch = new Path(root, s".ice-del-stage-$nonce")
-    DeltaLog.withMicrosStaging(spark) {
+    DeltaLog.withMicrosStaging(deleteRows) {
       deleteRows.write.parquet(scratch.toString)
     }
     val staged = f.listStatus(scratch).map(_.getPath)
@@ -1998,7 +1998,7 @@ object IcebergTable {
       case None => Seq.empty
       case Some(df0) =>
         val dscratch = new Path(root, s".ice-upd-stage-$nonce")
-        DeltaLog.withMicrosStaging(spark) {
+        DeltaLog.withMicrosStaging(df0) {
           df0.write.parquet(dscratch.toString)
         }
         val dstaged = f.listStatus(dscratch).map(_.getPath)

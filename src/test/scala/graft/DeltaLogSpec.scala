@@ -3,7 +3,10 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.sources.DeltaLog
+import graft.sources.MergeClause.{MatchedDelete, MatchedUpdate, NotMatchedInsert}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.StructType
@@ -31,6 +34,16 @@ class DeltaLogSpec extends SparkSpec {
     val dir = new File(table, "_delta_log"); dir.mkdirs()
     Files.write(new File(dir, f"$v%020d.json").toPath,
       (actions.mkString("\n") + "\n").getBytes("UTF-8"))
+  }
+
+  /** Every path under `table` outside `_delta_log`: a refused commit
+    * must leave this set unchanged (no scratch dir, no data file). */
+  private def dataTree(table: String): Set[String] = {
+    val root = new File(table).toPath
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.map(root.relativize(_).toString)
+      .filterNot(_.startsWith("_delta_log")).toSet
+    finally walk.close()
   }
 
   private val xSchema = new StructType().add("x", "long")
@@ -1144,14 +1157,18 @@ class DeltaLogSpec extends SparkSpec {
     graft.sources.GraftSql.exec(spark,
       s"CREATE TABLE delta.`$t` (k BIGINT NOT NULL, v STRING)")
     DeltaLog.write(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t, "append")
-    // a null in the declared-non-nullable column refuses BEFORE staging
+    val tree = dataTree(t)
+    // a null in the declared-non-nullable column refuses inside the
+    // staging write
     val e = intercept[IllegalArgumentException](DeltaLog.write(spark,
       Seq((java.lang.Long.valueOf(3L), "c"), (null.asInstanceOf[java.lang.Long], "d"))
         .toDF("k", "v"), t, "append"))
     assert(e.getMessage.contains("NOT NULL") && e.getMessage.contains("k"),
       e.getMessage)
-    // nothing landed; the nullable column still takes nulls fine
+    // nothing landed — no commit, no scratch dir, no data file; the
+    // nullable column still takes nulls fine
     assert(DeltaLog.read(spark, t).count() == 2)
+    assert(dataTree(t) == tree, (dataTree(t) -- tree).toString)
     DeltaLog.write(spark,
       Seq((java.lang.Long.valueOf(4L), null.asInstanceOf[String])).toDF("k", "v"),
       t, "append")
@@ -1160,16 +1177,37 @@ class DeltaLogSpec extends SparkSpec {
       DeltaLog.updateWhere(spark, t, $"k" === 1L,
         Map("k" -> lit(null).cast("bigint"))))
     assert(DeltaLog.read(spark, t).count() == 3)
+
+    // the guard judges only the rows a MERGE writes: a source null that
+    // would sit in a target row a MatchedDelete removes never lands, so
+    // the MERGE commits; the same null through an update refuses
+    val m = freshTable()
+    graft.sources.GraftSql.exec(spark,
+      s"CREATE TABLE delta.`$m` (k BIGINT NOT NULL, v STRING NOT NULL)")
+    DeltaLog.write(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), m, "append")
+    DeltaLog.merge(spark, m, Seq((1L, null: String), (3L, "c")).toDF("k", "v"),
+      Seq("k"), Seq(MatchedDelete(None), NotMatchedInsert(None, Map.empty)))
+    assert(DeltaLog.read(spark, m).as[(Long, String)].collect().sorted.toSeq ==
+      Seq((2L, "b"), (3L, "c")))
+    val mTree = dataTree(m)
+    val em = intercept[IllegalArgumentException](DeltaLog.merge(spark, m,
+      Seq((2L, null: String)).toDF("k", "v"), Seq("k"),
+      Seq(MatchedUpdate(None, Map.empty))))
+    assert(em.getMessage.contains("NOT NULL"), em.getMessage)
+    assert(dataTree(m) == mTree, (dataTree(m) -- mTree).toString)
   }
 
   test("table properties: configuration survives evolution; appendOnly + CHECK enforced") {
     val t = freshTable()
     DeltaLog.write(spark, Seq((1L, 5L)).toDF("x", "v"), t,
       properties = Map("delta.constraints.vpos" -> "v > 0"))
-    // CHECK violation refuses loudly, naming the constraint, before staging
+    // CHECK violation refuses loudly, naming the constraint, and leaves
+    // no scratch dir or data file behind
+    val tree = dataTree(t)
     val e = intercept[IllegalArgumentException](
       DeltaLog.write(spark, Seq((2L, -1L)).toDF("x", "v"), t, "append"))
     assert(e.getMessage.contains("vpos"), e.getMessage)
+    assert(dataTree(t) == tree, (dataTree(t) -- tree).toString)
     DeltaLog.write(spark, Seq((2L, 7L)).toDF("x", "v"), t, "append")
     // schema-widening append must NOT wipe the table's configuration
     DeltaLog.write(spark, Seq((3L, 8L, "z")).toDF("x", "v", "tag"), t, "append")

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.sources.{DeltaLog, GraftSql, Merge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,6 +21,15 @@ class GeneratedIdentitySpec extends SparkSpec {
 
   private def fresh(prefix: String): String =
     Files.createTempDirectory(prefix).toString + "/t"
+
+  /** Every path under `table` outside `_delta_log`. */
+  private def dataTree(table: String): Set[String] = {
+    val root = java.nio.file.Paths.get(table)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.map(root.relativize(_).toString)
+      .filterNot(_.startsWith("_delta_log")).toSet
+    finally walk.close()
+  }
 
   test("generated column is computed on append and declared partitioning is honored") {
     val t = fresh("graft-genspec-")
@@ -52,12 +63,17 @@ class GeneratedIdentitySpec extends SparkSpec {
     DeltaLog.write(spark, good, t, mode = "append")
     val bad = Seq((2L, java.sql.Timestamp.valueOf("2023-04-01 10:00:00"), 1999))
       .toDF("id", "ts", "yr")
+    val tree = dataTree(t)
     val e = intercept[IllegalArgumentException] {
       DeltaLog.write(spark, bad, t, mode = "append")
     }
-    assert(e.getMessage.contains("generated-column invariant"))
-    // the refused write left no trace
+    // the guard inside the staging write keeps the pre-pass's message
+    assert(e.getMessage ==
+      "requirement failed: generated-column invariant violated by APPEND: " +
+        "yr := year(ts)", e.getMessage)
+    // the refused write left no trace: no commit, no scratch dir, no file
     assert(DeltaLog.read(spark, t).count() == 1L)
+    assert(dataTree(t) == tree, (dataTree(t) -- tree).toString)
   }
 
   test("UPDATE recomputes generated columns and refuses direct SET on them") {
@@ -109,7 +125,11 @@ class GeneratedIdentitySpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       DeltaLog.write(spark, Seq((99L, "x")).toDF("sk", "v"), always, mode = "append")
     }
-    assert(e.getMessage.contains("GENERATED ALWAYS"))
+    assert(e.getMessage ==
+      "requirement failed: identity column sk is GENERATED ALWAYS — explicit " +
+        "values refused (set delta.identity.allowExplicitInsert=true for " +
+        "GENERATED BY DEFAULT)", e.getMessage)
+    assert(DeltaLog.read(spark, always).count() == 0L)
 
     val byDefault = fresh("graft-idspec-")
     GraftSql.exec(spark,

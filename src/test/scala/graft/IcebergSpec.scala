@@ -41,6 +41,32 @@ class IcebergSpec extends SparkSpec {
     }
   }
 
+  test("append of another session's frame stages INT64 timestamps") {
+    // the micros setting must land on the frame's own session — the one
+    // its parquet writer reads — not on the session the caller passes
+    val t = fresh()
+    val other = spark.newSession()
+    val a = other.range(0, 10).select(col("id").as("k"),
+      timestamp_seconds(col("id") * 86400L).as("ts"))
+    IcebergTable.writeAppend(spark, a, t)
+    assert(IcebergTable.read(spark, t).count() == 10L)
+    val conf = spark.sessionState.newHadoopConf()
+    val files = new java.io.File(t, "data").listFiles().toSeq
+      .filter(_.getName.endsWith(".parquet"))
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toURI), conf))
+      val ts = try {
+        val schema = rd.getFooter.getFileMetaData.getSchema
+        schema.getType(schema.getFieldIndex("ts")).asPrimitiveType.getPrimitiveTypeName
+      } finally rd.close()
+      assert(ts == org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64,
+        s"${f.getName} staged ts as $ts")
+    }
+  }
+
   test("relative table path: append, delete and read resolve the table once") {
     // a relative location must not be recorded relative and then
     // prefixed with the table a second time on read

@@ -176,6 +176,46 @@ class StreamsSpec extends SparkSpec {
     assert(DeltaLog.snapshot(spark, table).txns == Map("stream-x" -> 1L))
   }
 
+  test("foreachBatch append under the caller's session stages INT64 timestamps, footer stats") {
+    // a foreachBatch frame belongs to the stream's cloned session; the
+    // write is handed the CALLER's session, so INT64 staging must follow
+    // the frame or the commit falls back to the stats read-back job
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ms = MemoryStream[(Long, java.sql.Timestamp)]
+    val table = Files.createTempDirectory("graft-fbts-").toString + "/t"
+    val ckpt = Files.createTempDirectory("graft-fbts-ckpt-").toString
+    ms.addData((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00")),
+      (2L, java.sql.Timestamp.valueOf("2024-06-30 12:34:56.789")))
+    val before = DeltaLog.footerStatsCounters
+    ms.toDF().toDF("id", "ts").writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+          _: Long) =>
+        assert(!(batch.sparkSession eq spark))
+        DeltaLog.write(spark, batch, table, "append"); ()
+      }
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+    val after = DeltaLog.footerStatsCounters
+    assert(after._1 > before._1 && after._2 == before._2,
+      s"footer stats did not serve the batch commit: $before -> $after")
+    assert(DeltaLog.read(spark, table).count() == 2L)
+    val conf = spark.sessionState.newHadoopConf()
+    val staged = DeltaLog.snapshot(spark, table).files
+    assert(staged.nonEmpty)
+    staged.foreach { rel =>
+      val path = new org.apache.hadoop.fs.Path(table, rel)
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
+      val ts = try {
+        val schema = rd.getFooter.getFileMetaData.getSchema
+        schema.getType(schema.getFieldIndex("ts")).asPrimitiveType.getPrimitiveTypeName
+      } finally rd.close()
+      assert(ts == org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64,
+        s"$rel staged ts as $ts")
+    }
+  }
+
   test("foreachBatch streaming MERGE upserts across restarts (S8/ST6)") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[(Long, String, Long)]
