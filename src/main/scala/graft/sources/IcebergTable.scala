@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.avro.file.{DataFileReader, DataFileWriter}
+import org.apache.avro.file.{DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.{Schema => AvroSchema}
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -227,17 +227,20 @@ object IcebergTable {
     specsById(root)
       .getOrElse(root.path("default-spec-id").asInt(0), Seq.empty)
 
-  private def avroEntries(f: FileSystem, p: Path): Seq[GenericRecord] = {
-    // DataFileReader needs a SeekableInput; route through a local copy
-    // when the FS isn't local (metadata files are KB-sized)
-    val local = java.io.File.createTempFile("graft-iceberg-", ".avro")
+  /** Every record of one Avro metadata file, read sequentially from the
+    * table's filesystem stream, on the driver and on executors alike. */
+  private def avroEntries(f: FileSystem, p: Path): Seq[GenericRecord] =
     try {
-      f.copyToLocalFile(false, p, new Path(local.getAbsolutePath), true)
-      val rd = new DataFileReader[GenericRecord](local,
-        new GenericDatumReader[GenericRecord]())
-      try rd.iterator().asScala.toVector finally rd.close()
-    } finally { local.delete(); () }
-  }
+      val in = f.open(p)
+      try new DataFileStream[GenericRecord](in,
+        new GenericDatumReader[GenericRecord]()).iterator().asScala.toVector
+      finally in.close()
+    } catch {
+      // torn or foreign bytes surface as EOFException or Avro's own
+      // (unchecked) exceptions; name the file in one IOException
+      case scala.util.control.NonFatal(e) => throw new java.io.IOException(
+        s"unreadable Iceberg Avro metadata file $p", e)
+    }
 
   private def str(r: GenericRecord, field: String): Option[String] =
     Option(r.getSchema.getField(field)).flatMap(_ => Option(r.get(field)))

@@ -407,4 +407,77 @@ class IcebergSpec extends SparkSpec {
     IcebergTable.writeAppend(spark, Seq((3L, "c")).toDF("id", "v"), t)
     assert(IcebergTable.read(spark, t).count() == 3L)
   }
+
+  test("torn or foreign Avro metadata fails read and changes with an IOException naming the file") {
+    // the first IOException whose message names the bad file, wherever
+    // Spark or an abort wrapper put it in the cause chain
+    def namedIo(e: Throwable, file: String): Option[java.io.IOException] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst {
+        case io: java.io.IOException
+            if io.getMessage != null && io.getMessage.contains(file) => io
+      }
+    val corruptions: Seq[(String, Array[Byte] => Array[Byte])] = Seq(
+      "half its bytes" -> (b => b.take(b.length / 2)),
+      "garbage" -> (_ => "definitely not avro".getBytes))
+    for ((kind, prefix) <- Seq("list" -> "snap-", "manifest" -> "manifest-");
+         (how, corrupt) <- corruptions; (call, run) <- Seq[(String, String => Unit)](
+           "read" -> (t => { IcebergTable.read(spark, t).count(); () }),
+           "changes" -> (t => { IcebergTable.changes(spark, t).count(); () }))) {
+      val t = fresh()
+      IcebergTable.writeAppend(spark, (0L until 10L).toDF("k"), t)
+      val victim = new java.io.File(t, "metadata").listFiles().toSeq
+        .filter(f => f.getName.startsWith(prefix) && f.getName.endsWith(".avro"))
+      assert(victim.size == 1, victim)
+      val path = victim.head.toPath
+      Files.write(path, corrupt(Files.readAllBytes(path)))
+      val e = intercept[Exception](run(t))
+      val io = namedIo(e, victim.head.getName)
+      assert(io.exists(_.getMessage.startsWith("unreadable Iceberg Avro metadata file")),
+        s"$call over a $kind cut to $how: $e")
+    }
+  }
+
+  test("metadata reads make no local copy, on the driver and on executors") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val impl = conf.get("fs.file.impl")
+    conf.set("fs.file.impl", classOf[LocalCopyProbeFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    LocalCopyProbeFileSystem.copies.set(0L)
+    // the q_iceberg_changelog sequence; 0 bytes forces executor-side
+    // manifest parsing
+    try for (driverBytes <- Seq(None, Some("0"))) {
+      driverBytes.foreach(spark.conf.set("spark.graft.iceberg.driverManifestBytes", _))
+      try {
+        val t = fresh()
+        val rows = spark.range(0, 60).select(col("id").as("k"),
+          (col("id") % 7).cast("int").as("g"), (col("id") * 10).as("v"))
+        IcebergTable.writeAppend(spark, rows.where(col("k") % 2 === 0), t)
+        IcebergTable.writeAppend(spark, rows.where(col("k") % 2 === 1), t)
+        IcebergTable.deleteWhere(spark, t, col("k") % 10 === 0)
+        IcebergTable.updateWhere(spark, t, col("v") > 400, Map("g" -> lit(-1)))
+        IcebergTable.deleteEquals(spark, t, Seq(5).toDF("g"))
+        assert(IcebergTable.changes(spark, t).count() > 0L)
+        assert(IcebergTable.read(spark, t).count() > 0L)
+      } finally spark.conf.unset("spark.graft.iceberg.driverManifestBytes")
+      assert(LocalCopyProbeFileSystem.copies.get == 0L,
+        s"local copies with driverManifestBytes=$driverBytes")
+    } finally {
+      conf.set("fs.file.impl", impl)
+      conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+}
+
+/** `file://` filesystem that counts `copyToLocalFile` calls, so a spec can
+  * pin how many local scratch copies a code path makes. */
+class LocalCopyProbeFileSystem extends graft.sources.FastLocalFileSystem {
+  override def copyToLocalFile(delSrc: Boolean, src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path, useRawLocalFileSystem: Boolean): Unit = {
+    LocalCopyProbeFileSystem.copies.incrementAndGet()
+    super.copyToLocalFile(delSrc, src, dst, useRawLocalFileSystem)
+  }
+}
+
+object LocalCopyProbeFileSystem {
+  val copies = new java.util.concurrent.atomic.AtomicLong
 }
