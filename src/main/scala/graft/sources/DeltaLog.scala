@@ -1497,8 +1497,7 @@ object DeltaLog {
     val out = f.create(tmp, false)
     try out.write((orderCommitActions(actions.result()).mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
-    val dest = commitPath(target, 0L)
-    require(!f.exists(dest) && f.rename(tmp, dest),
+    require(Publish.publishIfAbsent(f, tmp, commitPath(target, 0L)),
       s"clone target $target gained a commit concurrently")
     Checksum.update(spark, target, 0L, actions.result())
     0L
@@ -1606,13 +1605,8 @@ object DeltaLog {
       val it = addActions.toLocalIterator()
       while (it.hasNext) line(it.next())
     } finally out.close()
-    val dest = commitPath(target, 0L)
-    val gate = commitGate(tgtFs, target)
-    val won = gate.synchronized(!tgtFs.exists(dest) && tgtFs.rename(tmp, dest))
-    if (!won) {
-      tgtFs.delete(tmp, false)
+    if (!Publish.publishIfAbsent(tgtFs, tmp, commitPath(target, 0L)))
       sys.error(s"clone target $target gained a commit concurrently")
-    }
     0L
   }
 
@@ -2910,18 +2904,6 @@ object DeltaLog {
     }.toMap
   }
 
-  /** Per-table commit gates for same-JVM writers (see commitWrite). */
-  private val commitGates =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** The commit gate of `table`, keyed by its qualified path so every
-    * spelling of one table (`/t`, `file:/t`, a relative path) shares
-    * one gate. Qualifying is pure path arithmetic on the FileSystem in
-    * hand — no filesystem round trip on the commit path. */
-  private def commitGate(f: FileSystem, table: String): Object =
-    commitGates.computeIfAbsent(f.makeQualified(new Path(table)).toString,
-      _ => new Object)
-
   /** What a pinned read-modify-write transaction READ and intends to
     * REMOVE — the inputs the conflict checker ([[checkConflicts]]) needs
     * to decide whether concurrent commits can be rebased over. Paths are
@@ -3102,9 +3084,10 @@ object DeltaLog {
   /** Commit `df` to the table as one public-protocol Delta commit:
     * parquet data files land under the table root (partition-dir layout
     * when `partitionBy` is set), then ONE `_delta_log/<v>.json` appears
-    * via atomic rename — a concurrent writer racing to the same version
-    * loses the rename and errors rather than corrupting the log, and a
-    * crash before the rename leaves only unreferenced data files (invisible
+    * via one put-if-absent publish ([[Publish.publishIfAbsent]]) — a
+    * concurrent writer racing to the same version, in any process, loses
+    * the publish and errors rather than corrupting the log, and a
+    * crash before the publish leaves only unreferenced data files (invisible
     * to readers, same guarantee real Delta gives). `overwrite` emits
     * `remove` actions for the previous snapshot's files; `append` only
     * adds. `baseVersion` pins a read-modify-write: the commit refuses
@@ -3836,7 +3819,7 @@ object DeltaLog {
 
     raceHook(table, operation)
     // Optimistic-concurrency commit loop: build the version-dependent
-    // actions, write-then-rename; a lost race re-reads the log and (for
+    // actions, write-then-publish; a lost race re-reads the log and (for
     // conflict-free commits, retryOnRace) retries at the next version.
     var attempt = 0
     var committed = -1L
@@ -4051,7 +4034,7 @@ object DeltaLog {
         s""","operation":${jsonStr(operation)}$opParams$opMetrics,""" +
         s""""isBlindAppend":${blindAppend && removedFiles == 0}}}"""
 
-      // write-then-rename: the commit becomes visible atomically or not at all
+      // write-then-publish: the commit becomes visible atomically or not at all
       val actionSeq = actions.result()
       val tmp = new Path(logDir(table), f".$version%020d-$nonce.json.tmp")
       val out = f.create(tmp, false)
@@ -4071,18 +4054,9 @@ object DeltaLog {
           f.delete(side, false); ()
         }
       } finally out.close()
-      val commitDest = commitPath(table, version)
-      // HDFS/object-store rename fails on an existing destination (true
-      // atomic commit). POSIX rename would silently REPLACE, so the
-      // exists-check + rename run under a per-table JVM gate: exact for
-      // same-process writers (the local[N] reality), while cross-process
-      // writers on a real deployment get atomicity from the store's
-      // rename semantics.
-      val gate = commitGate(f, table)
-      val won = gate.synchronized {
-        !f.exists(commitDest) && f.rename(tmp, commitDest)
-      }
-      if (won) {
+      // put-if-absent: of any number of writers, in this JVM or not,
+      // exactly one wins the version
+      if (Publish.publishIfAbsent(f, tmp, commitPath(table, version))) {
         committed = version
         // seed the next snapshot's entry memo when the v−1 state is
         // driver-resident (or this is the table's first commit / a
@@ -4111,7 +4085,6 @@ object DeltaLog {
               .map(n => mapper.writeValueAsString(n.get("metaData"))))
         }
       } else {
-        f.delete(tmp, false)
         // a conflict-checked pinned commit may also retry the loop: the
         // next iteration re-runs checkConflicts against whatever landed
         if ((!retryOnRace && readInfo.isEmpty) || attempt >= 9)
@@ -4628,8 +4601,8 @@ object DeltaLog {
     }
   }
 
-  /** Write `actions` as commit `version` atomically (write-then-rename
-    * under the per-table gate). The caller's read-modify-write is pinned:
+  /** Write `actions` as commit `version` atomically (write-then-publish,
+    * [[Publish.publishIfAbsent]]). The caller's read-modify-write is pinned:
     * a lost race fails loudly — by construction the inputs are stale. */
   // ------------------------------------------- in-commit timestamps
   // (writer feature `inCommitTimestamp`, minWriterVersion 7: when
@@ -4865,17 +4838,12 @@ object DeltaLog {
     val out = f.create(tmp, false)
     try out.write((orderCommitActions(actions).mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
-    val dest = commitPath(table, version)
-    val gate = commitGate(f, table)
-    val won = gate.synchronized(!f.exists(dest) && f.rename(tmp, dest))
-    if (!won) {
-      f.delete(tmp, false)
+    if (!Publish.publishIfAbsent(f, tmp, commitPath(table, version)))
       // typed so withDmlRetry-wrapped callers recompute from a fresh
-      // snapshot instead of failing hard on a rename-level race
+      // snapshot instead of failing hard on a publish-level race
       throw new CommitRaceException(
         s"concurrent commit: $table advanced past version ${version - 1} " +
           s"while this $operation was computed — re-read and retry")
-    }
     val seedPrev: Option[Seq[FileEntry]] =
       if (version == 0L) Some(Seq.empty) // first commit: state = its adds
       else seedFrom.filter(_.version == version - 1).flatMap(residentEntries)
@@ -5850,15 +5818,10 @@ object DeltaLog {
       while (it.hasNext) removeLine(entryOfRow(it.next()))
     } finally out.close()
     if (removed == 0L) { f.delete(tmp, false); return snap.version }
-    val dest = commitPath(table, version)
-    val gate = commitGate(f, table)
-    val won = gate.synchronized(!f.exists(dest) && f.rename(tmp, dest))
-    if (!won) {
-      f.delete(tmp, false)
+    if (!Publish.publishIfAbsent(f, tmp, commitPath(table, version)))
       throw new CommitRaceException(
         s"concurrent commit: $table advanced past version ${version - 1} " +
           "while this DELETE was computed — re-read and retry")
-    }
     if (sizesKnown)
       Checksum.updateDelta(spark, table, version, dvd.size, addBytes,
         removed, removedBytes,
@@ -6438,13 +6401,8 @@ object DeltaLog {
       f.delete(tmp, false)
       s"CONVERT TO DELTA: no parquet files found under $table"
     })
-    val dest = commitPath(table, 0L)
-    val gate = commitGate(f, table)
-    val won = gate.synchronized(!f.exists(dest) && f.rename(tmp, dest))
-    if (!won) {
-      f.delete(tmp, false)
+    if (!Publish.publishIfAbsent(f, tmp, commitPath(table, 0L)))
       sys.error(s"CONVERT TO DELTA: concurrent writer minted $table's log first")
-    }
     0L
   }
 
@@ -7079,8 +7037,7 @@ object DeltaLog {
       val it = net.toLocalIterator()
       while (it.hasNext) line(it.next().getString(0))
     } finally out.close()
-    if (f.rename(tmp, dest)) true
-    else { f.delete(tmp, false); false }
+    Publish.publishIfAbsent(f, tmp, dest)
   }
 
   /** Post-commit hook: write a log-compaction file for every

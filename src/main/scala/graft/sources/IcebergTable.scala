@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   * (https://iceberg.apache.org/spec/) with no Iceberg libraries — the
   * same from-scratch approach as [[DeltaLog]] for the Delta protocol.
   *
-  * READ (v1 and v2 metadata): `metadata/version-hint.text` (or the
-  * highest `v*.metadata.json`) → current snapshot → manifest list
+  * READ (v1 and v2 metadata): the highest `v*.metadata.json` → current
+  * snapshot → manifest list
   * (avro) → manifests (avro) → live parquet data files. Iceberg avro
   * metadata is self-describing, so entries resolve by FIELD NAME — the
   * spec's names — which reads both this writer's minimal files and
@@ -26,8 +26,8 @@ import org.apache.spark.sql.types._
   * by snapshot id or timestamp (snapshot-log).
   *
   * WRITE (append-only, format-version 1): each append stages parquet
-  * under `data/`, then writes one manifest + a manifest list + a new
-  * `vN.metadata.json` and flips `version-hint.text` — the
+  * under `data/`, then writes one manifest + a manifest list and
+  * publishes a new `vN.metadata.json` put-if-absent — the
   * reader-visible commit point. Field-ids are assigned sequentially
   * and carried in both the table schema JSON and the manifest avro
   * schema (`field-id` props), which is what real Iceberg readers key
@@ -71,50 +71,68 @@ object IcebergTable {
     org.apache.spark.sql.functions.regexp_replace(
       c, "^[a-zA-Z][a-zA-Z0-9+.-]*:/*", "/")
 
-  /** Test seam: runs immediately before the create-if-absent commit of
+  /** Test seam: runs immediately before the put-if-absent publish of
     * each append attempt — the window a racing writer occupies (the
     * [[DeltaLog.raceHook]] pattern). */
   private[graft] var raceHook: () => Unit = () => ()
 
   /** Test seam: runs immediately AFTER an append attempt's metadata
-    * file landed but BEFORE the version-hint write — the window where a
-    * post-commit IOException must NOT trigger a rebase onto the
-    * attempt's own commit (which would duplicate the appended rows). */
+    * file was published — the window where a post-commit IOException
+    * must NOT trigger a rebase onto the attempt's own commit (which
+    * would duplicate the appended rows). */
   private[graft] var postCommitHook: () => Unit = () => ()
 
-  /** Next metadata ordinal: max existing v*.metadata.json + 1 — NOT
-    * snapshot count, which shrinks under [[expireSnapshots]] and would
-    * collide with retained metadata files. Also the sequence-number
-    * source for new snapshots (monotonic across expiry). */
-  private def nextMetadataVersion(f: FileSystem, table: String): Int = {
+  private def metadataPath(table: String, version: Int): Path =
+    new Path(table, s"metadata/v$version.metadata.json")
+
+  /** The ONE rule for the current version, shared by readers and
+    * writers: the highest `v<N>.metadata.json` in the listing, 0 when
+    * there is none. Every version is published whole and at most once
+    * ([[publishMetadata]]), so the listing max is the truth; a
+    * `version-hint.text` another writer left behind is ignored. Writers
+    * commit at max + 1 — NOT snapshot count, which shrinks under
+    * [[expireSnapshots]] and would collide with retained metadata
+    * files; it is also the sequence-number source for new snapshots
+    * (monotonic across expiry). */
+  private def latestMetadataVersion(f: FileSystem, table: String): Int = {
     val mdir = new Path(table, "metadata")
-    if (!f.exists(mdir)) return 1
-    val vs = f.listStatus(mdir).map(_.getPath.getName)
+    if (!f.exists(mdir)) 0
+    else f.listStatus(mdir).iterator.map(_.getPath.getName)
       .collect { case n if n.matches("v\\d+\\.metadata\\.json") =>
         n.stripPrefix("v").stripSuffix(".metadata.json").toInt }
-    if (vs.isEmpty) 1 else vs.max + 1
+      .maxOption.getOrElse(0)
   }
 
-  /** Latest metadata JSON: version-hint.text when present, else the
-    * highest `v<N>.metadata.json`. */
   private def currentMetadataPath(f: FileSystem, table: String): Path = {
-    val mdir = new Path(table, "metadata")
-    require(f.exists(mdir), s"not an Iceberg table (no metadata/): $table")
-    val hint = new Path(mdir, "version-hint.text")
-    if (f.exists(hint)) new Path(mdir, s"v${readText(f, hint)}.metadata.json")
-    else {
-      val vs = f.listStatus(mdir).map(_.getPath.getName)
-        .collect { case n if n.matches("v\\d+\\.metadata\\.json") =>
-          n.stripPrefix("v").stripSuffix(".metadata.json").toLong }
-      require(vs.nonEmpty, s"no v*.metadata.json under $mdir")
-      new Path(mdir, s"v${vs.max}.metadata.json")
-    }
+    val v = latestMetadataVersion(f, table)
+    require(v > 0, s"not an Iceberg table (no v*.metadata.json under metadata/): $table")
+    metadataPath(table, v)
   }
+
+  /** Publish `meta` as `v<version>.metadata.json` iff no writer, in this
+    * process or another, published that version first: a temp file
+    * written in full, then [[Publish.publishIfAbsent]]. Readers never
+    * see a partial version. Returns whether this call won. */
+  private def publishMetadata(f: FileSystem, table: String, version: Int,
+      meta: ObjectNode): Boolean = {
+    val dest = metadataPath(table, version)
+    val tmp = new Path(dest.getParent,
+      s".${dest.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    val out = f.create(tmp, false)
+    try out.write(mapper.writeValueAsBytes(meta)) finally out.close()
+    Publish.publishIfAbsent(f, tmp, dest)
+  }
+
+  /** A lost [[publishMetadata]]: the same typed error a create-if-absent
+    * of an existing `vN` raises, which the append rebase path catches. */
+  private def lostPublish(table: String, version: Int): java.io.IOException =
+    new org.apache.hadoop.fs.FileAlreadyExistsException(
+      s"File already exists: ${metadataPath(table, version)}")
 
   def isIcebergTable(spark: SparkSession, location: String): Boolean = {
     val table = qualify(spark, location)
-    val f = fs(spark, table)
-    scala.util.Try(currentMetadataPath(f, table)).toOption.exists(f.exists)
+    scala.util.Try(latestMetadataVersion(fs(spark, table), table) > 0)
+      .getOrElse(false)
   }
 
   /** Iceberg schema JSON → Spark StructType (spec type names). */
@@ -1264,7 +1282,8 @@ object IcebergTable {
   }
 
   /** Append `df` as one Iceberg v1 snapshot (creates the table on first
-    * call). Unpartitioned; the commit point is the version-hint flip.
+    * call). Unpartitioned; the commit point is the put-if-absent
+    * publish of `vN.metadata.json`.
     * `carryPrevious = false` makes the snapshot a REPLACE: the new
     * manifest is the only one, previous data (and delete) manifests
     * drop out of the view. */
@@ -1368,7 +1387,7 @@ object IcebergTable {
     val specTypes = spec.map(fd =>
       IcebergPartition.resultType(fd.transform, df.schema(fd.source).dataType))
 
-    val version = nextMetadataVersion(f, table)
+    val version = latestMetadataVersion(f, table) + 1
     val nonce = java.util.UUID.randomUUID().toString.take(8)
 
     // 1. stage parquet under data/ — partitioned tables stage through
@@ -1813,15 +1832,11 @@ object IcebergTable {
         le.put("timestamp-ms", now); le.put("snapshot-id", snapshotId)
       }
 
-      val mdPath = new Path(mdir, s"v$versionNow.metadata.json")
       raceHook()
-      val out = f.create(mdPath, false)
-      try out.write(mapper.writeValueAsString(meta).getBytes("UTF-8"))
-      finally out.close()
       // 5. the commit point
+      if (!publishMetadata(f, table, versionNow, meta))
+        throw lostPublish(table, versionNow)
       postCommitHook()
-      val hint = f.create(new Path(mdir, "version-hint.text"), true)
-      try hint.write(versionNow.toString.getBytes("UTF-8")) finally hint.close()
       snapshotId
     }
     var existingNow = existing
@@ -1832,13 +1847,13 @@ object IcebergTable {
       catch {
         case race: java.io.IOException =>
           // vN existing does NOT prove a racer: if the IOException
-          // struck after this attempt's own f.create(vN, false)
-          // succeeded (e.g. the version-hint write failed), the
-          // existing vN is OUR commit, and rebasing onto it would
-          // re-append the same staged data files as a duplicate
-          // snapshot. The per-call nonce is embedded in the committed
-          // manifest-list filename — check ownership before anything.
-          val vNPath = new Path(mdir, s"v$versionNow.metadata.json")
+          // struck after this attempt's own publish landed (a post-commit
+          // failure, or a remote rename that landed yet reported
+          // failure), the existing vN is OUR commit, and rebasing onto
+          // it would re-append the same staged data files as a
+          // duplicate snapshot. The per-call nonce is embedded in the
+          // committed manifest-list filename — check ownership first.
+          val vNPath = metadataPath(table, versionNow)
           val vNowMeta =
             if (f.exists(vNPath))
               Some(mapper.readTree(readText(f, vNPath)).asInstanceOf[ObjectNode])
@@ -1847,15 +1862,7 @@ object IcebergTable {
             .exists(_.path("manifest-list").asText("").contains(s"-$nonce.avro")))
           if (ownCommit) {
             // the commit landed; only post-commit bookkeeping failed.
-            // Repair the hint best-effort (readers prefer it, and a
-            // torn hint write may have clobbered the old content) to
-            // the LISTING max, then report the committed snapshot.
-            try {
-              val hv = nextMetadataVersion(f, table) - 1
-              val hint = f.create(new Path(mdir, "version-hint.text"), true)
-              try hint.write(hv.toString.getBytes("UTF-8")) finally hint.close()
-            } catch { case scala.util.control.NonFatal(_) => () }
-            // a branch write's landed snapshot is the BRANCH head, not
+            // A branch write's landed snapshot is the BRANCH head, not
             // the published current-snapshot-id
             return toBranch
               .map(b => vNowMeta.get.path("refs").path(b)
@@ -1874,14 +1881,11 @@ object IcebergTable {
           } catch { case scala.util.control.NonFatal(_) => () }
           if (!(retriable && attemptsLeft > 1 && vNowMeta.isDefined)) throw race
           attemptsLeft -= 1
-          // resolve the racer's state from the LISTING max, the same
-          // source versionNow uses — the version-hint is written AFTER
-          // the metadata file, so a cross-process racer's hint may
-          // still point at the old version; rebasing onto the hint
-          // would silently drop the racer's committed snapshot
-          val curV = nextMetadataVersion(f, table) - 1
-          val e2 = mapper.readTree(readText(f,
-            new Path(mdir, s"v$curV.metadata.json")))
+          // resolve the racer's state from the listing max — the one
+          // version rule; a stale hint another writer left must not
+          // make the rebase silently drop the racer's snapshot
+          val curV = latestMetadataVersion(f, table)
+          val e2 = mapper.readTree(readText(f, metadataPath(table, curV)))
             .asInstanceOf[ObjectNode]
           val s2 = resolveSchema(e2)
           val schemaOk = s2.fieldNames.toSeq == df.schema.fieldNames.toSeq &&
@@ -1892,7 +1896,7 @@ object IcebergTable {
           if (!schemaOk || specFromMeta(e2) != spec ||
             e2.path("default-spec-id").asInt(0) != specId) throw race
           existingNow = Some(e2)
-          versionNow = nextMetadataVersion(f, table)
+          versionNow = curV + 1
       }
     }
     sys.error("unreachable")
@@ -1965,7 +1969,7 @@ object IcebergTable {
     val mdir = new Path(root, "metadata")
     val existing = mapper.readTree(readText(f, currentMetadataPath(f, table)))
       .asInstanceOf[ObjectNode]
-    val version = nextMetadataVersion(f, table)
+    val version = latestMetadataVersion(f, table) + 1
     val snapshotId = System.currentTimeMillis() * 1000 + version
     val now = System.currentTimeMillis()
     val nonce = java.util.UUID.randomUUID().toString.take(8)
@@ -2115,12 +2119,8 @@ object IcebergTable {
       .addObject()
     le.put("timestamp-ms", now); le.put("snapshot-id", snapshotId)
 
-    val mdPath = new Path(mdir, s"v$version.metadata.json")
-    val out = f.create(mdPath, false)
-    try out.write(mapper.writeValueAsString(meta).getBytes("UTF-8"))
-    finally out.close()
-    val hint = f.create(new Path(mdir, "version-hint.text"), true)
-    try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
+    if (!publishMetadata(f, table, version, meta))
+      throw lostPublish(table, version)
     snapshotId
   }
 
@@ -2144,14 +2144,9 @@ object IcebergTable {
       .asInstanceOf[ObjectNode]
     edit(root)
     root.put("last-updated-ms", System.currentTimeMillis())
-    val mdir = new Path(table, "metadata")
-    val version = nextMetadataVersion(f, table)
-    val mdPath = new Path(mdir, s"v$version.metadata.json")
-    val out = f.create(mdPath, false)
-    try out.write(mapper.writeValueAsString(root).getBytes("UTF-8"))
-    finally out.close()
-    val hint = f.create(new Path(mdir, "version-hint.text"), true)
-    try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
+    val version = latestMetadataVersion(f, table) + 1
+    if (!publishMetadata(f, table, version, root))
+      throw lostPublish(table, version)
   }
 
   /** Create or move a named ref (spec: Table Metadata `refs`) — a TAG
@@ -2292,7 +2287,7 @@ object IcebergTable {
       parentPaths.contains(r._1) || headCarried.contains(r._1))
     require(added.forall(_._3 == 0L),
       s"cherrypick: snapshot $snapshotId added delete manifests — refuse")
-    val version = nextMetadataVersion(f, table)
+    val version = latestMetadataVersion(f, table) + 1
     val newId = System.currentTimeMillis() * 1000 + version
     val now = System.currentTimeMillis()
     val nonce = java.util.UUID.randomUUID().toString.take(8)
@@ -2328,12 +2323,8 @@ object IcebergTable {
       .withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
       .addObject()
     le.put("timestamp-ms", now); le.put("snapshot-id", newId)
-    val mdPath = new Path(mdir, s"v$version.metadata.json")
-    val out = f.create(mdPath, false)
-    try out.write(mapper.writeValueAsString(meta).getBytes("UTF-8"))
-    finally out.close()
-    val hint = f.create(new Path(mdir, "version-hint.text"), true)
-    try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
+    if (!publishMetadata(f, table, version, meta))
+      throw lostPublish(table, version)
     newId
   }
 
@@ -2875,7 +2866,7 @@ object IcebergTable {
     val carried = carriedManifests(f, table, Some(root0))
     val (dataM, delM) = carried.partition(_._3 == 0L)
     if (dataM.size <= 1) return (dataM.size, dataM.size)
-    val version = nextMetadataVersion(f, table)
+    val version = latestMetadataVersion(f, table) + 1
     val snapshotId = System.currentTimeMillis() * 1000 + version
     val now = System.currentTimeMillis()
     val nonce = java.util.UUID.randomUUID().toString.take(8)
@@ -2976,12 +2967,8 @@ object IcebergTable {
         .withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
         .addObject()
       le.put("timestamp-ms", now); le.put("snapshot-id", snapshotId)
-      val mdPath = new Path(mdir, s"v$version.metadata.json")
-      val out = f.create(mdPath, false)
-      try out.write(mapper.writeValueAsString(meta).getBytes("UTF-8"))
-      finally out.close()
-      val hint = f.create(new Path(mdir, "version-hint.text"), true)
-      try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
+      if (!publishMetadata(f, table, version, meta))
+        throw lostPublish(table, version)
       (dataM.size, newManifests.size)
     } finally { entries.unpersist(false); () }
   }
@@ -2991,7 +2978,6 @@ object IcebergTable {
     val table = qualify(spark, location)
     require(retainLast >= 1, "expireSnapshots: retainLast must be >= 1")
     val f = fs(spark, table)
-    val mdir = new Path(table, "metadata")
     val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
       .asInstanceOf[ObjectNode]
     val snaps = root.path("snapshots").elements().asScala.toSeq
@@ -3095,13 +3081,9 @@ object IcebergTable {
       .foreach(lArr.add)
     meta.set[ObjectNode]("snapshot-log", lArr)
     meta.put("last-updated-ms", System.currentTimeMillis())
-    val version = nextMetadataVersion(f, table)
-    val mdPath = new Path(mdir, s"v$version.metadata.json")
-    val out = f.create(mdPath, false)
-    try out.write(mapper.writeValueAsString(meta).getBytes("UTF-8"))
-    finally out.close()
-    val hint = f.create(new Path(mdir, "version-hint.text"), true)
-    try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
+    val version = latestMetadataVersion(f, table) + 1
+    if (!publishMetadata(f, table, version, meta))
+      throw lostPublish(table, version)
     deleted
   }
 
@@ -3500,7 +3482,7 @@ object IcebergTable {
       if (!isIcebergTable(spark, table)) None
       else Some(mapper.readTree(readText(f, currentMetadataPath(f, table)))
         .asInstanceOf[ObjectNode])
-    val version = nextMetadataVersion(f, table)
+    val version = latestMetadataVersion(f, table) + 1
     val snapshotId = System.currentTimeMillis() * 1000 + version
     val now = System.currentTimeMillis()
     val nonce = java.util.UUID.randomUUID().toString.take(8)
@@ -3628,12 +3610,8 @@ object IcebergTable {
       .foreach(l => logArr.add(l)))
     val le = logArr.addObject()
     le.put("timestamp-ms", now); le.put("snapshot-id", snapshotId)
-    val mdPath = new Path(mdir, s"v$version.metadata.json")
-    val out = f.create(mdPath, false)
-    try out.write(mapper.writeValueAsString(meta).getBytes("UTF-8"))
-    finally out.close()
-    val hint = f.create(new Path(mdir, "version-hint.text"), true)
-    try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
+    if (!publishMetadata(f, table, version, meta))
+      throw lostPublish(table, version)
     snapshotId
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.sources.{DeltaLog, GraftSql}
 import graft.sources.{ConcurrentAppendException, ConcurrentDeleteDeleteException,
   ConcurrentDeleteReadException, ConcurrentTransactionException,
@@ -330,6 +332,75 @@ class ConcurrencySpec extends SparkSpec
     assert(DeltaLog.read(spark, t).as[Long].collect().sorted.toSeq == want.sorted)
   }
 
+  test("no lost commit across processes: forked writers race one table") {
+    val t = fresh()
+    DeltaLog.write(spark, Seq(-1L).toDF("x"), t)
+    val barrier = Files.createTempDirectory("graft-barrier-")
+    val (writers, rounds) = (2, 4)
+    // the child JVMs get this JVM's classpath and module opens (the JVM
+    // reports each `--add-opens` flag in its `--add-opens=` form)
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq.filter(_.startsWith("--add-opens="))
+    val javaBin = s"${System.getProperty("java.home")}/bin/java"
+    val t0 = System.nanoTime()
+    val children = (0 until writers).map { id =>
+      val log = barrier.resolve(s"child-$id.log").toFile
+      val pb = new ProcessBuilder((Seq(javaBin, "-Xmx768m") ++ opens ++ Seq(
+        "-cp", System.getProperty("java.class.path"),
+        CrossProcessAppender.getClass.getName.stripSuffix("$"),
+        t, barrier.toString, id.toString, writers.toString, rounds.toString)).asJava)
+      pb.redirectErrorStream(true).redirectOutput(log)
+      (pb.start(), log)
+    }
+    val versions = try children.flatMap { case (proc, log) =>
+      val done = proc.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)
+      val out = new String(Files.readAllBytes(log.toPath), "UTF-8")
+      assert(done && proc.exitValue() == 0, s"writer failed:\n${out.takeRight(4000)}")
+      out.linesIterator.collectFirst { case l if l.startsWith("VERSIONS ") =>
+        l.stripPrefix("VERSIONS ").split(",").map(_.toLong).toSeq
+      }.getOrElse(fail(s"no VERSIONS line:\n${out.takeRight(4000)}"))
+    } finally children.foreach(_._1.destroyForcibly())
+    info(f"${writers} writer JVMs x $rounds rounds: ${(System.nanoTime() - t0) / 1e9}%.1f s wall")
+    assert(versions.distinct.size == writers * rounds,
+      s"two writers reported the same version: ${versions.sorted}")
+    assert(DeltaLog.snapshot(spark, t).version == writers * rounds)
+    val want = -1L +: (0 until writers).flatMap(id =>
+      (0 until rounds).map(r => CrossProcessAppender.row(id, r)))
+    assert(DeltaLog.read(spark, t).as[Long].collect().sorted.toSeq == want.sorted)
+  }
+
+  test("version-0 publishers refuse a foreign commit 0 and leave no temp file") {
+    val src = fresh()
+    DeltaLog.write(spark, Seq(1L, 2L).toDF("x"), src)
+    val publishers: Seq[(String, String => Long, String)] = Seq(
+      ("cloneShallow", tgt => DeltaLog.cloneShallow(spark, src, tgt),
+        "gained a commit concurrently"),
+      ("cloneDeep", tgt => DeltaLog.cloneDeep(spark, src, tgt),
+        "gained a commit concurrently"),
+      ("convertToDelta", tgt => {
+        Seq(1L, 2L).toDF("x").write.parquet(tgt)
+        DeltaLog.convertToDelta(spark, tgt)
+      }, "minted"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val impl = conf.get("fs.file.impl")
+    conf.set("fs.file.impl", classOf[ForeignCommitProbeFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    try publishers.foreach { case (name, publish, msg) =>
+      val tgt = fresh()
+      val e = intercept[RuntimeException](publish(tgt))
+      assert(e.getMessage.contains(msg), s"$name: ${e.getMessage}")
+      val log = new java.io.File(tgt, "_delta_log")
+      assert(Files.readAllBytes(log.toPath.resolve(f"${0L}%020d.json"))
+        .sameElements(ForeignCommitProbeFileSystem.commit),
+        s"$name replaced the foreign commit")
+      val leaked = log.list().filter(_.endsWith(".tmp"))
+      assert(leaked.isEmpty, s"$name leaked ${leaked.mkString(", ")}")
+    } finally {
+      conf.set("fs.file.impl", impl)
+      conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+
   test("append commits declare isBlindAppend; rewrites do not") {
     val t = fresh(); seed(t)
     val vAppend = DeltaLog.snapshot(spark, t).version
@@ -354,5 +425,76 @@ class SlowCommitProbeFileSystem extends graft.sources.FastLocalFileSystem {
     if (p.getParent != null && p.getParent.getName == "_delta_log" &&
         p.getName.matches("\\d{20}\\.json")) Thread.sleep(50)
     found
+  }
+}
+
+/** `file://` filesystem that, as a version-0 Delta log temp file is
+  * created, first drops a foreign `00000000000000000000.json` beside
+  * it: another writer minting the table's log while the publisher
+  * writes its temp file. */
+class ForeignCommitProbeFileSystem extends graft.sources.FastLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+
+  override def create(p: Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): FSDataOutputStream = {
+    if (p.getParent != null && p.getParent.getName == "_delta_log" &&
+        p.getName.startsWith(".00000") && p.getName.endsWith(".json.tmp")) {
+      val dest = new Path(p.getParent, f"${0L}%020d.json")
+      if (!exists(dest)) {
+        val o = super.create(dest, permission, false, bufferSize,
+          replication, blockSize, progress)
+        try o.write(ForeignCommitProbeFileSystem.commit) finally o.close()
+      }
+    }
+    super.create(p, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+}
+
+object ForeignCommitProbeFileSystem {
+  val commit: Array[Byte] =
+    "{\"commitInfo\":{\"timestamp\":1,\"operation\":\"FOREIGN\"}}\n".getBytes("UTF-8")
+}
+
+/** One writer JVM of the cross-process race in [[ConcurrencySpec]]:
+  * appends `rounds` rows to one Delta table. Before each commit it waits
+  * at a file barrier until all `writers` peers reached the same round,
+  * and its `file://` binding stalls every commit-file existence probe.
+  * Prints `VERSIONS v1,v2,...` — the versions its appends landed at.
+  *
+  * Args: table, barrier dir, writer id, writers, rounds. */
+object CrossProcessAppender {
+  def row(id: Int, round: Int): Long = id * 1000L + round
+
+  def main(args: Array[String]): Unit = {
+    val Array(table, barrierDir, id, writers, rounds) = args
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[1]")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", 1)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[SlowCommitProbeFileSystem].getName)
+      .getOrCreate()
+    import spark.implicits._
+    val dir = new java.io.File(barrierDir)
+    var round = 0
+    DeltaLog.raceHook = (_, _) => {
+      new java.io.File(dir, s"$round-$id").createNewFile()
+      val deadline = System.nanoTime() + 120L * 1000000000L
+      while (dir.list().count(_.startsWith(s"$round-")) < writers.toInt) {
+        require(System.nanoTime() < deadline, s"barrier timeout in round $round")
+        Thread.sleep(2)
+      }
+    }
+    val versions = (0 until rounds.toInt).map { r =>
+      round = r
+      DeltaLog.write(spark, Seq(row(id.toInt, r)).toDF("x"), table, "append")
+    }
+    println(s"VERSIONS ${versions.mkString(",")}")
+    spark.stop()
   }
 }

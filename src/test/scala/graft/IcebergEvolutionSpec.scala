@@ -17,13 +17,15 @@ class IcebergEvolutionSpec extends SparkSpec {
     Files.createTempDirectory("graft-iceevo-").toString + "/t"
 
   /** (field name -> id, last-column-id) straight from the current
-    * metadata JSON. */
+    * metadata JSON: the highest `v<N>.metadata.json`. */
   private def idsOf(t: String): (Map[String, Int], Int) = {
     val mdir = new java.io.File(t, "metadata")
-    val hint = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(mdir, "version-hint.text").toPath), "UTF-8").trim
+    val current = mdir.list().collect {
+      case n if n.matches("v\\d+\\.metadata\\.json") =>
+        n.stripPrefix("v").stripSuffix(".metadata.json").toInt
+    }.max
     val json = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(mdir, s"v$hint.metadata.json").toPath), "UTF-8")
+      new java.io.File(mdir, s"v$current.metadata.json").toPath), "UTF-8")
     val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
     val node =
       if (root.has("schemas")) {

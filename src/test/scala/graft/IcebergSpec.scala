@@ -466,6 +466,65 @@ class IcebergSpec extends SparkSpec {
       conf.unset("fs.file.impl.disable.cache")
     }
   }
+
+  test("concurrent appends in one JVM both land: no lost snapshot") {
+    val t = fresh()
+    IcebergTable.writeAppend(spark, Seq((1L, "base")).toDF("id", "v"), t)
+    // line both writers up right before their publish (once each: a
+    // rebased retry re-enters the hook) ...
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val lined = new ThreadLocal[java.lang.Boolean] {
+      override def initialValue(): java.lang.Boolean = false
+    }
+    IcebergTable.raceHook = () =>
+      if (!lined.get) {
+        lined.set(true)
+        barrier.await(60, java.util.concurrent.TimeUnit.SECONDS); ()
+      }
+    // ... and hold open the check-then-truncate window of a
+    // create-if-absent of vN.metadata.json
+    val conf = spark.sparkContext.hadoopConfiguration
+    val impl = conf.get("fs.file.impl")
+    conf.set("fs.file.impl", classOf[SlowMetadataCreateProbeFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try Seq(2L, 3L).map { k =>
+        pool.submit(() => IcebergTable.writeAppend(spark,
+          Seq((k, "racer")).toDF("id", "v"), t))
+      }.foreach(_.get())
+    finally {
+      pool.shutdown()
+      IcebergTable.raceHook = () => ()
+      conf.set("fs.file.impl", impl)
+      conf.unset("fs.file.impl.disable.cache")
+    }
+    assert(IcebergTable.read(spark, t).as[(Long, String)].collect().toSet ==
+      Set((1L, "base"), (2L, "racer"), (3L, "racer")))
+    assert(IcebergTable.metadataTable(spark, t, "snapshots").count() == 3L)
+  }
+}
+
+/** `file://` filesystem whose create-if-absent of an Iceberg
+  * `vN.metadata.json` checks for the file, stalls 50 ms, then opens it
+  * truncating: Hadoop's local `create(p, overwrite = false)`, with the
+  * window between its existence check and its open held open. */
+class SlowMetadataCreateProbeFileSystem extends graft.sources.FastLocalFileSystem {
+  import org.apache.hadoop.fs.{FileAlreadyExistsException, FSDataOutputStream, Path}
+
+  override def create(p: Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): FSDataOutputStream = {
+    val checkThenOpen =
+      !overwrite && p.getName.matches("v\\d+\\.metadata\\.json")
+    if (checkThenOpen) {
+      if (exists(p)) throw new FileAlreadyExistsException(s"File already exists: $p")
+      Thread.sleep(50)
+    }
+    super.create(p, permission, overwrite || checkThenOpen, bufferSize,
+      replication, blockSize, progress)
+  }
 }
 
 /** `file://` filesystem that counts `copyToLocalFile` calls, so a spec can
