@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   * must never fail a commit.
   *
   * Scale shape: EVERY commit this writer produces updates incrementally
-  * from the previous checksum plus the in-memory commit actions —
+  * from the previous checksum plus the in-memory commit actions (and a
+  * streamed tail's counts) —
   * O(commit) with zero Spark jobs — because remove actions carry the
   * removed file's `size` (the protocol's optional RemoveFile.size).
   * Only a missing baseline or a foreign log line without a remove size
@@ -54,12 +55,18 @@ object Checksum {
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Write the checksum for a just-committed `version` from its action
-    * lines. Best-effort: any failure is swallowed (the commit already
-    * won; crc files are an optional integrity layer). Incremental when
-    * the commit only ADDS on top of a previous checksum; one distributed
-    * metadata aggregation otherwise. */
+    * lines plus, for a commit with a streamed tail (wide DML, clones and
+    * converts whose actions never reached the driver), the counts taken
+    * while streaming. Best-effort: any failure is swallowed (the commit
+    * already won; crc files are an optional integrity layer).
+    * Incremental — zero Spark jobs — on top of the previous checksum or
+    * at version 0; one distributed metadata aggregation when the
+    * baseline is missing or a remove carried no size. A streamed tail
+    * whose sizes are unknown writes nothing: the next writer's crc
+    * self-heals through the recompute. */
   private[sources] def update(spark: SparkSession, table: String,
-      version: Long, actions: Seq[String]): Unit =
+      version: Long, actions: Seq[String],
+      streamed: Option[DeltaLog.TailCounts] = None): Unit =
     try {
       val parsed = actions.map(mapper.readTree)
       val adds = parsed.filter(_.has("add")).map(_.get("add"))
@@ -69,6 +76,12 @@ object Checksum {
       // falls back to the recompute below)
       val sizedRemoves = removes.forall(r =>
         r.hasNonNull("size") && r.get("size").asLong(-1L) >= 0L)
+      if (streamed.exists(t => !t.sizesKnown || !sizedRemoves)) return
+      val tail = streamed.getOrElse(DeltaLog.TailCounts())
+      val numAdds = adds.size + tail.adds
+      val addBytes = adds.map(_.get("size").asLong()).sum + tail.addBytes
+      val numRemoves = removes.size + tail.removes
+      def removeBytes = removes.map(_.get("size").asLong()).sum + tail.removeBytes
       val metaJson = parsed.find(_.has("metaData"))
         .map(n => mapper.writeValueAsString(n.get("metaData")))
       val protoJson = parsed.find(_.has("protocol"))
@@ -77,10 +90,12 @@ object Checksum {
 
       val (numFiles, sizeBytes, snapFallback) = prev match {
         case Some(p) if sizedRemoves =>
-          (p.numFiles + adds.size - removes.size,
-            p.tableSizeBytes + adds.map(_.get("size").asLong()).sum
-              - removes.map(_.get("size").asLong()).sum,
-            None)
+          (p.numFiles + numAdds - numRemoves,
+            p.tableSizeBytes + addBytes - removeBytes, None)
+        // version 0: there IS no prior state — the commit's own deltas
+        // are the whole table
+        case None if version == 0L && sizedRemoves =>
+          (numAdds - numRemoves, addBytes - removeBytes, None)
         case _ =>
           // no baseline or a size-less remove: ONE distributed
           // aggregation over the metadata frame (O(files) rows, never
@@ -91,40 +106,6 @@ object Checksum {
           (r.getLong(0), r.getLong(1), Some(snap))
       }
 
-      writeCrc(spark, table, version, numFiles, sizeBytes,
-        metaJson.orElse(prev.flatMap(_.metadataJson))
-          .orElse(snapFallback.flatMap(_.metaDataJson)),
-        protoJson.orElse(prev.flatMap(_.protocolJson))
-          .orElse(snapFallback.flatMap(_.protocolJson)))
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Checksum update from PRE-AGGREGATED commit deltas — the form the
-    * streamed wide-DML commit uses, where the remove actions were never
-    * materialized on the driver (the writer counted files/bytes while
-    * streaming them into the commit). Zero Spark jobs when the previous
-    * checksum exists; one metadata aggregation otherwise. */
-  private[sources] def updateDelta(spark: SparkSession, table: String,
-      version: Long, numAdds: Long, addBytes: Long,
-      numRemoves: Long, removeBytes: Long,
-      protoJson: Option[String] = None, metaJson: Option[String] = None): Unit =
-    try {
-      val prev = if (version == 0L) None else read(spark, table, version - 1)
-      val (numFiles, sizeBytes, snapFallback) = prev match {
-        case Some(p) =>
-          (p.numFiles + numAdds - numRemoves,
-            p.tableSizeBytes + addBytes - removeBytes, None)
-        // version 0: there IS no prior state — the commit's own deltas
-        // are the whole table, so the checksum derives with zero Spark
-        // jobs (the snapshot-agg fallback below cost 3 jobs on every
-        // table-creating write)
-        case _ if version == 0L =>
-          (numAdds - numRemoves, addBytes - removeBytes, None)
-        case _ =>
-          val snap = DeltaLog.snapshot(spark, table, Some(version))
-          val r = snap.allFiles.agg(
-            count(lit(1)), coalesce(sum(col("size")), lit(0L))).head
-          (r.getLong(0), r.getLong(1), Some(snap))
-      }
       writeCrc(spark, table, version, numFiles, sizeBytes,
         metaJson.orElse(prev.flatMap(_.metadataJson))
           .orElse(snapFallback.flatMap(_.metaDataJson)),

@@ -32,7 +32,7 @@ import scala.collection.mutable
   * At ~10⁶ files / 100 TB the driver holds file PATHS only where a scan
   * plan needs them (the same footprint as Spark's own file index), never
   * the stats/partition-value payload. The JSON tail stays bounded by
-  * auto-checkpointing every N commits ([[commitWrite]]).
+  * auto-checkpointing every N commits ([[Txn.postCommit]]).
   *
   * Interop scope: reads tables written by current Delta writers —
   * partitioned layouts, single- and multi-part checkpoints, deletion
@@ -157,9 +157,6 @@ object DeltaLog {
       * collect job, not two. */
     lazy val fileEntries: Seq[FileEntry] = {
       val r = Option(chunkMemo.get()).map(_.sortBy(_.path)).getOrElse {
-        if (sys.env.contains("GRAFT_DEBUG_SEED")) System.err.println(
-          s"[seed] COLLECT v$version " + new Exception().getStackTrace
-            .filter(_.getClassName.contains("graft")).take(4).mkString(" <- "))
         allFiles.select("path", "deletionVector", "size").collect().toSeq
           .map(entryOfRow).sortBy(_.path)
       }
@@ -191,19 +188,8 @@ object DeltaLog {
 
     /** Table properties from the metaData `configuration` map —
       * delta.appendOnly, delta.constraints.*, … (empty when absent). */
-    lazy val configuration: Map[String, String] = metaDataJson.map { raw =>
-      val n = mapper.readTree(raw)
-      if (!n.has("configuration") || n.get("configuration").isNull) Map.empty[String, String]
-      else {
-        val it = n.get("configuration").fields()
-        val b = Map.newBuilder[String, String]
-        while (it.hasNext) {
-          val e = it.next()
-          if (!e.getValue.isNull) b += e.getKey -> e.getValue.asText()
-        }
-        b.result()
-      }
-    }.getOrElse(Map.empty)
+    lazy val configuration: Map[String, String] =
+      metaDataJson.map(raw => configurationOf(mapper.readTree(raw))).getOrElse(Map.empty)
 
     /** logical → physical column name under column mapping (top level;
       * empty when mapping is off). Stats and partition values are keyed
@@ -241,6 +227,19 @@ object DeltaLog {
       paths.map(p => byPath.getOrElse(p, FileEntry(p)))
     }
   }
+
+  /** The `configuration` map of a metaData action's body. */
+  private def configurationOf(meta: JsonNode): Map[String, String] =
+    if (!meta.has("configuration") || meta.get("configuration").isNull) Map.empty
+    else {
+      val it = meta.get("configuration").fields()
+      val b = Map.newBuilder[String, String]
+      while (it.hasNext) {
+        val e = it.next()
+        if (!e.getValue.isNull) b += e.getKey -> e.getValue.asText()
+      }
+      b.result()
+    }
 
   /** Decode one `allFiles` row (path, deletionVector) into a FileEntry. */
   private def entryOfRow(r: Row): FileEntry = {
@@ -354,13 +353,22 @@ object DeltaLog {
   private[sources] def compactedPath(table: String, x: Long, y: Long) =
     new Path(logDir(table), f"$x%020d.$y%020d.compacted.json")
 
-  /** Newest committed version (JSON commits ∪ checkpoint ∪ compaction
-    * range-ends) — what a streaming tail polls; cheap (one directory
-    * listing, no replay). */
+  /** Newest committed version (JSON commits ∪ compaction range-ends ∪
+    * the `_last_checkpoint` version) from ONE listing of `_delta_log`,
+    * plus the pointer read when it is listed: what a streaming tail
+    * polls and what every commit attempt probes ([[Txn.probe]]). The
+    * checkpoint counts: after a checkpoint + JSON cleanup the listing
+    * holds no commits, yet reusing version 0 would commit BELOW the
+    * checkpoint, where replay ignores it. */
   def latestVersion(spark: SparkSession, table: String): Option[Long] = {
-    val vs = listVersions(spark, table) ++
-      lastCheckpoint(fs(spark, table), table).toSeq ++
-      listCompactions(spark, table).map(_._2)
+    val f = fs(spark, table)
+    val names =
+      try f.listStatus(logDir(table)).map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => return None }
+    val vs = names.collect {
+      case commitRe(v) => v.toLong
+      case compactedRe(_, y) => y.toLong
+    } ++ (if (names.contains("_last_checkpoint")) lastCheckpoint(f, table) else None)
     if (vs.isEmpty) None else Some(vs.max)
   }
 
@@ -932,27 +940,15 @@ object DeltaLog {
     // [[seedNextSnapshot]]): adopt it iff the commit file on disk is
     // byte-identical to the one the seeder wrote (length + mtime pin —
     // a DROP + re-create minting the same version cannot match)
-    val pendDbg = sys.env.contains("GRAFT_DEBUG_SEED")
     Option(pendingMemo.get(table))
-      .filter { p =>
-        val ok = p.version == target && logStats.exists(st =>
-          st.getPath.getName == f"$target%020d.json" &&
-            st.getLen == p.commitLen && st.getModificationTime == p.commitMtime)
-        if (pendDbg && !ok) System.err.println(
-          s"[seed] MISS $table pend=v${p.version} target=$target " +
-            s"len=${p.commitLen} mtime=${p.commitMtime} stats=" +
-            logStats.filter(_.getPath.getName.endsWith(".json"))
-              .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-              .mkString(","))
-        ok
-      }
+      .filter(p => p.version == target && logStats.exists(st =>
+        st.getPath.getName == f"$target%020d.json" &&
+          st.getLen == p.commitLen && st.getModificationTime == p.commitMtime))
       .foreach { p =>
         built.chunkMemo.compareAndSet(null, p.entries)
         built.fileEntries // materializes from the memo → entriesReady
         ()
       }
-    if (pendDbg && pendingMemo.get(table) == null)
-      System.err.println(s"[seed] NONE $table target=$target")
     snapshotCache.put(cacheKey, built)
     built
   }
@@ -1050,12 +1046,8 @@ object DeltaLog {
     * surface as an exception from [[snapshot]], never as `false` — a
     * caller deciding create-vs-append would otherwise treat "unreadable"
     * as "absent" and silently overwrite the table. */
-  def isDeltaTable(spark: SparkSession, table: String): Boolean = {
-    val f = fs(spark, table)
-    f.exists(logDir(table)) &&
-      (listVersions(spark, table).nonEmpty || lastCheckpoint(f, table).nonEmpty ||
-        listCompactions(spark, table).nonEmpty)
-  }
+  def isDeltaTable(spark: SparkSession, table: String): Boolean =
+    latestVersion(spark, table).nonEmpty
 
   /** Last transaction version committed for `appId` (the protocol's
     * SetTransaction state) — how a streaming writer discovers which
@@ -1487,20 +1479,9 @@ object DeltaLog {
         s""""partitionValues":${pvJsonOf(pv)},"size":${r.getLong(2)},""" +
         s""""modificationTime":$mt,"dataChange":true$statsField$dvField}}"""
     }
-    actions += s"""{"commitInfo":{"timestamp":$now""" +
-      ictField(spark, target, 0L, snap.configuration, now) +
-      s""","operation":"CLONE"}}"""
-
-    val f = fs(spark, target)
-    f.mkdirs(new Path(target, "_delta_log"))
-    val tmp = new Path(logDir(target), f".00000-clone-$now%d.json.tmp")
-    val out = f.create(tmp, false)
-    try out.write((orderCommitActions(actions.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    require(Publish.publishIfAbsent(f, tmp, commitPath(target, 0L)),
-      s"clone target $target gained a commit concurrently")
-    Checksum.update(spark, target, 0L, actions.result())
-    0L
+    fs(spark, target).mkdirs(logDir(target))
+    Txn.commit(spark, target, None, "CLONE", actions.result(),
+      onRace = Some(s"clone target $target gained a commit concurrently"))
   }
 
   /** DEEP CLONE: an independent copy of the source table at (optionally)
@@ -1584,30 +1565,23 @@ object DeltaLog {
         }
       }
 
-    // stream the version-0 commit: commitInfo first (ICT spec), then
-    // protocol/metaData, then the adds as the copy tasks deliver them
+    // the version-0 commit: protocol/metaData, then the adds streamed as
+    // the copy tasks deliver them (their sizes are not counted: no .crc)
     tgtFs.mkdirs(logDir(target))
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(logDir(target), f".${0L}%020d-$nonce.json.tmp")
-    val out = tgtFs.create(tmp, false)
-    try {
-      def line(s: String): Unit = out.write((s + "\n").getBytes("UTF-8"))
-      line(s"""{"commitInfo":{"timestamp":$now""" +
-        ictField(spark, target, 0L, snap.configuration, now) +
-        s""","operation":${jsonStr("CLONE DEEP")},""" +
-        s""""operationParameters":${pvJsonOf(Map(
-          "source" -> source, "sourceVersion" -> snap.version.toString))}}}""")
-      line(s"""{"protocol":${snap.protocolJson.getOrElse(
-        """{"minReaderVersion":1,"minWriterVersion":2}""")}}""")
-      val metaNode = mapper.readTree(meta).asInstanceOf[ObjectNode]
-      metaNode.put("id", java.util.UUID.randomUUID().toString)
-      line(s"""{"metaData":${mapper.writeValueAsString(metaNode)}}""")
-      val it = addActions.toLocalIterator()
-      while (it.hasNext) line(it.next())
-    } finally out.close()
-    if (!Publish.publishIfAbsent(tgtFs, tmp, commitPath(target, 0L)))
-      sys.error(s"clone target $target gained a commit concurrently")
-    0L
+    val metaNode = mapper.readTree(meta).asInstanceOf[ObjectNode]
+    metaNode.put("id", java.util.UUID.randomUUID().toString)
+    Txn.commit(spark, target, None, "CLONE DEEP",
+      Seq(s"""{"protocol":${snap.protocolJson.getOrElse(
+          """{"minReaderVersion":1,"minWriterVersion":2}""")}}""",
+        s"""{"metaData":${mapper.writeValueAsString(metaNode)}}"""),
+      parameters = Map("source" -> source, "sourceVersion" -> snap.version.toString),
+      tail = Some { line =>
+        var n = 0L
+        val it = addActions.toLocalIterator()
+        while (it.hasNext) { line(it.next()); n += 1 }
+        TailCounts(adds = n, sizesKnown = false)
+      },
+      onRace = Some(s"clone target $target gained a commit concurrently"))
   }
 
   /** Selective overwrite — Delta's `replaceWhere`: atomically delete
@@ -2930,9 +2904,10 @@ object DeltaLog {
       // O(matched files) paths. Checked IN ADDITION to the Sets.
       removeFrame: Option[DataFrame] = None)
 
-  /** Test-only injection point: runs after a DML operation computed its
-    * plan from a pinned snapshot and before its commit — a spec installs
-    * a concurrent writer here to exercise the conflict checker. No-op in
+  /** Test-only injection point: runs at the start of every commit
+    * attempt, after the operation computed its actions from the pinned
+    * snapshot and before the probe ([[Txn.probe]]) — a spec installs a
+    * concurrent writer here to exercise the conflict checker. No-op in
     * production; never set outside tests. */
   private[graft] var raceHook: (String, String) => Unit = (_, _) => ()
 
@@ -3392,13 +3367,9 @@ object DeltaLog {
     * (append-style evolution) instead of `df`'s schema. `dataChange`
     * stamps the commit's add/remove actions; `false` marks a pure
     * rewrite — same rows before and after — which [[changesBetween]]
-    * skips, exactly the protocol's OPTIMIZE semantics.
-    *
-    * Auto-checkpointing: after every `spark.graft.delta.checkpointInterval`-th
-    * commit (default 10, Delta's own default; 0 disables) a parquet
-    * checkpoint is written, so JSON replay cost stays bounded no matter
-    * how long the table lives — the failure of the checkpoint itself
-    * never fails the (already durable) commit. */
+    * skips, exactly the protocol's OPTIMIZE semantics. The commit tail
+    * — probe, commitInfo, publish, memo/`.crc`, post-commit hooks — is
+    * the shared [[Txn]] step. */
   private def commitWrite(spark: SparkSession, df: DataFrame, table: String,
       partitionBy: Seq[String], txn: Option[(String, Long)],
       removePaths: Snapshot => Seq[String], widenSchema: Boolean,
@@ -3431,15 +3402,6 @@ object DeltaLog {
     val f = fs(spark, table)
     val root = new Path(table)
     f.mkdirs(logDir(table))
-    // the checkpoint counts toward numbering: after a checkpoint + JSON
-    // vacuum, listVersions is empty but version 0 is long gone — reusing
-    // it would commit BELOW the checkpoint and be silently ignored by
-    // replay
-    def nextVersion(): Long = {
-      val prior = listVersions(spark, table) ++ lastCheckpoint(f, table).toSeq ++
-        listCompactions(spark, table).map(_._2)
-      if (prior.isEmpty) 0L else prior.max + 1
-    }
 
     // Column-mapped tables ARE writable: the staged frame is translated
     // logical→physical below, stats and partitionValues key by
@@ -3471,8 +3433,9 @@ object DeltaLog {
 
     // computed once here (validation before staging) and reused by the
     // first commit attempt — one log replay per commit, not two
-    val firstVersion = nextVersion()
-    val firstPrev = if (firstVersion == 0L) None else Some(snapshot(spark, table))
+    val firstVersion = latestVersion(spark, table).fold(0L)(_ + 1)
+    val firstPrev =
+      if (firstVersion == 0L) None else Some(snapshot(spark, table, Some(firstVersion - 1)))
     // widening evolution on a mapped table: new top-level columns get a
     // minted physicalName (col-<uuid>) and the next columnIds. Minted
     // ONCE per commitWrite call — the staged parquet carries these
@@ -3817,40 +3780,29 @@ object DeltaLog {
         .map(stageCdc(spark, table, _, firstPrev.get))
         .getOrElse(Seq.empty)
 
-    raceHook(table, operation)
-    // Optimistic-concurrency commit loop: build the version-dependent
-    // actions, write-then-publish; a lost race re-reads the log and (for
-    // conflict-free commits, retryOnRace) retries at the next version.
+    // Optimistic-concurrency commit loop over the shared [[Txn]] steps:
+    // each attempt probes, rebuilds the version-dependent actions and
+    // writes-then-publishes; a lost race re-probes and (for conflict-free
+    // commits, retryOnRace, or a conflict-checked pin) retries at the
+    // next version. A commit whose inputs (merge frame, compaction set,
+    // removePaths) were derived from snapshot `baseVersion` is valid as a
+    // LATER version only when every intervening commit is provably
+    // non-conflicting ([[checkConflicts]]) — then it REBASES: the staged
+    // files and fixed remove set are still exactly right. Without
+    // readInfo (whole-table OVERWRITE, the materialized view's pinned
+    // fold) any advance aborts.
     var attempt = 0
     var committed = -1L
-    var cached: Option[(Long, Option[Snapshot])] = Some((firstVersion, firstPrev))
+    var committedCfg = Map.empty[String, String]
     while (committed < 0) {
-      val (version, prevSnap) = cached.getOrElse {
-        val v = nextVersion()
-        (v, if (v == 0L) None else Some(snapshot(spark, table)))
-      }
-      cached = None
+      val latest = Txn.probe(spark, table, operation, baseVersion, readInfo,
+        effConfig, Txn.raceMessage(table, baseVersion.getOrElse(-1L), operation))
+      val version = latest + 1
+      val prevSnap =
+        if (version == firstVersion) firstPrev
+        else if (version == 0L) None
+        else Some(snapshot(spark, table, Some(latest)))
       gateWritable(prevSnap)
-      // a commit whose inputs (merge frame, compaction set, removePaths)
-      // were derived from snapshot `baseVersion` is valid as a LATER
-      // version only when every intervening commit is provably
-      // non-conflicting (checkConflicts) — then the commit REBASES: the
-      // staged files and fixed remove set are still exactly right, and
-      // the loser pays O(intervening commits) of JSON reads instead of a
-      // full recompute. Without readInfo (callers whose removePaths
-      // depend on the live snapshot, e.g. whole-table OVERWRITE, or the
-      // materialized view's pinned fold) any advance aborts, as before.
-      // Rename-level races alone cannot catch staleness (the rename at
-      // version+1 would succeed cleanly).
-      baseVersion.foreach { b =>
-        if (version != b + 1) readInfo match {
-          case Some(info) =>
-            checkConflicts(spark, table, b, version - 1, info, effConfig)
-          case None => throw new CommitRaceException(
-            s"concurrent commit: $table advanced from version $b to ${version - 1} " +
-              s"while this $operation was computed — re-read and retry")
-        }
-      }
       // identity allocation is fenced on the snapshot it read its
       // high-water mark from: committing the staged ids at a LATER
       // version could collide with a concurrent writer's allocation, so
@@ -3957,12 +3909,14 @@ object DeltaLog {
       prevSnap.toSeq.foreach { ps =>
         ps.entriesFor(removePaths(ps)).foreach(actions += removeJson(_))
       }
-      // wide removes stream into a side file (never the driver heap);
-      // its bytes are appended verbatim after the ordered head actions
-      val removeSide: Option[Path] = for (rf <- removeFrameOf; ps <- prevSnap)
-        yield {
+      // wide removes stream into a side file (never the driver heap),
+      // counted there for the commitInfo that precedes them, and ride
+      // behind the head actions as the commit's streamed tail
+      val removeTail: Option[(String => Unit) => TailCounts] =
+        for (rf <- removeFrameOf; ps <- prevSnap) yield {
           val side = new Path(logDir(table),
             f".$version%020d-$nonce.removes.tmp")
+          val (n0, b0) = (removedFiles, removedBytes)
           val so = f.create(side, true)
           try {
             val it = rf(ps).select("path", "deletionVector", "size")
@@ -3970,7 +3924,14 @@ object DeltaLog {
             while (it.hasNext)
               so.write((removeJson(entryOfRow(it.next())) + "\n").getBytes("UTF-8"))
           } finally so.close()
-          side
+          val counts = TailCounts(removes = removedFiles - n0,
+            removeBytes = removedBytes - b0, sizesKnown = removeSizesKnown)
+          (line: String => Unit) => {
+            val in = f.open(side)
+            try scala.io.Source.fromInputStream(in, "UTF-8").getLines().foreach(line)
+            finally { in.close(); f.delete(side, false); () }
+            counts
+          }
         }
       // row tracking: fresh contiguous baseRowId ranges for the staged
       // files (allocated from the delta.rowTracking domain's high-water
@@ -4018,72 +3979,25 @@ object DeltaLog {
       (txn.toSeq ++ extraTxns).foreach { case (appId, v) =>
         actions += s"""{"txn":{"appId":${jsonStr(appId)},"version":$v,"lastUpdated":$now}}"""
       }
-      val opParams =
-        if (operationParameters.isEmpty) ""
-        else s""","operationParameters":${pvJsonOf(operationParameters)}"""
       // operationMetrics (delta-spark's string-valued map in commitInfo):
-      // all three figures fall out of state already in hand — no extra
-      // jobs, no extra filesystem calls
+      // all figures fall out of state already in hand — no extra jobs,
+      // no extra filesystem calls
       val outRows = liveFiles.flatMap(lf => statsByFile.get(lf._1))
         .map(st => mapper.readTree(st).path("numRecords").asLong(0L)).sum
-      val opMetrics = s""","operationMetrics":{""" +
-        s""""numFiles":"${liveFiles.size}","numOutputRows":"$outRows",""" +
-        s""""numOutputBytes":"$outBytes","numRemovedFiles":"$removedFiles"}"""
-      actions += s"""{"commitInfo":{"timestamp":$now""" +
-        ictField(spark, table, version, effConfig, now) +
-        s""","operation":${jsonStr(operation)}$opParams$opMetrics,""" +
-        s""""isBlindAppend":${blindAppend && removedFiles == 0}}}"""
-
-      // write-then-publish: the commit becomes visible atomically or not at all
       val actionSeq = actions.result()
-      val tmp = new Path(logDir(table), f".$version%020d-$nonce.json.tmp")
-      val out = f.create(tmp, false)
-      try {
-        out.write((orderCommitActions(actionSeq).mkString("\n") + "\n").getBytes("UTF-8"))
-        // streamed removes ride behind the head actions: commitInfo
-        // stays first, and within a commit the protocol reads actions
-        // order-independently (removed paths never collide with the
-        // fresh-nonce adds)
-        removeSide.foreach { side =>
-          val in = f.open(side)
-          try {
-            val buf = new Array[Byte](1 << 16)
-            var n = in.read(buf)
-            while (n >= 0) { if (n > 0) out.write(buf, 0, n); n = in.read(buf) }
-          } finally in.close()
-          f.delete(side, false); ()
-        }
-      } finally out.close()
-      // put-if-absent: of any number of writers, in this JVM or not,
-      // exactly one wins the version
-      if (Publish.publishIfAbsent(f, tmp, commitPath(table, version))) {
+      val cfg = Txn.declaredConfig(actionSeq, prevSnap)
+      val info = Txn.commitInfo(spark, table, version, operation, cfg, now,
+        operationParameters,
+        metrics = Map("numFiles" -> liveFiles.size.toString,
+          "numOutputRows" -> outRows.toString, "numOutputBytes" -> outBytes.toString,
+          "numRemovedFiles" -> removedFiles.toString),
+        blindAppend = blindAppend && removedFiles == 0)
+      val (tmp, tailCounts) = Txn.write(spark, table, version, info, actionSeq, removeTail)
+      if (Txn.publish(spark, table, tmp, version)) {
         committed = version
-        // seed the next snapshot's entry memo when the v−1 state is
-        // driver-resident (or this is the table's first commit / a
-        // no-previous-state overwrite); streamed wide removes over an
-        // existing state are the one shape whose removed set never
-        // touched the driver — skip those
-        val prevEntries: Option[Seq[FileEntry]] =
-          if (prevSnap.isEmpty) Some(Seq.empty)
-          else if (removeFrameOf.isDefined) None
-          else prevSnap.flatMap(residentEntries)
-        prevEntries.foreach(pe =>
-          seedNextSnapshot(f, table, version, actionSeq, pe))
-        if (removeFrameOf.isEmpty)
-          Checksum.update(spark, table, version, actionSeq)
-        else if (removeSizesKnown) {
-          // streamed removes never reached actionSeq: update the crc
-          // from the counters accumulated while streaming (the
-          // deleteWhereStreamed policy, incl. skipping on unknown sizes
-          // — the next writer's crc self-heals via the recompute path)
-          val parsed = actionSeq.map(mapper.readTree)
-          Checksum.updateDelta(spark, table, version,
-            liveFiles.size.toLong, outBytes, removedFiles, removedBytes,
-            protoJson = parsed.find(_.has("protocol"))
-              .map(n => mapper.writeValueAsString(n.get("protocol"))),
-            metaJson = parsed.find(_.has("metaData"))
-              .map(n => mapper.writeValueAsString(n.get("metaData"))))
-        }
+        committedCfg = cfg
+        Txn.settle(spark, table, version, actionSeq, prevSnap,
+          removeTail.map(_ => tailCounts))
       } else {
         // a conflict-checked pinned commit may also retry the loop: the
         // next iteration re-runs checkConflicts against whatever landed
@@ -4093,62 +4007,210 @@ object DeltaLog {
         attempt += 1
       }
     }
-    maybeAutoCheckpoint(spark, table, committed, effConfig)
-    maybeLogCompact(spark, table, committed, effConfig)
-    maybeAutoCompact(spark, table, operation, dataChange, effConfig)
-    maybeSymlinkManifest(spark, table, dataChange, effConfig)
+    Txn.postCommit(spark, table, committed, operation, dataChange, committedCfg)
     committed
   }
 
-  /** Auto compaction (delta.autoOptimize.autoCompact): after a
-    * dataChange commit, if the table has accumulated at least
-    * `spark.graft.delta.autoCompact.minNumFiles` (default 50) files
-    * under `spark.graft.delta.autoCompact.minFileSize` (default 16 MB;
-    * Databricks' knob defaults to 128 MB at warehouse scale), run a
-    * bin-packing OPTIMIZE scoped to just those files. The check is one
-    * distributed count over the file-state frame; the compaction is
-    * O(small files). Best effort, like the checkpoint: the commit is
-    * already durable, and a lost compaction race just leaves the small
-    * files for the next writer. */
-  private def maybeAutoCompact(spark: SparkSession, table: String,
-      operation: String, dataChange: Boolean,
-      cfg: scala.collection.Map[String, String]): Unit =
-    if (dataChange && operation != "OPTIMIZE" &&
-        cfg.get("delta.autoOptimize.autoCompact").contains("true")) {
-      val minSize = spark.conf.get(
-        "spark.graft.delta.autoCompact.minFileSize",
-        (16L * 1024 * 1024).toString).toLong
-      val minNum = spark.conf.get(
-        "spark.graft.delta.autoCompact.minNumFiles", "50").toInt
-      try {
-        val snap = snapshot(spark, table)
-        val small = snap.allFiles.where(col("size") < minSize).count()
-        if (small >= minNum) {
-          optimize(spark, table, minFileSize = minSize); ()
+  /** What a commit's streamed tail wrote, counted as it streamed: its
+    * file actions and their bytes, for the `.crc` update (skipped when
+    * `sizesKnown` is false) and to tell an empty commit. */
+  private[sources] final case class TailCounts(adds: Long = 0L, addBytes: Long = 0L,
+      removes: Long = 0L, removeBytes: Long = 0L, sizesKnown: Boolean = true) {
+    def isEmpty: Boolean = adds == 0L && removes == 0L
+  }
+
+  /** The one Delta commit step. Every write goes through it, in order:
+    *   1. the pin: a snapshot, or None for a version-0 creator;
+    *   2. per attempt, [[raceHook]] and ONE probe of the latest version;
+    *      an advance past the pin runs [[checkConflicts]] and rebases
+    *      (the caller passed [[TxnReadInfo]]) or aborts;
+    *   3. one commitInfo, built against the final version;
+    *   4. commitInfo first (the in-commit-timestamp spec reads the clock
+    *      from the head of the file; delta-spark writes it first too),
+    *      then the caller's actions, then an optional streamed tail;
+    *   5. [[Publish.publishIfAbsent]]: of any number of writers, in this
+    *      JVM or not, exactly one wins the version; a lost race raises
+    *      [[CommitRaceException]] with the caller's message;
+    *   6. the next snapshot's entry memo and the `.crc` checksum;
+    *   7. [[postCommit]] under the configuration the commit declares.
+    * [[commit]] runs all seven. [[commitWrite]] rebuilds its actions on
+    * every attempt, so it runs its own loop over the same steps. */
+  private[sources] object Txn {
+
+    def raceMessage(table: String, base: Long, operation: String): String =
+      s"concurrent commit: $table advanced past version $base while this " +
+        s"$operation was computed — re-read and retry"
+
+    /** Steps 1–2 of one attempt: fire [[raceHook]], probe the latest
+      * version, and hold the pinned `base` (-1: the table must not
+      * exist yet) against it. Returns the latest version (-1: none);
+      * the attempt commits at the next one. */
+    def probe(spark: SparkSession, table: String, operation: String,
+        base: Option[Long], readInfo: Option[TxnReadInfo],
+        cfg: scala.collection.Map[String, String], onRace: => String): Long = {
+      raceHook(table, operation)
+      val latest = latestVersion(spark, table).getOrElse(-1L)
+      base.filter(_ != latest).foreach { b =>
+        readInfo match {
+          case Some(info) => checkConflicts(spark, table, b, latest, info, cfg)
+          case None => throw new CommitRaceException(onRace)
         }
+      }
+      latest
+    }
+
+    /** The configuration a commit declares: its own metaData action's
+      * (an ALTER setting `delta.checkpointInterval` counts under the new
+      * value), else the pinned snapshot's. */
+    def declaredConfig(actions: Seq[String], pin: Option[Snapshot]): Map[String, String] =
+      actions.find(_.startsWith("""{"metaData""""))
+        .map(a => configurationOf(mapper.readTree(a).get("metaData")))
+        .getOrElse(pin.fold(Map.empty[String, String])(_.configuration))
+
+    /** Step 3: the commit's one commitInfo, against its FINAL version —
+      * a rebased commit's in-commit timestamp must stay monotonic over
+      * the commits it moved past. */
+    def commitInfo(spark: SparkSession, table: String, version: Long,
+        operation: String, cfg: Map[String, String], now: Long,
+        parameters: Map[String, String] = Map.empty,
+        metrics: Map[String, String] = Map.empty,
+        blindAppend: Boolean = false): String =
+      s"""{"commitInfo":{"timestamp":$now""" +
+        ictValue(spark, table, version, cfg, now).fold("")(t => s""","inCommitTimestamp":$t""") +
+        s""","operation":${jsonStr(operation)}""" +
+        (if (parameters.isEmpty) "" else s""","operationParameters":${pvJsonOf(parameters)}""") +
+        (if (metrics.isEmpty) "" else s""","operationMetrics":${pvJsonOf(metrics)}""") +
+        s""","isBlindAppend":$blindAppend}}"""
+
+    /** Step 4: commitInfo, the actions, then the streamed `tail` into a
+      * temp file beside `version`; returns it with the tail's counts. A
+      * failed write leaves no temp file. */
+    def write(spark: SparkSession, table: String, version: Long, info: String,
+        actions: Seq[String], tail: Option[(String => Unit) => TailCounts])
+        : (Path, TailCounts) = {
+      val f = fs(spark, table)
+      val nonce = java.util.UUID.randomUUID().toString.take(8)
+      val tmp = new Path(logDir(table), f".$version%020d-$nonce.json.tmp")
+      try {
+        val out = f.create(tmp, false)
+        try {
+          out.write(((info +: actions).mkString("\n") + "\n").getBytes("UTF-8"))
+          (tmp, tail.fold(TailCounts())(_(s => out.write((s + "\n").getBytes("UTF-8")))))
+        } finally out.close()
       } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[delta] auto-compact of $table failed: ${e.getMessage}")
+        case e: Throwable => f.delete(tmp, false); throw e
       }
     }
 
-  /** Auto-checkpoint: bounded JSON replay for long-lived tables, run
-    * after every `spark.graft.delta.checkpointInterval`-th commit. Best
-    * effort — the commit is already durable, and a racing writer may
-    * legitimately checkpoint the same version first. */
-  private def maybeAutoCheckpoint(spark: SparkSession, table: String,
-      committed: Long, cfg: Map[String, String] = Map.empty): Unit = {
-    // Delta's own table property wins; the session conf is the default
-    val interval = cfg.getOrElse("delta.checkpointInterval",
-      spark.conf.get("spark.graft.delta.checkpointInterval", "10")).trim.toInt
-    if (interval > 0 && committed > 0 && committed % interval == 0)
-      try { checkpoint(spark, table); () }
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[delta] auto-checkpoint of $table at $committed failed: ${e.getMessage}")
+    /** Step 5: publish the written temp file as `version`, put-if-absent.
+      * False when another writer won it; the temp file is gone either way. */
+    def publish(spark: SparkSession, table: String, tmp: Path, version: Long): Boolean =
+      Publish.publishIfAbsent(fs(spark, table), tmp, commitPath(table, version))
+
+    /** Step 6: seed the next snapshot's entry memo from `prev` (the v−1
+      * state the actions were computed against, when driver-resident; a
+      * streamed tail never reached the driver, so it seeds nothing) and
+      * update the `.crc` checksum. */
+    def settle(spark: SparkSession, table: String, version: Long,
+        actions: Seq[String], prev: Option[Snapshot],
+        streamed: Option[TailCounts]): Unit = {
+      if (streamed.isEmpty)
+        (if (version == 0L) Some(Seq.empty[FileEntry])
+         else prev.filter(_.version == version - 1).flatMap(residentEntries))
+          .foreach(seedNextSnapshot(fs(spark, table), table, version, actions, _))
+      Checksum.update(spark, table, version, actions, streamed)
+    }
+
+    /** Step 7: the post-commit hooks. Each runs after every commit, gated
+      * only by its own condition under `cfg` (the table property wins,
+      * the session conf is the default). Best effort: the commit is
+      * already durable, and a racing writer may legitimately do the same
+      * work first.
+      *   - auto-checkpoint every `delta.checkpointInterval` commits
+      *     (default 10, Delta's own; 0 disables): bounded JSON replay;
+      *   - log compaction every `delta.logCompaction.interval` commits
+      *     (default 0 = off): one `<x>.<y>.compacted.json` per interval;
+      *   - auto compaction (`delta.autoOptimize.autoCompact`) after a
+      *     dataChange commit other than OPTIMIZE: once at least
+      *     `spark.graft.delta.autoCompact.minNumFiles` (default 50) files
+      *     sit under `spark.graft.delta.autoCompact.minFileSize` (default
+      *     16 MB), a bin-packing OPTIMIZE of just those — one distributed
+      *     count to check, O(small files) to compact;
+      *   - the symlink manifest
+      *     (`delta.compatibility.symlinkFormatManifest.enabled`) after a
+      *     dataChange commit, so Presto/Trino/Athena read the live set. */
+    def postCommit(spark: SparkSession, table: String, version: Long,
+        operation: String, dataChange: Boolean, cfg: Map[String, String]): Unit = {
+      def every(key: String, session: String, default: String): Int =
+        cfg.getOrElse(key, spark.conf.get(session, default)).trim.toInt
+      def on(key: String): Boolean = cfg.get(key).contains("true")
+      val cpEvery = every("delta.checkpointInterval",
+        "spark.graft.delta.checkpointInterval", "10")
+      val compactEvery = every("delta.logCompaction.interval",
+        "spark.graft.delta.logCompaction.interval", "0")
+      Seq[(String, Boolean, () => Unit)](
+        ("auto-checkpoint", cpEvery > 0 && version > 0 && version % cpEvery == 0,
+          () => { checkpoint(spark, table); () }),
+        ("log compaction", compactEvery > 1 && version > 0 &&
+          (version + 1) % compactEvery == 0,
+          () => { compactLog(spark, table, version - compactEvery + 1, version); () }),
+        ("auto-compact", dataChange && operation != "OPTIMIZE" &&
+          on("delta.autoOptimize.autoCompact"), () => {
+            val minSize = spark.conf.get("spark.graft.delta.autoCompact.minFileSize",
+              (16L * 1024 * 1024).toString).toLong
+            val minNum = spark.conf.get("spark.graft.delta.autoCompact.minNumFiles", "50").toInt
+            if (snapshot(spark, table).allFiles.where(col("size") < minSize).count() >= minNum) {
+              optimize(spark, table, minFileSize = minSize); ()
+            }
+          }),
+        ("symlink manifest", dataChange &&
+          on("delta.compatibility.symlinkFormatManifest.enabled"),
+          () => { generateSymlinkManifest(spark, table); () })
+      ).foreach { case (hook, due, run) =>
+        if (due) try run() catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[delta] $hook of $table at $version failed: ${e.getMessage}")
+        }
       }
+    }
+
+    /** All seven steps for one commit of fixed `actions` (plus an
+      * optional streamed `tail`) computed against `pin`. Retries a lost
+      * publish only when it can rebase (`readInfo`). A commit with no
+      * actions and an empty tail is dropped unpublished: the pinned
+      * version comes back. `onRace` replaces the default race message. */
+    def commit(spark: SparkSession, table: String, pin: Option[Snapshot],
+        operation: String, actions: Seq[String],
+        parameters: Map[String, String] = Map.empty,
+        readInfo: Option[TxnReadInfo] = None,
+        tail: Option[(String => Unit) => TailCounts] = None,
+        onRace: Option[String] = None,
+        now: Long = System.currentTimeMillis()): Long = {
+      val base = pin.fold(-1L)(_.version)
+      val message = onRace.getOrElse(raceMessage(table, base, operation))
+      val cfg = declaredConfig(actions, pin)
+      val dataChange = actions.exists(a =>
+        a.startsWith("""{"add"""") || a.startsWith("""{"remove""""))
+      var attempt = 0
+      while (true) {
+        val version = probe(spark, table, operation, Some(base), readInfo,
+          pin.fold(Map.empty[String, String])(_.configuration), message) + 1
+        val info = commitInfo(spark, table, version, operation, cfg, now, parameters)
+        val (tmp, counts) = write(spark, table, version, info, actions, tail)
+        if (actions.isEmpty && counts.isEmpty) {
+          fs(spark, table).delete(tmp, false)
+          return base
+        }
+        if (publish(spark, table, tmp, version)) {
+          settle(spark, table, version, actions, pin, tail.map(_ => counts))
+          postCommit(spark, table, version, operation, dataChange || !counts.isEmpty, cfg)
+          return version
+        }
+        attempt += 1
+        if (readInfo.isEmpty || attempt >= 10) throw new CommitRaceException(message)
+      }
+      sys.error("unreachable")
+    }
   }
 
   /** Re-run a whole DML operation on a lost commit race — sound
@@ -4601,9 +4663,6 @@ object DeltaLog {
     }
   }
 
-  /** Write `actions` as commit `version` atomically (write-then-publish,
-    * [[Publish.publishIfAbsent]]). The caller's read-modify-write is pinned:
-    * a lost race fails loudly — by construction the inputs are stale. */
   // ------------------------------------------- in-commit timestamps
   // (writer feature `inCommitTimestamp`, minWriterVersion 7: when
   // `delta.enableInCommitTimestamps=true` every commit's commitInfo
@@ -4649,11 +4708,6 @@ object DeltaLog {
         catch { case scala.util.control.NonFatal(_) => 0L }
       Some(math.max(now, prev + 1))
     }
-
-  private def ictField(spark: SparkSession, table: String, version: Long,
-      cfg: scala.collection.Map[String, String], now: Long): String =
-    ictValue(spark, table, version, cfg, now)
-      .fold("")(t => s""","inCommitTimestamp":$t""")
 
   // ------------------------------------------------- type widening
   // (table feature `typeWidening`, reader+writer: a column's type may
@@ -4796,59 +4850,10 @@ object DeltaLog {
       configuration: String, removed: Boolean = false): Long = {
     val snap = snapshot(spark, table)
     if (!removed) mapper.readTree(configuration) // must be valid JSON
-    val now = System.currentTimeMillis()
-    val actions = Seq.newBuilder[String]
-    writerFeatureUpgrade(snap.protocolJson, Seq("domainMetadata"))
-      .foreach(actions += _)
-    actions += s"""{"domainMetadata":{"domain":${jsonStr(domain)},""" +
-      s""""configuration":${jsonStr(configuration)},"removed":$removed}}"""
-    actions += s"""{"commitInfo":{"timestamp":$now""" +
-      ictField(spark, table, snap.version + 1, snap.configuration, now) +
-      s""","operation":"SET DOMAIN METADATA"}}"""
-    val f = fs(spark, table)
-    val current = (listVersions(spark, table) ++ lastCheckpoint(f, table).toSeq).max
-    require(current == snap.version,
-      s"concurrent commit: $table advanced from version ${snap.version} to $current " +
-        "while this domain update was computed — re-read and retry")
-    val v = snap.version + 1
-    commitRaw(spark, table, v, actions.result(), "SET DOMAIN METADATA",
-      seedFrom = Some(snap))
-    maybeAutoCheckpoint(spark, table, v)
-    v
-  }
-
-  /** Order actions for the commit file: commitInfo FIRST. The Delta
-    * in-commit-timestamp spec requires readers to resolve the commit
-    * clock from the head of the file, and delta-spark writes commitInfo
-    * first unconditionally — match that convention on every path. */
-  private def orderCommitActions(actions: Seq[String]): Seq[String] = {
-    val (info, rest) = actions.partition(_.startsWith("""{"commitInfo""""))
-    info ++ rest
-  }
-
-  private def commitRaw(spark: SparkSession, table: String, version: Long,
-      actions: Seq[String], operation: String,
-      // the v−1 snapshot the caller computed against: when its entries
-      // are driver-resident, the commit seeds the next snapshot's memo
-      // ([[seedNextSnapshot]]) so follow-up reads cost zero jobs
-      seedFrom: Option[Snapshot] = None): Unit = {
-    val f = fs(spark, table)
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(logDir(table), f".$version%020d-$nonce.json.tmp")
-    val out = f.create(tmp, false)
-    try out.write((orderCommitActions(actions).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!Publish.publishIfAbsent(f, tmp, commitPath(table, version)))
-      // typed so withDmlRetry-wrapped callers recompute from a fresh
-      // snapshot instead of failing hard on a publish-level race
-      throw new CommitRaceException(
-        s"concurrent commit: $table advanced past version ${version - 1} " +
-          s"while this $operation was computed — re-read and retry")
-    val seedPrev: Option[Seq[FileEntry]] =
-      if (version == 0L) Some(Seq.empty) // first commit: state = its adds
-      else seedFrom.filter(_.version == version - 1).flatMap(residentEntries)
-    seedPrev.foreach(pe => seedNextSnapshot(f, table, version, actions, pe))
-    Checksum.update(spark, table, version, actions)
+    Txn.commit(spark, table, Some(snap), "SET DOMAIN METADATA",
+      writerFeatureUpgrade(snap.protocolJson, Seq("domainMetadata")).toSeq :+
+        (s"""{"domainMetadata":{"domain":${jsonStr(domain)},""" +
+          s""""configuration":${jsonStr(configuration)},"removed":$removed}}"""))
   }
 
   /** RESTORE TABLE … TO VERSION AS OF `version`: make the current state
@@ -4929,24 +4934,13 @@ object DeltaLog {
         s""""modificationTime":${if (m.isNullAt(3)) now else m.getLong(3)},""" +
         s""""dataChange":true$dvField$statsField$rtField}}"""
     }
-    actions += s"""{"commitInfo":{"timestamp":$now""" +
-      ictField(spark, table, cur.version + 1, cur.configuration, now) +
-      s""","operation":"RESTORE"}}"""
-    val current = (listVersions(spark, table) ++ lastCheckpoint(f, table).toSeq).max
-    require(current == cur.version,
-      s"concurrent commit: $table advanced from version ${cur.version} to $current " +
-        "while this RESTORE was computed — re-read and retry")
-    val v = cur.version + 1
-    commitRaw(spark, table, v, actions.result(), "RESTORE",
-      seedFrom = Some(cur))
-    maybeAutoCheckpoint(spark, table, v)
-    v
+    Txn.commit(spark, table, Some(cur), "RESTORE", actions.result(), now = now)
   }
 
   // ------------------------------------------------------------------ DDL
 
-  /** One metadata-only commit: the current declaration, mutated, plus a
-    * commitInfo — pinned at `snap` (a racing writer fails loudly). The
+  /** One metadata-only commit: the current declaration, mutated —
+    * pinned at `snap` (a racing writer fails loudly). The
     * shape behind CREATE-less DDL verbs (ADD COLUMNS, TBLPROPERTIES). */
   private def commitMetaData(spark: SparkSession, snap: Snapshot, table: String,
       operation: String, extraActions: Seq[String] = Nil)
@@ -4975,27 +4969,17 @@ object DeltaLog {
     val ictOn = cfgNode != null && cfgNode.has(IctEnableKey) &&
       cfgNode.get(IctEnableKey).asText() == "true"
     val wasOn = snap.configuration.get(IctEnableKey).contains("true")
-    val ictV = ictValue(spark, table, snap.version + 1,
-      if (ictOn) Map(IctEnableKey -> "true") else Map.empty[String, String], now)
-    val ict = ictV.fold("")(t => s""","inCommitTimestamp":$t""")
+    // the clock the commit will carry (a pinned commit never rebases, so
+    // its version is fixed): Txn.commitInfo recomputes it from the same `now`
     if (ictOn && !wasOn) {
       val cn = cfgNode.asInstanceOf[ObjectNode]
       cn.put("delta.inCommitTimestampEnablementVersion", (snap.version + 1).toString)
-      cn.put("delta.inCommitTimestampEnablementTimestamp", ictV.get.toString)
+      cn.put("delta.inCommitTimestampEnablementTimestamp",
+        ictValue(spark, table, snap.version + 1, Map(IctEnableKey -> "true"), now).get.toString)
     }
     val protoUp = if (!ictOn) None else ictProtocolUpgrade(snap.protocolJson)
-    val actions = protoUp.toSeq ++ Seq(
-      s"""{"metaData":${mapper.writeValueAsString(meta)}}""") ++ extraActions ++ Seq(
-      s"""{"commitInfo":{"timestamp":$now$ict,"operation":${jsonStr(operation)}}}""")
-    val f = fs(spark, table)
-    val current = (listVersions(spark, table) ++ lastCheckpoint(f, table).toSeq).max
-    require(current == snap.version,
-      s"concurrent commit: $table advanced from version ${snap.version} to $current " +
-        s"while this $operation was computed — re-read and retry")
-    val v = snap.version + 1
-    commitRaw(spark, table, v, actions, operation, seedFrom = Some(snap))
-    maybeAutoCheckpoint(spark, table, v)
-    v
+    Txn.commit(spark, table, Some(snap), operation, protoUp.toSeq ++ Seq(
+      s"""{"metaData":${mapper.writeValueAsString(meta)}}""") ++ extraActions, now = now)
   }
 
   private def containsStructType(dt: DataType): Boolean = dt match {
@@ -5103,7 +5087,6 @@ object DeltaLog {
     val cfgNode = meta.putObject("configuration")
     cfg.foreach { case (k, v) => cfgNode.put(k, v) }
     meta.put("createdTime", System.currentTimeMillis())
-    val now = System.currentTimeMillis()
     val clusterAction: Seq[String] =
       if (clusterBy.isEmpty) Seq.empty
       else {
@@ -5112,11 +5095,8 @@ object DeltaLog {
           s""""configuration":${jsonStr(s"""{"clusteringColumns":$cols}""")},""" +
           s""""removed":false}}""")
       }
-    commitRaw(spark, table, 0L, Seq(proto,
-      s"""{"metaData":${mapper.writeValueAsString(meta)}}""") ++ clusterAction ++ Seq(
-      s"""{"commitInfo":{"timestamp":$now${ictField(spark, table, 0L, cfg, now)},"operation":"CREATE TABLE"}}"""),
-      "CREATE TABLE")
-    0L
+    Txn.commit(spark, table, None, "CREATE TABLE", Seq(proto,
+      s"""{"metaData":${mapper.writeValueAsString(meta)}}""") ++ clusterAction)
   }
 
   /** ALTER TABLE … CLUSTER BY (…): re-declare the clustering columns
@@ -5696,30 +5676,13 @@ object DeltaLog {
     // pinned at the snapshot; rebases over provably non-conflicting
     // concurrent commits (blind appends), and otherwise throws the typed
     // CommitRaceException that withDmlRetry upstream turns into a
-    // fresh-snapshot recompute (the old `require` threw an
-    // IllegalArgumentException the retry never caught)
-    raceHook(table, "DELETE")
-    val f = fs(spark, table)
-    val current = (listVersions(spark, table) ++ lastCheckpoint(f, table).toSeq).max
-    if (current != snap.version)
-      checkConflicts(spark, table, snap.version, current,
-        TxnReadInfo(candidates.map(_.path).toSet,
-          (merged.map(_._1.path) ++ whole.map(_.path)).toSet,
-          addSkip = zoneSkip(spark, snap, predicate).map(_._2)),
-        snap.configuration)
-    val version = current + 1
-    // commitInfo built against the FINAL version: a rebased commit's
-    // in-commit timestamp must stay monotonic over the commits it
-    // rebased past, so the ICT clock reads version-1, not the pin
-    actions += s"""{"commitInfo":{"timestamp":$now""" +
-      ictField(spark, table, version, snap.configuration, now) +
-      s""","operation":"DELETE",""" +
-      s""""operationParameters":${pvJsonOf(Map("predicate" -> predSql(predicate)))}}}"""
-    commitRaw(spark, table, version, actions.result(), "DELETE",
-      seedFrom = Some(snap))
-    maybeAutoCheckpoint(spark, table, version)
-    maybeLogCompact(spark, table, version, snap.configuration)
-    version
+    // fresh-snapshot recompute
+    Txn.commit(spark, table, Some(snap), "DELETE", actions.result(),
+      parameters = Map("predicate" -> predSql(predicate)),
+      readInfo = Some(TxnReadInfo(candidates.map(_.path).toSet,
+        (merged.map(_._1.path) ++ whole.map(_.path)).toSet,
+        addSkip = zoneSkip(spark, snap, predicate).map(_._2))),
+      now = now)
   }
 
   /** The wide-sweep DELETE: whole-match removes STREAM from the
@@ -5765,71 +5728,45 @@ object DeltaLog {
         (entryByPath(rel), DeletionVectors.Descriptor("u", z85, Some(off), size, card))
     }
     val now = System.currentTimeMillis()
-    val dvUp = if (dvd.isEmpty) None else dvProtocolUpgrade(snap.protocolJson)
-
-    raceHook(table, "DELETE")
-    val f = fs(spark, table)
-    val current = (listVersions(spark, table) ++ lastCheckpoint(f, table).toSeq).max
-    if (current != snap.version)
-      checkConflicts(spark, table, snap.version, current,
-        TxnReadInfo(partial.map(_.path).toSet, merged.map(_.path).toSet,
-          addSkip = zoneSkip(spark, snap, predicate).map(_._2),
-          removeFrame = Some(survivors)),
-        snap.configuration)
-    val version = current + 1
-
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(logDir(table), f".$version%020d-$nonce.json.tmp")
-    var removed = 0L; var removedBytes = 0L; var addBytes = 0L
-    var sizesKnown = true
-    val out = f.create(tmp, false)
-    try {
-      def line(s: String): Unit = out.write((s + "\n").getBytes("UTF-8"))
-      def removeLine(e: FileEntry): Unit = {
-        val dvField = e.dv.fold("")(d => "," + dvJson(d))
-        val szField = if (e.size < 0) "" else s""","size":${e.size}"""
-        line(s"""{"remove":{"path":${jsonStr(e.path)},"deletionTimestamp":$now,"dataChange":true$szField$dvField}}""")
-        removed += 1
-        if (e.size < 0) sizesKnown = false else removedBytes += e.size
-      }
-      // commitInfo FIRST (log-reader contract), against the final version
-      line(s"""{"commitInfo":{"timestamp":$now""" +
-        ictField(spark, table, version, snap.configuration, now) +
-        s""","operation":"DELETE",""" +
-        s""""operationParameters":${pvJsonOf(Map("predicate" -> predSql(predicate)))}}}""")
-      dvUp.foreach(line)
-      // row-level path: removes + grown-DV re-adds for boundary files
-      merged.foreach(removeLine)
-      dvd.foreach { case (e, d) =>
-        val m = metaByPath(e.path)
-        val pv = Option(m.getMap[String, String](1)).getOrElse(Map.empty[String, String])
-        val statsField =
-          Option(m.getString(4)).fold("")(s => s""","stats":${jsonStr(s)}""")
-        val rtField =
-          if (m.isNullAt(5)) ""
-          else s""","baseRowId":${m.getLong(5)},"defaultRowCommitVersion":${m.getLong(6)}"""
-        line(s"""{"add":{"path":${jsonStr(e.path)},"partitionValues":${pvJsonOf(pv)},""" +
-          s""""size":${m.getLong(2)},"modificationTime":${m.getLong(3)},"dataChange":true,""" +
-          dvJson(d) + s"$statsField$rtField}}")
-        addBytes += m.getLong(2)
-      }
-      // whole-match removes: one partition of metadata rows at a time
-      val it = survivors.where(coalesce(fullCond, lit(false))).toLocalIterator()
-      while (it.hasNext) removeLine(entryOfRow(it.next()))
-    } finally out.close()
-    if (removed == 0L) { f.delete(tmp, false); return snap.version }
-    if (!Publish.publishIfAbsent(f, tmp, commitPath(table, version)))
-      throw new CommitRaceException(
-        s"concurrent commit: $table advanced past version ${version - 1} " +
-          "while this DELETE was computed — re-read and retry")
-    if (sizesKnown)
-      Checksum.updateDelta(spark, table, version, dvd.size, addBytes,
-        removed, removedBytes,
-        protoJson = dvUp.map(s =>
-          mapper.writeValueAsString(mapper.readTree(s).get("protocol"))))
-    maybeAutoCheckpoint(spark, table, version)
-    maybeLogCompact(spark, table, version, snap.configuration)
-    version
+    def removeJson(e: FileEntry): String = {
+      val dvField = e.dv.fold("")(d => "," + dvJson(d))
+      val szField = if (e.size < 0) "" else s""","size":${e.size}"""
+      s"""{"remove":{"path":${jsonStr(e.path)},"deletionTimestamp":$now,"dataChange":true$szField$dvField}}"""
+    }
+    // row-level path: removes + grown-DV re-adds for boundary files
+    val actions =
+      (if (dvd.isEmpty) Nil else dvProtocolUpgrade(snap.protocolJson).toSeq) ++
+        merged.map(removeJson) ++ dvd.map { case (e, d) =>
+          val m = metaByPath(e.path)
+          val pv = Option(m.getMap[String, String](1)).getOrElse(Map.empty[String, String])
+          val statsField =
+            Option(m.getString(4)).fold("")(s => s""","stats":${jsonStr(s)}""")
+          val rtField =
+            if (m.isNullAt(5)) ""
+            else s""","baseRowId":${m.getLong(5)},"defaultRowCommitVersion":${m.getLong(6)}"""
+          s"""{"add":{"path":${jsonStr(e.path)},"partitionValues":${pvJsonOf(pv)},""" +
+            s""""size":${m.getLong(2)},"modificationTime":${m.getLong(3)},"dataChange":true,""" +
+            dvJson(d) + s"$statsField$rtField}}"
+        }
+    // whole-match removes stream as the tail, one partition of metadata
+    // rows at a time; nothing matched at all = no commit
+    Txn.commit(spark, table, Some(snap), "DELETE", actions,
+      parameters = Map("predicate" -> predSql(predicate)),
+      readInfo = Some(TxnReadInfo(partial.map(_.path).toSet, merged.map(_.path).toSet,
+        addSkip = zoneSkip(spark, snap, predicate).map(_._2),
+        removeFrame = Some(survivors))),
+      tail = Some { line =>
+        var n = 0L; var bytes = 0L; var known = true
+        val it = survivors.where(coalesce(fullCond, lit(false))).toLocalIterator()
+        while (it.hasNext) {
+          val e = entryOfRow(it.next())
+          line(removeJson(e))
+          n += 1
+          if (e.size < 0) known = false else bytes += e.size
+        }
+        TailCounts(removes = n, removeBytes = bytes, sizesKnown = known)
+      },
+      now = now)
   }
 
   /** Row-level UPDATE, copy-on-write at file granularity — the third
@@ -6191,19 +6128,6 @@ object DeltaLog {
     counts.agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
   }
 
-  /** Post-commit hook for the symlink-manifest auto mode. Best effort:
-    * the commit is durable regardless, and the next GENERATE repairs. */
-  private def maybeSymlinkManifest(spark: SparkSession, table: String,
-      dataChange: Boolean, cfg: scala.collection.Map[String, String]): Unit =
-    if (dataChange && cfg.get("delta.compatibility.symlinkFormatManifest.enabled")
-        .contains("true"))
-      try { generateSymlinkManifest(spark, table); () }
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[delta] symlink manifest of $table failed: ${e.getMessage}")
-      }
-
   /** Default VACUUM retention: 7 days, matching Delta's
     * `deletedFileRetentionDuration` default. */
   val defaultVacuumRetentionMillis: Long = 7L * 24 * 60 * 60 * 1000
@@ -6339,9 +6263,6 @@ object DeltaLog {
 
     // version-0 commit, adds streamed — O(1) driver memory in files
     f.mkdirs(logDir(table))
-    val now = System.currentTimeMillis()
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(logDir(table), f".${0L}%020d-$nonce.json.tmp")
     val meta = mapper.createObjectNode()
     meta.put("id", java.util.UUID.randomUUID().toString)
     val fmt = meta.putObject("format")
@@ -6351,59 +6272,54 @@ object DeltaLog {
     partitionBy.foreach(pcArr.add)
     val cfgNode = meta.putObject("configuration")
     properties.foreach { case (k, v) => cfgNode.put(k, v) }
-    meta.put("createdTime", now)
-    val out = f.create(tmp, false)
-    var nFiles = 0L
-    try {
-      def line(s: String): Unit = out.write((s + "\n").getBytes("UTF-8"))
-      line(s"""{"commitInfo":{"timestamp":$now,"operation":${jsonStr("CONVERT")},""" +
-        s""""operationParameters":${pvJsonOf(Map(
-          "partitionedBy" -> partitionBy.mkString(","),
-          "collectStats" -> collectStats.toString))}}}""")
-      line("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")
-      line(s"""{"metaData":${mapper.writeValueAsString(meta)}}""")
-      val rows = joined.toLocalIterator()
-      while (rows.hasNext) {
-        val r = rows.next()
-        val rel = r.getAs[String]("rel")
-        val pv: Map[String, String] = rel.split("/").dropRight(1)
-          .filter(_.contains("=")).map { seg =>
-            val Array(k, v) = seg.split("=", 2)
-            k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
-                  else java.net.URLDecoder.decode(v, "UTF-8"))
-          }.toMap
-        require(pv.keySet == partitionBy.toSet,
-          s"CONVERT TO DELTA: file $rel sits under partition dirs " +
-            s"(${pv.keys.mkString(",")}) that disagree with the declared " +
-            s"partitioning (${partitionBy.mkString(",")})")
-        val statsField =
-          if (r.isNullAt(r.fieldIndex("__n"))) ""
-          else {
-            val node = mapper.createObjectNode()
-            node.put("numRecords", r.getAs[Long]("__n"))
-            val mins = node.putObject("minValues")
-            val maxs = node.putObject("maxValues")
-            val ncs = node.putObject("nullCount")
-            statFields.zipWithIndex.foreach { case (fld, i) =>
-              putStat(mins, fld.name, r.get(r.fieldIndex(s"__mn_$i")))
-              putStat(maxs, fld.name, r.get(r.fieldIndex(s"__mx_$i")))
-              ncs.put(fld.name, r.getAs[Long](s"__nc_$i"))
+    meta.put("createdTime", System.currentTimeMillis())
+    Txn.commit(spark, table, None, "CONVERT",
+      Seq("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+        s"""{"metaData":${mapper.writeValueAsString(meta)}}"""),
+      parameters = Map("partitionedBy" -> partitionBy.mkString(","),
+        "collectStats" -> collectStats.toString),
+      tail = Some { line =>
+        var nFiles = 0L
+        var bytes = 0L
+        val rows = joined.toLocalIterator()
+        while (rows.hasNext) {
+          val r = rows.next()
+          val rel = r.getAs[String]("rel")
+          val pv: Map[String, String] = rel.split("/").dropRight(1)
+            .filter(_.contains("=")).map { seg =>
+              val Array(k, v) = seg.split("=", 2)
+              k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
+                    else java.net.URLDecoder.decode(v, "UTF-8"))
+            }.toMap
+          require(pv.keySet == partitionBy.toSet,
+            s"CONVERT TO DELTA: file $rel sits under partition dirs " +
+              s"(${pv.keys.mkString(",")}) that disagree with the declared " +
+              s"partitioning (${partitionBy.mkString(",")})")
+          val statsField =
+            if (r.isNullAt(r.fieldIndex("__n"))) ""
+            else {
+              val node = mapper.createObjectNode()
+              node.put("numRecords", r.getAs[Long]("__n"))
+              val mins = node.putObject("minValues")
+              val maxs = node.putObject("maxValues")
+              val ncs = node.putObject("nullCount")
+              statFields.zipWithIndex.foreach { case (fld, i) =>
+                putStat(mins, fld.name, r.get(r.fieldIndex(s"__mn_$i")))
+                putStat(maxs, fld.name, r.get(r.fieldIndex(s"__mx_$i")))
+                ncs.put(fld.name, r.getAs[Long](s"__nc_$i"))
+              }
+              s""","stats":${jsonStr(mapper.writeValueAsString(node))}"""
             }
-            s""","stats":${jsonStr(mapper.writeValueAsString(node))}"""
-          }
-        line(s"""{"add":{"path":${jsonStr(rel)},"partitionValues":${pvJsonOf(pv)},""" +
-          s""""size":${r.getAs[Long]("size")},"modificationTime":${r.getAs[Long]("mtime")},""" +
-          s""""dataChange":true$statsField}}""")
-        nFiles += 1
-      }
-    } finally out.close()
-    require(nFiles > 0, {
-      f.delete(tmp, false)
-      s"CONVERT TO DELTA: no parquet files found under $table"
-    })
-    if (!Publish.publishIfAbsent(f, tmp, commitPath(table, 0L)))
-      sys.error(s"CONVERT TO DELTA: concurrent writer minted $table's log first")
-    0L
+          line(s"""{"add":{"path":${jsonStr(rel)},"partitionValues":${pvJsonOf(pv)},""" +
+            s""""size":${r.getAs[Long]("size")},"modificationTime":${r.getAs[Long]("mtime")},""" +
+            s""""dataChange":true$statsField}}""")
+          nFiles += 1
+          bytes += r.getAs[Long]("size")
+        }
+        require(nFiles > 0, s"CONVERT TO DELTA: no parquet files found under $table")
+        TailCounts(adds = nFiles, addBytes = bytes)
+      },
+      onRace = Some(s"CONVERT TO DELTA: concurrent writer minted $table's log first"))
   }
 
   /** CONVERT an Iceberg table TO DELTA, in place and zero-copy: the
@@ -6438,10 +6354,6 @@ object DeltaLog {
     meta.putObject("configuration")
     meta.put("createdTime", now)
     val actions = Seq.newBuilder[String]
-    actions += s"""{"commitInfo":{"timestamp":$now,"operation":${jsonStr("CONVERT")},""" +
-      s""""operationParameters":${pvJsonOf(Map(
-        "sourceFormat" -> "iceberg",
-        "sourceSnapshotId" -> st.snapshotId.toString))}}}"""
     actions += """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
     actions += s"""{"metaData":${mapper.writeValueAsString(meta)}}"""
     st.dataFiles.zip(st.fileRecordCounts).foreach { case (p, rc) =>
@@ -6456,8 +6368,9 @@ object DeltaLog {
         s""""size":${status.getLen},"modificationTime":${status.getModificationTime},""" +
         s""""dataChange":true$statsField}}"""
     }
-    commitRaw(spark, table, 0L, actions.result(), "CONVERT")
-    0L
+    Txn.commit(spark, table, None, "CONVERT", actions.result(),
+      parameters = Map("sourceFormat" -> "iceberg",
+        "sourceSnapshotId" -> st.snapshotId.toString))
   }
 
   def vacuumLite(spark: SparkSession, table: String, keepVersions: Int = 1,
@@ -6569,21 +6482,9 @@ object DeltaLog {
       val szField = if (sz < 0) "" else s""","size":$sz"""
       actions += s"""{"remove":{"path":${jsonStr(p)},"deletionTimestamp":$now,"dataChange":true$szField$dvField}}"""
     }
-    raceHook(table, "FSCK")
-    val f = fs(spark, table)
-    val current = (listVersions(spark, table) ++ lastCheckpoint(f, table).toSeq).max
-    if (current != snap.version)
-      checkConflicts(spark, table, snap.version, current,
-        TxnReadInfo(missing.toSet, missing.toSet), snap.configuration)
-    val version = current + 1
-    actions += s"""{"commitInfo":{"timestamp":$now""" +
-      ictField(spark, table, version, snap.configuration, now) +
-      s""","operation":"FSCK","operationParameters":""" +
-      s"""${pvJsonOf(Map("numRemoved" -> missing.length.toString))}}}"""
-    commitRaw(spark, table, version, actions.result(), "FSCK",
-      seedFrom = Some(snap))
-    maybeAutoCheckpoint(spark, table, version)
-    maybeLogCompact(spark, table, version, snap.configuration)
+    Txn.commit(spark, table, Some(snap), "FSCK", actions.result(),
+      parameters = Map("numRemoved" -> missing.length.toString),
+      readInfo = Some(TxnReadInfo(missing.toSet, missing.toSet)), now = now)
     missing
   }
 
@@ -7038,24 +6939,6 @@ object DeltaLog {
       while (it.hasNext) line(it.next().getString(0))
     } finally out.close()
     Publish.publishIfAbsent(f, tmp, dest)
-  }
-
-  /** Post-commit hook: write a log-compaction file for every
-    * `delta.logCompaction.interval` commits (table property; session
-    * default `spark.graft.delta.logCompaction.interval`, 0 = off).
-    * Best effort — the commit is already durable, and a racing
-    * compactor writing the same range first is the same outcome. */
-  private def maybeLogCompact(spark: SparkSession, table: String,
-      committed: Long, cfg: scala.collection.Map[String, String]): Unit = {
-    val k = cfg.getOrElse("delta.logCompaction.interval",
-      spark.conf.get("spark.graft.delta.logCompaction.interval", "0")).trim.toInt
-    if (k > 1 && committed > 0 && (committed + 1) % k == 0)
-      try { compactLog(spark, table, committed - k + 1, committed); () }
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[delta] log compaction of $table at $committed failed: ${e.getMessage}")
-      }
   }
 
   /** Checkpoint-time hook: Delta cleans expired logs whenever it writes

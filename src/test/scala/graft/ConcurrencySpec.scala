@@ -5,9 +5,9 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import graft.sources.{DeltaLog, GraftSql}
-import graft.sources.{ConcurrentAppendException, ConcurrentDeleteDeleteException,
-  ConcurrentDeleteReadException, ConcurrentTransactionException,
-  MetadataChangedException, ProtocolChangedException}
+import graft.sources.{CommitRaceException, ConcurrentAppendException,
+  ConcurrentDeleteDeleteException, ConcurrentDeleteReadException,
+  ConcurrentTransactionException, MetadataChangedException, ProtocolChangedException}
 import org.apache.spark.sql.functions._
 
 /** Optimistic-concurrency conflict detection (delta-spark's conflict
@@ -398,6 +398,33 @@ class ConcurrencySpec extends SparkSpec
     } finally {
       conf.set("fs.file.impl", impl)
       conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+
+  test("pinned metadata commits lose a race with CommitRaceException") {
+    // SET DOMAIN METADATA, RESTORE and ALTER never rebase: a commit that
+    // lands between their pin and their publish aborts them with the
+    // same typed race error whichever step notices it
+    val ops: Seq[(String, String => Long)] = Seq(
+      "SET DOMAIN METADATA" -> (t =>
+        DeltaLog.setDomainMetadata(spark, t, "graft.test", """{"n":1}""")),
+      "RESTORE" -> (t => DeltaLog.restore(spark, t, 1L)),
+      "ALTER ADD COLUMNS" -> (t => DeltaLog.alterAddColumns(spark, t,
+        new org.apache.spark.sql.types.StructType().add("w", "string"))))
+    ops.foreach { case (name, op) =>
+      val t = fresh(); seed(t)
+      DeltaLog.write(spark, Seq((3L, "c")).toDF("k", "v"), t, mode = "append")
+      val attempts = raceOnce(() =>
+        DeltaLog.write(spark, Seq((9L, "z")).toDF("k", "v"), t, mode = "append"))
+      val e = intercept[CommitRaceException](op(t))
+      assert(e.getMessage.contains("concurrent commit"), s"$name: ${e.getMessage}")
+      assert(attempts() == 1, name)
+      // the injected append stays committed; the op left no trace
+      val snap = DeltaLog.snapshot(spark, t)
+      assert(DeltaLog.read(spark, t).as[(Long, String)].collect().toMap ==
+        Map(1L -> "a", 2L -> "b", 3L -> "c", 9L -> "z"), name)
+      assert(snap.domainMetadata.get("graft.test").isEmpty, name)
+      assert(!snap.schema.get.fieldNames.contains("w"), name)
     }
   }
 

@@ -98,5 +98,28 @@ class SymlinkManifestSpec extends SparkSpec {
     DeltaLog.write(spark, Seq((9L, "z")).toDF("k", "v"), t, mode = "append")
     val after = listedUris(t).toSet
     assert(after.size == before.size + 1)
+
+    // every dataChange commit regenerates, not just writes: a
+    // whole-partition DELETE and a RESTORE must each leave the manifest
+    // equal to the live file set (a stale one makes Trino/Athena read
+    // deleted files)
+    val p = fresh()
+    DeltaLog.write(spark, Seq((1L, "x"), (2L, "y")).toDF("k", "part").repartition(1),
+      p, partitionBy = Seq("part"), properties =
+        Map("delta.compatibility.symlinkFormatManifest.enabled" -> "true"))
+    DeltaLog.write(spark, Seq((3L, "x"), (4L, "y")).toDF("k", "part").repartition(1),
+      p, mode = "append")
+    def manifestMatchesLive(step: String): Unit = {
+      val listed = listedUris(p).map(u => u.substring(u.indexOf(p) + p.length + 1))
+      assert(listed.sorted == DeltaLog.snapshot(spark, p).files.sorted,
+        s"after $step the manifest lists ${listed.sorted}")
+    }
+    manifestMatchesLive("the append")
+    val beforeDelete = DeltaLog.deleteWhere(spark, p, col("part") === "x") - 1
+    assert(DeltaLog.snapshot(spark, p).files.size == 2)
+    manifestMatchesLive("a whole-partition DELETE")
+    DeltaLog.restore(spark, p, beforeDelete)
+    assert(DeltaLog.snapshot(spark, p).files.size == 4)
+    manifestMatchesLive("a RESTORE")
   }
 }
