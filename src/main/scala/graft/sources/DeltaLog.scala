@@ -356,7 +356,7 @@ object DeltaLog {
   /** Newest committed version (JSON commits ∪ compaction range-ends ∪
     * the `_last_checkpoint` version) from ONE listing of `_delta_log`,
     * plus the pointer read when it is listed: what a streaming tail
-    * polls and what every commit attempt probes ([[Txn.probe]]). The
+    * polls and what every commit attempt probes ([[Txn.run]]). The
     * checkpoint counts: after a checkpoint + JSON cleanup the listing
     * holds no commits, yet reusing version 0 would commit BELOW the
     * checkpoint, where replay ignores it. */
@@ -2906,7 +2906,7 @@ object DeltaLog {
 
   /** Test-only injection point: runs at the start of every commit
     * attempt, after the operation computed its actions from the pinned
-    * snapshot and before the probe ([[Txn.probe]]) — a spec installs a
+    * snapshot and before the probe ([[Txn.run]]) — a spec installs a
     * concurrent writer here to exercise the conflict checker. No-op in
     * production; never set outside tests. */
   private[graft] var raceHook: (String, String) => Unit = (_, _) => ()
@@ -3780,28 +3780,26 @@ object DeltaLog {
         .map(stageCdc(spark, table, _, firstPrev.get))
         .getOrElse(Seq.empty)
 
-    // Optimistic-concurrency commit loop over the shared [[Txn]] steps:
-    // each attempt probes, rebuilds the version-dependent actions and
-    // writes-then-publishes; a lost race re-probes and (for conflict-free
-    // commits, retryOnRace, or a conflict-checked pin) retries at the
-    // next version. A commit whose inputs (merge frame, compaction set,
-    // removePaths) were derived from snapshot `baseVersion` is valid as a
-    // LATER version only when every intervening commit is provably
-    // non-conflicting ([[checkConflicts]]) — then it REBASES: the staged
-    // files and fixed remove set are still exactly right. Without
-    // readInfo (whole-table OVERWRITE, the materialized view's pinned
-    // fold) any advance aborts.
-    var attempt = 0
-    var committed = -1L
-    var committedCfg = Map.empty[String, String]
-    while (committed < 0) {
-      val latest = Txn.probe(spark, table, operation, baseVersion, readInfo,
-        effConfig, Txn.raceMessage(table, baseVersion.getOrElse(-1L), operation))
-      val version = latest + 1
+    // The [[Txn]] attempt loop; this body rebuilds the version-dependent
+    // actions for each attempt's version. A commit whose inputs (merge
+    // frame, compaction set, removePaths) were derived from snapshot
+    // `baseVersion` is valid as a LATER version only when every
+    // intervening commit is provably non-conflicting ([[checkConflicts]])
+    // — then it REBASES: the staged files and fixed remove set are still
+    // exactly right. Without readInfo any advance aborts. A commit
+    // without a caller pin is pinned to the version its staging was
+    // validated against unless it may land anywhere (retryOnRace, a
+    // blind append): a commit landing while a full or dynamic OVERWRITE
+    // staged would otherwise lose its files to the re-derived removes,
+    // and two first-time COPY INTOs would both ingest the same files.
+    val pinned = baseVersion.orElse(
+      if (retryOnRace || readInfo.nonEmpty) None else Some(firstVersion - 1))
+    Txn.run(spark, table, operation, pinned, operationParameters, readInfo,
+        effConfig, retryOnRace = retryOnRace) { version =>
       val prevSnap =
         if (version == firstVersion) firstPrev
         else if (version == 0L) None
-        else Some(snapshot(spark, table, Some(latest)))
+        else Some(snapshot(spark, table, Some(version - 1)))
       gateWritable(prevSnap)
       // identity allocation is fenced on the snapshot it read its
       // high-water mark from: committing the staged ids at a LATER
@@ -3984,31 +3982,13 @@ object DeltaLog {
       // no extra filesystem calls
       val outRows = liveFiles.flatMap(lf => statsByFile.get(lf._1))
         .map(st => mapper.readTree(st).path("numRecords").asLong(0L)).sum
-      val actionSeq = actions.result()
-      val cfg = Txn.declaredConfig(actionSeq, prevSnap)
-      val info = Txn.commitInfo(spark, table, version, operation, cfg, now,
-        operationParameters,
+      Txn.Attempt(prevSnap, actions.result(), removeTail,
         metrics = Map("numFiles" -> liveFiles.size.toString,
           "numOutputRows" -> outRows.toString, "numOutputBytes" -> outBytes.toString,
           "numRemovedFiles" -> removedFiles.toString),
-        blindAppend = blindAppend && removedFiles == 0)
-      val (tmp, tailCounts) = Txn.write(spark, table, version, info, actionSeq, removeTail)
-      if (Txn.publish(spark, table, tmp, version)) {
-        committed = version
-        committedCfg = cfg
-        Txn.settle(spark, table, version, actionSeq, prevSnap,
-          removeTail.map(_ => tailCounts))
-      } else {
-        // a conflict-checked pinned commit may also retry the loop: the
-        // next iteration re-runs checkConflicts against whatever landed
-        if ((!retryOnRace && readInfo.isEmpty) || attempt >= 9)
-          throw new CommitRaceException(
-            s"concurrent commit lost the race for version $version at $table")
-        attempt += 1
-      }
+        blindAppend = blindAppend && removedFiles == 0,
+        dataChange = dataChange, stagedFiles = liveFiles.nonEmpty, now = now)
     }
-    Txn.postCommit(spark, table, committed, operation, dataChange, committedCfg)
-    committed
   }
 
   /** What a commit's streamed tail wrote, counted as it streamed: its
@@ -4029,40 +4009,101 @@ object DeltaLog {
     *      from the head of the file; delta-spark writes it first too),
     *      then the caller's actions, then an optional streamed tail;
     *   5. [[Publish.publishIfAbsent]]: of any number of writers, in this
-    *      JVM or not, exactly one wins the version; a lost race raises
-    *      [[CommitRaceException]] with the caller's message;
+    *      JVM or not, exactly one wins the version; a lost race retries
+    *      (up to ten attempts) only when the commit may rebase or land
+    *      anywhere, else raises [[CommitRaceException]];
     *   6. the next snapshot's entry memo and the `.crc` checksum;
     *   7. [[postCommit]] under the configuration the commit declares.
-    * [[commit]] runs all seven. [[commitWrite]] rebuilds its actions on
-    * every attempt, so it runs its own loop over the same steps. */
+    * [[run]] is the attempt loop; its caller builds each attempt's
+    * content for the attempt's version ([[commitWrite]] rebuilds its
+    * version-dependent actions). [[commit]] runs it over fixed actions. */
   private[sources] object Txn {
 
-    def raceMessage(table: String, base: Long, operation: String): String =
+    /** One attempt's content, built for its final version: the state it
+      * was computed against (`prev`: seeds the snapshot memo when it is
+      * the version before, and supplies the configuration when the
+      * commit declares no metaData), the actions, an optional streamed
+      * tail, commitInfo's metrics and blind-append flag, whether it
+      * changes data, and whether it staged new data files. */
+    final case class Attempt(prev: Option[Snapshot], actions: Seq[String],
+        tail: Option[(String => Unit) => TailCounts] = None,
+        metrics: Map[String, String] = Map.empty, blindAppend: Boolean = false,
+        dataChange: Boolean, stagedFiles: Boolean = false,
+        now: Long = System.currentTimeMillis())
+
+    private def raceMessage(table: String, base: Long, operation: String): String =
       s"concurrent commit: $table advanced past version $base while this " +
         s"$operation was computed — re-read and retry"
 
-    /** Steps 1–2 of one attempt: fire [[raceHook]], probe the latest
-      * version, and hold the pinned `base` (-1: the table must not
-      * exist yet) against it. Returns the latest version (-1: none);
-      * the attempt commits at the next one. */
-    def probe(spark: SparkSession, table: String, operation: String,
-        base: Option[Long], readInfo: Option[TxnReadInfo],
-        cfg: scala.collection.Map[String, String], onRace: => String): Long = {
-      raceHook(table, operation)
-      val latest = latestVersion(spark, table).getOrElse(-1L)
-      base.filter(_ != latest).foreach { b =>
-        readInfo match {
-          case Some(info) => checkConflicts(spark, table, b, latest, info, cfg)
-          case None => throw new CommitRaceException(onRace)
+    /** Steps 2–7 until one attempt publishes; returns its version. `base`
+      * pins the commit (-1: the table must not exist yet; None: it may
+      * land at any version). A lost publish retries only with `readInfo`
+      * or `retryOnRace`. With `dropEmpty`, an attempt whose actions and
+      * streamed tail came out empty is dropped unpublished and the
+      * pinned version comes back. `onRace` replaces the race message. */
+    def run(spark: SparkSession, table: String, operation: String,
+        base: Option[Long], parameters: Map[String, String] = Map.empty,
+        readInfo: Option[TxnReadInfo] = None,
+        conflictCfg: scala.collection.Map[String, String] = Map.empty,
+        retryOnRace: Boolean = false, dropEmpty: Boolean = false,
+        onRace: Option[String] = None)(build: Long => Attempt): Long = {
+      var attempt = 0
+      while (true) {
+        raceHook(table, operation)
+        val latest = latestVersion(spark, table).getOrElse(-1L)
+        base.filter(_ != latest).foreach { b =>
+          readInfo match {
+            case Some(info) => checkConflicts(spark, table, b, latest, info, conflictCfg)
+            case None => throw new CommitRaceException(
+              onRace.getOrElse(raceMessage(table, b, operation)))
+          }
         }
+        val version = latest + 1
+        val a = build(version)
+        val cfg = declaredConfig(a.actions, a.prev)
+        val info = commitInfo(spark, table, version, operation, cfg, a.now,
+          parameters, a.metrics, a.blindAppend)
+        val f = fs(spark, table)
+        val (tmp, counts) = write(f, table, version, info, a.actions, a.tail)
+        if (dropEmpty && a.actions.isEmpty && counts.isEmpty) {
+          f.delete(tmp, false)
+          return base.getOrElse(latest)
+        }
+        if (Publish.publishIfAbsent(f, tmp, commitPath(table, version))) {
+          settle(spark, table, version, a, counts)
+          postCommit(spark, table, version, operation,
+            a.dataChange || !counts.isEmpty, a.stagedFiles, cfg)
+          return version
+        }
+        attempt += 1
+        if ((readInfo.isEmpty && !retryOnRace) || attempt >= 10)
+          throw new CommitRaceException(onRace.getOrElse(
+            raceMessage(table, base.getOrElse(latest), operation)))
       }
-      latest
+      sys.error("unreachable")
     }
+
+    /** [[run]] for one commit of fixed `actions` (plus an optional
+      * streamed `tail`) computed against `pin`. A commit with nothing
+      * to publish is dropped. */
+    def commit(spark: SparkSession, table: String, pin: Option[Snapshot],
+        operation: String, actions: Seq[String],
+        parameters: Map[String, String] = Map.empty,
+        readInfo: Option[TxnReadInfo] = None,
+        tail: Option[(String => Unit) => TailCounts] = None,
+        onRace: Option[String] = None,
+        now: Long = System.currentTimeMillis()): Long =
+      run(spark, table, operation, Some(pin.fold(-1L)(_.version)), parameters,
+          readInfo, pin.fold(Map.empty[String, String])(_.configuration),
+          dropEmpty = true, onRace = onRace) { _ =>
+        Attempt(pin, actions, tail, now = now, dataChange = actions.exists(a =>
+          a.startsWith("""{"add"""") || a.startsWith("""{"remove"""")))
+      }
 
     /** The configuration a commit declares: its own metaData action's
       * (an ALTER setting `delta.checkpointInterval` counts under the new
       * value), else the pinned snapshot's. */
-    def declaredConfig(actions: Seq[String], pin: Option[Snapshot]): Map[String, String] =
+    private def declaredConfig(actions: Seq[String], pin: Option[Snapshot]): Map[String, String] =
       actions.find(_.startsWith("""{"metaData""""))
         .map(a => configurationOf(mapper.readTree(a).get("metaData")))
         .getOrElse(pin.fold(Map.empty[String, String])(_.configuration))
@@ -4070,11 +4111,10 @@ object DeltaLog {
     /** Step 3: the commit's one commitInfo, against its FINAL version —
       * a rebased commit's in-commit timestamp must stay monotonic over
       * the commits it moved past. */
-    def commitInfo(spark: SparkSession, table: String, version: Long,
+    private def commitInfo(spark: SparkSession, table: String, version: Long,
         operation: String, cfg: Map[String, String], now: Long,
-        parameters: Map[String, String] = Map.empty,
-        metrics: Map[String, String] = Map.empty,
-        blindAppend: Boolean = false): String =
+        parameters: Map[String, String], metrics: Map[String, String],
+        blindAppend: Boolean): String =
       s"""{"commitInfo":{"timestamp":$now""" +
         ictValue(spark, table, version, cfg, now).fold("")(t => s""","inCommitTimestamp":$t""") +
         s""","operation":${jsonStr(operation)}""" +
@@ -4085,10 +4125,9 @@ object DeltaLog {
     /** Step 4: commitInfo, the actions, then the streamed `tail` into a
       * temp file beside `version`; returns it with the tail's counts. A
       * failed write leaves no temp file. */
-    def write(spark: SparkSession, table: String, version: Long, info: String,
+    private def write(f: FileSystem, table: String, version: Long, info: String,
         actions: Seq[String], tail: Option[(String => Unit) => TailCounts])
         : (Path, TailCounts) = {
-      val f = fs(spark, table)
       val nonce = java.util.UUID.randomUUID().toString.take(8)
       val tmp = new Path(logDir(table), f".$version%020d-$nonce.json.tmp")
       try {
@@ -4102,23 +4141,17 @@ object DeltaLog {
       }
     }
 
-    /** Step 5: publish the written temp file as `version`, put-if-absent.
-      * False when another writer won it; the temp file is gone either way. */
-    def publish(spark: SparkSession, table: String, tmp: Path, version: Long): Boolean =
-      Publish.publishIfAbsent(fs(spark, table), tmp, commitPath(table, version))
-
-    /** Step 6: seed the next snapshot's entry memo from `prev` (the v−1
-      * state the actions were computed against, when driver-resident; a
-      * streamed tail never reached the driver, so it seeds nothing) and
-      * update the `.crc` checksum. */
-    def settle(spark: SparkSession, table: String, version: Long,
-        actions: Seq[String], prev: Option[Snapshot],
-        streamed: Option[TailCounts]): Unit = {
-      if (streamed.isEmpty)
+    /** Step 6: seed the next snapshot's entry memo from the attempt's
+      * `prev` (when it is the v−1 state and driver-resident; a streamed
+      * tail never reached the driver, so it seeds nothing) and update the
+      * `.crc` checksum. */
+    private def settle(spark: SparkSession, table: String, version: Long,
+        a: Attempt, streamed: TailCounts): Unit = {
+      if (a.tail.isEmpty)
         (if (version == 0L) Some(Seq.empty[FileEntry])
-         else prev.filter(_.version == version - 1).flatMap(residentEntries))
-          .foreach(seedNextSnapshot(fs(spark, table), table, version, actions, _))
-      Checksum.update(spark, table, version, actions, streamed)
+         else a.prev.filter(_.version == version - 1).flatMap(residentEntries))
+          .foreach(seedNextSnapshot(fs(spark, table), table, version, a.actions, _))
+      Checksum.update(spark, table, version, a.actions, a.tail.map(_ => streamed))
     }
 
     /** Step 7: the post-commit hooks. Each runs after every commit, gated
@@ -4131,16 +4164,19 @@ object DeltaLog {
       *   - log compaction every `delta.logCompaction.interval` commits
       *     (default 0 = off): one `<x>.<y>.compacted.json` per interval;
       *   - auto compaction (`delta.autoOptimize.autoCompact`) after a
-      *     dataChange commit other than OPTIMIZE: once at least
-      *     `spark.graft.delta.autoCompact.minNumFiles` (default 50) files
+      *     dataChange commit other than OPTIMIZE that staged new data
+      *     files (a clone or convert adopts files it did not write;
+      *     compacting them would turn a shallow clone into a copy): once
+      *     at least `spark.graft.delta.autoCompact.minNumFiles` (default 50) files
       *     sit under `spark.graft.delta.autoCompact.minFileSize` (default
       *     16 MB), a bin-packing OPTIMIZE of just those — one distributed
       *     count to check, O(small files) to compact;
       *   - the symlink manifest
       *     (`delta.compatibility.symlinkFormatManifest.enabled`) after a
       *     dataChange commit, so Presto/Trino/Athena read the live set. */
-    def postCommit(spark: SparkSession, table: String, version: Long,
-        operation: String, dataChange: Boolean, cfg: Map[String, String]): Unit = {
+    private def postCommit(spark: SparkSession, table: String, version: Long,
+        operation: String, dataChange: Boolean, stagedFiles: Boolean,
+        cfg: Map[String, String]): Unit = {
       def every(key: String, session: String, default: String): Int =
         cfg.getOrElse(key, spark.conf.get(session, default)).trim.toInt
       def on(key: String): Boolean = cfg.get(key).contains("true")
@@ -4154,7 +4190,7 @@ object DeltaLog {
         ("log compaction", compactEvery > 1 && version > 0 &&
           (version + 1) % compactEvery == 0,
           () => { compactLog(spark, table, version - compactEvery + 1, version); () }),
-        ("auto-compact", dataChange && operation != "OPTIMIZE" &&
+        ("auto-compact", dataChange && stagedFiles && operation != "OPTIMIZE" &&
           on("delta.autoOptimize.autoCompact"), () => {
             val minSize = spark.conf.get("spark.graft.delta.autoCompact.minFileSize",
               (16L * 1024 * 1024).toString).toLong
@@ -4166,50 +4202,12 @@ object DeltaLog {
         ("symlink manifest", dataChange &&
           on("delta.compatibility.symlinkFormatManifest.enabled"),
           () => { generateSymlinkManifest(spark, table); () })
-      ).foreach { case (hook, due, run) =>
-        if (due) try run() catch {
+      ).foreach { case (hook, due, act) =>
+        if (due) try act() catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(s"[delta] $hook of $table at $version failed: ${e.getMessage}")
         }
       }
-    }
-
-    /** All seven steps for one commit of fixed `actions` (plus an
-      * optional streamed `tail`) computed against `pin`. Retries a lost
-      * publish only when it can rebase (`readInfo`). A commit with no
-      * actions and an empty tail is dropped unpublished: the pinned
-      * version comes back. `onRace` replaces the default race message. */
-    def commit(spark: SparkSession, table: String, pin: Option[Snapshot],
-        operation: String, actions: Seq[String],
-        parameters: Map[String, String] = Map.empty,
-        readInfo: Option[TxnReadInfo] = None,
-        tail: Option[(String => Unit) => TailCounts] = None,
-        onRace: Option[String] = None,
-        now: Long = System.currentTimeMillis()): Long = {
-      val base = pin.fold(-1L)(_.version)
-      val message = onRace.getOrElse(raceMessage(table, base, operation))
-      val cfg = declaredConfig(actions, pin)
-      val dataChange = actions.exists(a =>
-        a.startsWith("""{"add"""") || a.startsWith("""{"remove""""))
-      var attempt = 0
-      while (true) {
-        val version = probe(spark, table, operation, Some(base), readInfo,
-          pin.fold(Map.empty[String, String])(_.configuration), message) + 1
-        val info = commitInfo(spark, table, version, operation, cfg, now, parameters)
-        val (tmp, counts) = write(spark, table, version, info, actions, tail)
-        if (actions.isEmpty && counts.isEmpty) {
-          fs(spark, table).delete(tmp, false)
-          return base
-        }
-        if (publish(spark, table, tmp, version)) {
-          settle(spark, table, version, actions, pin, tail.map(_ => counts))
-          postCommit(spark, table, version, operation, dataChange || !counts.isEmpty, cfg)
-          return version
-        }
-        attempt += 1
-        if (readInfo.isEmpty || attempt >= 10) throw new CommitRaceException(message)
-      }
-      sys.error("unreachable")
     }
   }
 

@@ -60,4 +60,30 @@ class AutoOptimizeSpec extends SparkSpec {
         .where(col("_change_type") === "insert").count() == 1L)
     } finally spark.conf.unset("spark.graft.delta.autoCompact.minNumFiles")
   }
+
+  test("autoCompact runs only after commits that stage files: a shallow clone stays zero-copy") {
+    val src = fresh()
+    GraftSql.exec(spark,
+      s"""CREATE TABLE delta.`$src` (id BIGINT)
+         |TBLPROPERTIES ('delta.autoOptimize.autoCompact'='true')""".stripMargin)
+    (1 to 4).foreach(i =>
+      DeltaLog.write(spark, Seq(i.toLong).toDF("id"), src, mode = "append"))
+    assert(DeltaLog.snapshot(spark, src).files.size == 4)
+    spark.conf.set("spark.graft.delta.autoCompact.minNumFiles", "3")
+    try {
+      // the clone inherits autoCompact and 4 small files over the
+      // threshold, but adopts them in place: compacting would copy them
+      val tgt = fresh()
+      DeltaLog.cloneShallow(spark, src, tgt)
+      assert(DeltaLog.latestVersion(spark, tgt).contains(0L))
+      val srcRoot = new java.io.File(src).toURI.getPath.stripSuffix("/")
+      val files = DeltaLog.snapshot(spark, tgt).files
+      assert(files.size == 4 && files.forall(_.contains(srcRoot)), files)
+      // the clone's first append stages a file: that commit compacts
+      DeltaLog.write(spark, Seq(5L).toDF("id"), tgt, mode = "append")
+      val snap = DeltaLog.snapshot(spark, tgt)
+      assert(snap.files.size == 1, s"expected 1 compacted file, got ${snap.files}")
+      assert(DeltaLog.read(spark, tgt).as[Long].collect().sorted.toSeq == (1L to 5L))
+    } finally spark.conf.unset("spark.graft.delta.autoCompact.minNumFiles")
+  }
 }

@@ -428,6 +428,37 @@ class ConcurrencySpec extends SparkSpec
     }
   }
 
+  test("unpinned rewrites abort on a commit that lands while they stage") {
+    // a full OVERWRITE derives its removes from the table it staged
+    // against, and a first-time COPY INTO its ingestion set: neither may
+    // move past an append that committed in between
+    def raced(name: String, t: String)(op: => Unit): Map[Long, String] = {
+      val before = DeltaLog.latestVersion(spark, t)
+      val attempts = raceOnce(() =>
+        DeltaLog.write(spark, Seq((9L, "z")).toDF("k", "v"), t, mode = "append"))
+      val e = intercept[CommitRaceException](op)
+      assert(e.getMessage.contains("concurrent commit"), s"$name: ${e.getMessage}")
+      assert(attempts() == 1, name)
+      // only the injected append landed
+      assert(DeltaLog.latestVersion(spark, t) == Some(before.fold(0L)(_ + 1)), name)
+      DeltaLog.read(spark, t).as[(Long, String)].collect().toMap
+    }
+    val ow = fresh(); seed(ow)
+    assert(raced("OVERWRITE", ow)(DeltaLog.write(spark,
+      Seq((5L, "e")).toDF("k", "v"), ow, mode = "overwrite")) ==
+      Map(1L -> "a", 2L -> "b", 9L -> "z"))
+
+    val src = Files.createTempDirectory("graft-conc-src-").toString + "/in"
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(src)
+    val ci = fresh()
+    assert(raced("COPY INTO", ci)(DeltaLog.copyInto(spark, ci, src)) == Map(9L -> "z"))
+    // the aborted COPY INTO recorded nothing: a re-run ingests each file once
+    assert(DeltaLog.copyInto(spark, ci, src)._2 > 0)
+    assert(DeltaLog.copyInto(spark, ci, src)._2 == 0)
+    assert(DeltaLog.read(spark, ci).as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "a"), (2L, "b"), (9L, "z")))
+  }
+
   test("append commits declare isBlindAppend; rewrites do not") {
     val t = fresh(); seed(t)
     val vAppend = DeltaLog.snapshot(spark, t).version
