@@ -25,13 +25,14 @@ import org.apache.spark.sql.types._
   * refuse loudly rather than silently over-returning rows. Time travel
   * by snapshot id or timestamp (snapshot-log).
   *
-  * WRITE (append-only, format-version 1): each append stages parquet
-  * under `data/`, then writes one manifest + a manifest list and
-  * publishes a new `vN.metadata.json` put-if-absent — the
-  * reader-visible commit point. Field-ids are assigned sequentially
-  * and carried in both the table schema JSON and the manifest avro
-  * schema (`field-id` props), which is what real Iceberg readers key
-  * on. HIDDEN PARTITIONING ([[IcebergPartition]]): a spec of
+  * WRITE: every write reads its base once ([[base]]), stages parquet
+  * under `data/`, writes its manifests, adds at most one snapshot
+  * ([[addSnapshot]]) and publishes `v<base + 1>.metadata.json`
+  * put-if-absent ([[commit]]) — the reader-visible commit point. The
+  * format version is 1 until a delete manifest makes it 2. Field-ids
+  * are assigned sequentially and carried in both the table schema JSON
+  * and the manifest avro schema (`field-id` props), which is what real
+  * Iceberg readers key on. HIDDEN PARTITIONING ([[IcebergPartition]]): a spec of
   * (source, transform) pairs — identity, bucket[N], truncate[W],
   * year/month/day/hour — declared on first write and adopted by every
   * later append; manifests carry per-file partition tuples (field-id
@@ -72,41 +73,52 @@ object IcebergTable {
       c, "^[a-zA-Z][a-zA-Z0-9+.-]*:/*", "/")
 
   /** Test seam: runs immediately before the put-if-absent publish of
-    * each append attempt — the window a racing writer occupies (the
-    * [[DeltaLog.raceHook]] pattern). */
+    * every commit attempt ([[commit]]) — the window a racing writer
+    * occupies (the [[DeltaLog.raceHook]] pattern). */
   private[graft] var raceHook: () => Unit = () => ()
 
-  /** Test seam: runs immediately AFTER an append attempt's metadata
-    * file was published — the window where a post-commit IOException
-    * must NOT trigger a rebase onto the attempt's own commit (which
+  /** Test seam: runs immediately AFTER a commit attempt's metadata file
+    * was published — the window where a post-commit IOException must
+    * NOT count as a lost commit (a rebase onto the attempt's own commit
     * would duplicate the appended rows). */
   private[graft] var postCommitHook: () => Unit = () => ()
 
   private def metadataPath(table: String, version: Int): Path =
     new Path(table, s"metadata/v$version.metadata.json")
 
-  /** The ONE rule for the current version, shared by readers and
-    * writers: the highest `v<N>.metadata.json` in the listing, 0 when
-    * there is none. Every version is published whole and at most once
-    * ([[publishMetadata]]), so the listing max is the truth; a
-    * `version-hint.text` another writer left behind is ignored. Writers
-    * commit at max + 1 — NOT snapshot count, which shrinks under
-    * [[expireSnapshots]] and would collide with retained metadata
-    * files; it is also the sequence-number source for new snapshots
-    * (monotonic across expiry). */
-  private def latestMetadataVersion(f: FileSystem, table: String): Int = {
-    val mdir = new Path(table, "metadata")
-    if (!f.exists(mdir)) 0
-    else f.listStatus(mdir).iterator.map(_.getPath.getName)
+  /** The ONE rule for the current version: the highest
+    * `v<N>.metadata.json` in the listing, 0 when there is none. Every
+    * version is published whole and at most once ([[publishMetadata]]),
+    * so the listing max is the truth; a `version-hint.text` another
+    * writer left behind is ignored. Writers commit at max + 1 — NOT
+    * snapshot count, which shrinks under [[expireSnapshots]] and would
+    * collide with retained metadata files; it is also the
+    * sequence-number source for new snapshots (monotonic across
+    * expiry). */
+  private def latestMetadataVersion(f: FileSystem, table: String): Int =
+    try f.listStatus(new Path(table, "metadata")).iterator.map(_.getPath.getName)
       .collect { case n if n.matches("v\\d+\\.metadata\\.json") =>
         n.stripPrefix("v").stripSuffix(".metadata.json").toInt }
       .maxOption.getOrElse(0)
+    catch { case _: java.io.FileNotFoundException => 0 }
+
+  /** A table's metadata as ONE listing of `metadata/` saw it: the
+    * version (0 before the first commit) and the metadata published at
+    * it. Every reader starts here, and every writer pins the base it
+    * planned against and commits at exactly `version + 1`
+    * ([[commit]]). */
+  private case class Base(table: String, version: Int, meta: Option[ObjectNode]) {
+    def root: ObjectNode = {
+      require(meta.isDefined,
+        s"not an Iceberg table (no v*.metadata.json under metadata/): $table")
+      meta.get
+    }
   }
 
-  private def currentMetadataPath(f: FileSystem, table: String): Path = {
+  private def base(f: FileSystem, table: String): Base = {
     val v = latestMetadataVersion(f, table)
-    require(v > 0, s"not an Iceberg table (no v*.metadata.json under metadata/): $table")
-    metadataPath(table, v)
+    Base(table, v, if (v == 0) None
+      else Some(mapper.readTree(readText(f, metadataPath(table, v))).asInstanceOf[ObjectNode]))
   }
 
   /** Publish `meta` as `v<version>.metadata.json` iff no writer, in this
@@ -114,25 +126,27 @@ object IcebergTable {
     * written in full, then [[Publish.publishIfAbsent]]. Readers never
     * see a partial version. Returns whether this call won. */
   private def publishMetadata(f: FileSystem, table: String, version: Int,
-      meta: ObjectNode): Boolean = {
+      meta: Array[Byte]): Boolean = {
     val dest = metadataPath(table, version)
-    val tmp = new Path(dest.getParent,
-      s".${dest.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    val tmp = new Path(dest.getParent, s".${dest.getName}.${newNonce()}.tmp")
     val out = f.create(tmp, false)
-    try out.write(mapper.writeValueAsBytes(meta)) finally out.close()
+    try out.write(meta) finally out.close()
     Publish.publishIfAbsent(f, tmp, dest)
   }
 
   /** A lost [[publishMetadata]]: the same typed error a create-if-absent
-    * of an existing `vN` raises, which the append rebase path catches. */
+    * of an existing `vN` raises. */
   private def lostPublish(table: String, version: Int): java.io.IOException =
     new org.apache.hadoop.fs.FileAlreadyExistsException(
       s"File already exists: ${metadataPath(table, version)}")
 
+  /** Names every file one write stages or writes, so a lost attempt's
+    * `*-<nonce>.avro` can be swept. */
+  private def newNonce(): String = java.util.UUID.randomUUID().toString.take(8)
+
   def isIcebergTable(spark: SparkSession, location: String): Boolean = {
     val table = qualify(spark, location)
-    scala.util.Try(latestMetadataVersion(fs(spark, table), table) > 0)
-      .getOrElse(false)
+    scala.util.Try(base(fs(spark, table), table).version > 0).getOrElse(false)
   }
 
   /** Iceberg schema JSON → Spark StructType (spec type names). */
@@ -421,17 +435,9 @@ object IcebergTable {
   /** One snapshot's manifest-list rows: (path, seq, specId, length). */
   private def manifestRefsOf(spark: SparkSession, table: String,
       snap: com.fasterxml.jackson.databind.JsonNode)
-      : Seq[(String, Long, Int, Long)] = {
-    val f = fs(spark, table)
-    val listPath = new Path(resolve(table, snap.get("manifest-list").asText()))
-    avroEntries(f, listPath).map { m =>
-      (resolve(table, str(m, "manifest_path")
-        .getOrElse(sys.error("manifest_path missing"))),
-        lng(m, "sequence_number").getOrElse(0L),
-        lng(m, "partition_spec_id").getOrElse(0L).toInt,
-        lng(m, "manifest_length").getOrElse(0L))
-    }
-  }
+      : Seq[(String, Long, Int, Long)] =
+    manifestRows(fs(spark, table), table, snap)
+      .map(r => (resolve(table, r.path), r.seq, r.specId, r.length))
 
   /** Small-metadata fast path: when the manifest list declares a total
     * manifest byte size within `spark.graft.iceberg.driverManifestBytes`
@@ -565,8 +571,7 @@ object IcebergTable {
       asOfMillis: Option[Long] = None): State = {
     val table = qualify(spark, location)
     val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val root = base(f, table).root
     val fv = root.path("format-version").asInt(1)
     val snap = resolveSnapshotNode(table, root, snapshotId, asOfMillis)
     val wantId = snap.get("snapshot-id").asLong()
@@ -695,8 +700,7 @@ object IcebergTable {
       asOfMillis: Option[Long] = None): DataFrame = {
     val table = qualify(spark, location)
     val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val root = base(f, table).root
     val snap = resolveSnapshotNode(table, root, snapshotId, asOfMillis)
     readState(spark, table, root, snap, resolveSchema(root))
   }
@@ -713,8 +717,7 @@ object IcebergTable {
       asOfMillis: Option[Long] = None): DataFrame = {
     val table = qualify(spark, location)
     val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val root = base(f, table).root
     val snap = resolveSnapshotNode(table, root, snapshotId, asOfMillis)
     readState(spark, table, root, snap, resolveSchema(root),
       predicate = Some(predicate))
@@ -1042,8 +1045,7 @@ object IcebergTable {
     val table = qualify(spark, location)
     import org.apache.spark.sql.functions._
     val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val root = base(f, table).root
     val snap = resolveSnapshotNode(table, root, None, None)
     // record count and delete-file presence in one pass: a driver fold
     // under the small-metadata threshold, one distributed aggregation
@@ -1075,8 +1077,7 @@ object IcebergTable {
     val table = qualify(spark, location)
     import spark.implicits._
     val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val root = base(f, table).root
     val snaps = root.path("snapshots").elements().asScala.toSeq
     def parentOf(s: com.fasterxml.jackson.databind.JsonNode): Option[Long] =
       Option(s.get("parent-snapshot-id")).map(_.asLong())
@@ -1281,46 +1282,249 @@ object IcebergTable {
     f.getFileStatus(dest).getLen
   }
 
-  /** Append `df` as one Iceberg v1 snapshot (creates the table on first
-    * call). Unpartitioned; the commit point is the put-if-absent
-    * publish of `vN.metadata.json`.
-    * `carryPrevious = false` makes the snapshot a REPLACE: the new
-    * manifest is the only one, previous data (and delete) manifests
-    * drop out of the view. */
+  // -------------------------------------------------------------- commit
+
+  /** One row of a manifest list; `path` as recorded (resolve it before
+    * opening). */
+  private case class ManifestRow(path: String, length: Long, content: Int,
+      seq: Long, specId: Int)
+
+  /** A snapshot's manifest-list rows. Rows written before the v2 fields
+    * existed read as data (0) at sequence 0. */
+  private def manifestRows(f: FileSystem, table: String,
+      snap: com.fasterxml.jackson.databind.JsonNode): Seq[ManifestRow] =
+    avroEntries(f, new Path(resolve(table, snap.get("manifest-list").asText())))
+      .map(m => ManifestRow(
+        str(m, "manifest_path").getOrElse(sys.error("manifest_path missing")),
+        lng(m, "manifest_length").getOrElse(0L),
+        lng(m, "content").getOrElse(0L).toInt,
+        lng(m, "sequence_number").getOrElse(0L),
+        lng(m, "partition_spec_id").getOrElse(0L).toInt))
+
+  /** The snapshot a write to `branch` (main when None) stacks on: the
+    * branch's head, else the published head (a new branch forks from
+    * it); None before the first snapshot. */
+  private def head(meta: ObjectNode, branch: Option[String]): Option[Long] =
+    branch.flatMap(b => meta.path("refs").path(b) match {
+      case o: ObjectNode =>
+        require(o.path("type").asText("branch") == "branch",
+          s"ref `$b` on ${meta.path("location").asText()} is a tag — cannot write to it")
+        Some(o.get("snapshot-id").asLong())
+      case _ => None
+    }).orElse(Option(meta.get("current-snapshot-id")).map(_.asLong()))
+
+  /** The manifest-list rows of the snapshot a write to `branch` stacks
+    * on, carried into the next snapshot. Each manifest keeps the SPEC it
+    * was written under, so files stay prunable across partition
+    * evolution. */
+  private def carriedManifests(f: FileSystem, table: String, meta: ObjectNode,
+      branch: Option[String] = None): Seq[ManifestRow] =
+    head(meta, branch).toSeq.flatMap(id =>
+      meta.path("snapshots").elements().asScala
+        .find(_.get("snapshot-id").asLong() == id).toSeq
+        .flatMap(manifestRows(f, table, _)))
+
+  /** One commit attempt against a pinned [[Base]]: the version it
+    * publishes, the id of the snapshot it may add, its clock, and the
+    * nonce of the write it belongs to. */
+  private case class Attempt(f: FileSystem, base: Base, nonce: String) {
+    val version: Int = base.version + 1
+    val snapshotId: Long = System.currentTimeMillis() * 1000 + version
+    val now: Long = System.currentTimeMillis()
+    val mdir = new Path(base.table, "metadata")
+    def manifestPath(kind: String): Path =
+      new Path(mdir, s"manifest-$kind-$version-$nonce.avro")
+  }
+
+  /** The one Iceberg commit step (the spec's optimistic concurrency: a
+    * writer commits against the base it read, re-applies onto a newer
+    * one, or fails). `build` makes the new metadata from the attempt's
+    * base, writing whatever manifests it needs; the step stamps
+    * `last-updated-ms`, fires [[raceHook]], publishes at exactly
+    * `base.version + 1` and fires [[postCommitHook]].
+    *
+    * A failed attempt whose exact metadata is published anyway (an
+    * IOException after the publish landed) IS this commit: rebasing
+    * would apply it twice. Any other failure sweeps the attempt's
+    * `*-<nonce>.avro` — referenced by nothing — and raises (a lost
+    * publish as `FileAlreadyExistsException`), unless the table moved
+    * to a newer base that `rebase` accepts: then the attempt rebuilds on
+    * it, at most four attempts in all. Only a blind append rebases.
+    * Returns the attempt that landed. */
+  private def commit(f: FileSystem, pinned: Base, nonce: String,
+      rebase: Base => Boolean = _ => false)(build: Attempt => ObjectNode): Attempt = {
+    var a = Attempt(f, pinned, nonce)
+    var attemptsLeft = 4
+    while (true) {
+      var bytes: Array[Byte] = null
+      try {
+        val meta = build(a)
+        meta.put("last-updated-ms", a.now)
+        bytes = mapper.writeValueAsBytes(meta)
+        raceHook()
+        if (!publishMetadata(f, a.base.table, a.version, bytes))
+          throw lostPublish(a.base.table, a.version)
+        postCommitHook()
+        return a
+      } catch {
+        case e: java.io.IOException =>
+          val landed = bytes != null && scala.util.Try(
+            readText(f, metadataPath(a.base.table, a.version)) ==
+              new String(bytes, "UTF-8")).getOrElse(false)
+          if (landed) return a
+          // staged DATA files stay: a retry's manifest re-references
+          // them, and removeOrphanFiles reclaims them otherwise
+          try Option(f.globStatus(new Path(a.mdir, s"*-$nonce.avro")))
+            .foreach(_.foreach(s => f.delete(s.getPath, false)))
+          catch { case scala.util.control.NonFatal(_) => () }
+          attemptsLeft -= 1
+          if (attemptsLeft == 0) throw e
+          val now = base(f, a.base.table)
+          if (now.version < a.version || !rebase(now)) throw e
+          a = Attempt(f, now, nonce)
+      }
+    }
+    sys.error("unreachable")
+  }
+
+  /** The one snapshot builder: writes the manifest list of `rows` and
+    * adds the snapshot it heads to `meta` (a copy of the base's
+    * metadata, or a new table's declaration), stacked on the head of
+    * `branch` (main when None). The format version never goes down: it
+    * becomes 2 once a manifest carries deletes, and a v2 snapshot stamps
+    * its sequence number (the attempt's version) and advances
+    * `last-sequence-number`. A main write moves `current-snapshot-id`,
+    * the `main` ref and the snapshot-log; a branch write moves only its
+    * branch ref (created at the published head when absent). */
+  private def addSnapshot(a: Attempt, meta: ObjectNode, rows: Seq[ManifestRow],
+      operation: String, branch: Option[String] = None,
+      summary: Seq[(String, String)] = Seq.empty): Unit = {
+    val mlSchema = manifestListAvroSchema
+    val listPath = new Path(a.mdir, s"snap-${a.snapshotId}-${a.nonce}.avro")
+    writeAvro(a.f, listPath, mlSchema, rows.map { m =>
+      val r = new GenericData.Record(mlSchema)
+      r.put("manifest_path", m.path)
+      r.put("manifest_length", m.length)
+      r.put("partition_spec_id", m.specId)
+      r.put("content", m.content)
+      r.put("sequence_number", m.seq)
+      r.put("added_snapshot_id", a.snapshotId)
+      r
+    })
+    val fv = math.max(meta.path("format-version").asInt(1),
+      if (rows.exists(_.content != 0)) 2 else 1)
+    meta.put("format-version", fv)
+    val sn = meta.withArray[ArrayNode]("snapshots").addObject()
+    sn.put("snapshot-id", a.snapshotId)
+    head(meta, branch).foreach(sn.put("parent-snapshot-id", _))
+    if (fv >= 2) {
+      sn.put("sequence-number", a.version.toLong)
+      meta.put("last-sequence-number", math.max(
+        meta.path("last-sequence-number").asLong(0L), a.version.toLong))
+    }
+    sn.put("timestamp-ms", a.now)
+    sn.put("manifest-list", listPath.toString)
+    val sum = sn.putObject("summary")
+    sum.put("operation", operation)
+    summary.foreach { case (k, v) => sum.put(k, v) }
+    val refs = meta.path("refs") match {
+      case o: ObjectNode => o
+      case _ => meta.putObject("refs")
+    }
+    refs.putObject(branch.getOrElse("main"))
+      .put("snapshot-id", a.snapshotId).put("type", "branch")
+    if (branch.isEmpty) {
+      meta.put("current-snapshot-id", a.snapshotId)
+      meta.withArray[ArrayNode]("snapshot-log").addObject()
+        .put("timestamp-ms", a.now).put("snapshot-id", a.snapshotId)
+    }
+  }
+
+  /** Stage `frame` as parquet in a scratch dir under the table, then move
+    * each file to `data/<dirs(segments)>/<kind>-<version>-<i>-<nonce>.parquet`.
+    * Returns each file's destination and its (still path-escaped)
+    * partition dir segments, innermost last. Staging writes INT64-micros
+    * timestamps (the Delta withMicrosStaging rule): INT96 carries no
+    * ordered footer statistics, so micros let footer stats serve
+    * timestamp bounds with zero Spark jobs. */
+  private def stageFiles(f: FileSystem, table: String, frame: DataFrame,
+      kind: String, version: Int, nonce: String,
+      partitionBy: Seq[String] = Seq.empty,
+      dirs: Seq[String] => Seq[String] = identity): Seq[(Path, Seq[String])] = {
+    val scratch = new Path(table, s".ice-stage-$kind-$nonce")
+    DeltaLog.withMicrosStaging(frame) {
+      if (partitionBy.isEmpty) frame.write.parquet(scratch.toString)
+      else frame.write.partitionBy(partitionBy: _*).parquet(scratch.toString)
+    }
+    def walk(p: Path): Seq[Path] =
+      f.listStatus(p).toSeq.sortBy(_.getPath.getName).flatMap { s =>
+        if (s.isDirectory) walk(s.getPath)
+        else if (s.getPath.getName.endsWith(".parquet")) Seq(s.getPath)
+        else Seq.empty
+      }
+    val moved = walk(scratch).zipWithIndex.map { case (p, i) =>
+      // listStatus returns fully-qualified paths; anchor on the scratch
+      // dir's (nonce-unique) NAME rather than comparing path strings
+      var segs = List.empty[String]
+      var cur = p.getParent
+      while (cur != null && cur.getName != scratch.getName) {
+        segs ::= cur.getName; cur = cur.getParent
+      }
+      require(cur != null, s"staged file $p escaped the scratch dir")
+      val dest = new Path(table, (Seq("data") ++ dirs(segs) :+
+        f"$kind-$version%05d-$i%05d-$nonce.parquet").mkString("/"))
+      f.mkdirs(dest.getParent)
+      require(f.rename(p, dest), s"stage move failed: $dest")
+      (dest, segs)
+    }
+    f.delete(scratch, true)
+    moved
+  }
+
+  /** A new table's declaration of `schema` (field ids positional, 1..n),
+    * and the mirror's on every call. */
+  private def declare(meta: ObjectNode, table: String, schema: StructType): ObjectNode = {
+    if (!meta.has("table-uuid"))
+      meta.put("table-uuid", java.util.UUID.randomUUID().toString)
+    meta.put("location", table)
+    meta.put("last-column-id", schema.fields.length)
+    val fieldsArr = meta.putObject("schema").put("type", "struct").putArray("fields")
+    schema.fields.zipWithIndex.foreach { case (fld, i) =>
+      fieldsArr.addObject().put("id", i + 1).put("name", fld.name)
+        .put("required", false).put("type", icebergType(fld.dataType))
+    }
+    meta
+  }
+
+  /** Rewrite the current metadata in place — the commit step with no new
+    * snapshot, the shape of ref and schema edits. */
+  private def editMetadata(spark: SparkSession, table: String)
+      (edit: ObjectNode => Unit): Unit = {
+    val f = fs(spark, table)
+    commit(f, base(f, table), newNonce()) { a =>
+      val meta = a.base.root.deepCopy()
+      edit(meta)
+      meta
+    }
+    ()
+  }
+
+  // --------------------------------------------------------------- write
+
   /** One existing data file re-declared in a REPLACE commit's manifest
     * (rewriteDataFiles): its bytes never move; records/bounds/tuple
     * copy straight from the previous manifest entry. */
-  /** Carry named refs (spec: Table Metadata `refs`) into a new
-    * metadata version and point the `main` branch at the new head.
-    * `prev` supplies the refs when `meta` was built fresh; a deep-copied
-    * `meta` already carries them. */
-  private def stampRefs(meta: ObjectNode, prev: Option[ObjectNode],
-      snapshotId: Long): Unit = {
-    val refsObj =
-      if (meta.has("refs")) meta.get("refs").asInstanceOf[ObjectNode]
-      else {
-        val o = meta.putObject("refs")
-        prev.foreach(_.path("refs") match {
-          case po: ObjectNode => po.fields().asScala.foreach { e =>
-            if (e.getKey != "main")
-              o.set[ObjectNode](e.getKey,
-                e.getValue.deepCopy[com.fasterxml.jackson.databind.JsonNode]())
-          }
-          case _ => ()
-        })
-        o
-      }
-    val m = refsObj.putObject("main")
-    m.put("snapshot-id", snapshotId)
-    m.put("type", "branch")
-  }
-
   case class CarriedFile(path: String, records: Long, bytes: Long,
       tuple: Option[Seq[Any]],
       lower: Map[Int, Array[Byte]] = Map.empty,
       upper: Map[Int, Array[Byte]] = Map.empty,
       nulls: Map[Int, Long] = Map.empty)
 
+  /** Append `df` as one Iceberg snapshot (creates the table on first
+    * call); the commit point is the put-if-absent publish of
+    * `vN.metadata.json`. `carryPrevious = false` makes the snapshot a
+    * REPLACE: the new manifest is the only one, previous data (and
+    * delete) manifests drop out of the view. */
   def writeAppend(spark: SparkSession, df: DataFrame, location: String,
       carryPrevious: Boolean = true,
       partition: Seq[(String, String)] = Seq.empty,
@@ -1336,26 +1540,32 @@ object IcebergTable {
       // so branch commits stack.
       toBranch: Option[String] = None): Long = {
     val table = qualify(spark, location)
+    append(spark, df, base(fs(spark, table), table), carryPrevious,
+      partition, carryFiles, toBranch)
+  }
+
+  /** [[writeAppend]] pinned to `b`, the base its caller planned against. */
+  private def append(spark: SparkSession, df: DataFrame, b: Base,
+      carryPrevious: Boolean = true,
+      partition: Seq[(String, String)] = Seq.empty,
+      carryFiles: IterableOnce[CarriedFile] = Seq.empty,
+      toBranch: Option[String] = None): Long = {
+    val table = b.table
     import org.apache.spark.sql.functions.col
-    toBranch.foreach(b => require(b.nonEmpty && b != "main",
+    toBranch.foreach(br => require(br.nonEmpty && br != "main",
       "toBranch: `main` is the published head; write normally instead"))
     val f = fs(spark, table)
-    val root = new Path(table)
-    val mdir = new Path(root, "metadata")
-    val existing: Option[ObjectNode] =
-      if (!isIcebergTable(spark, table)) None
-      else Some(mapper.readTree(readText(f, currentMetadataPath(f, table)))
-        .asInstanceOf[ObjectNode])
+    val existing = b.meta
     require(toBranch.isEmpty || existing.isDefined,
       s"toBranch needs an existing Iceberg table at $table (a branch forks " +
         "from the published head)")
-    existing.foreach { prev =>
-      val prevSchema = resolveSchema(prev)
-      require(prevSchema.fieldNames.toSeq == df.schema.fieldNames.toSeq &&
-        prevSchema.fields.zip(df.schema.fields).forall { case (a, b) =>
-          DataType.equalsStructurally(a.dataType, b.dataType, true) },
-        s"Iceberg append schema mismatch at $table")
+    def fits(m: ObjectNode): Boolean = {
+      val s = resolveSchema(m)
+      s.fieldNames.toSeq == df.schema.fieldNames.toSeq &&
+        s.fields.zip(df.schema.fields).forall { case (x, y) =>
+          DataType.equalsStructurally(x.dataType, y.dataType, true) }
     }
+    existing.foreach(m => require(fits(m), s"Iceberg append schema mismatch at $table"))
     // hidden partitioning: with no spec requested, appends ADOPT the
     // table's declared default spec so every snapshot stays prunable; a
     // DIFFERENT requested spec EVOLVES the table — a new spec-id becomes
@@ -1386,63 +1596,26 @@ object IcebergTable {
       s"partition source column ${fd.source} not in the frame"))
     val specTypes = spec.map(fd =>
       IcebergPartition.resultType(fd.transform, df.schema(fd.source).dataType))
-
-    val version = latestMetadataVersion(f, table) + 1
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
+    val nonce = newNonce()
 
     // 1. stage parquet under data/ — partitioned tables stage through
     // partitionBy on COPY columns (`__gp*`), so every source column
     // (identity-partitioned ones included) stays in the data files as
     // the spec requires; one repartition gives one file per partition
-    val scratch = new Path(root, s".ice-stage-$nonce")
-    // micros staging (the Delta withMicrosStaging rule on this format):
-    // INT96 carries no ordered footer statistics, INT64-micros does —
-    // so staging the engine's own data files as TIMESTAMP_MICROS lets
-    // footerStats() below serve timestamp bounds with zero Spark jobs
-    DeltaLog.withMicrosStaging(df) {
-      if (spec.isEmpty) df.write.parquet(scratch.toString)
-      else {
-        val pcols = spec.zipWithIndex.map { case (fd, i) =>
+    val pcols = spec.indices.map(i => s"__gp$i")
+    val staged = stageFiles(f, table,
+      if (spec.isEmpty) df
+      else df.select(col("*") +: spec.zipWithIndex.map { case (fd, i) =>
           IcebergPartition.column(fd.transform, col(fd.source),
-            df.schema(fd.source).dataType).as(s"__gp$i") }
-        df.select(col("*") +: pcols: _*)
-          .repartition(spec.indices.map(i => col(s"__gp$i")): _*)
-          .write.partitionBy(spec.indices.map(i => s"__gp$i"): _*)
-          .parquet(scratch.toString)
-      }
-    }
-    def walk(p: Path): Seq[Path] =
-      f.listStatus(p).toSeq.sortBy(_.getPath.getName).flatMap { s =>
-        if (s.isDirectory) walk(s.getPath)
-        else if (s.getPath.getName.endsWith(".parquet")) Seq(s.getPath)
-        else Seq.empty
-      }
-    val staged = walk(scratch)
-    // per-file partition dir segments (still path-escaped), innermost last
-    val stagedSegs: Seq[Seq[String]] = staged.map { p =>
-      // listStatus returns fully-qualified paths; anchor on the scratch
-      // dir's (nonce-unique) NAME rather than comparing path strings
-      var segs = List.empty[String]
-      var cur = p.getParent
-      while (cur != null && cur.getName != scratch.getName) {
-        segs ::= cur.getName; cur = cur.getParent
-      }
-      require(cur != null, s"staged file $p escaped the scratch dir")
-      segs
-    }
-    val dataFiles = staged.zip(stagedSegs).zipWithIndex.map { case ((p, segs), i) =>
-      val dirs = segs.zip(spec).map { case (seg, fd) =>
-        s"${fd.name}=${seg.substring(seg.indexOf('=') + 1)}" }
-      val dest = new Path(root,
-        (Seq("data") ++ dirs :+ f"part-$version%05d-$i%05d-$nonce.parquet")
-          .mkString("/"))
-      f.mkdirs(dest.getParent)
-      require(f.rename(p, dest), s"stage move failed: $dest")
-      dest
-    }
+            df.schema(fd.source).dataType).as(s"__gp$i") }: _*)
+        .repartition(pcols.map(col): _*),
+      "part", b.version + 1, nonce, pcols,
+      _.zip(spec).map { case (seg, fd) =>
+        s"${fd.name}=${seg.substring(seg.indexOf('=') + 1)}" })
+    val dataFiles = staged.map(_._1)
     // typed partition tuple per staged file, for the manifest entries
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val tuples: Seq[Seq[Any]] = stagedSegs.map(_.zipWithIndex.map { case (seg, i) =>
+    val tuples: Seq[Seq[Any]] = staged.map(_._2.zipWithIndex.map { case (seg, i) =>
       val raw = seg.substring(seg.indexOf('=') + 1)
       val un = ExternalCatalogUtils.unescapePathName(raw)
       if (un == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
@@ -1453,7 +1626,6 @@ object IcebergTable {
         case other => sys.error(s"partition tuple type unsupported: $other")
       }
     })
-    f.delete(scratch, true)
     // per-file record counts AND column bounds in ONE grouped pass over
     // the staged files (matches DeltaLog's stats pass): record_count
     // feeds metadata-only COUNT(*), lower/upper_bounds feed data
@@ -1628,45 +1800,40 @@ object IcebergTable {
     val counts: Map[String, Long] =
       stats.view.mapValues(_.rows).toMap
 
-    // --- steps 2-5 are ONE COMMIT ATTEMPT, parameterized by the
-    // (existing, version) pair. A BLIND append (carry the previous
-    // snapshot, no requested spec, no carried REPLACE entries) that
-    // loses the create-if-absent race on vN.metadata.json REBASES:
-    // re-read the metadata, re-verify the table still has the shape the
-    // data was staged for, re-number, re-commit — bounded retries, the
-    // Hadoop-catalog analogue of DeltaLog's optimistic rebase. Blind
-    // appends commute, so rebasing is sound; every other commit kind
-    // (REPLACE, spec evolution) derives from the snapshot it read and
-    // still fails loudly on a race.
+    // 2. one manifest for the new files (partition tuples included when
+    // the table declares a spec), plus any carried REPLACE entries
+    val mSchema = manifestAvroSchemaFor(spec.map(_.name).zip(specTypes))
+    val dfSchema = mSchema.getField("data_file").schema()
+    def tupleRecord(tuple: Seq[Any]): GenericData.Record = {
+      val pr = new GenericData.Record(dfSchema.getField("partition").schema())
+      spec.zipWithIndex.foreach { case (fd, j) =>
+        pr.put(fd.name, tuple(j) match {
+          case null => null
+          case v: Int => Integer.valueOf(v)
+          case v: Long => java.lang.Long.valueOf(v)
+          case s: String => s
+          case other => other
+        })
+      }
+      pr
+    }
     val carryIter = carryFiles.iterator // one-shot: drained by the first attempt
+    // a BLIND append (carry the previous snapshot, no requested spec, no
+    // carried REPLACE entries) that loses the race REBASES onto the
+    // racer's base when the table still has the shape the data was
+    // staged for: blind appends commute. Every other commit kind
+    // (REPLACE, spec evolution) derives from the base it read and fails.
     val retriable =
       carryPrevious && requested.isEmpty && carryFiles.knownSize == 0
-    def attempt(existingNow: Option[ObjectNode], versionNow: Int): Long = {
-      val snapshotId = System.currentTimeMillis() * 1000 + versionNow
-      val now = System.currentTimeMillis()
-      // 2. one manifest for the new files (partition tuples included when
-      // the table declares a spec), plus any carried REPLACE entries
-      val mSchema = manifestAvroSchemaFor(spec.map(_.name).zip(specTypes))
-      val dfSchema = mSchema.getField("data_file").schema()
-      def tupleRecord(tuple: Seq[Any]): GenericData.Record = {
-        val pr = new GenericData.Record(dfSchema.getField("partition").schema())
-        spec.zipWithIndex.foreach { case (fd, j) =>
-          pr.put(fd.name, tuple(j) match {
-            case null => null
-            case v: Int => Integer.valueOf(v)
-            case v: Long => java.lang.Long.valueOf(v)
-            case s: String => s
-            case other => other
-          })
-        }
-        pr
-      }
+    commit(f, b, nonce, rebase = nb => retriable && nb.meta.exists(m =>
+        fits(m) && specFromMeta(m) == spec &&
+          m.path("default-spec-id").asInt(0) == specId)) { a =>
       // the carried side streams: IterableOnce drains straight into the
       // avro writer, one record in memory at a time
       val entries = dataFiles.zipWithIndex.map { case (p, i) =>
         val e = new GenericData.Record(mSchema)
         e.put("status", 1) // ADDED
-        e.put("snapshot_id", snapshotId)
+        e.put("snapshot_id", a.snapshotId)
         val d = new GenericData.Record(dfSchema)
         d.put("file_path", p.toString)
         d.put("file_format", "PARQUET")
@@ -1684,7 +1851,7 @@ object IcebergTable {
       }.iterator ++ carryIter.map { cf =>
         val e = new GenericData.Record(mSchema)
         e.put("status", 0) // EXISTING
-        e.put("snapshot_id", snapshotId)
+        e.put("snapshot_id", a.snapshotId)
         val d = new GenericData.Record(dfSchema)
         d.put("file_path", cf.path)
         d.put("file_format", "PARQUET")
@@ -1698,246 +1865,47 @@ object IcebergTable {
         e.put("data_file", d)
         e
       }
-      val manifestPath = new Path(mdir, s"manifest-$versionNow-$nonce.avro")
+      val manifestPath = a.manifestPath("data")
       val mLen = writeAvro(f, manifestPath, mSchema, entries)
 
-      // 3. manifest list = previous snapshot's manifests + the new one;
-      // each row keeps its content kind and sequence number (the new data
-      // manifest's sequence number is the snapshot ordinal — equality
-      // deletes scope against it). A branch write carries from the
-      // BRANCH head (created at the published head when absent).
-      val branchHead: Option[Long] = toBranch.flatMap { b =>
-        existingNow.flatMap(_.path("refs").path(b) match {
-          case o: ObjectNode =>
-            require(o.path("type").asText("branch") == "branch",
-              s"ref `$b` on $table is a tag — cannot write to it")
-            Some(o.get("snapshot-id").asLong())
-          case _ => None // absent: branch forks from the published head
-        })
-      }
-      val carryHeadId: Option[Long] = branchHead.orElse(
-        if (toBranch.isEmpty) None
-        else existingNow.map(_.get("current-snapshot-id").asLong()))
-      val prevManifests =
-        if (carryPrevious)
-          carriedManifests(f, table, existingNow, carryHeadId)
-        else Seq.empty
-      val mlSchema = manifestListAvroSchema
-      val mlRecords = (prevManifests :+
-          ((manifestPath.toString, mLen, 0L, versionNow.toLong, specId))).map {
-        case (p, len, content, seq, sid) =>
-          val r = new GenericData.Record(mlSchema)
-          r.put("manifest_path", p)
-          r.put("manifest_length", len)
-          r.put("partition_spec_id", sid)
-          r.put("content", content.toInt)
-          r.put("sequence_number", seq)
-          r.put("added_snapshot_id", snapshotId)
-          r
-      }
-      val listPath = new Path(mdir, s"snap-$snapshotId-$nonce.avro")
-      writeAvro(f, listPath, mlSchema, mlRecords)
-
-      // 4. new metadata json (schema field-ids assigned once, stable)
-      val meta = mapper.createObjectNode()
-      meta.put("format-version", 1)
-      meta.put("table-uuid", existingNow.map(_.get("table-uuid").asText())
-        .getOrElse(java.util.UUID.randomUUID().toString))
-      meta.put("location", table)
-      meta.put("last-updated-ms", now)
-      meta.put("last-column-id", df.schema.fields.length)
-      val schemaNode = meta.putObject("schema")
-      schemaNode.put("type", "struct")
-      val fieldsArr = schemaNode.putArray("fields")
-      df.schema.fields.zipWithIndex.foreach { case (fld, i) =>
-        val n = fieldsArr.addObject()
-        n.put("id", i + 1); n.put("name", fld.name)
-        n.put("required", false); n.put("type", icebergType(fld.dataType))
-      }
-      // partition-specs: every previous spec carries (old manifests keep
-      // referencing theirs); a fresh table or an evolution adds one
-      val specs = meta.putArray("partition-specs")
-      existingNow.foreach(_.path("partition-specs").elements().asScala
-        .foreach(s => specs.add(s)))
-      if (existingNow.isEmpty || evolving) {
-        val o = specs.addObject()
+      // 3. the metadata: the base's, or a new table's declaration; a new
+      // table or a spec evolution adds a partition spec (previous specs
+      // carry: old manifests keep referencing theirs)
+      val meta = a.base.meta.map(_.deepCopy())
+        .getOrElse(declare(mapper.createObjectNode(), table, df.schema))
+      if (a.base.meta.isEmpty || evolving) {
+        val o = meta.withArray[ArrayNode]("partition-specs").addObject()
         o.put("spec-id", specId)
         val fa = o.putArray("fields")
         spec.zipWithIndex.foreach { case (fd, i) =>
-          val n = fa.addObject()
-          n.put("name", fd.name)
-          n.put("transform", fd.transform.name)
-          n.put("source-id", df.schema.fieldIndex(fd.source) + 1)
-          n.put("field-id", fieldIdBase + i)
+          fa.addObject().put("name", fd.name).put("transform", fd.transform.name)
+            .put("source-id", df.schema.fieldIndex(fd.source) + 1)
+            .put("field-id", fieldIdBase + i)
         }
+        // v1 readers' flat form mirrors the DEFAULT spec
+        meta.set[ObjectNode]("partition-spec", fa.deepCopy())
+        meta.put("default-spec-id", specId)
+        meta.put("last-partition-id",
+          math.max(prevLastPartId, fieldIdBase + spec.length - 1))
       }
-      // v1 readers' flat form mirrors the DEFAULT spec
-      val flatSpec = meta.putArray("partition-spec")
-      specs.elements().asScala
-        .find(_.path("spec-id").asInt(0) == specId)
-        .foreach(_.path("fields").elements().asScala
-          .foreach(fl => flatSpec.add(fl)))
-      meta.put("default-spec-id", specId)
-      meta.put("last-partition-id",
-        math.max(prevLastPartId, fieldIdBase + spec.length - 1))
-      toBranch match {
-        case None =>
-          meta.put("current-snapshot-id", snapshotId)
-          stampRefs(meta, existingNow, snapshotId)
-        case Some(b) =>
-          // write-audit-publish: the published head does not move — the
-          // snapshot lands, the BRANCH ref advances, every other ref
-          // (main included) carries verbatim
-          existingNow.foreach(prev =>
-            meta.put("current-snapshot-id",
-              prev.get("current-snapshot-id").asLong()))
-          val refsObj = meta.putObject("refs")
-          existingNow.foreach(_.path("refs") match {
-            case po: ObjectNode => po.fields().asScala.foreach { e =>
-              refsObj.set[ObjectNode](e.getKey,
-                e.getValue.deepCopy[com.fasterxml.jackson.databind.JsonNode]())
-            }
-            case _ => ()
-          }) // a pre-refs table: main materializes on the next publish
-          val br = refsObj.putObject(b)
-          br.put("snapshot-id", snapshotId)
-          br.put("type", "branch")
-      }
-      val snapsArr = meta.putArray("snapshots")
-      existingNow.foreach(_.path("snapshots").elements().asScala
-        .foreach(s => snapsArr.add(s)))
-      val sn = snapsArr.addObject()
-      sn.put("snapshot-id", snapshotId)
-      // parent = the head this snapshot stacked on (fastForward's
-      // ancestry walk and the `history` table's lineage both read it)
-      carryHeadId.orElse(
-          existingNow.map(_.get("current-snapshot-id").asLong()))
-        .foreach(pid => sn.put("parent-snapshot-id", pid))
-      sn.put("timestamp-ms", now)
-      sn.put("manifest-list", listPath.toString)
-      // a commit that DROPS the previous snapshot's manifests on an
-      // existing table is the format's REPLACE shape (rewrite_data_files,
-      // materializeDeletes) — stamp it so changelog/cherrypick can tell
+      // 4. the manifest list: the stacked-on head's manifests (each keeps
+      // its content kind and sequence number) + the new one at this
+      // attempt's sequence number — equality deletes scope against it.
+      // A commit that DROPS the previous manifests of an existing table
+      // is the format's REPLACE shape (rewrite_data_files,
+      // materializeDeletes), stamped so changelog/cherrypick can tell
       // logical changes from pure rewrites
-      val sum = sn.putObject("summary")
-      sum.put("operation",
-        if (!carryPrevious && existingNow.isDefined) "replace" else "append")
-      val logArr = meta.putArray("snapshot-log")
-      existingNow.foreach(_.path("snapshot-log").elements().asScala
-        .foreach(l => logArr.add(l)))
-      // the snapshot-log records the PUBLISHED (main) history — a
-      // branch write does not move it
-      if (toBranch.isEmpty) {
-        val le = logArr.addObject()
-        le.put("timestamp-ms", now); le.put("snapshot-id", snapshotId)
-      }
-
-      raceHook()
-      // 5. the commit point
-      if (!publishMetadata(f, table, versionNow, meta))
-        throw lostPublish(table, versionNow)
-      postCommitHook()
-      snapshotId
-    }
-    var existingNow = existing
-    var versionNow = version
-    var attemptsLeft = 4
-    while (true) {
-      try return attempt(existingNow, versionNow)
-      catch {
-        case race: java.io.IOException =>
-          // vN existing does NOT prove a racer: if the IOException
-          // struck after this attempt's own publish landed (a post-commit
-          // failure, or a remote rename that landed yet reported
-          // failure), the existing vN is OUR commit, and rebasing onto
-          // it would re-append the same staged data files as a
-          // duplicate snapshot. The per-call nonce is embedded in the
-          // committed manifest-list filename — check ownership first.
-          val vNPath = metadataPath(table, versionNow)
-          val vNowMeta =
-            if (f.exists(vNPath))
-              Some(mapper.readTree(readText(f, vNPath)).asInstanceOf[ObjectNode])
-            else None
-          val ownCommit = vNowMeta.exists(_.path("snapshots").elements().asScala
-            .exists(_.path("manifest-list").asText("").contains(s"-$nonce.avro")))
-          if (ownCommit) {
-            // the commit landed; only post-commit bookkeeping failed.
-            // A branch write's landed snapshot is the BRANCH head, not
-            // the published current-snapshot-id
-            return toBranch
-              .map(b => vNowMeta.get.path("refs").path(b)
-                .get("snapshot-id").asLong())
-              .getOrElse(vNowMeta.get.get("current-snapshot-id").asLong())
-          }
-          // a LOST attempt's already-written manifest-/snap-*.avro are
-          // referenced by nothing; sweep them — whether we retry or
-          // rethrow — so failed/racing writers don't accrete
-          // unreferenced metadata files forever (removeOrphanFiles
-          // scans data/ only, never metadata/). Staged DATA files stay:
-          // a retry's manifest re-references them.
-          try {
-            Option(f.globStatus(new Path(mdir, s"*-$nonce.avro")))
-              .foreach(_.foreach(s => f.delete(s.getPath, false)))
-          } catch { case scala.util.control.NonFatal(_) => () }
-          if (!(retriable && attemptsLeft > 1 && vNowMeta.isDefined)) throw race
-          attemptsLeft -= 1
-          // resolve the racer's state from the listing max — the one
-          // version rule; a stale hint another writer left must not
-          // make the rebase silently drop the racer's snapshot
-          val curV = latestMetadataVersion(f, table)
-          val e2 = mapper.readTree(readText(f, metadataPath(table, curV)))
-            .asInstanceOf[ObjectNode]
-          val s2 = resolveSchema(e2)
-          val schemaOk = s2.fieldNames.toSeq == df.schema.fieldNames.toSeq &&
-            s2.fields.zip(df.schema.fields).forall { case (x, y) =>
-              DataType.equalsStructurally(x.dataType, y.dataType, true) }
-          // rebase only onto the SAME table shape the data was staged
-          // for — a racing schema or spec change invalidates the layout
-          if (!schemaOk || specFromMeta(e2) != spec ||
-            e2.path("default-spec-id").asInt(0) != specId) throw race
-          existingNow = Some(e2)
-          versionNow = curV + 1
-      }
-    }
-    sys.error("unreachable")
+      val carried =
+        if (carryPrevious) a.base.meta.toSeq.flatMap(carriedManifests(f, table, _, toBranch))
+        else Seq.empty
+      addSnapshot(a, meta,
+        carried :+ ManifestRow(manifestPath.toString, mLen, 0, a.version, specId),
+        if (!carryPrevious && a.base.meta.isDefined) "replace" else "append",
+        toBranch)
+      meta
+    }.snapshotId
   }
 
-  /** Current snapshot's manifest-list rows as (path, length, content,
-    * sequenceNumber) — carried forward into the next snapshot's list.
-    * Rows written before the v2 fields existed read as data (0) at
-    * sequence 0. */
-  /** (path, length, content, sequenceNumber, partitionSpecId) rows of
-    * the current snapshot's manifest list — carried into the next
-    * snapshot. Each manifest keeps the SPEC it was written under, so
-    * files stay prunable across partition evolution. */
-  private def carriedManifests(f: FileSystem, table: String,
-      existing: Option[ObjectNode],
-      // carry from a specific snapshot (a branch head) instead of the
-      // published current-snapshot-id
-      headId: Option[Long] = None): Seq[(String, Long, Long, Long, Int)] =
-    existing.toSeq.flatMap { prev =>
-      val curId = headId.getOrElse(prev.get("current-snapshot-id").asLong())
-      prev.path("snapshots").elements().asScala
-        .find(_.get("snapshot-id").asLong() == curId).toSeq
-        .flatMap { s =>
-          avroEntries(f, new Path(resolve(table, s.get("manifest-list").asText())))
-            .map(r => (str(r, "manifest_path").get,
-              lng(r, "manifest_length").getOrElse(0L),
-              lng(r, "content").getOrElse(0L),
-              lng(r, "sequence_number").getOrElse(0L),
-              lng(r, "partition_spec_id").getOrElse(0L).toInt))
-        }
-    }
-
-  /** Commit one v2 merge-on-read DELETE snapshot: stage the given
-    * delete rows as parquet under data/, declare them in a DELETE
-    * manifest (content=1 for position deletes, 2 for equality deletes
-    * with their field ids), and append a snapshot whose sequence number
-    * scopes them — rows from data files at a STRICTLY lower sequence
-    * are suppressed by equality deletes, position deletes pin exact
-    * (file, row) slots. NO data file is read, rewritten, or moved: the
-    * delete cost is O(deleted rows), the Iceberg answer to Delta's
-    * deletion vectors. */
   /** Row count straight from a just-staged parquet file's footer —
     * exact, zero Spark jobs (the Delta footer-stats rule applied to the
     * MoR staging surface; the old read-back-and-groupBy cost 2 jobs per
@@ -1952,7 +1920,16 @@ object IcebergTable {
     finally rd.close()
   }
 
-  private def writeDeleteSnapshot(spark: SparkSession, table: String,
+  /** Commit one v2 merge-on-read DELETE snapshot on `b`, the base the
+    * caller planned against: stage the given delete rows as parquet
+    * under data/, declare them in a DELETE manifest (content=1 for
+    * position deletes, 2 for equality deletes with their field ids), and
+    * append a snapshot whose sequence number scopes them — rows from
+    * data files at a STRICTLY lower sequence are suppressed by equality
+    * deletes, position deletes pin exact (file, row) slots. NO data file
+    * is read, rewritten, or moved: the delete cost is O(deleted rows),
+    * the Iceberg answer to Delta's deletion vectors. */
+  private def writeDeleteSnapshot(spark: SparkSession, b: Base,
       deleteRows: DataFrame, content: Int,
       equalityIds: Seq[Int],
       postImage: Option[DataFrame] = None,
@@ -1962,37 +1939,15 @@ object IcebergTable {
       // emptiness check rides the footer counts, so the caller needs no
       // separate probe action over its matched frame)
       skipIfEmpty: Boolean = false): Long = {
-    require(isIcebergTable(spark, table),
-      s"Iceberg MoR delete needs an existing table at $table")
+    val table = b.table
     val f = fs(spark, table)
-    val root = new Path(table)
-    val mdir = new Path(root, "metadata")
-    val existing = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
-    val version = latestMetadataVersion(f, table) + 1
-    val snapshotId = System.currentTimeMillis() * 1000 + version
-    val now = System.currentTimeMillis()
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
+    val nonce = newNonce()
     val hconf = spark.sessionState.newHadoopConf()
-
+    def stage(frame: DataFrame, kind: String): Seq[(Path, Long)] =
+      stageFiles(f, table, frame, kind, b.version + 1, nonce)
+        .map { case (p, _) => p -> footerRowCount(hconf, p) }
     // 1. stage the delete parquet under data/
-    val scratch = new Path(root, s".ice-del-stage-$nonce")
-    DeltaLog.withMicrosStaging(deleteRows) {
-      deleteRows.write.parquet(scratch.toString)
-    }
-    val staged = f.listStatus(scratch).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val kind = if (content == 1) "pos-del" else "eq-del"
-    val delFiles = staged.zipWithIndex.map { case (p, i) =>
-      val dest = new Path(root, f"data/$kind%s-$version%05d-$i%05d-$nonce.parquet")
-      f.mkdirs(dest.getParent)
-      require(f.rename(p, dest), s"stage move failed: $dest")
-      dest
-    }
-    f.delete(scratch, true)
-    val counts: Map[String, Long] =
-      delFiles.map(p => p.getName -> footerRowCount(hconf, p)).toMap
-
+    val delFiles = stage(deleteRows, if (content == 1) "pos-del" else "eq-del")
     // 1b. UPDATE/MERGE shape: the post-image rows land as NEW data
     // files in the SAME snapshot, at the same sequence number as the
     // position deletes that suppress their predecessors — atomic
@@ -2001,152 +1956,52 @@ object IcebergTable {
     // COUNT stays metadata-only) but no column bounds/tuples: pruning
     // always KEEPS boundless files, so correctness is unaffected and
     // the next OPTIMIZE/rewriteDataFiles restores skipping for them.
-    val dataFiles: Seq[Path] = postImage match {
-      case None => Seq.empty
-      case Some(df0) =>
-        val dscratch = new Path(root, s".ice-upd-stage-$nonce")
-        DeltaLog.withMicrosStaging(df0) {
-          df0.write.parquet(dscratch.toString)
-        }
-        val dstaged = f.listStatus(dscratch).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-        val moved = dstaged.zipWithIndex.map { case (p, i) =>
-          val dest = new Path(root, f"data/upd-$version%05d-$i%05d-$nonce.parquet")
-          f.mkdirs(dest.getParent)
-          require(f.rename(p, dest), s"stage move failed: $dest")
-          dest
-        }
-        f.delete(dscratch, true)
-        moved.toSeq
+    val dataFiles = postImage.toSeq.flatMap(stage(_, "upd"))
+    if (skipIfEmpty && (delFiles ++ dataFiles).forall(_._2 == 0L)) {
+      (delFiles ++ dataFiles).foreach(p => f.delete(p._1, false))
+      return b.root.get("current-snapshot-id").asLong()
     }
-    val dataCounts: Map[String, Long] =
-      dataFiles.map(p => p.getName -> footerRowCount(hconf, p)).toMap
-
-    if (skipIfEmpty && counts.values.sum == 0L && dataCounts.values.sum == 0L) {
-      (delFiles ++ dataFiles).foreach(p => f.delete(p, false))
-      return existing.get("current-snapshot-id").asLong()
-    }
-
-    // 2. the DELETE manifest
-    val mSchema = deleteManifestAvroSchema
-    val dfSchema0 = mSchema.getField("data_file").schema()
-    val entries = delFiles.map { p =>
-      val e = new GenericData.Record(mSchema)
-      e.put("status", 1) // ADDED
-      e.put("snapshot_id", snapshotId)
-      e.put("sequence_number", version.toLong)
-      val d = new GenericData.Record(dfSchema0)
-      d.put("content", content)
-      d.put("file_path", p.toString)
-      d.put("file_format", "PARQUET")
-      d.put("record_count", counts.getOrElse(p.getName, 0L))
-      d.put("file_size_in_bytes", f.getFileStatus(p).getLen)
-      if (equalityIds.nonEmpty) {
-        val arr = new GenericData.Array[Integer](
-          dfSchema0.getField("equality_ids").schema().getTypes.get(1),
-          equalityIds.map(Integer.valueOf).asJava)
-        d.put("equality_ids", arr)
-      }
-      e.put("data_file", d)
-      e
-    }
-    val manifestPath = new Path(mdir, s"manifest-del-$version-$nonce.avro")
-    val mLen = writeAvro(f, manifestPath, mSchema, entries.toSeq)
-
-    // 2b. the post-image DATA manifest (UPDATE/MERGE only)
-    val dataManifest: Option[(Path, Long)] =
-      if (dataFiles.isEmpty) None
-      else {
-        val dmSchema = manifestAvroSchema
-        val dmFileSchema = dmSchema.getField("data_file").schema()
-        val dmEntries = dataFiles.map { p =>
-          val e = new GenericData.Record(dmSchema)
-          e.put("status", 1) // ADDED
-          e.put("snapshot_id", snapshotId)
-          e.put("sequence_number", version.toLong)
-          val d = new GenericData.Record(dmFileSchema)
-          d.put("file_path", p.toString)
-          d.put("file_format", "PARQUET")
-          d.put("record_count", dataCounts.getOrElse(p.getName, 0L))
-          d.put("file_size_in_bytes", f.getFileStatus(p).getLen)
-          e.put("data_file", d)
-          e
-        }
-        val dmPath = new Path(mdir, s"manifest-upd-$version-$nonce.avro")
-        Some(dmPath -> writeAvro(f, dmPath, dmSchema, dmEntries))
-      }
-
-    // 3. manifest list: carried rows + the delete manifest (+ the
-    // post-image data manifest) at this snapshot's sequence number
-    val mlSchema = manifestListAvroSchema
-    val defaultSpecId = existing.path("default-spec-id").asInt(0)
-    val mlRecords = (carriedManifests(f, table, Some(existing)) ++
-        Seq((manifestPath.toString, mLen, content.toLong, version.toLong,
-          defaultSpecId)) ++
-        dataManifest.toSeq.map { case (p, len) =>
-          (p.toString, len, 0L, version.toLong, defaultSpecId)
-        }).map {
-      case (p, len, c, seq, sid) =>
-        val r = new GenericData.Record(mlSchema)
-        r.put("manifest_path", p)
-        r.put("manifest_length", len)
-        r.put("partition_spec_id", sid)
-        r.put("content", c.toInt)
-        r.put("sequence_number", seq)
-        r.put("added_snapshot_id", snapshotId)
-        r
-    }
-    val listPath = new Path(mdir, s"snap-$snapshotId-$nonce.avro")
-    writeAvro(f, listPath, mlSchema, mlRecords)
-
-    // 4. metadata json: same declaration, format-version 2 (delete
-    // files are a v2-only construct), one more snapshot
-    val meta = existing.deepCopy()
-    meta.put("format-version", 2)
-    meta.put("last-updated-ms", now)
-    meta.put("last-sequence-number", version.toLong)
-    meta.put("current-snapshot-id", snapshotId)
-    stampRefs(meta, None, snapshotId)
-    val sn = meta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots")
-      .addObject()
-    sn.put("snapshot-id", snapshotId)
-    sn.put("parent-snapshot-id", existing.get("current-snapshot-id").asLong())
-    sn.put("sequence-number", version.toLong)
-    sn.put("timestamp-ms", now)
-    sn.put("manifest-list", listPath.toString)
-    val sum = sn.putObject("summary"); sum.put("operation", operation)
-    val le = meta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
-      .addObject()
-    le.put("timestamp-ms", now); le.put("snapshot-id", snapshotId)
-
-    if (!publishMetadata(f, table, version, meta))
-      throw lostPublish(table, version)
-    snapshotId
+    commit(f, b, nonce) { a =>
+      // 2. the DELETE manifest (+ the post-image DATA manifest), both at
+      // this snapshot's sequence number
+      val meta = a.base.root.deepCopy()
+      val specId = meta.path("default-spec-id").asInt(0)
+      addSnapshot(a, meta, carriedManifests(f, table, meta) ++
+        (addedManifest(a, "del", content, specId, delFiles, equalityIds) +:
+          (if (dataFiles.isEmpty) Seq.empty
+           else Seq(addedManifest(a, "upd", 0, specId, dataFiles)))),
+        operation)
+      meta
+    }.snapshotId
   }
 
-  /** Expire old snapshots — Iceberg's `expireSnapshots` maintenance
-    * verb, the dual of Delta's VACUUM. Snapshots older than
-    * `olderThanMs` drop from the metadata (always retaining the
-    * current one and the newest `retainLast`); their manifest lists,
-    * manifests, and any data/delete file referenced ONLY by dropped
-    * snapshots are deleted from disk. Reachability is computed from
-    * the manifests themselves (metadata-sized avro, the same walk
-    * [[state]] performs) — never a recursive directory listing, so a
-    * table with 10⁶ data files pays O(manifests), not O(files), and a
-    * foreign file sitting under data/ is never touched. Returns the
-    * number of files deleted. */
-  /** Rewrite the current metadata in place (one new version, no new
-    * snapshot) — the commit shape of ref edits. */
-  private def editMetadata(spark: SparkSession, table: String)
-      (edit: ObjectNode => Unit): Unit = {
-    val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
-    edit(root)
-    root.put("last-updated-ms", System.currentTimeMillis())
-    val version = latestMetadataVersion(f, table) + 1
-    if (!publishMetadata(f, table, version, root))
-      throw lostPublish(table, version)
+  /** One manifest of files this attempt ADDED, at its sequence number:
+    * (path, record count) per file; `content` 0 is data, 1 position
+    * deletes, 2 equality deletes keyed by `equalityIds`. */
+  private def addedManifest(a: Attempt, kind: String, content: Int, specId: Int,
+      files: Seq[(Path, Long)], equalityIds: Seq[Int] = Seq.empty): ManifestRow = {
+    val schema = if (content == 0) manifestAvroSchema else deleteManifestAvroSchema
+    val fileSchema = schema.getField("data_file").schema()
+    val p = a.manifestPath(kind)
+    val len = writeAvro(a.f, p, schema, files.map { case (file, rows) =>
+      val e = new GenericData.Record(schema)
+      e.put("status", 1) // ADDED
+      e.put("snapshot_id", a.snapshotId)
+      e.put("sequence_number", a.version.toLong)
+      val d = new GenericData.Record(fileSchema)
+      if (content != 0) d.put("content", content)
+      d.put("file_path", file.toString)
+      d.put("file_format", "PARQUET")
+      d.put("record_count", rows)
+      d.put("file_size_in_bytes", a.f.getFileStatus(file).getLen)
+      if (equalityIds.nonEmpty)
+        d.put("equality_ids", new GenericData.Array[Integer](
+          fileSchema.getField("equality_ids").schema().getTypes.get(1),
+          equalityIds.map(Integer.valueOf).asJava))
+      e.put("data_file", d)
+      e
+    })
+    ManifestRow(p.toString, len, content, a.version, specId)
   }
 
   /** Create or move a named ref (spec: Table Metadata `refs`) — a TAG
@@ -2240,9 +2095,8 @@ object IcebergTable {
   def cherrypick(spark: SparkSession, location: String, snapshotId: Long): Long = {
     val table = qualify(spark, location)
     val f = fs(spark, table)
-    val mdir = new Path(table, "metadata")
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val b = base(f, table)
+    val root = b.root
     val snaps = root.path("snapshots").elements().asScala.toSeq
     val byId = snaps.map(s => s.get("snapshot-id").asLong() -> s).toMap
     val picked = byId.getOrElse(snapshotId,
@@ -2258,14 +2112,6 @@ object IcebergTable {
     require(picked.path("summary").path("operation").asText("") == "append",
       s"cherrypick: snapshot $snapshotId is not an append — only appends " +
         "replay safely onto a different head")
-    def listRows(s: com.fasterxml.jackson.databind.JsonNode)
-        : Seq[(String, Long, Long, Long, Int)] =
-      avroEntries(f, new Path(resolve(table, s.get("manifest-list").asText())))
-        .map(r => (str(r, "manifest_path").get,
-          lng(r, "manifest_length").getOrElse(0L),
-          lng(r, "content").getOrElse(0L),
-          lng(r, "sequence_number").getOrElse(0L),
-          lng(r, "partition_spec_id").getOrElse(0L).toInt))
     // the picked snapshot's OWN additions = its manifest-list rows minus
     // its parent's. The parent must still be in metadata: with it
     // expired there is no baseline to diff against, and treating every
@@ -2274,58 +2120,25 @@ object IcebergTable {
     // loudly, like the non-append refusal.
     val parentPaths: Set[String] =
       Option(picked.get("parent-snapshot-id")).map(_.asLong()) match {
-        case Some(pid) => byId.get(pid).map(listRows(_).map(_._1).toSet)
+        case Some(pid) => byId.get(pid).map(manifestRows(f, table, _).map(_.path).toSet)
           .getOrElse(sys.error(
             s"cherrypick: parent snapshot $pid of $snapshotId has been " +
               "expired — cannot isolate the snapshot's own additions"))
         case None => Set.empty
       }
     // belt-and-braces: never re-add a manifest the head already carries
-    val headManifests = carriedManifests(f, table, Some(root))
-    val headCarried: Set[String] = headManifests.map(_._1).toSet
-    val added = listRows(picked).filterNot(r =>
-      parentPaths.contains(r._1) || headCarried.contains(r._1))
-    require(added.forall(_._3 == 0L),
+    val headManifests = carriedManifests(f, table, root)
+    val headCarried: Set[String] = headManifests.map(_.path).toSet
+    val added = manifestRows(f, table, picked).filterNot(r =>
+      parentPaths.contains(r.path) || headCarried.contains(r.path))
+    require(added.forall(_.content == 0),
       s"cherrypick: snapshot $snapshotId added delete manifests — refuse")
-    val version = latestMetadataVersion(f, table) + 1
-    val newId = System.currentTimeMillis() * 1000 + version
-    val now = System.currentTimeMillis()
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val mlSchema = manifestListAvroSchema
-    val mlRecords = (headManifests ++ added).map {
-      case (p, len, c, seq, sid) =>
-        val r = new GenericData.Record(mlSchema)
-        r.put("manifest_path", p)
-        r.put("manifest_length", len)
-        r.put("partition_spec_id", sid)
-        r.put("content", c.toInt)
-        r.put("sequence_number", seq)
-        r.put("added_snapshot_id", newId)
-        r
-    }
-    val listPath = new Path(mdir, s"snap-$newId-$nonce.avro")
-    writeAvro(f, listPath, mlSchema, mlRecords)
-    val meta = root.deepCopy()
-    meta.put("last-updated-ms", now)
-    meta.put("current-snapshot-id", newId)
-    stampRefs(meta, None, newId)
-    val sn = meta
-      .withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots")
-      .addObject()
-    sn.put("snapshot-id", newId)
-    sn.put("parent-snapshot-id", mainHead)
-    sn.put("timestamp-ms", now)
-    sn.put("manifest-list", listPath.toString)
-    val sum = sn.putObject("summary")
-    sum.put("operation", "append")
-    sum.put("source-snapshot-id", snapshotId.toString)
-    val le = meta
-      .withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
-      .addObject()
-    le.put("timestamp-ms", now); le.put("snapshot-id", newId)
-    if (!publishMetadata(f, table, version, meta))
-      throw lostPublish(table, version)
-    newId
+    commit(f, b, newNonce()) { a =>
+      val meta = a.base.root.deepCopy()
+      addSnapshot(a, meta, headManifests ++ added, "append",
+        summary = Seq("source-snapshot-id" -> snapshotId.toString))
+      meta
+    }.snapshotId
   }
 
   /** ALTER TABLE … ADD COLUMNS on the Iceberg protocol — column-level
@@ -2402,8 +2215,7 @@ object IcebergTable {
   def refSnapshotId(spark: SparkSession, location: String, name: String): Long = {
     val table = qualify(spark, location)
     val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val root = base(f, table).root
     root.path("refs").path(name) match {
       case o: ObjectNode => o.get("snapshot-id").asLong()
       case _ if name == "main" => root.get("current-snapshot-id").asLong()
@@ -2423,8 +2235,7 @@ object IcebergTable {
   private[graft] def headAndSchema(spark: SparkSession, table: String)
       : (Long, StructType) = {
     val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val root = base(f, table).root
     (root.get("current-snapshot-id").asLong(), resolveSchema(root))
   }
 
@@ -2435,8 +2246,7 @@ object IcebergTable {
   private[graft] def chainOps(spark: SparkSession, table: String,
       fromExclusive: Option[Long], to: Long): Seq[(Long, String)] = {
     val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val root = base(f, table).root
     val byId = root.path("snapshots").elements().asScala.toSeq
       .map(s => s.get("snapshot-id").asLong() -> s).toMap
     val b = List.newBuilder[Long]
@@ -2497,8 +2307,7 @@ object IcebergTable {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val root = base(f, table).root
     val schema = resolveSchema(root)
     val fieldsById = schemaFieldIds(root)
     val byId = root.path("snapshots").elements().asScala.toSeq
@@ -2784,8 +2593,7 @@ object IcebergTable {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, regexp_replace}
     val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val root = base(f, table).root
     // a file referenced by ANY snapshot — current or historical — is
     // not an orphan; expireSnapshots owns dropping history. Every
     // snapshot here is still in the metadata, so an unreadable
@@ -2859,17 +2667,11 @@ object IcebergTable {
     val table = qualify(spark, location)
     import spark.implicits._
     val f = fs(spark, table)
-    val root0 = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val b = base(f, table)
+    val root0 = b.root
     val snap = resolveSnapshotNode(table, root0, None, None)
-    val mdir = new Path(table, "metadata")
-    val carried = carriedManifests(f, table, Some(root0))
-    val (dataM, delM) = carried.partition(_._3 == 0L)
+    val (dataM, delM) = carriedManifests(f, table, root0).partition(_.content == 0)
     if (dataM.size <= 1) return (dataM.size, dataM.size)
-    val version = latestMetadataVersion(f, table) + 1
-    val snapshotId = System.currentTimeMillis() * 1000 + version
-    val now = System.currentTimeMillis()
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
     val schema = resolveSchema(root0)
     val allSpecs = specsById(root0)
     val entries = entriesOf(spark, table, root0, snap)
@@ -2877,109 +2679,85 @@ object IcebergTable {
     try {
       val specIds = entries.filter(_.content == 0).map(_.specId)
         .distinct().collect().sorted
-      val newManifests = specIds.map { sid =>
-        val fields = allSpecs.getOrElse(sid, Seq.empty)
-        val types = fields.map(fd =>
-          IcebergPartition.resultType(fd.transform, schema(fd.source).dataType))
-        val mSchema = manifestAvroSchemaFor(fields.map(_.name).zip(types))
-        val dfSchema = mSchema.getField("data_file").schema()
-        val it = entries.filter(e => e.content == 0 && e.specId == sid)
-          .toLocalIterator().asScala.map { e =>
-            val rec = new GenericData.Record(mSchema)
-            rec.put("status", 0) // EXISTING
-            // spec: an EXISTING entry keeps the snapshot that originally
-            // ADDED the file, not the rewriting snapshot
-            rec.put("snapshot_id",
-              if (e.addedSnapshotId != 0L) e.addedSnapshotId else snapshotId)
-            rec.put("sequence_number", e.seq)
-            val d = new GenericData.Record(dfSchema)
-            d.put("file_path", e.path)
-            d.put("file_format", "PARQUET")
-            d.put("record_count", e.recordCount)
-            d.put("file_size_in_bytes", e.fileSize)
-            if (e.lower.nonEmpty)
-              d.put("lower_bounds", boundsArray(dfSchema, "lower_bounds", e.lower))
-            if (e.upper.nonEmpty)
-              d.put("upper_bounds", boundsArray(dfSchema, "upper_bounds", e.upper))
-            if (e.nullCounts.nonEmpty)
-              d.put("null_value_counts", mapArray(dfSchema, "null_value_counts",
-                e.nullCounts)(java.lang.Long.valueOf(_)))
-            if (fields.nonEmpty && e.hasPartition) {
-              val pr = new GenericData.Record(
-                dfSchema.getField("partition").schema())
-              fields.zipWithIndex.foreach { case (fd, j) =>
-                val raw = e.partition.lift(j).orNull
-                pr.put(fd.name,
-                  if (raw == null) null
-                  else types(j) match {
-                    case IntegerType => Integer.valueOf(raw.toInt)
-                    case LongType => java.lang.Long.valueOf(raw.toLong)
-                    case StringType => raw
-                    case other =>
-                      sys.error(s"partition tuple type unsupported: $other")
-                  })
+      commit(f, b, newNonce()) { a =>
+        val newManifests = specIds.map { sid =>
+          val fields = allSpecs.getOrElse(sid, Seq.empty)
+          val types = fields.map(fd =>
+            IcebergPartition.resultType(fd.transform, schema(fd.source).dataType))
+          val mSchema = manifestAvroSchemaFor(fields.map(_.name).zip(types))
+          val dfSchema = mSchema.getField("data_file").schema()
+          val it = entries.filter(e => e.content == 0 && e.specId == sid)
+            .toLocalIterator().asScala.map { e =>
+              val rec = new GenericData.Record(mSchema)
+              rec.put("status", 0) // EXISTING
+              // spec: an EXISTING entry keeps the snapshot that originally
+              // ADDED the file, not the rewriting snapshot
+              rec.put("snapshot_id",
+                if (e.addedSnapshotId != 0L) e.addedSnapshotId else a.snapshotId)
+              rec.put("sequence_number", e.seq)
+              val d = new GenericData.Record(dfSchema)
+              d.put("file_path", e.path)
+              d.put("file_format", "PARQUET")
+              d.put("record_count", e.recordCount)
+              d.put("file_size_in_bytes", e.fileSize)
+              if (e.lower.nonEmpty)
+                d.put("lower_bounds", boundsArray(dfSchema, "lower_bounds", e.lower))
+              if (e.upper.nonEmpty)
+                d.put("upper_bounds", boundsArray(dfSchema, "upper_bounds", e.upper))
+              if (e.nullCounts.nonEmpty)
+                d.put("null_value_counts", mapArray(dfSchema, "null_value_counts",
+                  e.nullCounts)(java.lang.Long.valueOf(_)))
+              if (fields.nonEmpty && e.hasPartition) {
+                val pr = new GenericData.Record(
+                  dfSchema.getField("partition").schema())
+                fields.zipWithIndex.foreach { case (fd, j) =>
+                  val raw = e.partition.lift(j).orNull
+                  pr.put(fd.name,
+                    if (raw == null) null
+                    else types(j) match {
+                      case IntegerType => Integer.valueOf(raw.toInt)
+                      case LongType => java.lang.Long.valueOf(raw.toLong)
+                      case StringType => raw
+                      case other =>
+                        sys.error(s"partition tuple type unsupported: $other")
+                    })
+                }
+                d.put("partition", pr)
               }
-              d.put("partition", pr)
+              rec.put("data_file", d)
+              rec
             }
-            rec.put("data_file", d)
-            rec
-          }
-        val mp = new Path(mdir, s"manifest-rw-$version-$sid-$nonce.avro")
-        val len = writeAvro(f, mp, mSchema, it)
-        (mp.toString, len, 0L, version.toLong, sid)
-      }.toSeq
-      val mlSchema = manifestListAvroSchema
-      val mlRecords = (newManifests ++ delM).map {
-        case (p, len, c, seq, sid) =>
-          val r = new GenericData.Record(mlSchema)
-          r.put("manifest_path", p)
-          r.put("manifest_length", len)
-          r.put("partition_spec_id", sid)
-          r.put("content", c.toInt)
-          r.put("sequence_number", seq)
-          r.put("added_snapshot_id", snapshotId)
-          r
+          val mp = a.manifestPath(s"rw$sid")
+          ManifestRow(mp.toString, writeAvro(f, mp, mSchema, it), 0, a.version, sid)
+        }.toSeq
+        val meta = a.base.root.deepCopy()
+        addSnapshot(a, meta, newManifests ++ delM, "replace")
+        meta
       }
-      val listPath = new Path(mdir, s"snap-$snapshotId-$nonce.avro")
-      writeAvro(f, listPath, mlSchema, mlRecords)
-
-      val meta = root0.deepCopy()
-      meta.put("last-updated-ms", now)
-      meta.put("current-snapshot-id", snapshotId)
-      // v2 tables must advance last-sequence-number on EVERY commit
-      // (external readers validate it against per-snapshot sequence
-      // numbers); the consolidated snapshot's ordinal is `version`
-      if (root0.path("format-version").asInt(1) >= 2)
-        meta.put("last-sequence-number",
-          math.max(root0.path("last-sequence-number").asLong(0L), version.toLong))
-      stampRefs(meta, None, snapshotId)
-      val sn = meta
-        .withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots")
-        .addObject()
-      sn.put("snapshot-id", snapshotId)
-      sn.put("parent-snapshot-id", root0.get("current-snapshot-id").asLong())
-      if (root0.path("format-version").asInt(1) >= 2)
-        sn.put("sequence-number", version.toLong)
-      sn.put("timestamp-ms", now)
-      sn.put("manifest-list", listPath.toString)
-      val sum = sn.putObject("summary"); sum.put("operation", "replace")
-      val le = meta
-        .withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
-        .addObject()
-      le.put("timestamp-ms", now); le.put("snapshot-id", snapshotId)
-      if (!publishMetadata(f, table, version, meta))
-        throw lostPublish(table, version)
-      (dataM.size, newManifests.size)
+      (dataM.size, specIds.length)
     } finally { entries.unpersist(false); () }
   }
 
+  /** Expire old snapshots — Iceberg's `expireSnapshots` maintenance
+    * verb, the dual of Delta's VACUUM. Snapshots older than
+    * `olderThanMs` drop from the metadata (always retaining the
+    * current one and the newest `retainLast`); their manifest lists,
+    * manifests, and any data/delete file referenced ONLY by dropped
+    * snapshots are deleted from disk — after the metadata without them
+    * is published (Iceberg's own order: commit, then clean up), so a
+    * lost or failed commit deletes nothing. Reachability is computed
+    * from the manifests themselves (metadata-sized avro, the same walk
+    * [[state]] performs) — never a recursive directory listing, so a
+    * table with 10⁶ data files pays O(manifests), not O(files), and a
+    * foreign file sitting under data/ is never touched. Returns the
+    * number of files deleted. */
   def expireSnapshots(spark: SparkSession, location: String,
       olderThanMs: Long, retainLast: Int = 1): Long = {
     val table = qualify(spark, location)
     require(retainLast >= 1, "expireSnapshots: retainLast must be >= 1")
     val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val b = base(f, table)
+    val root = b.root
     val snaps = root.path("snapshots").elements().asScala.toSeq
     val currentId = root.get("current-snapshot-id").asLong()
     val byAge = snaps.sortBy(_.get("timestamp-ms").asLong())
@@ -3049,6 +2827,17 @@ object IcebergTable {
     val (keepLists, keepManifests) = manifestRefs(kept, strict = true)
     val (dropLists, dropManifests) = manifestRefs(dropped, strict = false)
 
+    // publish the metadata without the dropped snapshots / log entries
+    // FIRST: a lost or failed commit must leave their files in place
+    commit(f, b, newNonce()) { a =>
+      val meta = a.base.root.deepCopy()
+      meta.putArray("snapshots").addAll(kept.asJava)
+      meta.putArray("snapshot-log").addAll(root.path("snapshot-log").elements()
+        .asScala.filter(l => keepIds.contains(l.get("snapshot-id").asLong()))
+        .toSeq.asJava)
+      meta
+    }
+
     import spark.implicits._
     var deleted = 0L
     // a file in a manifest BOTH sides share can never be a victim, so
@@ -3063,27 +2852,10 @@ object IcebergTable {
         .distinct().as[String]
       deleted += deleteDistributed(spark, victims)
     }
-    def rm(p: String): Unit = {
+    (dropOnly ++ (dropLists -- keepLists)).foreach { p =>
       val hp = new Path(p)
       if (f.exists(hp) && f.delete(hp, false)) deleted += 1
     }
-    (dropManifests -- keepManifests).foreach(rm)
-    (dropLists -- keepLists).foreach(rm)
-
-    // new metadata without the dropped snapshots / log entries
-    val meta = root.deepCopy()
-    val sArr = mapper.createArrayNode()
-    kept.foreach(sArr.add)
-    meta.set[ObjectNode]("snapshots", sArr)
-    val lArr = mapper.createArrayNode()
-    root.path("snapshot-log").elements().asScala
-      .filter(l => keepIds.contains(l.get("snapshot-id").asLong()))
-      .foreach(lArr.add)
-    meta.set[ObjectNode]("snapshot-log", lArr)
-    meta.put("last-updated-ms", System.currentTimeMillis())
-    val version = latestMetadataVersion(f, table) + 1
-    if (!publishMetadata(f, table, version, meta))
-      throw lostPublish(table, version)
     deleted
   }
 
@@ -3097,8 +2869,8 @@ object IcebergTable {
     // delete-presence probe over the DISTRIBUTED entries frame (the
     // spec-API state() would collect every file path on the driver)
     val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val b = base(f, table)
+    val root = b.root
     val snap = resolveSnapshotNode(table, root, None, None)
     val hasDeletes = entriesLocalOpt(spark, table, root, snap) match {
       case Some(local) => local.exists(_.content != 0)
@@ -3106,7 +2878,8 @@ object IcebergTable {
         .filter(_.content != 0).limit(1).count() > 0
     }
     if (!hasDeletes) return snap.get("snapshot-id").asLong()
-    writeAppend(spark, read(spark, table), table, carryPrevious = false)
+    append(spark, readState(spark, table, root, snap, resolveSchema(root)), b,
+      carryPrevious = false)
   }
 
   /** Bin-pack compaction — Iceberg's `rewrite_data_files` maintenance
@@ -3135,8 +2908,8 @@ object IcebergTable {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val b = base(f, table)
+    val root = b.root
     val snap = resolveSnapshotNode(table, root, None, None)
     val schema = resolveSchema(root)
     val defaultSpecId = root.path("default-spec-id").asInt(0)
@@ -3210,7 +2983,7 @@ object IcebergTable {
               .map { case (s2, dt) => decodePv(s2, dt) }),
             e.lower, e.upper, e.nullCounts)
         }
-      writeAppend(spark, rewritten.coalesce(targetFiles), table,
+      append(spark, rewritten.coalesce(targetFiles), b,
         carryPrevious = false, carryFiles = keepIt)
       (nRewrite.toInt, nKeep.toInt)
     } finally {
@@ -3231,8 +3004,8 @@ object IcebergTable {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val b = base(f, table)
+    val root = b.root
     val snap = resolveSnapshotNode(table, root, None, None)
     val schema = resolveSchema(root)
     // candidate scope: hidden-partition + bound pruning first, so the
@@ -3273,7 +3046,7 @@ object IcebergTable {
           .where(predicate)
           .select("file_path", "pos"))
         .reduce(_ unionByName _)
-    writeDeleteSnapshot(spark, table, slots, content = 1, equalityIds = Seq.empty)
+    writeDeleteSnapshot(spark, b, slots, content = 1, equalityIds = Seq.empty)
   }
 
   /** Merge-on-read equality DELETE: every row whose `values`-column
@@ -3286,14 +3059,14 @@ object IcebergTable {
     val table = qualify(spark, location)
     // metadata-JSON-only: no manifest walk — the ids come from the schema
     val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val b = base(f, table)
+    val root = b.root
     val fieldIds = schemaFieldIds(root)
     val byName = fieldIds.map(_.swap)
     val ids = values.columns.toSeq.map(c => byName.getOrElse(c,
       sys.error(s"equality-delete column '$c' not in $table schema " +
         s"(have: ${fieldIds.values.mkString(", ")})")))
-    writeDeleteSnapshot(spark, table, values, content = 2, equalityIds = ids)
+    writeDeleteSnapshot(spark, b, values, content = 2, equalityIds = ids)
   }
 
   /** Merge-on-read UPDATE: matched rows' slots become POSITION DELETES
@@ -3317,8 +3090,8 @@ object IcebergTable {
     import org.apache.spark.sql.functions.col
     require(set.nonEmpty, "UPDATE needs at least one SET column")
     val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val b = base(f, table)
+    val root = b.root
     val snap = resolveSnapshotNode(table, root, None, None)
     val schema = resolveSchema(root)
     val missing = set.keySet -- schema.fieldNames
@@ -3337,7 +3110,7 @@ object IcebergTable {
       // no separate no-match probe: the slots staging materializes the
       // persisted frame, and skipIfEmpty turns an empty match into a
       // cleanup instead of a commit (footer counts, zero extra jobs)
-      writeDeleteSnapshot(spark, table, slots, content = 1,
+      writeDeleteSnapshot(spark, b, slots, content = 1,
         equalityIds = Seq.empty, postImage = Some(post),
         operation = "overwrite", skipIfEmpty = true)
     } finally { matched.unpersist(false); () }
@@ -3365,10 +3138,10 @@ object IcebergTable {
       uniqueSourceKeys: Boolean = false): Long = {
     val table = qualify(spark, location)
     import org.apache.spark.sql.functions.{coalesce, col, count, lit, max}
-    if (!isIcebergTable(spark, table)) return writeAppend(spark, source, table)
     val f = fs(spark, table)
-    val root = mapper.readTree(readText(f, currentMetadataPath(f, table)))
-      .asInstanceOf[ObjectNode]
+    val b = base(f, table)
+    if (b.meta.isEmpty) return append(spark, source, b)
+    val root = b.root
     val snap = resolveSnapshotNode(table, root, None, None)
     val schema = resolveSchema(root)
     require(source.columns.toSet == schema.fieldNames.toSet,
@@ -3426,7 +3199,7 @@ object IcebergTable {
       }: _*)
       // all-stale merge → both staged sides empty → skipIfEmpty cleans
       // up and commits nothing (no separate probe action needed)
-      writeDeleteSnapshot(spark, table, losers, content = 1,
+      writeDeleteSnapshot(spark, b, losers, content = 1,
         equalityIds = Seq.empty, postImage = Some(winners),
         operation = "overwrite", skipIfEmpty = true)
     } finally { joined.unpersist(false); () }
@@ -3458,7 +3231,6 @@ object IcebergTable {
       s"mirrorDelta: $table uses column mapping (physical names differ)")
     val f = fs(spark, table)
     val root = f.makeQualified(new Path(table))
-    val mdir = new Path(root, "metadata")
     // live files + per-file counts from the DISTRIBUTED frame, STREAMED
     // one partition at a time into the manifest writer — the driver
     // never holds the full (path, size, numRecords) list (10⁶ files ≈
@@ -3478,35 +3250,13 @@ object IcebergTable {
       .select(col("path"), col("size"),
         get_json_object(col("stats"), "$.numRecords").cast("long").as("rc"))
       .toLocalIterator()
-    val existing: Option[ObjectNode] =
-      if (!isIcebergTable(spark, table)) None
-      else Some(mapper.readTree(readText(f, currentMetadataPath(f, table)))
-        .asInstanceOf[ObjectNode])
-    val version = latestMetadataVersion(f, table) + 1
-    val snapshotId = System.currentTimeMillis() * 1000 + version
-    val now = System.currentTimeMillis()
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
+    val b = base(f, table)
+    val nonce = newNonce()
 
-    val mSchema = manifestAvroSchema
-    val dfSchema = mSchema.getField("data_file").schema()
-    val entries = rowIter.asScala.map { r =>
-      val e = new GenericData.Record(mSchema)
-      e.put("status", 1)
-      e.put("snapshot_id", snapshotId)
-      val d = new GenericData.Record(dfSchema)
-      d.put("file_path", new Path(root, r.getString(0)).toString)
-      d.put("file_format", "PARQUET")
-      d.put("record_count", if (r.isNullAt(2)) 0L else r.getLong(2))
-      d.put("file_size_in_bytes", r.getLong(1))
-      e.put("data_file", d)
-      e
-    }
-    val manifestPath = new Path(mdir, s"manifest-$version-$nonce.avro")
-    val mLen = writeAvro(f, manifestPath, mSchema, entries)
-
-    // DV export: one position-delete parquet + its DELETE manifest
-    val delManifest: Option[(Path, Long)] =
-      if (dvFiles == 0L) None
+    // DV export: one position-delete parquet, declared in a DELETE
+    // manifest below
+    val delFiles =
+      if (dvFiles == 0L) Seq.empty
       else {
         import spark.implicits._
         val bcConf = spark.sparkContext.broadcast(
@@ -3525,93 +3275,37 @@ object IcebergTable {
           DeletionVectors.deletedRows(fsys, tblStr, d).iterator
             .map(pos => (abs, pos))
         }.toDF("file_path", "pos")
-        val scratch = new Path(root, s".ice-mirror-del-$nonce")
-        slots.write.parquet(scratch.toString)
-        val staged = f.listStatus(scratch).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-        val delFiles = staged.zipWithIndex.map { case (p, i) =>
-          val dest = new Path(root, f"data/pos-del-$version%05d-$i%05d-$nonce.parquet")
-          f.mkdirs(dest.getParent)
-          require(f.rename(p, dest), s"stage move failed: $dest")
-          dest
-        }
-        f.delete(scratch, true)
-        val dSchema = deleteManifestAvroSchema
-        val dFileSchema = dSchema.getField("data_file").schema()
-        val dEntries = delFiles.map { p =>
-          val e = new GenericData.Record(dSchema)
-          e.put("status", 1)
-          e.put("snapshot_id", snapshotId)
-          e.put("sequence_number", version.toLong)
-          val d = new GenericData.Record(dFileSchema)
-          d.put("content", 1)
-          d.put("file_path", p.toString)
-          d.put("file_format", "PARQUET")
-          d.put("record_count", 0L)
-          d.put("file_size_in_bytes", f.getFileStatus(p).getLen)
-          e.put("data_file", d)
-          e
-        }
-        val dmPath = new Path(mdir, s"manifest-del-$version-$nonce.avro")
-        Some(dmPath -> writeAvro(f, dmPath, dSchema, dEntries.toSeq))
+        stageFiles(f, table, slots, "pos-del", b.version + 1, nonce).map(_._1)
       }
 
-    val mlSchema = manifestListAvroSchema
-    val mlRecs = ((manifestPath, mLen, 0) +: delManifest.toSeq.map {
-      case (p, len) => (p, len, 1)
-    }).map { case (p, len, content) =>
-      val mlRec = new GenericData.Record(mlSchema)
-      mlRec.put("manifest_path", p.toString)
-      mlRec.put("manifest_length", len)
-      mlRec.put("partition_spec_id", 0)
-      mlRec.put("content", content)
-      mlRec.put("sequence_number", version.toLong)
-      mlRec.put("added_snapshot_id", snapshotId)
-      mlRec
-    }
-    val listPath = new Path(mdir, s"snap-$snapshotId-$nonce.avro")
-    writeAvro(f, listPath, mlSchema, mlRecs)
-
-    val meta = mapper.createObjectNode()
-    meta.put("format-version", if (delManifest.isEmpty) 1 else 2)
-    if (delManifest.nonEmpty)
-      meta.put("last-sequence-number", version.toLong)
-    meta.put("table-uuid", existing.map(_.get("table-uuid").asText())
-      .getOrElse(java.util.UUID.randomUUID().toString))
-    meta.put("location", table)
-    meta.put("last-updated-ms", now)
-    meta.put("last-column-id", schema.fields.length)
-    val schemaNode = meta.putObject("schema")
-    schemaNode.put("type", "struct")
-    val fieldsArr = schemaNode.putArray("fields")
-    schema.fields.zipWithIndex.foreach { case (fld, i) =>
-      val n = fieldsArr.addObject()
-      n.put("id", i + 1); n.put("name", fld.name)
-      n.put("required", false); n.put("type", icebergType(fld.dataType))
-    }
-    val specs = meta.putArray("partition-specs")
-    val spec0 = specs.addObject()
-    spec0.put("spec-id", 0); spec0.putArray("fields")
-    meta.put("default-spec-id", 0)
-    meta.put("current-snapshot-id", snapshotId)
-    stampRefs(meta, existing, snapshotId)
-    val snapsArr = meta.putArray("snapshots")
-    existing.foreach(_.path("snapshots").elements().asScala
-      .foreach(s => snapsArr.add(s)))
-    val sn = snapsArr.addObject()
-    sn.put("snapshot-id", snapshotId)
-    sn.put("timestamp-ms", now)
-    sn.put("manifest-list", listPath.toString)
-    val sum = sn.putObject("summary")
-    sum.put("operation", "replace")
-    sum.put("delta-version", snap.version.toString)
-    val logArr = meta.putArray("snapshot-log")
-    existing.foreach(_.path("snapshot-log").elements().asScala
-      .foreach(l => logArr.add(l)))
-    val le = logArr.addObject()
-    le.put("timestamp-ms", now); le.put("snapshot-id", snapshotId)
-    if (!publishMetadata(f, table, version, meta))
-      throw lostPublish(table, version)
-    snapshotId
+    commit(f, b, nonce) { a =>
+      val mSchema = manifestAvroSchema
+      val dfSchema = mSchema.getField("data_file").schema()
+      val entries = rowIter.asScala.map { r =>
+        val e = new GenericData.Record(mSchema)
+        e.put("status", 1)
+        e.put("snapshot_id", a.snapshotId)
+        val d = new GenericData.Record(dfSchema)
+        d.put("file_path", new Path(root, r.getString(0)).toString)
+        d.put("file_format", "PARQUET")
+        d.put("record_count", if (r.isNullAt(2)) 0L else r.getLong(2))
+        d.put("file_size_in_bytes", r.getLong(1))
+        e.put("data_file", d)
+        e
+      }
+      val manifestPath = a.manifestPath("data")
+      val rows = ManifestRow(manifestPath.toString,
+        writeAvro(f, manifestPath, mSchema, entries), 0, a.version, 0) +:
+        (if (delFiles.isEmpty) Seq.empty
+         else Seq(addedManifest(a, "del", 1, 0, delFiles.map(_ -> 0L))))
+      // the declaration follows the Delta table's on every mirror
+      val meta = declare(a.base.meta.map(_.deepCopy())
+        .getOrElse(mapper.createObjectNode()), table, schema)
+      meta.putArray("partition-specs").addObject().put("spec-id", 0).putArray("fields")
+      meta.put("default-spec-id", 0)
+      addSnapshot(a, meta, rows, "replace",
+        summary = Seq("delta-version" -> snap.version.toString))
+      meta
+    }.snapshotId
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.sources.IcebergTable
 import org.apache.spark.sql.functions._
 
@@ -502,6 +504,230 @@ class IcebergSpec extends SparkSpec {
       Set((1L, "base"), (2L, "racer"), (3L, "racer")))
     assert(IcebergTable.metadataTable(spark, t, "snapshots").count() == 3L)
   }
+
+  // ---- the one commit step: pinned bases, one listing, no lost commit
+
+  /** Run `body` with every `file://` FileSystem a [[CommitProbeFileSystem]]. */
+  private def withCommitProbe[T](body: => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val impl = conf.get("fs.file.impl")
+    conf.set("fs.file.impl", classOf[CommitProbeFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    try body
+    finally {
+      CommitProbeFileSystem.onOpen = _ => ()
+      CommitProbeFileSystem.onDelete = _ => ()
+      conf.set("fs.file.impl", impl)
+      conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+
+  /** Runs `racer` the first time it is called on a `snap-*.avro`; returns
+    * whether it did. */
+  private class RaceOnSnap(racer: => Unit) extends (org.apache.hadoop.fs.Path => Unit) {
+    @volatile var fired = false
+    def apply(p: org.apache.hadoop.fs.Path): Unit =
+      if (!fired && p.getName.startsWith("snap-") && p.getName.endsWith(".avro")) {
+        fired = true
+        racer
+      }
+  }
+
+  /** `snap-`/`manifest-*.avro` files under `metadata/` that no snapshot
+    * in the current metadata references. */
+  private def unreferencedAvros(t: String): Set[String] = {
+    def avroRecords(p: String): Seq[org.apache.avro.generic.GenericRecord] = {
+      val r = new org.apache.avro.file.DataFileReader(
+        new java.io.File(new org.apache.hadoop.fs.Path(p).toUri.getPath),
+        new org.apache.avro.generic.GenericDatumReader[org.apache.avro.generic.GenericRecord]())
+      try r.iterator().asScala.toVector finally r.close()
+    }
+    val lists = IcebergTable.metadataTable(spark, t, "snapshots")
+      .select("manifest_list").as[String].collect().toSeq
+    val referenced = lists.map(p => new org.apache.hadoop.fs.Path(p).getName).toSet ++
+      lists.flatMap(avroRecords).map(m =>
+        new org.apache.hadoop.fs.Path(m.get("manifest_path").toString).getName)
+    new java.io.File(t, "metadata").listFiles().map(_.getName)
+      .filter(n => (n.startsWith("snap-") || n.startsWith("manifest-")) &&
+        n.endsWith(".avro"))
+      .toSet -- referenced
+  }
+
+  test("expireSnapshots raced on its first snap-*.avro unlink keeps the racer's commit") {
+    // the expire publishes before it deletes, so the racer stacks on it
+    withCommitProbe {
+      val t = fresh()
+      (1L to 3L).foreach(i =>
+        IcebergTable.writeAppend(spark, Seq((i, s"r$i")).toDF("id", "v"), t))
+      val expireRace = new RaceOnSnap(IcebergTable.writeAppend(spark,
+        Seq((9L, "racer")).toDF("id", "v"), t))
+      CommitProbeFileSystem.onDelete = expireRace
+      IcebergTable.expireSnapshots(spark, t,
+        olderThanMs = System.currentTimeMillis() + 60000L, retainLast = 1)
+      assert(expireRace.fired)
+      assert(IcebergTable.read(spark, t).as[(Long, String)].collect().toSet ==
+        Set((1L, "r1"), (2L, "r2"), (3L, "r3"), (9L, "racer")))
+    }
+  }
+
+  test("cherrypick raced on its first manifest-list read loses loudly") {
+    // it commits against the base it planned from, never over the racer
+    withCommitProbe {
+      val t = fresh()
+      IcebergTable.writeAppend(spark, Seq((1L, "base")).toDF("id", "v"), t)
+      val staged = IcebergTable.writeAppend(spark,
+        Seq((2L, "staged")).toDF("id", "v"), t, toBranch = Some("audit"))
+      val pickRace = new RaceOnSnap(IcebergTable.writeAppend(spark,
+        Seq((9L, "racer")).toDF("id", "v"), t))
+      CommitProbeFileSystem.onOpen = pickRace
+      intercept[org.apache.hadoop.fs.FileAlreadyExistsException](
+        IcebergTable.cherrypick(spark, t, staged))
+      assert(pickRace.fired)
+      assert(IcebergTable.read(spark, t).as[(Long, String)].collect().toSet ==
+        Set((1L, "base"), (9L, "racer")))
+    }
+  }
+
+  test("MERGE raced by a newer MERGE on the same key leaves one live row") {
+    withCommitProbe {
+      val t = fresh()
+      IcebergTable.writeAppend(spark,
+        Seq((1L, "base", 1L), (2L, "other", 1L)).toDF("id", "v", "ts"), t)
+      val mergeRace = new RaceOnSnap(IcebergTable.mergeUpsert(spark, t,
+        Seq((1L, "racer", 6L)).toDF("id", "v", "ts"), Seq("id"), "ts"))
+      CommitProbeFileSystem.onOpen = mergeRace
+      intercept[org.apache.hadoop.fs.FileAlreadyExistsException](
+        IcebergTable.mergeUpsert(spark, t,
+          Seq((1L, "victim", 5L)).toDF("id", "v", "ts"), Seq("id"), "ts"))
+      assert(mergeRace.fired)
+      assert(IcebergTable.read(spark, t).as[(Long, String, Long)].collect()
+        .sortBy(_._1).toSeq == Seq((1L, "racer", 6L), (2L, "other", 1L)))
+    }
+  }
+
+  test("expireSnapshots publishes before it deletes: a lost expire deletes nothing") {
+    val t = fresh()
+    (1L to 3L).foreach(i =>
+      IcebergTable.writeAppend(spark, Seq((i, s"r$i")).toDF("id", "v"), t))
+    var fired = false
+    IcebergTable.raceHook = () =>
+      if (!fired) {
+        fired = true
+        IcebergTable.writeAppend(spark, Seq((9L, "racer")).toDF("id", "v"), t)
+      }
+    try intercept[org.apache.hadoop.fs.FileAlreadyExistsException](
+      IcebergTable.expireSnapshots(spark, t,
+        olderThanMs = System.currentTimeMillis() + 60000L, retainLast = 1))
+    finally IcebergTable.raceHook = () => ()
+    assert(fired)
+    val ids = IcebergTable.metadataTable(spark, t, "snapshots")
+      .select("snapshot_id").as[Long].collect().toSeq
+    assert(ids.size == 4, ids)
+    // every snapshot the current metadata lists still time-travels
+    assert(ids.map(id => IcebergTable.read(spark, t, snapshotId = Some(id)).count())
+      .sorted == Seq(1L, 2L, 3L, 4L))
+  }
+
+  test("format-version never goes down; last-sequence-number rises per snapshot") {
+    val t = fresh()
+    def meta(): com.fasterxml.jackson.databind.JsonNode = {
+      val mdir = new java.io.File(t, "metadata")
+      val latest = mdir.listFiles().map(_.getName)
+        .collect { case n if n.matches("v\\d+\\.metadata\\.json") =>
+          n.stripPrefix("v").stripSuffix(".metadata.json").toInt }.max
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+        new java.io.File(mdir, s"v$latest.metadata.json"))
+    }
+    IcebergTable.writeAppend(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), t)
+    assert(meta().path("format-version").asInt() == 1)
+    IcebergTable.deleteWhere(spark, t, col("id") === 1L)
+    var lastSeq = meta().path("last-sequence-number").asLong()
+    // each later op adds one snapshot, except the closing setRef
+    val steps: Seq[(String, () => Unit)] = Seq(
+      "append" -> (() => { IcebergTable.writeAppend(spark,
+        Seq((3L, "c")).toDF("id", "v"), t); () }),
+      "branch append" -> (() => { IcebergTable.writeAppend(spark,
+        Seq((4L, "d")).toDF("id", "v"), t, toBranch = Some("audit")); () }),
+      "cherrypick" -> (() => { IcebergTable.cherrypick(spark, t,
+        IcebergTable.refSnapshotId(spark, t, "audit")); () }))
+    for ((name, step) <- steps) {
+      step()
+      val m = meta()
+      assert(m.path("format-version").asInt() == 2, s"$name: $m")
+      val seq = m.path("last-sequence-number").asLong()
+      assert(seq > lastSeq, s"$name: last-sequence-number $seq after $lastSeq")
+      val newest = m.path("snapshots").elements().asScala.toSeq.last
+      assert(newest.path("sequence-number").asLong() == seq, s"$name: $newest")
+      lastSeq = seq
+    }
+    IcebergTable.setRef(spark, t, "rc1", IcebergTable.refSnapshotId(spark, t, "main"))
+    assert(meta().path("format-version").asInt() == 2)
+    assert(meta().path("last-sequence-number").asLong() == lastSeq)
+    assert(IcebergTable.read(spark, t).as[(Long, String)].collect().toSet ==
+      Set((2L, "b"), (3L, "c"), (4L, "d")))
+  }
+
+  test("one listing of metadata/ per commit") {
+    withCommitProbe {
+      val t = fresh()
+      IcebergTable.writeAppend(spark,
+        Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("id", "v", "ts"), t)
+      def listings(op: => Any): Long = {
+        val before = CommitProbeFileSystem.metadataListings.get
+        op
+        CommitProbeFileSystem.metadataListings.get - before
+      }
+      assert(listings(IcebergTable.writeAppend(spark,
+        Seq((3L, "c", 1L)).toDF("id", "v", "ts"), t)) == 1L)
+      assert(listings(IcebergTable.deleteWhere(spark, t, col("id") === 3L)) == 1L)
+      assert(listings(IcebergTable.mergeUpsert(spark, t,
+        Seq((1L, "m", 2L)).toDF("id", "v", "ts"), Seq("id"), "ts")) == 1L)
+      val head = IcebergTable.refSnapshotId(spark, t, "main")
+      assert(listings(IcebergTable.setRef(spark, t, "rc1", head)) == 1L)
+    }
+  }
+
+  test("every kind of pinned write loses a race the same way") {
+    val kinds: Seq[(String, String => Any)] = Seq(
+      "MERGE" -> (t => IcebergTable.mergeUpsert(spark, t,
+        Seq((1L, "m", 5L)).toDF("id", "v", "ts"), Seq("id"), "ts")),
+      "UPDATE" -> (t => IcebergTable.updateWhere(spark, t, col("id") === 1L,
+        Map("v" -> lit("u")))),
+      "deleteWhere" -> (t => IcebergTable.deleteWhere(spark, t, col("id") === 1L)),
+      "deleteEquals" -> (t => IcebergTable.deleteEquals(spark, t, Seq("a").toDF("v"))),
+      "rewriteDataFiles" -> (t => IcebergTable.rewriteDataFiles(spark, t)),
+      "rewriteManifests" -> (t => IcebergTable.rewriteManifests(spark, t)),
+      "cherrypick" -> (t => IcebergTable.cherrypick(spark, t,
+        IcebergTable.refSnapshotId(spark, t, "audit"))),
+      "setRef" -> (t => IcebergTable.setRef(spark, t, "rc1",
+        IcebergTable.refSnapshotId(spark, t, "main"))),
+      "fastForward" -> (t => IcebergTable.fastForward(spark, t, "audit")),
+      "alterAddColumns" -> (t => IcebergTable.alterAddColumns(spark, t,
+        org.apache.spark.sql.types.StructType.fromDDL("extra STRING"))))
+    for ((kind, op) <- kinds) {
+      val t = fresh()
+      IcebergTable.writeAppend(spark, Seq((1L, "a", 1L)).toDF("id", "v", "ts"), t)
+      IcebergTable.writeAppend(spark, Seq((2L, "b", 1L)).toDF("id", "v", "ts"), t)
+      IcebergTable.writeAppend(spark, Seq((3L, "staged", 1L)).toDF("id", "v", "ts"),
+        t, toBranch = Some("audit"))
+      val before = IcebergTable.read(spark, t).as[(Long, String, Long)].collect().toSet
+      var fired = false
+      var inRacer = false
+      IcebergTable.raceHook = () =>
+        if (!fired && !inRacer) {
+          fired = true; inRacer = true
+          try IcebergTable.writeAppend(spark,
+            Seq((9L, "racer", 1L)).toDF("id", "v", "ts"), t)
+          finally inRacer = false
+        }
+      try intercept[org.apache.hadoop.fs.FileAlreadyExistsException](op(t))
+      finally IcebergTable.raceHook = () => ()
+      assert(fired, kind)
+      assert(IcebergTable.read(spark, t).as[(Long, String, Long)].collect().toSet ==
+        before + ((9L, "racer", 1L)), kind)
+      assert(unreferencedAvros(t).isEmpty, s"$kind leaked ${unreferencedAvros(t)}")
+    }
+  }
 }
 
 /** `file://` filesystem whose create-if-absent of an Iceberg
@@ -539,4 +765,32 @@ class LocalCopyProbeFileSystem extends graft.sources.FastLocalFileSystem {
 
 object LocalCopyProbeFileSystem {
   val copies = new java.util.concurrent.atomic.AtomicLong
+}
+
+/** `file://` filesystem that runs [[CommitProbeFileSystem.onOpen]] and
+  * [[CommitProbeFileSystem.onDelete]] before every `open` and `delete`,
+  * and counts `listStatus` calls on a directory named `metadata`. */
+class CommitProbeFileSystem extends graft.sources.FastLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, Path}
+
+  override def open(p: Path, bufferSize: Int): FSDataInputStream = {
+    CommitProbeFileSystem.onOpen(p)
+    super.open(p, bufferSize)
+  }
+
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    CommitProbeFileSystem.onDelete(p)
+    super.delete(p, recursive)
+  }
+
+  override def listStatus(p: Path): Array[FileStatus] = {
+    if (p.getName == "metadata") CommitProbeFileSystem.metadataListings.incrementAndGet()
+    super.listStatus(p)
+  }
+}
+
+object CommitProbeFileSystem {
+  @volatile var onOpen: org.apache.hadoop.fs.Path => Unit = _ => ()
+  @volatile var onDelete: org.apache.hadoop.fs.Path => Unit = _ => ()
+  val metadataListings = new java.util.concurrent.atomic.AtomicLong
 }
