@@ -2,7 +2,7 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,8 +18,11 @@ import scala.collection.mutable
   * set of newline-delimited JSON actions (`add`, `remove`, `metaData`,
   * `protocol`, `txn`, `commitInfo`); the live file set at version V is the
   * replay of all commits ≤ V (last action per path wins). Periodic parquet
-  * checkpoints (`<v>.checkpoint.parquet` + `_last_checkpoint`) compact the
-  * replay so nobody reads an unbounded JSON tail.
+  * checkpoints (`<v>.checkpoint.parquet`) compact the replay so nobody
+  * reads an unbounded JSON tail. Every reader and writer finds the
+  * commits and the newest complete checkpoint from one listing of
+  * `_delta_log` ([[logSegment]]); the checkpoint writer still writes the
+  * `_last_checkpoint` hint for other readers, but no read here needs it.
   *
   * Scale architecture — file-level state NEVER lives on the driver:
   * [[Snapshot.allFiles]] is a DataFrame (the checkpoint parquet read
@@ -327,50 +330,97 @@ object DeltaLog {
 
   private val commitRe = """(\d{20})\.json""".r
   private val compactedRe = """(\d{20})\.(\d{20})\.compacted\.json""".r
+  private val classicCpRe = """(\d{20})\.checkpoint\.parquet""".r
+  private val partCpRe = """(\d{20})\.checkpoint\.(\d{10})\.(\d{10})\.parquet""".r
+  private val v2CpRe = """(\d{20})\.checkpoint\.[^.]+\.(?:parquet|json)""".r
+
+  /** A checkpoint this reader understands, complete in the listing:
+    * classic parquet (one file, or every part of a multi-part set), or
+    * V2 (one manifest — parquet or JSON — whose `sidecarFile` actions
+    * point into `_delta_log/_sidecars/`). */
+  private[sources] sealed trait CpShape { def version: Long }
+  private case class CpClassic(version: Long, paths: Seq[String]) extends CpShape
+  private case class CpV2(version: Long, manifest: String, isJson: Boolean) extends CpShape
+
+  /** One listing of `_delta_log`, parsed: the JSON commits, the
+    * log-compaction files `<x>.<y>.compacted.json` (each covering the
+    * inclusive commit range x..y, ascending by x), and the complete
+    * checkpoints (ascending). Every Delta reader and writer takes its log
+    * state from one of these ([[logSegment]]). The `_last_checkpoint`
+    * hint plays no part: the protocol calls it a hint, the listing
+    * already names every checkpoint, and a torn hint or one naming a
+    * vanished checkpoint must not fail a read. */
+  private[sources] final case class LogSegment(statuses: Seq[FileStatus],
+      commits: scala.collection.immutable.SortedMap[Long, FileStatus],
+      compactions: Seq[(Long, Long, FileStatus)], checkpoints: Seq[CpShape]) {
+
+    /** Newest version: a commit, a compaction range end or a checkpoint.
+      * The checkpoint counts: after a checkpoint + JSON cleanup the
+      * listing holds no commits, yet reusing version 0 would commit
+      * BELOW the checkpoint, where replay ignores it. */
+    val latest: Option[Long] = (commits.keys ++ compactions.map(_._2) ++
+      checkpoints.map(_.version)).maxOption
+
+    /** Versions with a commit or a checkpoint, ascending. */
+    def versions: Seq[Long] = (commits.keySet ++ checkpoints.map(_.version)).toSeq.sorted
+
+    /** The newest checkpoint at or below `v`. */
+    def checkpointAt(v: Long): Option[CpShape] =
+      checkpoints.takeWhile(_.version <= v).lastOption
+  }
+
+  /** The one listing of `_delta_log` (an empty segment when absent). A
+    * multi-part checkpoint missing a part is not a checkpoint; of two
+    * layouts at one version the classic file wins, then the first V2
+    * manifest by name. */
+  private[sources] def logSegment(f: FileSystem, table: String): LogSegment = {
+    val statuses =
+      try f.listStatus(logDir(table)).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val commits = scala.collection.immutable.SortedMap.newBuilder[Long, FileStatus]
+    val compactions = Seq.newBuilder[(Long, Long, FileStatus)]
+    val classic = mutable.Map.empty[Long, CpShape]
+    val v2 = mutable.Map.empty[Long, String]
+    val parts = mutable.Map.empty[(Long, Int), Map[Int, String]]
+    def path(name: String) = new Path(logDir(table), name).toString
+    statuses.foreach { st =>
+      val name = st.getPath.getName
+      name match {
+        case commitRe(v) => commits += v.toLong -> st
+        case compactedRe(x, y) => compactions += ((x.toLong, y.toLong, st))
+        case classicCpRe(v) => classic(v.toLong) = CpClassic(v.toLong, Seq(path(name)))
+        case partCpRe(v, i, n) =>
+          val k = (v.toLong, n.toInt)
+          parts(k) = parts.getOrElse(k, Map.empty) + (i.toInt -> path(name))
+        case v2CpRe(v) => if (v2.get(v.toLong).forall(_ > name)) v2(v.toLong) = name
+        case _ =>
+      }
+    }
+    val multiPart = parts.collect { case ((v, n), ps) if (1 to n).forall(ps.contains) =>
+      v -> (CpClassic(v, (1 to n).map(ps)): CpShape)
+    }
+    val manifests = v2.map { case (v, name) =>
+      v -> (CpV2(v, path(name), name.endsWith(".json")): CpShape)
+    }
+    LogSegment(statuses, commits.result(), compactions.result().sortBy(_._1),
+      (multiPart ++ manifests ++ classic).values.toSeq.sortBy(_.version))
+  }
 
   /** Committed versions present as JSON commits (ascending). */
-  def listVersions(spark: SparkSession, table: String): Seq[Long] = {
-    val f = fs(spark, table)
-    val dir = logDir(table)
-    if (!f.exists(dir)) return Seq.empty
-    f.listStatus(dir).toSeq.map(_.getPath.getName).collect {
-      case commitRe(v) => v.toLong
-    }.sorted
-  }
+  def listVersions(spark: SparkSession, table: String): Seq[Long] =
+    logSegment(fs(spark, table), table).commits.keys.toSeq
 
-  /** Log-compaction files present (ascending start): each covers the
-    * inclusive commit range `(start, end)` — the protocol's
-    * `<x>.<y>.compacted.json` minor compaction. */
-  def listCompactions(spark: SparkSession, table: String): Seq[(Long, Long)] = {
-    val f = fs(spark, table)
-    val dir = logDir(table)
-    if (!f.exists(dir)) return Seq.empty
-    f.listStatus(dir).toSeq.map(_.getPath.getName).collect {
-      case compactedRe(x, y) => (x.toLong, y.toLong)
-    }.sortBy(_._1)
-  }
+  /** Log-compaction ranges present (ascending start). */
+  def listCompactions(spark: SparkSession, table: String): Seq[(Long, Long)] =
+    logSegment(fs(spark, table), table).compactions.map(c => (c._1, c._2))
 
   private[sources] def compactedPath(table: String, x: Long, y: Long) =
     new Path(logDir(table), f"$x%020d.$y%020d.compacted.json")
 
-  /** Newest committed version (JSON commits ∪ compaction range-ends ∪
-    * the `_last_checkpoint` version) from ONE listing of `_delta_log`,
-    * plus the pointer read when it is listed: what a streaming tail
-    * polls and what every commit attempt probes ([[Txn.run]]). The
-    * checkpoint counts: after a checkpoint + JSON cleanup the listing
-    * holds no commits, yet reusing version 0 would commit BELOW the
-    * checkpoint, where replay ignores it. */
-  def latestVersion(spark: SparkSession, table: String): Option[Long] = {
-    val f = fs(spark, table)
-    val names =
-      try f.listStatus(logDir(table)).map(_.getPath.getName)
-      catch { case _: java.io.FileNotFoundException => return None }
-    val vs = names.collect {
-      case commitRe(v) => v.toLong
-      case compactedRe(_, y) => y.toLong
-    } ++ (if (names.contains("_last_checkpoint")) lastCheckpoint(f, table) else None)
-    if (vs.isEmpty) None else Some(vs.max)
-  }
+  /** Newest committed version ([[LogSegment.latest]]): what a streaming
+    * tail polls. */
+  def latestVersion(spark: SparkSession, table: String): Option[Long] =
+    logSegment(fs(spark, table), table).latest
 
   private[sources] def commitPath(table: String, v: Long) =
     new Path(logDir(table), f"$v%020d.json")
@@ -387,64 +437,6 @@ object DeltaLog {
       src.getLines().filter(_.nonEmpty).map(mapper.readTree).toList
     } finally in.close()
   }
-
-  /** `_last_checkpoint` pointer: version + part count (multi-part
-    * checkpoints split the state over `parts` files — the layout large
-    * production tables actually have). */
-  private case class CpMeta(version: Long, parts: Option[Int])
-
-  private def lastCheckpointMeta(f: FileSystem, table: String): Option[CpMeta] = {
-    val p = new Path(logDir(table), "_last_checkpoint")
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val n = mapper.readTree(in)
-        Some(CpMeta(n.get("version").asLong(),
-          if (n.has("parts")) Some(n.get("parts").asInt()) else None))
-      } finally in.close()
-    }
-  }
-
-  private def lastCheckpoint(f: FileSystem, table: String): Option[Long] =
-    lastCheckpointMeta(f, table).map(_.version)
-
-  private def checkpointFiles(table: String, meta: CpMeta): Seq[String] =
-    meta.parts match {
-      case None =>
-        Seq(new Path(logDir(table), f"${meta.version}%020d.checkpoint.parquet").toString)
-      case Some(n) =>
-        (1 to n).map(i => new Path(logDir(table),
-          f"${meta.version}%020d.checkpoint.$i%010d.$n%010d.parquet").toString)
-    }
-
-  /** Checkpoint layouts this reader understands: classic single/multi-
-    * part parquet, and V2 (one manifest — parquet or JSON — whose
-    * `sidecarFile` actions point into `_delta_log/_sidecars/`). */
-  private sealed trait CpShape
-  private case class CpClassic(paths: Seq[String]) extends CpShape
-  private case class CpV2(manifest: String, isJson: Boolean) extends CpShape
-
-  private def checkpointShape(f: FileSystem, table: String, meta: CpMeta): CpShape =
-    meta.parts match {
-      case Some(_) => CpClassic(checkpointFiles(table, meta))
-      case None =>
-        val classic =
-          new Path(logDir(table), f"${meta.version}%020d.checkpoint.parquet")
-        if (f.exists(classic)) CpClassic(Seq(classic.toString))
-        else {
-          // V2 naming: <version>.checkpoint.<uniqueStr>.{parquet|json}
-          val prefix = f"${meta.version}%020d.checkpoint."
-          val cands = f.listStatus(logDir(table)).map(_.getPath.getName)
-            .filter(n => n.startsWith(prefix) &&
-              (n.endsWith(".parquet") || n.endsWith(".json")))
-          require(cands.nonEmpty,
-            s"_last_checkpoint names version ${meta.version} but no checkpoint " +
-              s"file exists in $table/_delta_log")
-          val name = cands.sorted.head
-          CpV2(new Path(logDir(table), name).toString, name.endsWith(".json"))
-        }
-    }
 
   private val sidecarFileSchema = new StructType()
     .add("path", StringType).add("sizeInBytes", LongType)
@@ -645,34 +637,35 @@ object DeltaLog {
     * only metadata lines are parsed; add/remove lines — the O(files)
     * part — are parsed distributed into [[Snapshot.allFiles]]. */
   def snapshot(spark: SparkSession, table: String,
+      versionAsOf: Option[Long] = None): Snapshot =
+    snapshotAt(spark, table, logSegment(fs(spark, table), table), versionAsOf)
+
+  /** The latest snapshot, or None when `table` holds no Delta log — one
+    * listing answers both. */
+  private def latestSnapshot(spark: SparkSession, table: String): Option[Snapshot] = {
+    val seg = logSegment(fs(spark, table), table)
+    seg.latest.map(_ => snapshotAt(spark, table, seg))
+  }
+
+  /** [[snapshot]] from a segment already listed: its newest checkpoint
+    * at or below the target, then the commits after it. */
+  private def snapshotAt(spark: SparkSession, table: String, seg: LogSegment,
       versionAsOf: Option[Long] = None): Snapshot = {
     val f = fs(spark, table)
-    // ONE directory listing powers version discovery, compaction
-    // discovery, AND the cache fingerprint below — a million-commit
-    // log pays one round of RPCs here, not three
-    val logStats: Seq[org.apache.hadoop.fs.FileStatus] =
-      if (!f.exists(logDir(table))) Seq.empty
-      else f.listStatus(logDir(table)).toSeq
-    val logNames = logStats.map(_.getPath.getName)
-    val versions = logNames.collect { case commitRe(v) => v.toLong }.sorted
-    val allCompactions = logNames
-      .collect { case compactedRe(x, y) => (x.toLong, y.toLong) }.sortBy(_._1)
-    val lastCp = lastCheckpoint(f, table)
     // a log whose JSON tail was fully replaced by compaction files is
     // still a table: compaction range-ends count as reachable versions
-    val compEnds = allCompactions.map(_._2)
-    require(versions.nonEmpty || lastCp.nonEmpty || compEnds.nonEmpty,
-      s"not a Delta table (no _delta_log commits): $table")
-    val target = versionAsOf.getOrElse(
-      (versions.lastOption.toSeq ++ lastCp.toSeq ++ compEnds).max)
+    val compEnds = seg.compactions.map(_._2)
+    require(seg.latest.nonEmpty, s"not a Delta table (no _delta_log commits): $table")
+    val target = versionAsOf.getOrElse(seg.latest.get)
     versionAsOf.foreach { v =>
-      require(versions.contains(v) || lastCp.contains(v) ||
+      require(seg.commits.contains(v) || seg.checkpoints.exists(_.version == v) ||
           compEnds.contains(v),
-        s"version $v not present in $table/_delta_log (have ${versions.mkString(",")})")
+        s"version $v not present in $table/_delta_log " +
+          s"(have ${seg.commits.keys.mkString(",")})")
     }
 
-    val cpMeta = lastCheckpointMeta(f, table).filter(_.version <= target)
-    val replayFrom = cpMeta.map(_.version + 1).getOrElse(0L)
+    val cpShape = seg.checkpointAt(target)
+    val replayFrom = cpShape.fold(0L)(_.version + 1)
     // Replay SEGMENTS from replayFrom to target: a log-compaction file
     // (`<x>.<y>.compacted.json`, the protocol's minor compaction)
     // whose range starts exactly at the cursor substitutes for its
@@ -683,9 +676,8 @@ object DeltaLog {
     // would otherwise replay only the surviving suffix — a silently
     // partial (wrong) file set. Delta errors on non-contiguous replay;
     // so do we.
-    val compactions = allCompactions
-      .filter { case (x, y) => x >= replayFrom && y <= target }
-    val vset = versions.toSet
+    val compactions = seg.compactions
+      .collect { case (x, y, _) if x >= replayFrom && y <= target => (x, y) }
     val segB = Seq.newBuilder[Path]
     var sv = replayFrom
     while (sv <= target) {
@@ -695,7 +687,7 @@ object DeltaLog {
         segB += compactedPath(table, sv, y)
         sv = y + 1
       } else {
-        require(vset.contains(sv),
+        require(seg.commits.contains(sv),
           s"non-contiguous _delta_log for $table: need versions " +
             s"$replayFrom..$target beyond the checkpoint, missing $sv — " +
             "older commits were vacuumed/log-cleaned; time travel to this " +
@@ -722,9 +714,8 @@ object DeltaLog {
     val digest = java.security.MessageDigest.getInstance("MD5")
     // the fingerprint scopes to files that can influence THIS version's
     // state: anything whose leading version component is ≤ target, plus
-    // every non-versioned name except `_last_checkpoint` (which only
-    // routes replay to a checkpoint the versioned part of the key
-    // already covers). A later commit therefore does NOT invalidate
+    // every non-versioned name except `_last_checkpoint` (a hint the
+    // read never consults). A later commit therefore does NOT invalidate
     // cached HISTORICAL snapshots — a CDF/time-travel chain revisiting
     // version v after more commits hits the cache instead of replaying
     // the log and re-collecting file entries.
@@ -735,7 +726,7 @@ object DeltaLog {
       case "_last_checkpoint" => false
       case n => verPrefix.findFirstMatchIn(n).forall(_.group(1).toLong <= target)
     }
-    logStats.filter(st => fpIncluded(st.getPath.getName))
+    seg.statuses.filter(st => fpIncluded(st.getPath.getName))
       .map(st =>
         s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
       .sorted
@@ -781,17 +772,15 @@ object DeltaLog {
     }
 
     // metadata-bearing frame + normalized file-state frame, by layout
-    val cpFrames: Option[(DataFrame, Option[DataFrame])] = cpMeta.map { m =>
-      checkpointShape(f, table, m) match {
-        case CpClassic(paths) =>
-          val cp = spark.read.parquet(paths: _*)
-          (cp, Some(cpFileState(cp, m.version)))
-        case CpV2(manifest, isJson) =>
-          val man =
-            if (isJson) spark.read.schema(v2ManifestSchema).json(manifest)
-            else spark.read.parquet(manifest)
-          (man, v2FileState(spark, table, man, m.version))
-      }
+    val cpFrames: Option[(DataFrame, Option[DataFrame])] = cpShape.map {
+      case CpClassic(v, paths) =>
+        val frame = spark.read.parquet(paths: _*)
+        (frame, Some(cpFileState(frame, v)))
+      case CpV2(v, manifest, isJson) =>
+        val man =
+          if (isJson) spark.read.schema(v2ManifestSchema).json(manifest)
+          else spark.read.parquet(manifest)
+        (man, v2FileState(spark, table, man, v))
     }
     cpFrames.map(_._1).foreach { cp =>
       // checkpoint-carried protocol/metaData/txn: a vacuumed table has
@@ -941,9 +930,8 @@ object DeltaLog {
     // byte-identical to the one the seeder wrote (length + mtime pin —
     // a DROP + re-create minting the same version cannot match)
     Option(pendingMemo.get(table))
-      .filter(p => p.version == target && logStats.exists(st =>
-        st.getPath.getName == f"$target%020d.json" &&
-          st.getLen == p.commitLen && st.getModificationTime == p.commitMtime))
+      .filter(p => p.version == target && seg.commits.get(target).exists(st =>
+        st.getLen == p.commitLen && st.getModificationTime == p.commitMtime))
       .foreach { p =>
         built.chunkMemo.compareAndSet(null, p.entries)
         built.fileEntries // materializes from the memo → entriesReady
@@ -1053,7 +1041,7 @@ object DeltaLog {
     * SetTransaction state) — how a streaming writer discovers which
     * micro-batches already landed. */
   def lastTxn(spark: SparkSession, table: String, appId: String): Option[Long] =
-    if (!isDeltaTable(spark, table)) None else snapshot(spark, table).txns.get(appId)
+    latestSnapshot(spark, table).flatMap(_.txns.get(appId))
 
   // ------------------------------------------------------------- reading
 
@@ -1292,7 +1280,8 @@ object DeltaLog {
     * is already later than the asked-for time. */
   def versionAtTimestamp(spark: SparkSession, table: String, tsMillis: Long): Long = {
     val f = fs(spark, table)
-    val versions = listVersions(spark, table)
+    val commits = logSegment(f, table).commits
+    val versions = commits.keys.toSeq
     require(versions.nonEmpty,
       s"timestamp travel needs JSON commits (checkpoint-only log): $table")
     // in-commit timestamps take precedence over the wall-clock field
@@ -1306,7 +1295,7 @@ object DeltaLog {
           val ci = a.get("commitInfo")
           if (ci.has("inCommitTimestamp")) ci.get("inCommitTimestamp").asLong()
           else ci.get("timestamp").asLong()
-      }.getOrElse(f.getFileStatus(commitPath(table, v)).getModificationTime)
+      }.getOrElse(commits(v).getModificationTime)
     val eligible = versions.filter(commitTs(_) <= tsMillis)
     require(eligible.nonEmpty,
       s"no version of $table committed at or before $tsMillis " +
@@ -1325,13 +1314,13 @@ object DeltaLog {
   def history(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
     val f = fs(spark, table)
-    listVersions(spark, table).map { v =>
+    logSegment(f, table).commits.toSeq.map { case (v, st) =>
       val ci = readCommit(f, table, v).find(_.has("commitInfo"))
         .map(_.get("commitInfo"))
       val ts = ci.filter(_.has("inCommitTimestamp"))
         .map(_.get("inCommitTimestamp").asLong())
         .orElse(ci.filter(_.has("timestamp")).map(_.get("timestamp").asLong()))
-        .getOrElse(f.getFileStatus(commitPath(table, v)).getModificationTime)
+        .getOrElse(st.getModificationTime)
       val op = ci.filter(_.has("operation")).map(_.get("operation").asText())
       val params: Map[String, String] = ci
         .filter(n => n.has("operationParameters") &&
@@ -1431,11 +1420,12 @@ object DeltaLog {
     * commit — the same cost Delta's clone pays; no data motion. */
   def cloneShallow(spark: SparkSession, source: String, target: String,
       versionAsOf: Option[Long] = None): Long = {
-    require(isDeltaTable(spark, source),
+    val srcLog = logSegment(fs(spark, source), source)
+    require(srcLog.latest.nonEmpty,
       s"shallow clone needs a Delta-protocol source: $source")
     require(!isDeltaTable(spark, target),
       s"shallow clone target is already a Delta table: $target")
-    val snap = snapshot(spark, source, versionAsOf)
+    val snap = snapshotAt(spark, source, srcLog, versionAsOf)
     val meta = snap.metaDataJson.getOrElse(
       sys.error(s"source $source declares no metaData; cannot clone"))
     val srcFs = fs(spark, source)
@@ -1499,11 +1489,12 @@ object DeltaLog {
     * external p-mode DV references are copied into the target. */
   def cloneDeep(spark: SparkSession, source: String, target: String,
       versionAsOf: Option[Long] = None): Long = {
-    require(isDeltaTable(spark, source),
+    val srcLog = logSegment(fs(spark, source), source)
+    require(srcLog.latest.nonEmpty,
       s"deep clone needs a Delta-protocol source: $source")
     require(!isDeltaTable(spark, target),
       s"deep clone target is already a Delta table: $target")
-    val snap = snapshot(spark, source, versionAsOf)
+    val snap = snapshotAt(spark, source, srcLog, versionAsOf)
     val meta = snap.metaDataJson.getOrElse(
       sys.error(s"source $source declares no metaData; cannot clone"))
     val srcFs = fs(spark, source)
@@ -1595,9 +1586,8 @@ object DeltaLog {
     * Returns the committed version. */
   def replaceWhere(spark: SparkSession, table: String, df: DataFrame,
       predicate: Column): Long = withDmlRetry(3) {
-    require(isDeltaTable(spark, table),
-      s"replaceWhere needs an existing Delta-protocol table at $table")
-    val snap = snapshot(spark, table)
+    val snap = latestSnapshot(spark, table).getOrElse(throw new IllegalArgumentException(
+      s"replaceWhere needs an existing Delta-protocol table at $table"))
     val violations = df.where(!coalesce(predicate, lit(false))).limit(1).count()
     require(violations == 0L,
       "replaceWhere: the new data contains rows NOT matching the predicate")
@@ -1610,7 +1600,7 @@ object DeltaLog {
       snap.partitionColumns, txn = None,
       removePaths = _ => candidates.map(_.path), widenSchema = false,
       dataChange = true, operation = "REPLACE WHERE",
-      baseVersion = Some(snap.version),
+      pin = Some(snap),
       operationParameters = Map("predicate" -> predSql(predicate)),
       readInfo = Some(TxnReadInfo(candidates.map(_.path).toSet,
         candidates.map(_.path).toSet,
@@ -1671,8 +1661,7 @@ object DeltaLog {
       }
       b.result().sorted
     }
-    val exists = isDeltaTable(spark, table)
-    val snap = if (exists) Some(snapshot(spark, table)) else None
+    val snap = latestSnapshot(spark, table)
     val done = snap.map(_.txns.keySet).getOrElse(Set.empty)
     val fresh = listed.filterNot(p => done.contains(s"copy-into:$p"))
     if (fresh.isEmpty)
@@ -1694,7 +1683,7 @@ object DeltaLog {
       partitionBy = snap.map(_.partitionColumns).getOrElse(Seq.empty),
       txn = None, removePaths = _ => Seq.empty, widenSchema = false,
       dataChange = true, operation = "COPY INTO",
-      baseVersion = snap.map(_.version), extraTxns = txns)
+      pin = snap, extraTxns = txns)
     (v, fresh.size)
   }
 
@@ -1728,33 +1717,39 @@ object DeltaLog {
   def addedSince(spark: SparkSession, table: String,
       fromVersion: Long, toVersion: Long,
       skipChangeCommits: Boolean = false): DataFrame = {
-    val added = addedFileEntries(spark, table, fromVersion, toVersion, skipChangeCommits)
+    val added = addedFileEntries(commitsIn(spark, table, fromVersion, toVersion),
+      skipChangeCommits)
     val snap = snapshot(spark, table, Some(toVersion))
     readEntries(spark, table, added, snap.schema, snap.columnMappingMode)
   }
 
-  /** The file entries behind [[addedSince]] — metadata only, no read.
-    * Deterministically ordered (commit order, then action order), so a
-    * rate-limited streaming consumer can slice the same feed across
-    * restarts. */
-  private[graft] def addedFileEntries(spark: SparkSession, table: String,
-      fromVersion: Long, toVersion: Long,
-      skipChangeCommits: Boolean, ignoreDeletes: Boolean = false): Seq[FileEntry] = {
+  /** The JSON commits in `(fromVersion, toVersion]`, from one listing,
+    * each read once. Every window commit must still exist as JSON: a
+    * checkpointed-away (log-cleaned) commit would silently drop its
+    * changes from a feed. */
+  private[graft] def commitsIn(spark: SparkSession, table: String,
+      fromVersion: Long, toVersion: Long): Seq[(Long, Seq[JsonNode])] = {
     require(fromVersion <= toVersion, s"$fromVersion > $toVersion")
     val f = fs(spark, table)
-    val versions = listVersions(spark, table)
-      .filter(v => v > fromVersion && v <= toVersion)
-    // same contiguity rule as changesBetween: a log-cleaned commit inside
-    // the window would silently drop its add actions from the feed
-    require(versions == ((fromVersion + 1) to toVersion),
+    val present = logSegment(f, table).commits
+      .range(fromVersion + 1, toVersion + 1).keys.toSeq
+    require(present == ((fromVersion + 1) to toVersion),
       s"log truncated in ($fromVersion, $toVersion] of $table " +
-        s"(present: ${versions.mkString(",")}) — rebuild the consumer from a snapshot")
+        s"(present: ${present.mkString(",")}) — rebuild the consumer from a snapshot")
+    present.map(v => v -> readCommit(f, table, v))
+  }
+
+  /** The file entries behind [[addedSince]] — metadata only, no read —
+    * each with its add's declared size (-1 when absent). Deterministically
+    * ordered (commit order, then action order), so a rate-limited
+    * streaming consumer can slice the same feed across restarts. */
+  private[graft] def addedFileEntries(commits: Seq[(Long, Seq[JsonNode])],
+      skipChangeCommits: Boolean, ignoreDeletes: Boolean = false): Seq[FileEntry] = {
     // dataChange=false actions (OPTIMIZE rewrites) are pure reorganizations
     // and are invisible to the feed — compaction must not break append-only
     // consumption; a file compacted away was already consumed when added
     val added = Seq.newBuilder[FileEntry]
-    versions.foreach { v =>
-      val actions = readCommit(f, table, v)
+    commits.foreach { case (v, actions) =>
       val hasRemoves = actions.exists(a =>
         a.has("remove") && isDataChange(a.get("remove")))
       // ignoreDeletes (Delta's option): a PURE delete commit (removes,
@@ -1768,31 +1763,14 @@ object DeltaLog {
           "use changesBetween for overwrite/merge feeds, skipChangeCommits " +
           "to ignore change commits, or ignoreDeletes for delete-only commits")
       if (!hasRemoves) actions.foreach { a =>
-        if (a.has("add") && isDataChange(a.get("add")))
-          added += FileEntry(a.get("add").get("path").asText(), dvOf(a.get("add")))
+        if (a.has("add") && isDataChange(a.get("add"))) {
+          val add = a.get("add")
+          added += FileEntry(add.get("path").asText(), dvOf(add),
+            if (add.has("size")) add.get("size").asLong() else -1L)
+        }
       }
     }
     added.result()
-  }
-
-  /** [[addedFileEntries]] plus each add's declared byte size — the
-    * streaming source's byte-budget admission needs them; O(commit). */
-  private[graft] def addedFileEntriesSized(spark: SparkSession, table: String,
-      fromVersion: Long, toVersion: Long,
-      skipChangeCommits: Boolean, ignoreDeletes: Boolean = false): Seq[(FileEntry, Long)] = {
-    val f = fs(spark, table)
-    val sizes = scala.collection.mutable.Map.empty[String, Long]
-    ((fromVersion + 1) to toVersion).foreach { v =>
-      if (listVersions(spark, table).contains(v))
-        readCommit(f, table, v).foreach { a =>
-          if (a.has("add") && a.get("add").has("size"))
-            sizes(a.get("add").get("path").asText()) =
-              a.get("add").get("size").asLong()
-        }
-    }
-    addedFileEntries(spark, table, fromVersion, toVersion, skipChangeCommits,
-        ignoreDeletes)
-      .map(e => e -> sizes.getOrElse(e.path, 0L))
   }
 
   /** Read a specific entry subset under the table's schema/mapping at
@@ -1803,8 +1781,8 @@ object DeltaLog {
     readEntries(spark, table, entries, snap.schema, snap.columnMappingMode)
   }
 
-  /** First schema-CHANGING metaData commit in `(fromV, toV]` relative to
-    * `baseline`, comparing names/types/nullability only — field METADATA
+  /** First schema-CHANGING metaData commit among `commits` ([[commitsIn]])
+    * relative to `baseline`, comparing names/types/nullability only — field METADATA
     * churns on perfectly ordinary commits (identity high-water marks
     * advance inside schema metadata on every identity append) and is NOT
     * a schema change. The streaming sources fail loudly on a hit:
@@ -1813,8 +1791,8 @@ object DeltaLog {
     * pick up the new shape — silently projecting old columns would drop
     * the new data, and a widened type would break the declared source
     * schema mid-stream. */
-  private[graft] def schemaChangeIn(spark: SparkSession, table: String,
-      fromV: Long, toV: Long, baseline: StructType): Option[(Long, StructType)] = {
+  private[graft] def schemaChangeIn(commits: Seq[(Long, Seq[JsonNode])],
+      baseline: StructType): Option[(Long, StructType)] = {
     def strip(dt: DataType): DataType = dt match {
       case s: StructType => StructType(s.fields.map(f =>
         StructField(f.name, strip(f.dataType), f.nullable)))
@@ -1823,12 +1801,9 @@ object DeltaLog {
         m.copy(keyType = strip(m.keyType), valueType = strip(m.valueType))
       case other => other
     }
-    val f = fs(spark, table)
-    val have = listVersions(spark, table).toSet
     val base = strip(baseline)
-    ((fromV + 1) to toV).iterator.flatMap { v =>
-      if (!have.contains(v)) Iterator.empty
-      else readCommit(f, table, v).iterator.collect {
+    commits.iterator.flatMap { case (v, actions) =>
+      actions.iterator.collect {
         case a if a.has("metaData") && a.get("metaData").has("schemaString") =>
           (v, DataType.fromJson(a.get("metaData").get("schemaString").asText())
             .asInstanceOf[StructType])
@@ -1865,15 +1840,8 @@ object DeltaLog {
     * rows inserted. */
   def changesBetween(spark: SparkSession, table: String,
       fromVersion: Long, toVersion: Long): DataFrame = {
-    require(fromVersion <= toVersion, s"$fromVersion > $toVersion")
     val f = fs(spark, table)
-    val versions = listVersions(spark, table)
-      .filter(v => v > fromVersion && v <= toVersion)
-    // every window commit must still exist as JSON: a checkpointed-away
-    // (vacuumed) prefix would silently drop its changes from the feed
-    require(versions == ((fromVersion + 1) to toVersion),
-      s"log truncated in ($fromVersion, $toVersion] of $table " +
-        s"(present: ${versions.mkString(",")}) — rebuild the consumer from a snapshot")
+    val commits = commitsIn(spark, table, fromVersion, toVersion)
     val added = mutable.LinkedHashMap.empty[String, Option[DeletionVectors.Descriptor]]
     val removed = mutable.LinkedHashMap.empty[String, Option[DeletionVectors.Descriptor]]
     // change-data files: a commit carrying `cdc` actions describes its
@@ -1883,8 +1851,7 @@ object DeltaLog {
     // the file diff. Commits without cdc actions reconstruct as before,
     // so mixed windows (foreign CDF writer + plain writer) stay exact.
     val cdcFiles = mutable.ArrayBuffer.empty[(String, Map[String, String])]
-    versions.foreach { v =>
-      val acts = readCommit(f, table, v)
+    commits.foreach { case (_, acts) =>
       val cdcActs = acts.filter(_.has("cdc"))
       if (cdcActs.nonEmpty) cdcActs.foreach { a =>
         val c = a.get("cdc")
@@ -3099,9 +3066,17 @@ object DeltaLog {
     // partitionBy (the remove-bearing commit would otherwise land
     // unpartitioned files in a partitioned table)
     val effPartitionBy: Seq[String] =
-      if (!dynamic || partitionBy.nonEmpty || !isDeltaTable(spark, table))
-        partitionBy
-      else snapshot(spark, table).partitionColumns
+      if (!dynamic || partitionBy.nonEmpty) partitionBy
+      else latestSnapshot(spark, table).fold(partitionBy)(_.partitionColumns)
+    // a caller's pin must still be the latest version — else its
+    // read-modify-write is already stale — and staging validates
+    // against it
+    val pin = baseVersion.flatMap { b =>
+      val log = logSegment(fs(spark, table), table)
+      if (log.latest.getOrElse(-1L) != b)
+        throw new CommitRaceException(Txn.raceMessage(table, b, mode.toUpperCase))
+      log.latest.map(_ => snapshotAt(spark, table, log))
+    }
     def run(): Long = commitWrite(spark, df, table, effPartitionBy, txn,
       removePaths = _ => Seq.empty,
       // overwrite removes STREAM from the distributed file frame into
@@ -3118,7 +3093,7 @@ object DeltaLog {
       widenSchema = mode == "append", dataChange = true,
       operation = mode.toUpperCase,
       retryOnRace = mode == "append" && baseVersion.isEmpty,
-      baseVersion = baseVersion, properties = properties,
+      pin = pin, properties = properties,
       // an append never read the table: declared blind so concurrent
       // read-modify-writes can rebase over it (WriteSerializable)
       blindAppend = mode == "append")
@@ -3374,7 +3349,7 @@ object DeltaLog {
       partitionBy: Seq[String], txn: Option[(String, Long)],
       removePaths: Snapshot => Seq[String], widenSchema: Boolean,
       dataChange: Boolean, operation: String,
-      retryOnRace: Boolean = false, baseVersion: Option[Long] = None,
+      retryOnRace: Boolean = false, pin: Option[Snapshot] = None,
       properties: Map[String, String] = Map.empty,
       extraTxns: Seq[(String, Long)] = Seq.empty,
       operationParameters: Map[String, String] = Map.empty,
@@ -3431,11 +3406,10 @@ object DeltaLog {
         }
       }
 
-    // computed once here (validation before staging) and reused by the
-    // first commit attempt — one log replay per commit, not two
-    val firstVersion = latestVersion(spark, table).fold(0L)(_ + 1)
-    val firstPrev =
-      if (firstVersion == 0L) None else Some(snapshot(spark, table, Some(firstVersion - 1)))
+    // the state staging validates against, reused by the first commit
+    // attempt: the caller's pin, else the latest snapshot (one listing)
+    val firstPrev = pin.orElse(latestSnapshot(spark, table))
+    val firstVersion = firstPrev.fold(0L)(_.version + 1)
     // widening evolution on a mapped table: new top-level columns get a
     // minted physicalName (col-<uuid>) and the next columnIds. Minted
     // ONCE per commitWrite call — the staged parquet carries these
@@ -3782,8 +3756,8 @@ object DeltaLog {
 
     // The [[Txn]] attempt loop; this body rebuilds the version-dependent
     // actions for each attempt's version. A commit whose inputs (merge
-    // frame, compaction set, removePaths) were derived from snapshot
-    // `baseVersion` is valid as a LATER version only when every
+    // frame, compaction set, removePaths) were derived from the `pin`
+    // snapshot is valid as a LATER version only when every
     // intervening commit is provably non-conflicting ([[checkConflicts]])
     // — then it REBASES: the staged files and fixed remove set are still
     // exactly right. Without readInfo any advance aborts. A commit
@@ -3792,14 +3766,14 @@ object DeltaLog {
     // blind append): a commit landing while a full or dynamic OVERWRITE
     // staged would otherwise lose its files to the re-derived removes,
     // and two first-time COPY INTOs would both ingest the same files.
-    val pinned = baseVersion.orElse(
+    val pinned = pin.map(_.version).orElse(
       if (retryOnRace || readInfo.nonEmpty) None else Some(firstVersion - 1))
     Txn.run(spark, table, operation, pinned, operationParameters, readInfo,
-        effConfig, retryOnRace = retryOnRace) { version =>
+        effConfig, retryOnRace = retryOnRace) { (version, log) =>
       val prevSnap =
         if (version == firstVersion) firstPrev
         else if (version == 0L) None
-        else Some(snapshot(spark, table, Some(version - 1)))
+        else Some(snapshotAt(spark, table, log, Some(version - 1)))
       gateWritable(prevSnap)
       // identity allocation is fenced on the snapshot it read its
       // high-water mark from: committing the staged ids at a LATER
@@ -4001,9 +3975,10 @@ object DeltaLog {
 
   /** The one Delta commit step. Every write goes through it, in order:
     *   1. the pin: a snapshot, or None for a version-0 creator;
-    *   2. per attempt, [[raceHook]] and ONE probe of the latest version;
-    *      an advance past the pin runs [[checkConflicts]] and rebases
-    *      (the caller passed [[TxnReadInfo]]) or aborts;
+    *   2. per attempt, [[raceHook]] and ONE listing of `_delta_log`
+    *      ([[logSegment]]) for the latest version; an advance past the
+    *      pin runs [[checkConflicts]] and rebases (the caller passed
+    *      [[TxnReadInfo]]) or aborts;
     *   3. one commitInfo, built against the final version;
     *   4. commitInfo first (the in-commit-timestamp spec reads the clock
     *      from the head of the file; delta-spark writes it first too),
@@ -4015,8 +3990,9 @@ object DeltaLog {
     *   6. the next snapshot's entry memo and the `.crc` checksum;
     *   7. [[postCommit]] under the configuration the commit declares.
     * [[run]] is the attempt loop; its caller builds each attempt's
-    * content for the attempt's version ([[commitWrite]] rebuilds its
-    * version-dependent actions). [[commit]] runs it over fixed actions. */
+    * content for the attempt's version and listing ([[commitWrite]]
+    * rebuilds its version-dependent actions). [[commit]] runs it over
+    * fixed actions. */
   private[sources] object Txn {
 
     /** One attempt's content, built for its final version: the state it
@@ -4031,7 +4007,7 @@ object DeltaLog {
         dataChange: Boolean, stagedFiles: Boolean = false,
         now: Long = System.currentTimeMillis())
 
-    private def raceMessage(table: String, base: Long, operation: String): String =
+    def raceMessage(table: String, base: Long, operation: String): String =
       s"concurrent commit: $table advanced past version $base while this " +
         s"$operation was computed — re-read and retry"
 
@@ -4046,11 +4022,13 @@ object DeltaLog {
         readInfo: Option[TxnReadInfo] = None,
         conflictCfg: scala.collection.Map[String, String] = Map.empty,
         retryOnRace: Boolean = false, dropEmpty: Boolean = false,
-        onRace: Option[String] = None)(build: Long => Attempt): Long = {
+        onRace: Option[String] = None)(build: (Long, LogSegment) => Attempt): Long = {
+      val f = fs(spark, table)
       var attempt = 0
       while (true) {
         raceHook(table, operation)
-        val latest = latestVersion(spark, table).getOrElse(-1L)
+        val log = logSegment(f, table)
+        val latest = log.latest.getOrElse(-1L)
         base.filter(_ != latest).foreach { b =>
           readInfo match {
             case Some(info) => checkConflicts(spark, table, b, latest, info, conflictCfg)
@@ -4059,11 +4037,10 @@ object DeltaLog {
           }
         }
         val version = latest + 1
-        val a = build(version)
+        val a = build(version, log)
         val cfg = declaredConfig(a.actions, a.prev)
         val info = commitInfo(spark, table, version, operation, cfg, a.now,
           parameters, a.metrics, a.blindAppend)
-        val f = fs(spark, table)
         val (tmp, counts) = write(f, table, version, info, a.actions, a.tail)
         if (dropEmpty && a.actions.isEmpty && counts.isEmpty) {
           f.delete(tmp, false)
@@ -4095,7 +4072,7 @@ object DeltaLog {
         now: Long = System.currentTimeMillis()): Long =
       run(spark, table, operation, Some(pin.fold(-1L)(_.version)), parameters,
           readInfo, pin.fold(Map.empty[String, String])(_.configuration),
-          dropEmpty = true, onRace = onRace) { _ =>
+          dropEmpty = true, onRace = onRace) { (_, _) =>
         Attempt(pin, actions, tail, now = now, dataChange = actions.exists(a =>
           a.startsWith("""{"add"""") || a.startsWith("""{"remove"""")))
       }
@@ -4211,6 +4188,12 @@ object DeltaLog {
     }
   }
 
+  /** The snapshots a [[withDmlRetry]] operation reads: `first`, already
+    * in hand from its existence check, then a fresh one per retry. */
+  private def attemptSnapshots(spark: SparkSession, table: String,
+      first: Snapshot): Iterator[Snapshot] =
+    Iterator.single(first) ++ Iterator.continually(snapshot(spark, table))
+
   /** Re-run a whole DML operation on a lost commit race — sound
     * because every operation below recomputes from a FRESH snapshot on
     * each attempt, and a failed attempt's staged data files / DV
@@ -4267,7 +4250,7 @@ object DeltaLog {
       commitWrite(spark, out, table, snap.partitionColumns, txn,
         removePaths = _ => touched.map(_.path), widenSchema = true,
         dataChange = true, operation = operation,
-        baseVersion = Some(snap.version),
+        pin = Some(snap),
         operationParameters = Map("mergeKeys" -> keys.mkString(",")),
         cdc = cdcFrame,
         // rebase over concurrent blind appends: the touched set is what
@@ -4318,11 +4301,15 @@ object DeltaLog {
   def mergeUpsert(spark: SparkSession, table: String, source: DataFrame,
       keys: Seq[String], recencyCol: String,
       txn: Option[(String, Long)] = None): Long =
-    if (!isDeltaTable(spark, table)) write(spark, source, table, txn = txn)
-    else withDmlRetry(3) {
-      mergeCore(spark, table, snapshot(spark, table), source, keys,
-        (target, src) => graft.operators.Scd2.mergedFrame(target, src, keys, recencyCol),
-        txn = txn, operation = "MERGE")
+    latestSnapshot(spark, table) match {
+      case None => write(spark, source, table, txn = txn)
+      case Some(first) =>
+        val snaps = attemptSnapshots(spark, table, first)
+        withDmlRetry(3) {
+          mergeCore(spark, table, snaps.next(), source, keys,
+            (target, src) => graft.operators.Scd2.mergedFrame(target, src, keys, recencyCol),
+            txn = txn, operation = "MERGE")
+        }
     }
 
   /** General clause-based MERGE — the reference's `DeltaTable.merge`
@@ -4342,12 +4329,14 @@ object DeltaLog {
       // caller guarantees a key-distinct source — skips the
       // nondeterminism-guard aggregation (see Merge.applyClauses)
       uniqueSourceKeys: Boolean = false): Long = {
-    require(isDeltaTable(spark, table),
+    val first = latestSnapshot(spark, table)
+    require(first.nonEmpty,
       s"MERGE needs an existing Delta-protocol table at $table; write() it first")
+    val snaps = attemptSnapshots(spark, table, first.get)
     val probe = !clauses.exists(c => c.isInstanceOf[MergeClause.BySourceUpdate] ||
       c.isInstanceOf[MergeClause.BySourceDelete])
     withDmlRetry(3) {
-      val snap = snapshot(spark, table)
+      val snap = snaps.next()
       // delta-spark's DV DML gate, same as UPDATE: a table declaring
       // delta.enableDeletionVectors=true takes the mask-and-append path
       // (O(modified rows) written, untouched neighbors never rewritten);
@@ -4441,7 +4430,7 @@ object DeltaLog {
       commitWrite(spark, plan.appends, table, snap.partitionColumns, None,
         removePaths = _ => touched.map(_.path), widenSchema = true,
         dataChange = true, operation = "MERGE",
-        baseVersion = Some(snap.version),
+        pin = Some(snap),
         operationParameters = Map("mergeKeys" -> keys.mkString(",")),
         cdc = cdcFrame,
         readInfo = Some(TxnReadInfo(candidates.map(_.path).toSet,
@@ -4866,9 +4855,10 @@ object DeltaLog {
     * (no data file is read or written). */
   def restore(spark: SparkSession, table: String, version: Long): Long = {
     import spark.implicits._
-    val cur = snapshot(spark, table)
+    val log = logSegment(fs(spark, table), table)
+    val cur = snapshotAt(spark, table, log)
     if (version == cur.version) return cur.version
-    val tgt = snapshot(spark, table, Some(version))
+    val tgt = snapshotAt(spark, table, log, Some(version))
     // diff at (path, descriptor) granularity: same path under a different
     // DV must be re-added under the target's descriptor
     val curBy = cur.fileEntries.map(e => e.path -> e.dv).toMap
@@ -5852,7 +5842,7 @@ object DeltaLog {
       }
     commitWrite(spark, out, table, snap.partitionColumns, None,
       removePaths = _ => touched.map(_.path), widenSchema = true,
-      dataChange = true, operation = "UPDATE", baseVersion = Some(snap.version),
+      dataChange = true, operation = "UPDATE", pin = Some(snap),
       operationParameters = Map("predicate" -> predSql(predicate),
         "setColumns" -> set.keys.toSeq.sorted.mkString(",")),
       cdc = cdcFrame,
@@ -5916,7 +5906,7 @@ object DeltaLog {
       }
     commitWrite(spark, out, table, snap.partitionColumns, None,
       removePaths = _ => touched.map(_.path), widenSchema = true,
-      dataChange = true, operation = "UPDATE", baseVersion = Some(snap.version),
+      dataChange = true, operation = "UPDATE", pin = Some(snap),
       operationParameters = Map("predicate" -> predSql(predicate),
         "setColumns" -> set.keys.toSeq.sorted.mkString(",")),
       cdc = cdcFrame,
@@ -6057,7 +6047,7 @@ object DeltaLog {
     commitWrite(spark, compacted, table, snap.partitionColumns, None,
       removePaths = _ => candidates.map(_.path), widenSchema = false,
       dataChange = false,
-      operation = "OPTIMIZE", baseVersion = Some(snap.version),
+      operation = "OPTIMIZE", pin = Some(snap),
       // rebase over ANY concurrent add: the compaction set is fixed and
       // a pure rewrite read nothing else — an appended file (blind or
       // from a rewrite) simply misses this bin-pack. Only remove-overlap
@@ -6186,7 +6176,7 @@ object DeltaLog {
     val f = fs(spark, table)
     val root = f.makeQualified(new Path(table))
     require(f.exists(root), s"CONVERT TO DELTA: no such directory $table")
-    require(!isDeltaTable(spark, table) && listVersions(spark, table).isEmpty,
+    require(!isDeltaTable(spark, table),
       s"CONVERT TO DELTA: $table already carries a _delta_log")
 
     // directory tree: driver walk over DIRS only (hidden/log dirs skipped)
@@ -6330,7 +6320,7 @@ object DeltaLog {
   def convertIcebergToDelta(spark: SparkSession, table: String): Long = {
     require(IcebergTable.isIcebergTable(spark, table),
       s"CONVERT FROM ICEBERG: no Iceberg metadata under $table")
-    require(!isDeltaTable(spark, table) && listVersions(spark, table).isEmpty,
+    require(!isDeltaTable(spark, table),
       s"CONVERT FROM ICEBERG: $table already carries a _delta_log")
     val st = IcebergTable.state(spark, table)
     // a converted log would list the data files WITHOUT the delete
@@ -6378,10 +6368,10 @@ object DeltaLog {
     require(retainMillis >= 0, s"retainMillis must be >= 0: $retainMillis")
     val f = fs(spark, table)
     val cutoff = System.currentTimeMillis() - retainMillis
-    val versions = listVersions(spark, table)
+    val log = logSegment(f, table)
     // removed data paths from the surviving JSON tail — RELATIVE paths
     // only (an absolute/external reference belongs to a clone source)
-    val removed: Seq[(String, Long)] = versions.flatMap(v =>
+    val removed: Seq[(String, Long)] = log.commits.keys.toSeq.flatMap(v =>
       readCommit(f, table, v).filter(_.has("remove")).flatMap { n =>
         val r = n.get("remove")
         val p = r.get("path").asText()
@@ -6395,10 +6385,9 @@ object DeltaLog {
       })
     val aged = removed.collect { case (p, ts) if ts <= cutoff => p }.distinct
     if (aged.isEmpty) return 0
-    val keptV = (versions ++ lastCheckpoint(f, table).toSeq)
-      .distinct.sorted.takeRight(keepVersions)
-    val liveData = keptV.map(v => snapshot(spark, table, Some(v))
-      .allFiles.select(col("path"))).reduce(_ union _)
+    val liveData = log.versions.takeRight(keepVersions)
+      .map(v => snapshotAt(spark, table, log, Some(v)).allFiles.select(col("path")))
+      .reduce(_ union _)
     import spark.implicits._
     val candidates = aged.toDF("rel")
       .join(liveData, col("rel") === col("path"), "left_anti")
@@ -6492,9 +6481,9 @@ object DeltaLog {
     require(keepVersions >= 1, s"keepVersions must be >= 1: $keepVersions")
     require(retainMillis >= 0, s"retainMillis must be >= 0: $retainMillis")
     val f = fs(spark, table)
-    val versions = listVersions(spark, table) ++ lastCheckpoint(f, table).toSeq
-    val kept = versions.distinct.sorted.takeRight(keepVersions)
-    val keptSnaps = kept.map(v => snapshot(spark, table, Some(v)))
+    val log = logSegment(f, table)
+    val keptSnaps = log.versions.takeRight(keepVersions)
+      .map(v => snapshotAt(spark, table, log, Some(v)))
     import spark.implicits._
     // LIVE data paths stay DISTRIBUTED: the union of the kept
     // snapshots' file frames — never a 10⁶-path Set on the driver.
@@ -6519,7 +6508,7 @@ object DeltaLog {
     // is checkpointed away the cdc file becomes reclaimable like any
     // unreferenced data file. O(surviving commits) driver work, bounded
     // by the checkpoint interval.
-    val liveCdc: Seq[String] = listVersions(spark, table).flatMap(v =>
+    val liveCdc: Seq[String] = log.commits.keys.toSeq.flatMap(v =>
       readCommit(f, table, v).filter(_.has("cdc"))
         .map(_.get("cdc").get("path").asText()))
     // candidate listing PARALLELIZED per subtree: the driver lists only
@@ -6815,21 +6804,21 @@ object DeltaLog {
   def cleanupLog(spark: SparkSession, table: String,
       retainMillis: Option[Long] = None, dryRun: Boolean = false): Int = {
     val f = fs(spark, table)
-    val cpV = lastCheckpoint(f, table).getOrElse(return 0)
+    val log = logSegment(f, table)
+    val cpV = log.checkpoints.lastOption.fold(return 0)(_.version)
     val retain = retainMillis.getOrElse(
-      logRetentionMillis(snapshot(spark, table).configuration))
+      logRetentionMillis(snapshotAt(spark, table, log).configuration))
     val cutoff = System.currentTimeMillis() - retain
     var n = 0
     var stop = false
-    val it = listVersions(spark, table).iterator
+    val it = log.commits.iterator
     while (!stop && it.hasNext) {
-      val v = it.next()
+      val (v, st) = it.next()
       if (v >= cpV) stop = true
       else {
-        val p = commitPath(table, v)
-        if (f.getFileStatus(p).getModificationTime <= cutoff) {
+        if (st.getModificationTime <= cutoff) {
           if (!dryRun) {
-            f.delete(p, false)
+            f.delete(st.getPath, false)
             // the commit's optional .crc sidecar expires with it
             f.delete(new Path(logDir(table), f"$v%020d.crc"), false)
           }
@@ -6842,12 +6831,8 @@ object DeltaLog {
     // time travel into their range needs the plain commits anyway);
     // not counted — the return value is commits removed
     if (!dryRun)
-      listCompactions(spark, table).foreach { case (x, y) =>
-        if (y < cpV) {
-          val p = compactedPath(table, x, y)
-          if (f.getFileStatus(p).getModificationTime <= cutoff)
-            f.delete(p, false)
-        }
+      log.compactions.foreach { case (_, y, st) =>
+        if (y < cpV && st.getModificationTime <= cutoff) f.delete(st.getPath, false)
       }
     n
   }
@@ -6878,7 +6863,7 @@ object DeltaLog {
     require(start >= 0 && end > start,
       s"compactLog needs 0 <= start < end, got $start..$end")
     val f = fs(spark, table)
-    val have = listVersions(spark, table).toSet
+    val have = logSegment(f, table).commits
     (start to end).foreach(v => require(have.contains(v),
       s"compactLog $start..$end of $table: commit $v is missing"))
     val dest = compactedPath(table, start, end)

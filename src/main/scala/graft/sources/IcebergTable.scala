@@ -1349,10 +1349,12 @@ object IcebergTable {
     * `*-<nonce>.avro` — referenced by nothing — and raises (a lost
     * publish as `FileAlreadyExistsException`), unless the table moved
     * to a newer base that `rebase` accepts: then the attempt rebuilds on
-    * it, at most four attempts in all. Only a blind append rebases.
-    * Returns the attempt that landed. */
+    * it, at most four attempts in all. Only a blind append rebases, and
+    * its rebuilt manifest re-references the `staged` data files; a step
+    * that raises deletes them. Returns the attempt that landed. */
   private def commit(f: FileSystem, pinned: Base, nonce: String,
-      rebase: Base => Boolean = _ => false)(build: Attempt => ObjectNode): Attempt = {
+      rebase: Base => Boolean = _ => false, staged: Seq[Path] = Seq.empty)(
+      build: Attempt => ObjectNode): Attempt = {
     var a = Attempt(f, pinned, nonce)
     var attemptsLeft = 4
     while (true) {
@@ -1372,16 +1374,18 @@ object IcebergTable {
             readText(f, metadataPath(a.base.table, a.version)) ==
               new String(bytes, "UTF-8")).getOrElse(false)
           if (landed) return a
-          // staged DATA files stay: a retry's manifest re-references
-          // them, and removeOrphanFiles reclaims them otherwise
-          try Option(f.globStatus(new Path(a.mdir, s"*-$nonce.avro")))
-            .foreach(_.foreach(s => f.delete(s.getPath, false)))
-          catch { case scala.util.control.NonFatal(_) => () }
+          def sweep(paths: => Seq[Path]): Unit =
+            try paths.foreach(f.delete(_, false))
+            catch { case scala.util.control.NonFatal(_) => () }
+          sweep(Option(f.globStatus(new Path(a.mdir, s"*-$nonce.avro")))
+            .toSeq.flatten.map(_.getPath))
           attemptsLeft -= 1
-          if (attemptsLeft == 0) throw e
-          val now = base(f, a.base.table)
-          if (now.version < a.version || !rebase(now)) throw e
-          a = Attempt(f, now, nonce)
+          val now = if (attemptsLeft == 0) None else Some(base(f, a.base.table))
+          if (!now.exists(n => n.version >= a.version && rebase(n))) {
+            sweep(staged)
+            throw e
+          }
+          a = Attempt(f, now.get, nonce)
       }
     }
     sys.error("unreachable")
@@ -1827,7 +1831,7 @@ object IcebergTable {
       carryPrevious && requested.isEmpty && carryFiles.knownSize == 0
     commit(f, b, nonce, rebase = nb => retriable && nb.meta.exists(m =>
         fits(m) && specFromMeta(m) == spec &&
-          m.path("default-spec-id").asInt(0) == specId)) { a =>
+          m.path("default-spec-id").asInt(0) == specId), staged = dataFiles) { a =>
       // the carried side streams: IterableOnce drains straight into the
       // avro writer, one record in memory at a time
       val entries = dataFiles.zipWithIndex.map { case (p, i) =>
@@ -1961,7 +1965,7 @@ object IcebergTable {
       (delFiles ++ dataFiles).foreach(p => f.delete(p._1, false))
       return b.root.get("current-snapshot-id").asLong()
     }
-    commit(f, b, nonce) { a =>
+    commit(f, b, nonce, staged = (delFiles ++ dataFiles).map(_._1)) { a =>
       // 2. the DELETE manifest (+ the post-image DATA manifest), both at
       // this snapshot's sequence number
       val meta = a.base.root.deepCopy()
@@ -3278,7 +3282,7 @@ object IcebergTable {
         stageFiles(f, table, slots, "pos-del", b.version + 1, nonce).map(_._1)
       }
 
-    commit(f, b, nonce) { a =>
+    commit(f, b, nonce, staged = delFiles) { a =>
       val mSchema = manifestAvroSchema
       val dfSchema = mSchema.getField("data_file").schema()
       val entries = rowIter.asScala.map { r =>

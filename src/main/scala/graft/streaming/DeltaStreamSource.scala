@@ -110,30 +110,25 @@ final class DeltaStreamSource(ctx: SQLContext, table: String,
         snapState = Some(st); st
     }
 
-  private val addSizesCache = scala.collection.mutable.HashMap.empty[Long, IndexedSeq[Long]]
-
+  /** Version `v`'s adds, with their declared sizes, from one read of
+    * its commit. */
   private def addsOf(v: Long): IndexedSeq[DeltaLog.FileEntry] =
     addsCache.getOrElseUpdate(v, {
+      val commit = DeltaLog.commitsIn(spark, table, v - 1, v)
       // Delta's streaming contract: schema fixed at stream start; a
       // schema-evolving commit fails the stream loudly (a restart picks
       // up the new shape) instead of silently dropping new columns
-      DeltaLog.schemaChangeIn(spark, table, v - 1, v, schema).foreach {
+      DeltaLog.schemaChangeIn(commit, schema).foreach {
         case (cv, ns) => throw new IllegalStateException(
           s"graft-delta stream on $table: schema changed at version $cv " +
             s"(stream started with ${schema.simpleString}, table now " +
             s"${ns.simpleString}) — restart the stream to pick up the new schema")
       }
-      val sized = DeltaLog.addedFileEntriesSized(spark, table, v - 1, v,
-        skipChangeCommits, ignoreDeletes)
-        .sortBy(_._1.path).toIndexedSeq
-      DeltaStreamSource.meterCollect(sized.size)
-      addSizesCache(v) = sized.map(_._2)
-      sized.map(_._1)
+      val adds = DeltaLog.addedFileEntries(commit, skipChangeCommits, ignoreDeletes)
+        .sortBy(_.path).toIndexedSeq
+      DeltaStreamSource.meterCollect(adds.size)
+      adds
     })
-
-  private def addSizesOf(v: Long): IndexedSeq[Long] = {
-    addsOf(v); addSizesCache(v)
-  }
 
   /** Byte-batch exclusive end indexes of the initial-snapshot feed —
     * ONE distributed cumulative-sum job per stream, O(batches) driver. */
@@ -153,11 +148,12 @@ final class DeltaStreamSource(ctx: SQLContext, table: String,
       val ends = byteEndsOf(snapV, budget)
       ends.find(_ > idx).getOrElse(feedSize(v, snapV))
     } else {
-      val sizes = addSizesOf(v)
+      val adds = addsOf(v)
+      def size(i: Long): Long = math.max(adds(i.toInt).size, 0L)
       var i = idx
       var acc = 0L
-      while (i < sizes.size && (i == idx || acc + sizes(i.toInt) <= budget)) {
-        acc += sizes(i.toInt); i += 1
+      while (i < adds.size && (i == idx || acc + size(i) <= budget)) {
+        acc += size(i); i += 1
       }
       i
     }
@@ -277,7 +273,6 @@ final class DeltaStreamSource(ctx: SQLContext, table: String,
     // O(stream lifetime) — a restart-recovery getBatch recomputes the
     // evicted feed from the log
     addsCache.filterInPlace { case (v, _) => v > e.version }
-    addSizesCache.filterInPlace { case (v, _) => v > e.version }
     // normalize to the declared column order (a partitioned read
     // surfaces partition columns last); the engine asserts getBatch
     // frames are MARKED streaming, hence the shim
@@ -447,7 +442,7 @@ final class DeltaCdfStreamSource(ctx: SQLContext, table: String,
     // same streaming contract as the base source: a schema-evolving
     // commit inside the batch window fails the stream for a restart
     if (s < e)
-      DeltaLog.schemaChangeIn(spark, table, s, e, baseSchema).foreach {
+      DeltaLog.schemaChangeIn(DeltaLog.commitsIn(spark, table, s, e), baseSchema).foreach {
         case (cv, ns) => throw new IllegalStateException(
           s"graft-delta CDF stream on $table: schema changed at version $cv " +
             s"(stream started with ${baseSchema.simpleString}, table now " +

@@ -1644,4 +1644,92 @@ class DeltaLogSpec extends SparkSpec {
       .head()
     assert(r.getLong(1) == 0L)
   }
+
+  test("a bad _last_checkpoint hint never fails a read or the next commit") {
+    // the checkpoint is found from the listing; the hint is only a hint
+    val hints = Seq(
+      "zero-byte" -> "",
+      "truncated" -> """{"version":1""",
+      "no version" -> """{"size":3}""",
+      "absent checkpoint" -> """{"version":1,"size":3}""")
+    val failures = hints.flatMap { case (name, hint) =>
+      val t = freshTable()
+      DeltaLog.write(spark, Seq(1L).toDF("x"), t)
+      DeltaLog.write(spark, Seq(2L).toDF("x"), t, "append")
+      DeltaLog.write(spark, Seq(3L).toDF("x"), t, "append")
+      DeltaLog.checkpoint(spark, t)
+      DeltaLog.write(spark, Seq(4L).toDF("x"), t, "append")
+      Files.write(new File(t, "_delta_log/_last_checkpoint").toPath, hint.getBytes("UTF-8"))
+      DeltaLog.invalidateSnapshotCache()
+      scala.util.Try {
+        assert(DeltaLog.read(spark, t).as[Long].collect().sorted.toSeq ==
+          Seq(1L, 2L, 3L, 4L))
+        assert(DeltaLog.latestVersion(spark, t).contains(3L))
+        assert(DeltaLog.write(spark, Seq(5L).toDF("x"), t, "append") == 4L)
+        assert(DeltaLog.read(spark, t).count() == 5L)
+      }.failed.toOption.map(e => s"$name hint: $e")
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("a multi-part checkpoint missing a part is ignored, not read") {
+    val t = freshTable()
+    DeltaLog.write(spark, Seq(1L, 2L).toDF("x").coalesce(1), t)
+    DeltaLog.write(spark, Seq(3L).toDF("x"), t, "append")
+    assert(DeltaLog.checkpoint(spark, t) == 1L)
+    DeltaLog.write(spark, Seq(4L).toDF("x"), t, "append")
+    DeltaLog.write(spark, Seq(5L).toDF("x"), t, "append")
+    assert(DeltaLog.checkpoint(spark, t, parts = 2) == 3L)
+    val part2 = new File(t, f"_delta_log/${3L}%020d.checkpoint.${2}%010d.${2}%010d.parquet")
+    assert(part2.delete(), s"no second part: ${new File(t, "_delta_log").list().toSeq}")
+    DeltaLog.invalidateSnapshotCache()
+    // the older classic checkpoint plus the JSON commits after it
+    assert(DeltaLog.read(spark, t).as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L, 4L, 5L))
+    assert(DeltaLog.read(spark, t, Some(3L)).count() == 5L)
+    assert(DeltaLog.latestVersion(spark, t).contains(3L))
+    assert(DeltaLog.write(spark, Seq(6L).toDF("x"), t, "append") == 4L)
+    // and with no older checkpoint left, the JSON replay from version 0
+    new File(t, f"_delta_log/${1L}%020d.checkpoint.parquet").delete()
+    DeltaLog.invalidateSnapshotCache()
+    assert(DeltaLog.read(spark, t).as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L, 4L, 5L, 6L))
+  }
+
+  test("one listing of _delta_log per snapshot and per commit attempt") {
+    import org.apache.spark.sql.functions.col
+    CommitProbeFileSystem.during(spark) {
+      val t = freshTable()
+      def rows(xs: (Long, String, Long)*) = xs.toDF("id", "v", "ts").coalesce(1)
+      DeltaLog.write(spark, rows((1L, "a", 1L), (2L, "b", 1L)), t)
+      def listings(op: => Any): Long = {
+        val before = CommitProbeFileSystem.deltaLogListings.get
+        op
+        CommitProbeFileSystem.deltaLogListings.get - before
+      }
+      val counts = Seq(
+        "append" -> listings(DeltaLog.write(spark, rows((3L, "c", 1L)), t, "append")),
+        "MERGE" -> listings(DeltaLog.mergeUpsert(spark, t,
+          rows((1L, "m", 2L), (4L, "n", 2L)), Seq("id"), "ts")),
+        "clause MERGE" -> listings(DeltaLog.merge(spark, t,
+          rows((1L, "k", 3L), (5L, "o", 3L)), Seq("id"),
+          Seq(MatchedUpdate(None, Map.empty), NotMatchedInsert(None, Map.empty)))),
+        "deleteWhere" -> listings(DeltaLog.deleteWhere(spark, t, col("id") === 2L)),
+        "OPTIMIZE" -> listings(DeltaLog.optimize(spark, t)),
+        "checkpoint" -> listings(DeltaLog.checkpoint(spark, t)),
+        "cold snapshot" -> {
+          DeltaLog.invalidateSnapshotCache()
+          listings(DeltaLog.snapshot(spark, t))
+        })
+      // one listing resolves a snapshot; a commit reuses its snapshot's
+      // and lists once more per attempt (the checkpoint's second is its
+      // expired-log cleanup)
+      val budget = Map("cold snapshot" -> 1L).withDefaultValue(2L)
+      val before = "append 3, MERGE 5, clause MERGE 5, deleteWhere 2, " +
+        "OPTIMIZE 4, checkpoint 3, cold snapshot 1"
+      val over = counts.filter { case (op, n) => n > budget(op) }
+      assert(over.isEmpty, s"listings of _delta_log over budget: $over " +
+        s"(all: $counts; before the one log segment: $before)")
+    }
+  }
 }

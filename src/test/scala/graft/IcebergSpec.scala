@@ -507,21 +507,6 @@ class IcebergSpec extends SparkSpec {
 
   // ---- the one commit step: pinned bases, one listing, no lost commit
 
-  /** Run `body` with every `file://` FileSystem a [[CommitProbeFileSystem]]. */
-  private def withCommitProbe[T](body: => T): T = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val impl = conf.get("fs.file.impl")
-    conf.set("fs.file.impl", classOf[CommitProbeFileSystem].getName)
-    conf.setBoolean("fs.file.impl.disable.cache", true)
-    try body
-    finally {
-      CommitProbeFileSystem.onOpen = _ => ()
-      CommitProbeFileSystem.onDelete = _ => ()
-      conf.set("fs.file.impl", impl)
-      conf.unset("fs.file.impl.disable.cache")
-    }
-  }
-
   /** Runs `racer` the first time it is called on a `snap-*.avro`; returns
     * whether it did. */
   private class RaceOnSnap(racer: => Unit) extends (org.apache.hadoop.fs.Path => Unit) {
@@ -553,9 +538,18 @@ class IcebergSpec extends SparkSpec {
       .toSet -- referenced
   }
 
+  /** Names of every file under the table's `data/` tree. */
+  private def dataFileNames(t: String): Set[String] = {
+    val root = java.nio.file.Paths.get(t, "data")
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(_.getFileName.toString).toSet
+    finally walk.close()
+  }
+
   test("expireSnapshots raced on its first snap-*.avro unlink keeps the racer's commit") {
     // the expire publishes before it deletes, so the racer stacks on it
-    withCommitProbe {
+    CommitProbeFileSystem.during(spark) {
       val t = fresh()
       (1L to 3L).foreach(i =>
         IcebergTable.writeAppend(spark, Seq((i, s"r$i")).toDF("id", "v"), t))
@@ -572,7 +566,7 @@ class IcebergSpec extends SparkSpec {
 
   test("cherrypick raced on its first manifest-list read loses loudly") {
     // it commits against the base it planned from, never over the racer
-    withCommitProbe {
+    CommitProbeFileSystem.during(spark) {
       val t = fresh()
       IcebergTable.writeAppend(spark, Seq((1L, "base")).toDF("id", "v"), t)
       val staged = IcebergTable.writeAppend(spark,
@@ -589,7 +583,7 @@ class IcebergSpec extends SparkSpec {
   }
 
   test("MERGE raced by a newer MERGE on the same key leaves one live row") {
-    withCommitProbe {
+    CommitProbeFileSystem.during(spark) {
       val t = fresh()
       IcebergTable.writeAppend(spark,
         Seq((1L, "base", 1L), (2L, "other", 1L)).toDF("id", "v", "ts"), t)
@@ -668,7 +662,7 @@ class IcebergSpec extends SparkSpec {
   }
 
   test("one listing of metadata/ per commit") {
-    withCommitProbe {
+    CommitProbeFileSystem.during(spark) {
       val t = fresh()
       IcebergTable.writeAppend(spark,
         Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("id", "v", "ts"), t)
@@ -711,6 +705,7 @@ class IcebergSpec extends SparkSpec {
       IcebergTable.writeAppend(spark, Seq((3L, "staged", 1L)).toDF("id", "v", "ts"),
         t, toBranch = Some("audit"))
       val before = IcebergTable.read(spark, t).as[(Long, String, Long)].collect().toSet
+      val dataBefore = dataFileNames(t)
       var fired = false
       var inRacer = false
       IcebergTable.raceHook = () =>
@@ -726,6 +721,12 @@ class IcebergSpec extends SparkSpec {
       assert(IcebergTable.read(spark, t).as[(Long, String, Long)].collect().toSet ==
         before + ((9L, "racer", 1L)), kind)
       assert(unreferencedAvros(t).isEmpty, s"$kind leaked ${unreferencedAvros(t)}")
+      // the loser's staged parquet goes too: every new file under data/
+      // is the racer's, which the live state references
+      val live = IcebergTable.state(spark, t).dataFiles
+        .map(p => new org.apache.hadoop.fs.Path(p).getName).toSet
+      val leaked = dataFileNames(t) -- dataBefore -- live
+      assert(leaked.isEmpty, s"$kind left its staged data files $leaked")
     }
   }
 }
@@ -769,7 +770,8 @@ object LocalCopyProbeFileSystem {
 
 /** `file://` filesystem that runs [[CommitProbeFileSystem.onOpen]] and
   * [[CommitProbeFileSystem.onDelete]] before every `open` and `delete`,
-  * and counts `listStatus` calls on a directory named `metadata`. */
+  * and counts `listStatus` calls on a directory named `metadata` (an
+  * Iceberg table's) or `_delta_log` (a Delta table's). */
 class CommitProbeFileSystem extends graft.sources.FastLocalFileSystem {
   import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, Path}
 
@@ -785,6 +787,7 @@ class CommitProbeFileSystem extends graft.sources.FastLocalFileSystem {
 
   override def listStatus(p: Path): Array[FileStatus] = {
     if (p.getName == "metadata") CommitProbeFileSystem.metadataListings.incrementAndGet()
+    if (p.getName == "_delta_log") CommitProbeFileSystem.deltaLogListings.incrementAndGet()
     super.listStatus(p)
   }
 }
@@ -793,4 +796,20 @@ object CommitProbeFileSystem {
   @volatile var onOpen: org.apache.hadoop.fs.Path => Unit = _ => ()
   @volatile var onDelete: org.apache.hadoop.fs.Path => Unit = _ => ()
   val metadataListings = new java.util.concurrent.atomic.AtomicLong
+  val deltaLogListings = new java.util.concurrent.atomic.AtomicLong
+
+  /** Run `body` with every `file://` FileSystem of `spark` one of these. */
+  def during[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val impl = conf.get("fs.file.impl")
+    conf.set("fs.file.impl", classOf[CommitProbeFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    try body
+    finally {
+      onOpen = _ => ()
+      onDelete = _ => ()
+      conf.set("fs.file.impl", impl)
+      conf.unset("fs.file.impl.disable.cache")
+    }
+  }
 }
